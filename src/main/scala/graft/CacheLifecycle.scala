@@ -24,7 +24,7 @@ object CacheLifecycle {
     * Contract for callers of the query constructors: run the action on the
     * returned frame before constructing the next query on the same session —
     * an interleaved foreign action would release these caches early, which
-    * only costs recompute (never correctness). Bench/Verify both
+    * only costs recompute (never correctness). Verify and perfbench both
     * construct-then-act per query, satisfying this.
     */
   def releaseAfterNextAction(spark: SparkSession, frames: Dataset[_]*): Unit = {

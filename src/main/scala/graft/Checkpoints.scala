@@ -8,13 +8,13 @@ import org.apache.spark.sql.DataFrame
   * returned plan still references (the LSH signature frame all of
   * `pairsFrame`'s consumers share). Builders that can release eagerly do
   * (the `ccIterate` round discipline); the ones that cannot register here,
-  * and the harness mains ([[Verify]], [[Bench]]) drain the ledger between
+  * and the harnesses ([[Verify]], `perfbench`) drain the ledger between
   * queries, once the previous query's result is materialized. Without the
   * drain, repeated bench invocations accumulate non-fault-tolerant
   * executor storage blocks that only ContextCleaner GC would free — at
   * 100 TB those are corpus-sized pins.
   *
-  * Thread-safe (Bench/Verify are single-threaded over queries, but
+  * Thread-safe (Verify is single-threaded over queries, but
   * streaming specs build frames from listener threads).
   */
 object Checkpoints {

@@ -110,7 +110,7 @@ object Tables {
                   maxBytes: Long = 64L << 20,
                   bytesPerTask: Long = 64L << 10): DataFrame = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val bytes = sizeOf(df)
     if (bytes <= maxBytes && cores > 1) {
       val target = (bytes + bytesPerTask - 1) / bytesPerTask
       val p = target.min(BigInt(cores)).max(BigInt(1)).toInt
@@ -118,11 +118,16 @@ object Tables {
     } else df
   }
 
-  /** Estimated input volume gate shared by [[spreadSmall]] and the
-    * tokenize-once materialization below: plan statistics ≈ file bytes for
-    * a scan-rooted frame. */
+  /** Estimated size of `df` in bytes, from its optimized plan's statistics
+    * (≈ file bytes for a scan-rooted frame): the one size gate that
+    * [[spreadSmall]] and [[isSmall]] read. */
+  def sizeOf(df: DataFrame): BigInt = df.queryExecution.optimizedPlan.stats.sizeInBytes
+
+  /** True when [[sizeOf]] `df` is at most `maxBytes`: the gate of
+    * [[materializeSmall]]; [[spreadSmall]] applies the same test with the
+    * same default threshold. */
   def isSmall(df: DataFrame, maxBytes: Long = 64L << 20): Boolean =
-    df.queryExecution.optimizedPlan.stats.sizeInBytes <= maxBytes
+    sizeOf(df) <= maxBytes
 
   /** [[spreadSmall]] + eager materialization of a derived (projected)
     * frame that several consumers re-derive: below the gate the projection

@@ -671,7 +671,7 @@ object Dedup {
     }
 
   /** Edge-count cutover between the two component variants. Measured on the
-    * real dedup edge set (tools/CcBench, interleaved A/B): below ~10^6 sym
+    * real dedup edge set (interleaved A/B): below ~10^6 sym
     * rows the bucketed table's fixed costs (write + per-round parquet scan +
     * metastore round-trips) cost MORE than just re-exchanging the tiny edge
     * relation each round (best 2.9 s plain vs 5.2 s bucketed at sf0.1's 12k

@@ -277,9 +277,9 @@ object EmbeddingLsh {
 
   /** THE PRODUCTION OPERATING POINT, registered as `dedup_lsh_pairs_prod`
     * (the scale-regime twin the 8×2 fixture query cannot be): τ = 0.9,
-    * 24 bands × 12 bits — the configuration whose candidate growth the
-    * ScaleProbe measured at exponent ~1.14 (vs 1.85 for fixed-narrow
-    * bands), i.e. the one a 100 TB dedup run would actually ship. The
+    * 24 bands × 12 bits — the configuration whose candidate growth a
+    * corpus-scaling probe measured at exponent ~1.14 (vs 1.85 for
+    * fixed-narrow bands), i.e. the one a 100 TB dedup run would actually ship. The
     * fixture's own near-dup band sits at cosine ≈ 0.35 where NO hyperplane
     * config can prune and recall simultaneously (the sweep's physics), so
     * this query PLANTS the production regime deterministically FROM the

@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.LongType
   *
   * Why not a window? Spark 3.5+ does bound the rank-filter window's shuffle
   * itself (`InferWindowGroupLimit` plants a partial `WindowGroupLimit`
-  * below the exchange — measured by `tools/ScaleProbe`: both forms ship
+  * below the exchange — measured by a corpus-scaling probe: both forms ship
   * ≈ partitions×keys×k rows at every corpus scale), but its partial phase
   * requires SORTED input: the map side fully sorts every partition
   * (O(n log n) over the whole corpus) before discarding to k, and the

@@ -112,10 +112,10 @@ object Sampling {
     * `row_number` window: map-side bounded heaps shed everything but
     * sources×k rows BEFORE the exchange, so at 100 TB the shuffle carries
     * the capped output, not the corpus. (Spark 3.5+'s WindowGroupLimit
-    * bounds the window form's shuffle too — ScaleProbe measures both at
-    * ≈ partitions×sources×k rows — but pays a full map-side SORT of every
-    * corpus row to do it, where the heaps are O(n log k) sort-free; see
-    * TopKPerKey's scaladoc.) */
+    * bounds the window form's shuffle too — a corpus-scaling probe
+    * measured both at ≈ partitions×sources×k rows — but pays a full
+    * map-side SORT of every corpus row to do it, where the heaps are
+    * O(n log k) sort-free; see TopKPerKey's scaladoc.) */
   def sourceCap(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
     graft.plans.TopK.perKey(
       Tables.documents(spark, dir)

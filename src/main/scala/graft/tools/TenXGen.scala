@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * committed 10× fixture.
   *
   * Run: `runMain graft.tools.TenXGen [outDir] [srcDir] [copies]`, then
-  * `SPARK_GRAFT_SF_DIR=outDir runMain graft.Bench`. */
+  * `runMain graft.Verify outDir <dumpDir>`. */
 object TenXGen {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/sf1x10")

@@ -11,7 +11,7 @@ object SparkTestSession {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions) // mirror Verify/Bench sessions
+      .withExtensions(new GraftExtensions) // mirror Verify/perfbench sessions
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

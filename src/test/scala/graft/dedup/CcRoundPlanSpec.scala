@@ -1,6 +1,7 @@
 package graft.dedup
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import graft.SparkTestSession
 
@@ -34,7 +35,7 @@ class CcRoundPlanSpec extends AnyFunSuite {
     val edges = pathGraph(8)
     val nodes = (1 to 8).map(_.toLong).toDF("node")
     val captured = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-    graft.tools.PlanProbe.sink = (tag, df) => if (tag.startsWith("ccround_")) {
+    val sink: (String, DataFrame) => Unit = (tag, df) => if (tag.startsWith("ccround_")) {
       // execute the tapped frame's OWN queryExecution so AQE finalizes and
       // runtime exchange reuse is visible; the round inputs (sym + previous
       // labels) are checkpoints, so this re-runs only the round's own
@@ -45,8 +46,7 @@ class CcRoundPlanSpec extends AnyFunSuite {
         .split("== Initial Plan ==")(0)
       captured += ((tag, plan, nullPrev))
     }
-    try Dedup.connectedComponents(edges, nodes).collect()
-    finally graft.tools.PlanProbe.sink = null
+    graft.tools.PlanProbe.withSink(sink)(Dedup.connectedComponents(edges, nodes).collect())
     assert(captured.nonEmpty, "no CC rounds tapped")
     captured.foreach { case (tag, plan, nullPrev) =>
       assert(nullPrev == 0L,
@@ -61,5 +61,22 @@ class CcRoundPlanSpec extends AnyFunSuite {
         s"$tag: want exactly one scan of the symmetrized edge checkpoint " +
           s"per round, got $symScans:\n$plan")
     }
+  }
+
+  test("plan tap: a body that throws leaves no sink installed") {
+    import spark.implicits._
+    val edges = pathGraph(8)
+    val nodes = (1 to 8).map(_.toLong).toDF("node")
+    var taps = 0
+    intercept[IllegalStateException] {
+      graft.tools.PlanProbe.withSink((_, _) => taps += 1) {
+        Dedup.connectedComponents(edges, nodes).collect()
+        throw new IllegalStateException("body failed")
+      }
+    }
+    val tappedInside = taps
+    assert(tappedInside > 0, "no CC rounds tapped inside withSink")
+    Dedup.connectedComponents(edges, nodes).collect()
+    assert(taps == tappedInside, "the sink outlived the throwing withSink body")
   }
 }

@@ -25,19 +25,14 @@ SPARK_HOME=/opt/spark SPARK_SCALA_VERSION=2.13 \
   java $CS_OPENS -Xmx4g -cp "$CS_CP" graft.tools.ClusterSmoke /root/testdata/sf0.001 2>/dev/null \
   | grep '\[clustersmoke\] total'
 echo "[gate] local-cluster smoke ok"
-# Bench contract smoke: both stdout JSON lines parse (a Bench crash would
-# zero BENCH_r{N} exactly like round 2's compile error zeroed everything).
-# Since r14 the bench prints TWO lines — the full per-query object and the
-# driver-parseable family-rollup summary LAST — so validate each line on its
-# own and require the last one to be the summary (unit "sec"), mirroring
-# what the driver's 2 KiB stdout tail actually parses.
-SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 sbt -batch "runMain graft.Bench" 2>/dev/null \
-  | grep '"metric"' | python3 -c '
+# Benchmark smoke: one short perfbench run (the full-result timing path,
+# see BENCHMARK.json) must time every workload query with no failure and
+# match each query's committed digest. Its result line is the last line of
+# stdout; a crash or a missing result line exits nonzero.
+python3 perfbench/run.py --workload mixed_serial --seed 1 --seconds 10 --trace 0 \
+  | tail -n 1 | python3 -c '
 import json, sys
-lines = [l for l in sys.stdin.read().splitlines() if l.strip()]
-assert len(lines) == 2, f"want 2 JSON lines (full + summary), got {len(lines)}"
-objs = [json.loads(l[l.index("{"):]) for l in lines]
-assert objs[-1]["unit"] == "sec", "summary line must be LAST"
-assert len(json.dumps(objs[-1])) < 1500, "summary line must fit the driver tail"
-print("[gate] bench JSON ok")'
+r = json.loads(sys.stdin.read())
+assert r["correct"] is True and r["failed"] == 0, f"perfbench smoke failed: {r}"
+print("[gate] perfbench smoke ok")'
 echo "[gate] all green"
