@@ -83,19 +83,22 @@ object Tables {
         .option("pathGlobFilter", s"$table.parquet").parquet(d)
   }
 
+  /** The size gate of [[spreadSmall]] and [[materializeSmall]]: both act
+    * only on frames whose ESTIMATED size ([[sizeOf]]) is at most this. */
+  private val SmallBytes: Long = 64L << 20
+
   /** Spread a CPU-HEAVY narrow pipeline across the session's cores when its
     * input relation is tiny: the driver fixtures are single sub-MB parquet
     * files, so every scan is ONE split and per-row-expensive operators
     * (MinHash/shingle hashing, tokenize+explode fan-out, PNG/WAV decode,
-    * URL canonicalization) ran single-threaded on a 32-core session —
-    * measured 6-15 s single-task stages at sf0.1 (r13 StageTimeProbe).
+    * URL canonicalization) ran single-threaded — measured 6-15 s
+    * single-task stages at sf0.1 (r13 StageTimeProbe).
     *
-    * Scale-adaptive, not a local[32] constant: the repartition fires only
-    * below `maxBytes` of ESTIMATED input (plan stats ≈ file bytes), where
-    * the added exchange moves a provably trivial volume; at real scale the
-    * scan already yields ≥ cores splits and this is a no-op. Hash-keyed
-    * (deterministic under retry — the chaos-gate contract), never
-    * round-robin.
+    * Scale-adaptive: the repartition fires only below [[SmallBytes]] of
+    * estimated input (plan stats ≈ file bytes), where the added exchange
+    * moves a provably trivial volume; at real scale the scan already
+    * yields ≥ cores splits and this is a no-op. Hash-keyed (deterministic
+    * under retry — the chaos-gate contract), never round-robin.
     *
     * `bytesPerTask` scales the TARGET partition count with the estimated
     * input instead of always using the session's core count (r13 verdict:
@@ -104,14 +107,11 @@ object Tables {
     * exchange overhead exceeding the win). The caller picks it from the
     * known per-row cost of the consumer: per-row DECODE (ImageIO/WAV) and
     * fused MinHash want every core even on tiny bytes (≈8-16 KB/task);
-    * tokenize/explode pipelines saturate around 64 KB/task. The count is
-    * derived from measured plan stats, never a local[32] constant. */
-  def spreadSmall(df: DataFrame, key: Column,
-                  maxBytes: Long = 64L << 20,
-                  bytesPerTask: Long = 64L << 10): DataFrame = {
+    * tokenize/explode pipelines saturate around 64 KB/task. */
+  def spreadSmall(df: DataFrame, key: Column, bytesPerTask: Long = 64L << 10): DataFrame = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
     val bytes = sizeOf(df)
-    if (bytes <= maxBytes && cores > 1) {
+    if (bytes <= SmallBytes && cores > 1) {
       val target = (bytes + bytesPerTask - 1) / bytesPerTask
       val p = target.min(BigInt(cores)).max(BigInt(1)).toInt
       if (p > 1) df.repartition(p, key) else df
@@ -119,31 +119,25 @@ object Tables {
   }
 
   /** Estimated size of `df` in bytes, from its optimized plan's statistics
-    * (≈ file bytes for a scan-rooted frame): the one size gate that
-    * [[spreadSmall]] and [[isSmall]] read. */
+    * (≈ file bytes for a scan-rooted frame): the one size statistic that
+    * [[spreadSmall]] and [[materializeSmall]] gate on. */
   def sizeOf(df: DataFrame): BigInt = df.queryExecution.optimizedPlan.stats.sizeInBytes
 
-  /** True when [[sizeOf]] `df` is at most `maxBytes`: the gate of
-    * [[materializeSmall]]; [[spreadSmall]] applies the same test with the
-    * same default threshold. */
-  def isSmall(df: DataFrame, maxBytes: Long = 64L << 20): Boolean =
-    sizeOf(df) <= maxBytes
-
-  /** [[spreadSmall]] + eager materialization of a derived (projected)
-    * frame that several consumers re-derive: below the gate the projection
-    * is computed ONCE across all cores and checkpointed (released at the
-    * harness's between-queries drain via [[graft.Checkpoints]]); above it
-    * the frame is returned as-is — the consumers' re-derivation is the
-    * at-scale shape (a corpus-sized pinned block set would be worse than
-    * recompute). The checkpoint leaf is also an optimizer barrier: without
-    * it, filters INFERRED from a downstream explode (size > 0, isnotnull)
-    * re-expand the projection's expensive expressions below the spread
-    * exchange and the whole derivation runs 2-3× per row on the single
-    * scan split — the r13 StageTimeProbe measured 3-4.4 s single-task
-    * tokenize stages per consumer at sf0.1 from exactly that. */
-  def materializeSmall(df: DataFrame, maxBytes: Long = 64L << 20): DataFrame =
-    if (isSmall(df, maxBytes))
-      graft.Checkpoints.track(df.localCheckpoint(true))
+  /** Eager materialization of a derived (projected) frame that several
+    * consumers re-derive, usually over a [[spreadSmall]] input: at most
+    * [[SmallBytes]] the projection is computed ONCE and checkpointed
+    * (released at the harness's between-queries drain via
+    * [[graft.Checkpoints]]); above it the frame is returned as-is — the
+    * consumers' re-derivation is the at-scale shape (a corpus-sized pinned
+    * block set would be worse than recompute). The checkpoint leaf is also
+    * an optimizer barrier: without it, filters INFERRED from a downstream
+    * explode (size > 0, isnotnull) re-expand the projection's expensive
+    * expressions below the spread exchange and the whole derivation runs
+    * 2-3× per row on the single scan split — the r13 StageTimeProbe
+    * measured 3-4.4 s single-task tokenize stages per consumer at sf0.1
+    * from exactly that. */
+  def materializeSmall(df: DataFrame): DataFrame =
+    if (sizeOf(df) <= SmallBytes) graft.Checkpoints.track(df.localCheckpoint(true))
     else df
 
   /** Epoch-millis of the nanos `ts` column of [[events]] (exact: `DIV`). */

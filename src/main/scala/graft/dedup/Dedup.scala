@@ -169,7 +169,7 @@ object Dedup {
                            split: Option[(org.apache.spark.sql.Column,
                              org.apache.spark.sql.Column)]): DataFrame = {
     val docs = jaccardDocs(spark, dir)
-    val (_, _, cand) = jaccardCandidates(docs, threshold, split)
+    val cand = jaccardCandidates(docs, threshold, split)
     // Verification: each doc's token set is sorted ONCE (amortized over all
     // its candidate pairs), every pair scored by the allocation-free merge
     // `sorted_intersect_count` instead of a per-pair hash set — see SetOps.
@@ -209,13 +209,10 @@ object Dedup {
         .select(col("doc_id"), col("lang"), col("source"),
           array_distinct(TextAnalysis.tokensCol(col("text"))).as("toks")))
 
-  /** The prefix+length-filtered candidate generator — (left side, right
-    * side, candidate pairs), exposed as a trio so the scale probe can count
-    * exactly what enters and leaves the candidate join. */
+  /** The prefix+length-filtered candidate pairs (d1, d2). */
   private def jaccardCandidates(docs: DataFrame, threshold: Double,
                                 split: Option[(org.apache.spark.sql.Column,
-                                  org.apache.spark.sql.Column)])
-  : (DataFrame, DataFrame, DataFrame) = {
+                                  org.apache.spark.sql.Column)]): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
     val w = docs.select(col("doc_id"), col("lang"), col("source"),
       size(col("toks")).as("n"), explode(col("toks")).as("word"))
@@ -258,7 +255,7 @@ object Dedup {
     val left = split.fold(prefixes)(s => prefixes.filter(s._1))
     val right = split.fold(prefixes)(s => prefixes.filter(s._2))
     val orient = if (split.isEmpty) col("d1") < col("d2") else lit(true)
-    val cand = left.select(col("lang"), col("source"), col("word"),
+    left.select(col("lang"), col("source"), col("word"),
         col("doc_id").as("d1"), col("n").as("na"))
       .join(right.select(col("lang"), col("source"), col("word"),
           col("doc_id").as("d2"), col("n").as("nb"))
@@ -267,27 +264,6 @@ object Dedup {
         col("nb") >= col("na") * threshold - 1e-9 &&
         col("na") >= col("nb") * threshold - 1e-9)
       .select(col("d1"), col("d2")).dropDuplicates("d1", "d2")
-    (left, right, cand)
-  }
-
-  /** [[incrementalJaccard]] with an EXPLICIT watermark cut — the registered
-    * query derives its cut from the corpus max-id; a real ingest pipeline
-    * (and the scale probe) pins the batch boundary itself. */
-  private[graft] def incrementalJaccardAt(spark: SparkSession, dir: String,
-                                          cut: Long, threshold: Double = 0.8): DataFrame =
-    jaccardPairs(spark, dir, threshold,
-      split = Some((col("doc_id") <= cut, col("doc_id") > cut)))
-
-  /** Candidate-join diagnostics for the scale probe: rows entering each side
-    * of the candidate join and candidate pairs out, for either the full
-    * self-join (`cut = None`) or the incremental split. */
-  private[graft] def jaccardCandidateStats(spark: SparkSession, dir: String,
-                                           threshold: Double, cut: Option[Long])
-  : (Long, Long, Long) = {
-    val split = cut.map(c => (col("doc_id") <= c, col("doc_id") > c))
-    val (left, right, cand) =
-      jaccardCandidates(jaccardDocs(spark, dir), threshold, split)
-    (left.count(), right.count(), cand.count())
   }
 
   /** Reference implementation of [[tokenJaccard]] without prefix filtering —
@@ -340,24 +316,7 @@ object Dedup {
   def minhashSig(sh: Set[String]): Array[Long] =
     graft.functions.MinHash.sigOf(sh.iterator.map(_.getBytes("UTF-8")))
 
-  final case class DocSig(doc_id: Long, sig: Array[Long])
   final case class NearDup(d1: Long, d2: Long, est_jaccard: Double)
-
-  /** MinHash signatures for every document. One map-only pass. */
-  def signatures(spark: SparkSession, dir: String): Dataset[DocSig] = {
-    import spark.implicits._
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), TextAnalysis.tokensCol(lower(col("text"))).as("toks"))
-      .as[(Long, Seq[String])]
-      .map { case (id, toks) => DocSig(id, minhashSig(shingles(toks))) }
-  }
-
-  /** Word w-shingles as a native array column: `concat_ws` over sliding
-    * `slice`s of the token array — stays inside Catalyst, no JVM objects. */
-  def shinglesCol(toks: Column, w: Int = 3): Column =
-    when(size(toks) < w, array(concat_ws(" ", toks)))
-      .otherwise(transform(sequence(lit(0), size(toks) - w),
-        i => concat_ws(" ", slice(toks, i + 1, lit(w)))))
 
   /** MinHash signatures, declarative and map-only: per document, a
     * 64-element `sig` array via the fused `minhash_tokens` expression — one
@@ -580,68 +539,65 @@ object Dedup {
     * label's label (`label(v) <- label(label(v))` — path doubling). The
     * jump halves remaining chain depth, so convergence is O(log diameter)
     * rounds, not O(diameter): the default 20 rounds cover any component a
-    * real corpus can produce. Each round is two shuffle joins + one
-    * partial-aggregated groupBy over the (small) label table, and the
-    * frontier is `localCheckpoint`ed so the plan stays flat across
-    * iterations. This variant keeps the edges in memory and re-exchanges
-    * them each round (checkpointed RDD partitioning is invisible to
-    * Catalyst); [[connectedComponentsBucketed]] is the at-scale shape that
-    * eliminates the per-round edge exchange.
+    * real corpus can produce. The frontier is `localCheckpoint`ed so the
+    * plan stays flat across iterations.
+    *
+    * The edge layout is decided FROM THE DATA: symmetrize + materialize the
+    * edges once (localCheckpoint), count them (free on the checkpointed
+    * blocks), and run the in-memory iteration below `cutover` sym rows,
+    * the bucketed-table iteration at or above it — the same adaptive shape
+    * AQE applies to join strategies, applied to iteration-invariant
+    * layout. Below the cutover the label table is ≤ 2·cutover rows (every
+    * label row is an edge endpoint), so it rides a broadcast and each
+    * round's joins move ZERO edge bytes. Above it the symmetrized edges are
+    * written once as a managed table bucketed (and bucket-sorted) by
+    * `src`, so EVERY round's neighbor join reads pre-partitioned buckets
+    * and plans no Exchange on the edge side — only the
+    * (label-table-sized) side shuffles. A checkpointed frontier's RDD
+    * partitioning is invisible to Catalyst, so without the bucketed table
+    * the edge relation would re-exchange every round; at 100 TB that is
+    * the difference between shuffling the edge corpus O(log d) times and
+    * once. The labels join side carries a shuffle_merge hint there: at
+    * scale labels is |V|-sized, and letting AQE broadcast it would both be
+    * wrong at 100 TB and silently discard the bucket partitioning. The
+    * table is dropped before returning — safe because every round's
+    * labels are eagerly checkpointed. `cutover = 0` forces the bucketed
+    * branch.
     *
     * `edges` needs columns (d1, d2), undirected, any orientation; `nodes`
     * one column `node` covering at least every endpoint — isolated nodes
     * keep their own label. */
-  def connectedComponents(edges: DataFrame, nodes: DataFrame,
-                          maxIter: Int = 20): DataFrame = {
+  def connectedComponents(edges: DataFrame, nodes: DataFrame, maxIter: Int = 20,
+                          cutover: Long = BucketedEdgeCutover): DataFrame = {
     // Frontier handling: localCheckpoint(true), NOT persist+unpersist.
     // Unpersisting an upstream cached frame (cascade=false) re-caches its
     // dependents LAZILY against the raw lineage, discarding materialized
     // buffers — in an iterative chain that degenerates to exponential
     // recompute (observed: a 16-node path graph spun for minutes). The
-    // checkpoint truncates lineage each round instead; the retained blocks
-    // are one tiny label table per round (|nodes| rows), reclaimed by the
-    // ContextCleaner once the frame references are GC'd.
+    // checkpoint truncates lineage each round instead.
     val sym = symmetrize(edges).localCheckpoint(true)
-    // one cache-scan job: |sym| decides the same label-broadcast cutover
-    // connectedComponentsAuto applies (the blocks are already materialized)
-    ccIterate(sym, nodes, maxIter, mergeHint = false,
-      smallLabels = sym.count() < BucketedEdgeCutover)
+    if (sym.count() < cutover) ccIterate(sym, nodes, maxIter, mergeHint = false)
+    else ccBucketed(sym, nodes, maxIter)
   }
 
-  /** [[connectedComponents]] over a BUCKETED edge table: the symmetrized
-    * edges are written once as a managed table bucketed (and bucket-sorted)
-    * by `src`, so EVERY propagation round's neighbor join reads
-    * pre-partitioned buckets and plans no Exchange on the edge side — only
-    * the (label-table-sized) side shuffles. A checkpointed frontier's RDD
-    * partitioning is invisible to Catalyst, so the plain variant re-exchanges
-    * the edge relation every round; baking the partitioning into the file
-    * layout is the at-rest fix, and at 100 TB it is the difference between
-    * shuffling the edge corpus O(log d) times and once. The labels join side
-    * carries a shuffle_merge hint: at scale labels is |V|-sized, and letting
-    * AQE broadcast it would both be wrong at 100 TB and silently discard the
-    * bucket partitioning advantage being asserted here.
-    *
-    * The table is dropped before returning — safe because every round's
-    * labels are eagerly checkpointed, so the returned frame references only
-    * `nodes` and the final (materialized) label table. */
-  def connectedComponentsBucketed(edges: DataFrame, nodes: DataFrame,
-                                  buckets: Int = 32, maxIter: Int = 20): DataFrame =
-    ccBucketedFromSym(symmetrize(edges), nodes, buckets, maxIter)
+  /** Bucket count of [[connectedComponents]]' at-scale edge table. */
+  private val CcBuckets = 32
 
-  private def ccBucketedFromSym(sym: DataFrame, nodes: DataFrame,
-                                buckets: Int, maxIter: Int,
-                                afterWrite: () => Unit = () => ()): DataFrame = {
+  private def ccBucketed(sym: DataFrame, nodes: DataFrame, maxIter: Int): DataFrame = {
     val spark = sym.sparkSession
     val table = "graft_cc_edges_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
     // repartition by the bucket key first so each task writes only its own
     // buckets (one file per bucket, which also lets SortMergeJoin skip the
     // per-partition sort — the files are bucket-sorted)
-    sym.repartition(buckets, col("src"))
+    sym.repartition(CcBuckets, col("src"))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .bucketBy(buckets, "src").sortBy("src")
+      .bucketBy(CcBuckets, "src").sortBy("src")
       .saveAsTable(table)
-    afterWrite() // the bucketed table now holds the edges; release sym blocks
+    // the bucketed table now holds the edges: the checkpoint blocks are
+    // dead weight — corpus-sized, non-fault-tolerant, and otherwise pinned
+    // on executors for the whole iteration
+    releaseLocalCheckpoint(sym)
     try ccIterate(spark.table(table), nodes, maxIter, mergeHint = true)
     finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
@@ -651,7 +607,7 @@ object Dedup {
     * frame is not registered there; the blocks belong to the `LogicalRDD`
     * leaf the checkpoint left in the plan. Callers: [[ccIterate]] releases
     * each superseded frontier once the next round's frontier is
-    * materialized, and [[connectedComponentsAuto]]'s bucketed branch releases
+    * materialized, and [[connectedComponents]]' bucketed branch releases
     * the pre-write edge frame — at 100 TB those are corpus- or |V|-sized
     * non-fault-tolerant blocks that must not stay pinned for the whole
     * iteration.
@@ -681,28 +637,6 @@ object Dedup {
     * edge table re-exchanges in milliseconds either way). */
   val BucketedEdgeCutover: Long = 1L << 20
 
-  /** [[connectedComponents]] with the edge-layout decision made FROM THE
-    * DATA: symmetrize + materialize the edges once (localCheckpoint), count
-    * them (free on the checkpointed blocks), and run the plain in-memory
-    * iteration below [[BucketedEdgeCutover]] sym rows, the bucketed-table
-    * iteration above it. The same adaptive shape AQE applies to join
-    * strategies, applied to iteration-invariant layout. */
-  def connectedComponentsAuto(edges: DataFrame, nodes: DataFrame,
-                              buckets: Int = 32, maxIter: Int = 20,
-                              cutover: Long = BucketedEdgeCutover): DataFrame = {
-    val sym = symmetrize(edges).localCheckpoint(true)
-    // below the cutover the label table is ≤ 2·cutover rows (every label
-    // row is an edge endpoint) — comfortably broadcastable, so each
-    // round's joins move ZERO edge bytes (see ccIterate's smallLabels)
-    if (sym.count() < cutover) ccIterate(sym, nodes, maxIter, mergeHint = false,
-      smallLabels = true)
-    // bucketed branch: once the edges are written to the bucketed table the
-    // checkpoint blocks are dead weight — corpus-sized, non-fault-tolerant,
-    // and otherwise pinned on executors for the whole iteration
-    else ccBucketedFromSym(sym, nodes, buckets, maxIter,
-      afterWrite = () => releaseLocalCheckpoint(sym))
-  }
-
   private def symmetrize(edges: DataFrame): DataFrame =
     edges.select(col("d1").as("src"), col("d2").as("dst"))
       .unionAll(edges.select(col("d2").as("src"), col("d1").as("dst")))
@@ -711,16 +645,12 @@ object Dedup {
     * renamed to the edge key and joined on `src`. With a bucketed `sym` this
     * must plan exactly one Exchange (the labels side). */
   private[dedup] def neighborJoin(sym: DataFrame, labels: DataFrame,
-                                  mergeHint: Boolean,
-                                  broadcastLabels: Boolean = false): DataFrame = {
+                                  mergeHint: Boolean): DataFrame = {
     val l0 = labels.withColumnRenamed("node", "src")
-    // three mutually exclusive shapes: bucketed (hint pins the merge join
-    // so AQE cannot discard the bucket layout), small (labels broadcast —
-    // the edge side moves zero bytes per round), plain (both shuffle,
-    // ReuseExchange shares the sym side across rounds' subplans)
-    val l = if (mergeHint) l0.hint("shuffle_merge")
-            else if (broadcastLabels) broadcast(l0)
-            else l0
+    // two shapes: bucketed (hint pins the merge join so AQE cannot discard
+    // the bucket layout), small (labels broadcast — the edge side moves
+    // zero bytes per round)
+    val l = if (mergeHint) l0.hint("shuffle_merge") else broadcast(l0)
     sym.join(l, "src")
       .select(col("dst").as("node"), col("label"))
   }
@@ -734,16 +664,13 @@ object Dedup {
     * convergence metric — CcRoundPlanSpec pins the no-null-prev invariant
     * on every tapped round. */
   private def ccIterate(sym: DataFrame, nodes: DataFrame, maxIter: Int,
-                        mergeHint: Boolean,
-                        smallLabels: Boolean = false): DataFrame = {
-    // below the caller-measured cutover, every |V|-sized relation in the
-    // round (labels into the neighbor join, the pointer-jump lookup, the
-    // terminal label table) rides a broadcast: the per-round exchange
-    // count drops from 3-4 to 1 (the union-aggregate), and the edge
-    // relation is never re-exchanged. Values are exact integer min/sum —
-    // join strategy cannot change them.
-    val bcast: DataFrame => DataFrame =
-      if (smallLabels && !mergeHint) broadcast _ else identity _
+                        mergeHint: Boolean): DataFrame = {
+    // below the cutover (no merge hint), the |V|-sized labels into the
+    // neighbor join and the terminal label table ride a broadcast: the
+    // per-round exchange count drops from 3-4 to 1 (the union-aggregate),
+    // and the edge relation is never re-exchanged. Values are exact
+    // integer min/sum — join strategy cannot change them.
+    val bcast: DataFrame => DataFrame = if (mergeHint) identity _ else broadcast _
     // only nodes that appear in an edge can ever change label — iterate over
     // those (typically a small fraction of the corpus) and fold the isolated
     // majority back in at the end with label = self. The node list needs one
@@ -758,7 +685,7 @@ object Dedup {
     var converged = false
     var it = 0
     while (!converged && it < maxIter) {
-      val nbr = neighborJoin(sym, labels, mergeHint, broadcastLabels = smallLabels && !mergeHint)
+      val nbr = neighborJoin(sym, labels, mergeHint)
       // The round's ONE materialization: the old label rides through the
       // min-aggregation as `prev` (each node contributes exactly one non-null
       // prev row, so max() recovers it), which makes the convergence check a
@@ -862,7 +789,7 @@ object Dedup {
       .agg(min(col("doc_id")).as("d1"), collect_set(col("doc_id")).as("ids"))
       .select(col("d1"), explode(col("ids")).as("d2"))
       .filter(col("d1") =!= col("d2"))
-    val labels = connectedComponentsAuto(jac.unionAll(exEdges),
+    val labels = connectedComponents(jac.unionAll(exEdges),
       docs.select(col("doc_id").as("node")))
     labels.select(col("node").as("doc_id"), col("label").as("canonical_id"),
       (col("node") === col("label")).as("keep"))

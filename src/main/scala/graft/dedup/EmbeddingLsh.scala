@@ -270,7 +270,7 @@ object EmbeddingLsh {
                 threshold: Double = 0.35): DataFrame = {
     val p = pairs(spark, dir, bands, width, threshold).select(col("d1"), col("d2"))
     val nodes = diagFrame(spark, dir).select(col("vec_id").as("node"))
-    Dedup.connectedComponentsAuto(p, nodes)
+    Dedup.connectedComponents(p, nodes)
       .select(col("node").as("vec_id"), col("label").as("canonical_id"),
         (col("node") === col("label")).as("keep"))
   }
@@ -304,7 +304,7 @@ object EmbeddingLsh {
     val frame = prodFrame(spark, dir)
     val p = pairsProd(spark, dir).select(col("d1"), col("d2"))
     val nodes = frame.select(col("vec_id").as("node"))
-    Dedup.connectedComponentsAuto(p, nodes)
+    Dedup.connectedComponents(p, nodes)
       .select(col("node").as("vec_id"), col("label").as("canonical_id"),
         (col("node") === col("label")).as("keep"))
   }

@@ -129,10 +129,6 @@ object MinHash {
     new GenericArrayData(sig)
   }
 
-  /** Column form: `minhashSigCol(shinglesArrayCol)`. */
-  def minhashSigCol(c: Column): Column =
-    ColumnBridge.column(MinHashSigExpr(ColumnBridge.expression(c)))
-
   /** Column form of the fused tokens→signature path: `minhashTokensCol(toks)`. */
   def minhashTokensCol(c: Column, w: Int = 3): Column =
     ColumnBridge.column(MinHashTokensExpr(ColumnBridge.expression(c), w))

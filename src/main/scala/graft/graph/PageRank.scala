@@ -50,7 +50,7 @@ object PageRank {
     * moves ZERO bytes per round. Above the cutover the join reverts to the
     * shuffled shape whose at-scale fix is the bucketed-by-src edge layout
     * (`Dedup.BucketedEdgeCutover`'s argument). Decided FROM THE DATA (the
-    * iteration counts |V| anyway), like `connectedComponentsAuto`. */
+    * iteration counts |V| anyway), like `Dedup.connectedComponents`. */
   val BroadcastRanksCutover: Long = 1L << 21
 
   /** Power-iterate ranks over weighted directed `edges` (columns `src`,
@@ -175,21 +175,15 @@ object PageRank {
   /** Token co-occurrence edges for TextRank: consecutive ORIGINAL-position
     * token pairs per document (both tokens non-empty), symmetrized, weight
     * = pair count. One map-only scan builds all pairs from the split array
-    * — no self-join of an exploded frame. */
+    * ([[graft.text.TextAnalysis.pairsCol]]) — no self-join of an exploded
+    * frame. Empty tokens are dropped after pairing, so a double space
+    * breaks adjacency instead of closing it up. */
   def textrankEdges(spark: SparkSession, dir: String): DataFrame = {
-    // spread: the adjacent-pair transform+filter below is CodegenFallback-
-    // interpreted, so the single-split fixture scan serialized it; no-op
-    // at scale (Tables.spreadSmall)
-    val pairs = Tables.spreadSmall(Tables.documents(spark, dir), col("doc_id"))
+    val pairs = Tables.documents(spark, dir)
       .select(split(col("text"), " ").as("toks"))
-      .select(explode(expr(
-        """filter(
-             transform(
-               CASE WHEN size(toks) >= 2 THEN sequence(0, size(toks) - 2)
-                    ELSE array() END,
-               i -> struct(toks[i] AS src, toks[i + 1] AS dst)),
-             p -> p.src <> '' AND p.dst <> '')""")).as("p"))
-      .select(col("p.src").as("src"), col("p.dst").as("dst"))
+      .select(explode(graft.text.TextAnalysis.pairsCol(col("toks"), 1)).as("p"))
+      .select(col("p.a").as("src"), col("p.b").as("dst"))
+      .filter(col("src") =!= "" && col("dst") =!= "")
     symCounted(pairs)
   }
 
@@ -244,8 +238,8 @@ object PageRank {
   /** Symmetrized pair counts via aggregate-THEN-mirror: count the directed
     * pairs once, union the flipped AGGREGATED rows, and sum. Identical
     * values to counting over the mirrored raw pairs — w(s,d) = c(s,d) +
-    * c(d,s) either way — but the raw pair generator (an interpreted
-    * adjacent-pair lambda in [[textrankEdges]]) is evaluated ONCE: both
+    * c(d,s) either way — but the raw pair generator (the tokenize +
+    * pair explode in [[textrankEdges]]) is evaluated ONCE: both
     * union branches share the identical partial-agg exchange subtree
     * (ReuseExchange), where the former shape's branches differed (one had
     * the flip projection below the aggregate) and re-ran the whole explode

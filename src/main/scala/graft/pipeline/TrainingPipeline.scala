@@ -69,8 +69,7 @@ object TrainingPipeline {
                   blocked: Seq[String] = Seq("slow", "big", "bad")): org.apache.spark.sql.Column = {
     val blockedFrac =
       size(filter(tk, t => t.isInCollection(blocked))).cast("double") / size(tk)
-    val meanWordLen = aggregate(transform(tk, t => length(t).cast("bigint")),
-      lit(0L), (a, x) => a + x).cast("double") / size(tk)
+    val meanWordLen = TextAnalysis.charCountCol(tk).cast("double") / size(tk)
     val gs = graft.functions.TextHash.gramStatsCol(tk)
     !(blockedFrac > 0.05) &&
       size(tk).cast("bigint") >= 30 && meanWordLen >= 3.0 && meanWordLen <= 10.0 &&

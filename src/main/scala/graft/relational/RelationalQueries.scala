@@ -1000,22 +1000,6 @@ object RelationalQueries {
         col("new_price").cast("double").as("new_price"))
   }
 
-  /** One JVM-exit cleanup hook per scratch path (idempotent across
-    * invocations): the bucketed-ingest generation lives outside Spark's
-    * managed warehouse, so nothing else deletes it. */
-  private val cleanupRegistered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def registerCleanup(path: String): Unit =
-    if (cleanupRegistered.add(path))
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          val kids = f.listFiles()
-          if (kids != null) kids.foreach(rm)
-          f.delete(): Unit
-        }
-        rm(new java.io.File(path))
-      }))
-
   /** The co-located fact-fact join THROUGH the at-rest bucketed layout
     * ([[graft.sources.Layout.bucketedWrite]]): orders and lineitem are
     * written bucketed-and-sorted on orderkey into a fresh generation, then
@@ -1029,8 +1013,7 @@ object RelationalQueries {
     // every invocation (a fresh createTempDirectory per call accumulated
     // unbounded /tmp data across bench runs — DROP TABLE does not delete
     // an external table's path) and deleted on JVM exit
-    val wh = s"${System.getProperty("java.io.tmpdir")}/graft_bkt_${spark.sparkContext.applicationId}"
-    registerCleanup(wh)
+    val wh = graft.sources.ArtifactCache.sessionPath(spark, "bkt")
     // one bucketed-ingest generation per fixture state (ArtifactCache):
     // the write is the per-batch ingest cost, the registered query is the
     // exchange-free join THROUGH the layout — the skip requires the
@@ -1154,8 +1137,7 @@ object RelationalQueries {
         count(lit(1)).as("count_order"))
       .localCheckpoint(true))
     val slice = (d: Boolean) => parts.filter(col("is_delta") === d).drop("is_delta")
-    val mv = s"${System.getProperty("java.io.tmpdir")}/graft_mv_${spark.sparkContext.applicationId}"
-    registerCleanup(mv)
+    val mv = graft.sources.ArtifactCache.sessionPath(spark, "mv")
     // groups-sized MV: ONE output file (it is a handful of rows at any
     // corpus size — the whole point of the materialized rollup), and the
     // readback declares the schema we just wrote instead of re-running

@@ -42,39 +42,46 @@ object Dsir {
   val NumBuckets = 64
   val TopN = 100
 
-  /** Unigrams ++ bigrams ("a b") of a token array — the DSIR feature set.
-    * Index-generated (`sequence` + `element_at`, the text_top_ngrams idiom)
-    * rather than slice+transform: the slice form's non-foldable bounds fell
-    * out of whole-stage codegen and made the gram explode ~9× slower
-    * (measured 3.4 s → 0.4 s at bench SF for this stage). */
+  /** Unigrams ++ bigrams of a token array — the DSIR feature set — as
+    * `array<struct<a, b>>`: a unigram is (t, null) (`arrays_zip` pads the
+    * empty second array with nulls), a bigram is (tᵢ, tᵢ₊₁)
+    * ([[TextAnalysis.pairsCol]]). [[gramCol]] renders either as the gram
+    * string. Codegen'd built-ins only; reference `tk` as a projected
+    * attribute. */
   def gramsCol(tk: Column): Column =
-    concat(tk, when(size(tk) >= 2,
-      transform(sequence(lit(0), size(tk) - 2),
-        i => concat(element_at(tk, i + 1), lit(" "), element_at(tk, i + 2))))
-      .otherwise(array().cast("array<string>")))
+    concat(arrays_zip(tk.as("a"), array().cast("array<string>").as("b")),
+      TextAnalysis.pairsCol(tk, 1))
+
+  /** The gram string of one [[gramsCol]] element: "a" or "a b". */
+  def gramCol(g: Column): Column = concat_ws(" ", g("a"), g("b"))
+
+  /** Per-(doc_id, lang, bucket) gram counts of the corpus — the one gram
+    * derivation [[importanceTop]] and [[trainLlr]] share. Tokens are
+    * projected to an ATTRIBUTE before gramsCol references them multiply:
+    * inlining the regex split into every reference re-splits the text per
+    * use — measured 9× on this stage (the text_top_ngrams project-first
+    * idiom). */
+  private[graft] def gramCounts(spark: SparkSession, dir: String): DataFrame =
+    // spread: the per-row cost is the gram explode + FNV + partial
+    // aggregate over ~2 grams per token, not the pair build — with the
+    // pairs codegen'd, this stage still measured 560-670 ms on the one
+    // scan split vs 240-370 ms spread (sf0.1, local[4], median of 5);
+    // no-op at scale (Tables.spreadSmall)
+    Tables.spreadSmall(Tables.documents(spark, dir), col("doc_id"))
+      .select(col("doc_id"), col("lang"), TextAnalysis.tokensCol(col("text")).as("tk"))
+      .select(col("doc_id"), col("lang"), explode(gramsCol(col("tk"))).as("g"))
+      .select(col("doc_id"), col("lang"),
+        (Fnv32.fnv32(gramCol(col("g"))) % NumBuckets).as("bucket"))
+      .groupBy(col("doc_id"), col("lang"), col("bucket"))
+      .agg(count(lit(1)).as("c"))
 
   /** The registered query: the TopN highest-importance documents with their
     * exact integer micro-llr score and gram count. */
   def importanceTop(spark: SparkSession, dir: String,
                     targetLang: String = "en"): DataFrame = {
-    // tokens projected to an ATTRIBUTE before gramsCol references it
-    // multiply (incl. inside the bigram lambda): inlining the regex split
-    // into every element_at re-splits the text per element — measured 9×
-    // on this stage (the text_top_ngrams project-first idiom)
-    // spreadSmall: the gram explode (bigram lambda is CodegenFallback-
-    // interpreted) + hash ran as ONE task on the single-split fixture scan
-    // (742 ms stage, r13 StageTimeProbe); no-op at scale
-    val grams = Tables.spreadSmall(Tables.documents(spark, dir), col("doc_id"))
-      .select(col("doc_id"), col("lang"), TextAnalysis.tokensCol(col("text")).as("tk"))
-      .select(col("doc_id"), col("lang"), explode(gramsCol(col("tk"))).as("g"))
-      .select(col("doc_id"), col("lang"),
-        (Fnv32.fnv32(col("g")) % NumBuckets).as("bucket"))
     // ONE corpus scan: the per-(doc,bucket) count table feeds the raw
     // distribution, the target distribution, and the scoring join
-    val cnts = grams
-      .groupBy(col("doc_id"), col("lang"), col("bucket"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+    val cnts = gramCounts(spark, dir).localCheckpoint(true)
     cnts.join(broadcast(llrFrame(cnts, targetLang)), "bucket")
       .groupBy(col("doc_id"))
       .agg(sum(col("c") * col("llr_fx")).as("score_fx"), sum(col("c")).as("n_grams"))
@@ -106,15 +113,8 @@ object Dsir {
     * B rows. */
   def trainLlr(spark: SparkSession, dir: String,
                targetLang: String = "en"): Array[Long] = {
-    val grams = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("lang"), TextAnalysis.tokensCol(col("text")).as("tk"))
-      .select(col("doc_id"), col("lang"), explode(gramsCol(col("tk"))).as("g"))
-      .select(col("doc_id"), col("lang"),
-        (Fnv32.fnv32(col("g")) % NumBuckets).as("bucket"))
-    val cnts = grams.groupBy(col("doc_id"), col("lang"), col("bucket"))
-      .agg(count(lit(1)).as("c"))
     val out = new Array[Long](NumBuckets)
-    llrFrame(cnts, targetLang).collect()
+    llrFrame(gramCounts(spark, dir), targetLang).collect()
       .foreach(r => out(r.getInt(0)) = r.getLong(1))
     out
   }
@@ -133,7 +133,7 @@ object Dsir {
       .select(col("doc_id"),
         aggregate(
           transform(col("grams"),
-            g => element_at(tab, (Fnv32.fnv32(g) % NumBuckets) + 1)),
+            g => element_at(tab, (Fnv32.fnv32(gramCol(g)) % NumBuckets) + 1)),
           lit(0L), (acc, x) => acc + x).as("score_fx"),
         size(col("grams")).cast("bigint").as("n_grams"))
   }

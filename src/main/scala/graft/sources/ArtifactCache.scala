@@ -57,9 +57,11 @@ object ArtifactCache {
   private val cleanupRegistered = ConcurrentHashMap.newKeySet[String]()
 
   /** One deterministic scratch path per (session, tag), deleted on JVM
-    * exit — artifact generations live outside Spark's managed warehouse,
-    * so nothing else would delete them (the RelationalQueries precedent,
-    * promoted next to the cache that makes the paths long-lived). */
+    * exit together with the `<path>.genkey` marker [[cachedBuild]] writes
+    * next to it — artifact generations live outside Spark's managed
+    * warehouse, so nothing else would delete them. The one scratch-path
+    * helper: every query that writes its own ingest generation takes its
+    * path from here. */
   def sessionPath(spark: org.apache.spark.sql.SparkSession, tag: String): String = {
     val p = s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_${spark.sparkContext.applicationId}"
     if (cleanupRegistered.add(p))

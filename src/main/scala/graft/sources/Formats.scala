@@ -17,25 +17,6 @@ import org.apache.spark.sql.types._
   * — the /tmp-accumulation lesson. */
 object Formats {
 
-  private val cleanupRegistered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def registerCleanup(path: String): Unit =
-    if (cleanupRegistered.add(path))
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          val kids = f.listFiles()
-          if (kids != null) kids.foreach(rm)
-          f.delete(): Unit
-        }
-        rm(new java.io.File(path))
-      }))
-
-  private def sessionPath(spark: SparkSession, tag: String): String = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_${spark.sparkContext.applicationId}"
-    registerCleanup(p)
-    p
-  }
-
   /** DIRTY-CSV ingest: customer rows rendered as raw delimited lines with
     * every (custkey % 17 == 3) row's balance replaced by the unparseable
     * token `n/a`, read back under an explicit schema in PERMISSIVE mode
@@ -49,7 +30,7 @@ object Formats {
     * hand (a proper CSV writer would escape the dirt away); none of the
     * rendered fields contains the delimiter. */
   def csvDirty(spark: SparkSession, dir: String): DataFrame = {
-    val path = sessionPath(spark, "csv")
+    val path = ArtifactCache.sessionPath(spark, "csv")
     graft.Tables.customer(spark, dir)
       .select(concat_ws(",",
         col("c_custkey"), col("c_name"), col("c_nationkey"),
@@ -88,7 +69,7 @@ object Formats {
     * FROM THE ORC COPY — equality with the parquet-derived oracle proves
     * the format path value-lossless, including DECIMAL fidelity. */
   def orcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val path = sessionPath(spark, "orc")
+    val path = ArtifactCache.sessionPath(spark, "orc")
     def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(18, 2))
     // one ORC generation per fixture state: the copy is the INGEST, the
     // registered query is the scan+agg FROM it (ArtifactCache contract)

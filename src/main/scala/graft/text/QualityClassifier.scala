@@ -359,8 +359,7 @@ object QualityClassifier {
       .select(col("doc_id"), col("tk"), size(col("tk")).cast("bigint").as("n_words"),
         TextHash.gramStatsCol(col("tk")).as("gs"))
     // shape part of the margin: map-only arithmetic on the fused stats
-    val meanLen = aggregate(transform(col("tk"), t => length(t).cast("bigint")),
-      lit(0L), (a, x) => a + x).cast("double") / col("n_words")
+    val meanLen = TextAnalysis.charCountCol(col("tk")).cast("double") / col("n_words")
     val topBi = col("gs")(0).cast("double") / col("gs")(1)
     val dupTri = (col("gs")(2) - col("gs")(3)).cast("double") / col("gs")(2)
     val shapeZ = lit(w(0)) + lit(w(1)) * (col("n_words") / 100.0) +

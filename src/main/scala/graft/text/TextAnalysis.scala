@@ -18,6 +18,25 @@ object TextAnalysis {
   def tokensCol(text: Column): Column =
     array_remove(split(text, NonLetter), "")
 
+  /** Token pairs at distance 1..`w` of a token array, as
+    * `array<struct<a, b>>`: for each k ≤ w, (t[i], t[i+k]) for every
+    * i < size − k, in position order. Built from codegen'd built-ins only
+    * (`arrays_zip` of two shifted `slice`s per k, `concat` over k), so
+    * the pair stream stays inside whole-stage codegen — a `transform`
+    * lambda over `sequence` is CodegenFallback and runs interpreted.
+    * Reference `t` as a projected attribute: it is read 2·w times. */
+  def pairsCol(t: Column, w: Int): Column = {
+    def shifted(k: Int): Column = {
+      val len = greatest(size(t) - k, lit(0))
+      arrays_zip(slice(t, lit(1), len).as("a"), slice(t, lit(k + 1), len).as("b"))
+    }
+    concat((1 to w).map(shifted): _*)
+  }
+
+  /** Total character count of a token array: the length of the tokens
+    * joined with no separator (one codegen'd expression, no lambda). */
+  def charCountCol(t: Column): Column = length(array_join(t, "")).cast("bigint")
+
   private val stopwords = Seq("the", "a", "of", "and", "to", "in", "is")
 
   /** Per-document token statistics (token counting): exact integer counts,
@@ -31,8 +50,7 @@ object TextAnalysis {
         size(col("toks")).cast("bigint").as("n_tokens"),
         size(array_distinct(col("toks"))).cast("bigint").as("n_distinct"),
         col("text_len").cast("bigint").as("n_chars"),
-        (aggregate(transform(col("toks"), t => length(t).cast("bigint")),
-          lit(0L), (acc, x) => acc + x).cast("double") / size(col("toks")))
+        (charCountCol(col("toks")).cast("double") / size(col("toks")))
           .as("avg_token_len"))
 
   /** GPT-2-style pre-tokenizer regex, lookahead-free so the identical
@@ -215,8 +233,7 @@ object TextAnalysis {
       .filter(size(col("tk")) >= 3)
       .select(col("doc_id"),
         size(col("tk")).cast("bigint").as("n_words"),
-        (aggregate(transform(col("tk"), t => length(t).cast("bigint")),
-          lit(0L), (acc, x) => acc + x).cast("double") / size(col("tk")))
+        (charCountCol(col("tk")).cast("double") / size(col("tk")))
           .as("mean_word_len"),
         graft.functions.TextHash.gramStatsCol(col("tk")).as("gs"))
       .select(col("doc_id"), col("n_words"), col("mean_word_len"),
@@ -270,10 +287,8 @@ object TextAnalysis {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), tokensCol(lower(col("text"))).as("t"))
       .persist()
-    val bi = docs.filter(size(col("t")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(0, size(t) - 2), i -> struct(t[i] AS w1, t[i + 1] AS w2))")).as("b"))
-      .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
+    val bi = docs.select(col("doc_id"), explode(pairsCol(col("t"), 1)).as("b"))
+      .select(col("doc_id"), col("b.a").as("w1"), col("b.b").as("w2"))
     // vocab²-bounded (≪ corpus) and referenced by both c1 and the scoring
     // join — the ideal cache candidate
     val c2 = bi.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2")).persist()
@@ -405,13 +420,10 @@ object TextAnalysis {
     * and the driver merges partitions×k; no global sort materializes at any
     * corpus size (plan-spec-pinned). */
   def topNgrams(spark: SparkSession, dir: String, k: Int = 25): DataFrame =
-    // spread: the bigram transform lambda is CodegenFallback-interpreted
-    // and ran on the one scan split (r14, the Dsir.importanceTop finding)
-    Tables.spreadSmall(Tables.documents(spark, dir), col("doc_id"))
+    Tables.documents(spark, dir)
       .select(tokensCol(col("text")).as("t"))
-      .filter(size(col("t")) >= 2)
-      .select(explode(expr(
-        "transform(sequence(0, size(t) - 2), i -> concat(t[i], ' ', t[i + 1]))")).as("gram"))
+      .select(explode(pairsCol(col("t"), 1)).as("p"))
+      .select(concat(col("p.a"), lit(" "), col("p.b")).as("gram"))
       .groupBy(col("gram")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("gram"))
       .limit(k)
@@ -600,12 +612,15 @@ object TextAnalysis {
         """concat(substring(qtok, 1, CAST((doc_id DIV 11) % length(qtok) AS INT)),
                   substring(qtok, CAST((doc_id DIV 11) % length(qtok) AS INT) + 2, 1000000))"""))
       .select(col("doc_id"), col("q"))
-    def variants(c: String): Column = expr(
-      s"""array_distinct(concat(array($c),
-            transform(sequence(1, length($c)),
-              i -> concat(substring($c, 1, i - 1), substring($c, i + 1, 1000000)))))""")
-    val vSide = vocab.select(col("word"), explode(variants("word")).as("v"))
-    val qSide = queries.select(col("doc_id"), col("q"), explode(variants("q")).as("v"))
+    // one row per position i = 0..len: the string minus its i-th char
+    // (i = 0 deletes nothing: substring(c, 1, -1) is empty). Built-ins
+    // only, no lambda; a doubled letter repeats a variant, which only
+    // repeats join rows that the distinct below collapses.
+    def variants(df: DataFrame, c: String): DataFrame =
+      df.select(col("*"), explode(sequence(lit(0), length(col(c)))).as("i"))
+        .withColumn("v", expr(s"concat(substring($c, 1, i - 1), substring($c, i + 1, 1000000))"))
+    val vSide = variants(vocab, "word").select(col("word"), col("v"))
+    val qSide = variants(queries, "q").select(col("doc_id"), col("q"), col("v"))
     qSide.join(vSide, "v")
       .select(col("doc_id"), col("q"), col("word")).distinct()
       .withColumn("dist", levenshtein(col("q"), col("word")))
@@ -622,8 +637,8 @@ object TextAnalysis {
     * token count. Only pairs with c_xy ≥ 5 report (the standard sparsity
     * cut — and what keeps the output vocabulary²-bounded in practice).
     *
-    * Scale shape: pair generation is MAP-ONLY — a fused flatten/transform
-    * over each doc's token array emits its ≤ w·|doc| window pairs with no
+    * Scale shape: pair generation is MAP-ONLY — [[pairsCol]] over each
+    * doc's token array emits its ≤ w·|doc| window pairs with no
     * positional self-join (the textrankEdges device; a position self-join
     * shuffles the exploded corpus twice). One map-side-combined exchange
     * counts pairs, one counts tokens; marginals join back AQE-broadcast
@@ -632,23 +647,17 @@ object TextAnalysis {
     * Orientation (least, greatest) halves the pair space. */
   def windowCooc(spark: SparkSession, dir: String, w: Int = 3,
                  minCount: Long = 5L): DataFrame = {
-    // tokenize once, spread (the nested pair-generation transform below is
-    // CodegenFallback-interpreted — parallelism is the lever), materialize
-    // for the two consumers; no-op at scale (Tables.materializeSmall)
+    // tokenize once, materialize for the two consumers; no-op at scale
+    // (Tables.materializeSmall)
     val docs = Tables.materializeSmall(
-      Tables.spreadSmall(Tables.documents(spark, dir), col("doc_id"))
-        .select(tokensCol(lower(col("text"))).as("t")))
+      Tables.documents(spark, dir).select(tokensCol(lower(col("text"))).as("t")))
     val toksE = docs.select(explode(col("t")).as("tok"))
     val cx = toksE.groupBy(col("tok")).agg(count(lit(1)).as("c"))
     // total token count from the vocabulary-sized cx, NOT a second
     // tokenize+explode pass over the corpus: Σ c ≡ count of all tokens
     val nTot = cx.agg(sum(col("c")).as("n_tok"))
-    val pairs = docs.select(explode(expr(
-      s"""flatten(transform(
-            CASE WHEN size(t) >= 2 THEN sequence(0, size(t) - 2) ELSE array() END,
-            i -> transform(sequence(i + 1, least(i + $w, size(t) - 1)),
-              j -> struct(least(t[i], t[j]) AS w1, greatest(t[i], t[j]) AS w2))))""")).as("p"))
-      .select(col("p.w1").as("w1"), col("p.w2").as("w2"))
+    val pairs = docs.select(explode(pairsCol(col("t"), w)).as("p"))
+      .select(least(col("p.a"), col("p.b")).as("w1"), greatest(col("p.a"), col("p.b")).as("w2"))
       .filter(col("w1") =!= col("w2"))
     pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c_xy"))
       .filter(col("c_xy") >= minCount)

@@ -166,21 +166,12 @@ class DedupSpec extends AnyFunSuite {
     val nodes = (0L until n.toLong).toDF("node")
     val plain = Dedup.connectedComponents(edges.toDF("d1", "d2"), nodes)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val bucketed = Dedup.connectedComponentsBucketed(edges.toDF("d1", "d2"), nodes, buckets = 8)
+    // cutover 0 forces the bucketed branch
+    val bucketed = Dedup.connectedComponents(edges.toDF("d1", "d2"), nodes, cutover = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(bucketed == plain)
     // the working table was dropped on exit
     assert(!spark.catalog.listTables().collect().exists(_.name.startsWith("graft_cc_edges_")))
-    // the auto variant agrees through BOTH sides of its cutover: forced-plain
-    // (cutover above the edge count) and forced-bucketed (cutover 0)
-    val autoPlain = Dedup.connectedComponentsAuto(edges.toDF("d1", "d2"), nodes,
-      buckets = 8, cutover = Long.MaxValue)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val autoBucketed = Dedup.connectedComponentsAuto(edges.toDF("d1", "d2"), nodes,
-      buckets = 8, cutover = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(autoPlain == plain)
-    assert(autoBucketed == plain)
   }
 
   test("bucketed edges: per-round neighbor join plans no Exchange on the edge side") {
@@ -188,7 +179,7 @@ class DedupSpec extends AnyFunSuite {
     val table = "cc_edges_planspec"
     spark.sql(s"DROP TABLE IF EXISTS $table")
     val edges = (0L until 64L).map(i => (i, (i + 1) % 64)).toDF("d1", "d2")
-    // same write shape as connectedComponentsBucketed: one file per bucket,
+    // same write shape as connectedComponents' bucketed branch: one file per bucket,
     // bucket-sorted by the join key
     edges.select(col("d1").as("src"), col("d2").as("dst"))
       .unionAll(edges.select(col("d2").as("src"), col("d1").as("dst")))

@@ -7,6 +7,7 @@ cd "$(dirname "$0")/.."
 sbt -batch compile
 sbt -batch test
 OUT=$(mktemp -d /tmp/gate_verify.XXXXXX)
+trap 'rm -rf "$OUT"' EXIT
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $OUT" > /dev/null
 python3 tools/check.py /root/testdata/sf0.01 "$OUT"
 # Full-set local-cluster smoke: every registered query once across REAL
