@@ -3,7 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import Similarity.{Vec, Hit, cosine, dot, vectors, bruteForceTopK, trainCentroids}
+import Similarity.{Vec, Hit, dot, vectors, bruteForceTopK, trainCentroids, nearestList, rankedLists}
 import Pq.{PqCodebook, train => pqTrain}
 
 /** IVF-PQ (IVFADC, Jégou et al. TPAMI 2011 §V): the composition of the two
@@ -43,15 +43,6 @@ object IvfPq {
                               cNorm2: Array[Double])
   final case class IvfPqCode(vec_id: Long, list_id: Int, codes: Array[Byte])
 
-  private def nearestCoarse(cs: Array[Array[Float]], e: Array[Float]): Int = {
-    var best = 0; var bestC = Double.NegativeInfinity
-    var i = 0
-    while (i < cs.length) {
-      val c = cosine(e, cs(i)); if (c > bestC) { bestC = c; best = i }; i += 1
-    }
-    best
-  }
-
   /** Train coarse + residual-PQ codebooks and derive the cross table. The
     * residual frame is a map-only projection of the corpus (broadcast
     * coarse codebook); PQ training runs its usual one-treeAggregate-per-
@@ -63,7 +54,7 @@ object IvfPq {
     val coarse = trainCentroids(vecs, nlist)
     val bcC = spark.sparkContext.broadcast(coarse)
     val residuals = vecs.map { v =>
-      val c = bcC.value(nearestCoarse(bcC.value, v.embedding))
+      val c = bcC.value(nearestList(bcC.value, v.embedding))
       val r = new Array[Float](v.embedding.length)
       var i = 0
       while (i < r.length) { r(i) = v.embedding(i) - c(i); i += 1 }
@@ -88,7 +79,7 @@ object IvfPq {
     val bc = spark.sparkContext.broadcast(idx)
     vecs.map { v =>
       val ix = bc.value
-      val l = nearestCoarse(ix.coarse, v.embedding)
+      val l = nearestList(ix.coarse, v.embedding)
       val c = ix.coarse(l)
       val codes = new Array[Byte](ix.book.m)
       val r = new Array[Float](v.embedding.length)
@@ -116,13 +107,10 @@ object IvfPq {
     val idx = trained.getOrElse(train(vecs, nlist, m, ksub))
     val bcI = spark.sparkContext.broadcast(idx)
     val codesDs = codes.getOrElse(encode(vecs, idx))
-    AdcSearch.topK[IvfPqCode](codesDs, _.vec_id, queries, vecs, k, rerank, qs => {
+    TopK.reranked(codesDs, queries, vecs, k, rerank)((pc: IvfPqCode) => pc.vec_id) { qs =>
       val ix = bcI.value
       val mm = ix.book.m
-      val probes: Array[Set[Int]] = qs.map { q =>
-        ix.coarse.indices.map(l => (cosine(q.embedding, ix.coarse(l)), l))
-          .sortBy { case (c, l) => (-c, l) }.take(nprobe).map(_._2).toSet
-      }
+      val probes: Array[Set[Int]] = qs.map(q => rankedLists(ix.coarse, q.embedding, nprobe).toSet)
       // per (query, list): q·c_list; per (query, subspace, code): q_sub·pqCentroid
       val qc: Array[Array[Double]] = qs.map(q => ix.coarse.map(c => dot(q.embedding, c)))
       val lutR: Array[Array[Array[Double]]] = qs.map { q =>
@@ -136,33 +124,29 @@ object IvfPq {
         }
       }
       val qnorms = qs.map(q => math.sqrt(dot(q.embedding, q.embedding)))
-      // |x̃|² is query-independent; the scorer is called with all of one
-      // row's queries consecutively, so a one-row memo computes it once
-      var memoId = Long.MinValue
-      var memoNorm2 = 0.0
-      (pc: IvfPqCode, qi: Int) =>
-        if (!probes(qi).contains(pc.list_id)) Double.NaN // unprobed: skip
-        else {
-          if (pc.vec_id != memoId) {
-            var cross2 = 0.0; var sn2 = 0.0
-            var j = 0
-            while (j < mm) {
-              val code = pc.codes(j) & 0xff
-              cross2 += ix.cross(pc.list_id)(j)(code)
-              sn2 += ix.book.subNorm2(j)(code)
-              j += 1
-            }
-            memoNorm2 = ix.cNorm2(pc.list_id) + 2.0 * cross2 + sn2
-            memoId = pc.vec_id
-          }
-          var ipR = 0.0
-          var j = 0
-          while (j < mm) { ipR += lutR(qi)(j)(pc.codes(j) & 0xff); j += 1 }
-          val ip = qc(qi)(pc.list_id) + ipR
-          val denom = qnorms(qi) * math.sqrt(math.max(memoNorm2, 0.0))
-          if (denom == 0.0) 0.0 else ip / denom
+      pc => {
+        // |x̃|² is query-independent: once per row, from table lookups only
+        var cross2 = 0.0; var sn2 = 0.0
+        var j = 0
+        while (j < mm) {
+          val code = pc.codes(j) & 0xff
+          cross2 += ix.cross(pc.list_id)(j)(code)
+          sn2 += ix.book.subNorm2(j)(code)
+          j += 1
         }
-    })
+        val xnorm = math.sqrt(math.max(ix.cNorm2(pc.list_id) + 2.0 * cross2 + sn2, 0.0))
+        qi =>
+          if (!probes(qi).contains(pc.list_id)) Double.NaN // unprobed: skip
+          else {
+            var ipR = 0.0
+            var j = 0
+            while (j < mm) { ipR += lutR(qi)(j)(pc.codes(j) & 0xff); j += 1 }
+            val ip = qc(qi)(pc.list_id) + ipR
+            val denom = qnorms(qi) * xnorm
+            if (denom == 0.0) 0.0 else ip / denom
+          }
+      }
+    }
   }
 
   /** Recall@k of IVF-PQ against brute force over (nprobe, rerank) operating

@@ -162,7 +162,7 @@ object Pq {
     // family 1.25× slower) — the cost here is the 4 Lloyd treeAggregate
     // jobs above, a fixed job-count floor, not the encode pass
     val codesDs = codes.getOrElse(encode(vecs, book))
-    AdcSearch.topK[PqCode](codesDs, _.vec_id, queries, vecs, k, rerank, qs => {
+    TopK.reranked(codesDs, queries, vecs, k, rerank)((pc: PqCode) => pc.vec_id) { qs =>
       val b = bcB.value
       // per-partition LUTs of exact partial dots: lut(qi)(j)(c) =
       // q_sub_j · centroid_{j,c}; qnorm for the cosine denominator
@@ -174,21 +174,21 @@ object Pq {
         }
       }
       val qnorms = qs.map(q => math.sqrt(dot(q.embedding, q.embedding)))
-      (pc: PqCode, qi: Int) => {
+      pc => {
         // |v~|² from the sub-norm table — no float row touched
         var rn2 = 0.0
-        var ip = 0.0
         var j = 0
-        while (j < b.m) {
-          val code = pc.codes(j) & 0xff
-          rn2 += b.subNorm2(j)(code)
-          ip += luts(qi)(j)(code)
-          j += 1
+        while (j < b.m) { rn2 += b.subNorm2(j)(pc.codes(j) & 0xff); j += 1 }
+        val vnorm = math.sqrt(rn2)
+        qi => {
+          var ip = 0.0
+          var j = 0
+          while (j < b.m) { ip += luts(qi)(j)(pc.codes(j) & 0xff); j += 1 }
+          val denom = qnorms(qi) * vnorm
+          if (denom == 0.0) 0.0 else ip / denom
         }
-        val denom = qnorms(qi) * math.sqrt(rn2)
-        if (denom == 0.0) 0.0 else ip / denom
       }
-    })
+    }
   }
 
   /** Recall@k of PQ-ADC + rerank against exact brute force, swept over the

@@ -1,7 +1,5 @@
 package graft.sim
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -63,37 +61,32 @@ object Similarity {
   /** Exact brute-force top-k: baseline and recall oracle for the ANN path.
     * Deterministic tie-break on (cosine desc, neighbor_id asc). */
   def bruteForceTopK(spark: SparkSession, dir: String, numQueries: Int = 8,
-                     k: Int = 10): Dataset[Hit] = {
-    import spark.implicits._
-    val queries = queryArr(spark, dir, numQueries) // bounded: Q rows
-    val bc = spark.sparkContext.broadcast(queries)
-    val candidates = vectors(spark, dir).mapPartitions { it =>
+                     k: Int = 10): Dataset[Hit] =
+    TopK.hits(exactCandidates(vectors(spark, dir), queryArr(spark, dir, numQueries), k), k)
+
+  /** The exact-cosine [[TopK.scan]] of a bounded broadcast query set over
+    * `corpus` — shared by [[bruteForceTopK]] and [[exactTopKBroadcast]],
+    * which differ only in their output columns. */
+  private def exactCandidates(corpus: Dataset[Vec], queries: Array[Vec],
+                              k: Int): Dataset[TopK.Cand] = {
+    val bc = corpus.sparkSession.sparkContext.broadcast(queries)
+    TopK.scan(corpus, queries.map(_.vec_id), k)(_.vec_id) { () =>
       val qs = bc.value
-      val heaps = qs.map(q => scala.collection.mutable.PriorityQueue.empty[(Double, Long)](
-        Ordering.by[(Double, Long), (Double, Long)] { case (c, id) => (-c, id) }))
-      it.foreach { v =>
-        var qi = 0
-        while (qi < qs.length) {
-          val q = qs(qi)
-          if (v.vec_id != q.vec_id) {
-            val c = cosine(q.embedding, v.embedding)
-            val h = heaps(qi)
-            if (h.size < k) h.enqueue((c, v.vec_id))
-            else if (c > h.head._1 || (c == h.head._1 && v.vec_id < h.head._2)) {
-              h.dequeue(); h.enqueue((c, v.vec_id))
-            }
-          }
-          qi += 1
-        }
-      }
-      qs.iterator.zip(heaps.iterator).flatMap { case (q, h) =>
-        h.iterator.map { case (c, id) => (q.vec_id, id, c) }
-      }
+      v => qi => cosine(qs(qi).embedding, v.embedding)
     }
-    candidates.groupByKey(_._1).flatMapGroups { (qid, it) =>
-      it.toArray.sortBy { case (_, id, c) => (-c, id) }.take(k)
-        .iterator.zipWithIndex.map { case ((_, id, c), r) =>
-          Hit(qid, id, BigDecimal(c).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble, r + 1) }
+  }
+
+  /** [[TopK.scan]] by cosine restricted per query to corpus vectors whose
+    * `label` equals (`same`) or differs from the query's — the scan of
+    * [[filteredTopK]] and [[hardNegatives]]. */
+  private def labelCandidates(corpus: Dataset[LVec], queries: Array[LVec], k: Int,
+                              same: Boolean): Dataset[TopK.Cand] = {
+    val bc = corpus.sparkSession.sparkContext.broadcast(queries)
+    TopK.scan(corpus, queries.map(_.vec_id), k)(_.vec_id) { () =>
+      val qs = bc.value
+      v => qi =>
+        if ((v.label == qs(qi).label) == same) cosine(qs(qi).embedding, v.embedding)
+        else Double.NaN
     }
   }
 
@@ -111,40 +104,10 @@ object Similarity {
                     k: Int = 10): Dataset[Hit] = {
     import spark.implicits._
     val base = Tables.embeddings(spark, dir)
-      .select(col("label"), col("vec_id"), col("embedding"))
+      .select(col("vec_id"), col("embedding"), col("label")).as[LVec]
     // column predicate (pushes to the scan) for the bounded query collect
-    val queries = base.filter(col("vec_id") < numQueries)
-      .as[(Int, Long, Array[Float])].collect() // bounded: Q rows
-    val bc = spark.sparkContext.broadcast(queries)
-    val candidates = base
-      .as[(Int, Long, Array[Float])].mapPartitions { it =>
-      val qs = bc.value
-      val heaps = qs.map(_ => scala.collection.mutable.PriorityQueue.empty[(Double, Long)](
-        Ordering.by[(Double, Long), (Double, Long)] { case (c, id) => (-c, id) }))
-      it.foreach { case (vLabel, vId, vEmb) =>
-        var qi = 0
-        while (qi < qs.length) {
-          val (qLabel, _, qEmb) = qs(qi)
-          if (vLabel != qLabel) {
-            val c = cosine(qEmb, vEmb)
-            val h = heaps(qi)
-            if (h.size < k) h.enqueue((c, vId))
-            else if (c > h.head._1 || (c == h.head._1 && vId < h.head._2)) {
-              h.dequeue(); h.enqueue((c, vId))
-            }
-          }
-          qi += 1
-        }
-      }
-      qs.iterator.zip(heaps.iterator).flatMap { case ((_, qid, _), h) =>
-        h.iterator.map { case (c, id) => (qid, id, c) }
-      }
-    }
-    candidates.groupByKey(_._1).flatMapGroups { (qid, it) =>
-      it.toArray.sortBy { case (_, id, c) => (-c, id) }.take(k)
-        .iterator.zipWithIndex.map { case ((_, id, c), r) =>
-          Hit(qid, id, BigDecimal(c).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble, r + 1) }
-    }
+    val queries = base.filter(col("vec_id") < numQueries).collect() // bounded: Q rows
+    TopK.hits(labelCandidates(base, queries, k, same = false), k)
   }
 
   /** Trained IVF codebook: a few distributed Lloyd iterations of spherical
@@ -174,14 +137,7 @@ object Similarity {
       val zero = (Array.fill(nlist)(new Array[Double](dim)), new Array[Long](nlist))
       val (sums, counts) = vecs.rdd.treeAggregate(zero)(
         seqOp = { case ((sums, counts), v) =>
-          val cs = bc.value
-          var best = 0; var bestC = Double.NegativeInfinity
-          var i = 0
-          while (i < cs.length) {
-            val c = cosine(v.embedding, cs(i))
-            if (c > bestC) { bestC = c; best = i }
-            i += 1
-          }
+          val best = nearestList(bc.value, v.embedding)
           counts(best) += 1
           var d = 0
           while (d < dim) { sums(best)(d) += v.embedding(d).toDouble; d += 1 }
@@ -212,55 +168,12 @@ object Similarity {
   def ivfTopK(spark: SparkSession, dir: String, numQueries: Int = 8, k: Int = 10,
               nlist: Int = 16, nprobe: Int = 4,
               trained: Option[Array[Array[Float]]] = None): Dataset[Hit] = {
-    import spark.implicits._
     val vecs = vectors(spark, dir)
     val centroids = trained.getOrElse(trainCentroids(vecs, nlist))
-    val bcCent = spark.sparkContext.broadcast(centroids)
-    val assigned = vecs.map { v =>
-      val cs = bcCent.value
-      var best = 0; var bestC = Double.NegativeInfinity
-      var i = 0
-      while (i < cs.length) {
-        val c = cosine(v.embedding, cs(i))
-        if (c > bestC) { bestC = c; best = i }
-        i += 1
-      }
-      (best, v)
-    }
-    val queries = queryArr(spark, dir, numQueries)
-    val bcQ = spark.sparkContext.broadcast(queries.map { q =>
-      val cs = bcCent.value
-      val probes = cs.indices.map(i => (cosine(q.embedding, cs(i)), i))
-        .sortBy { case (c, i) => (-c, i) }.take(nprobe).map(_._2).toSet
-      (q, probes)
-    })
-    val candidates = assigned.mapPartitions { it =>
-      val qs = bcQ.value
-      val heaps = qs.map(_ => scala.collection.mutable.PriorityQueue.empty[(Double, Long)](
-        Ordering.by[(Double, Long), (Double, Long)] { case (c, id) => (-c, id) }))
-      it.foreach { case (list, v) =>
-        var qi = 0
-        while (qi < qs.length) {
-          val (q, probes) = qs(qi)
-          if (probes.contains(list) && v.vec_id != q.vec_id) {
-            val c = cosine(q.embedding, v.embedding)
-            val h = heaps(qi)
-            if (h.size < k) h.enqueue((c, v.vec_id))
-            else if (c > h.head._1 || (c == h.head._1 && v.vec_id < h.head._2)) {
-              h.dequeue(); h.enqueue((c, v.vec_id))
-            }
-          }
-          qi += 1
-        }
-      }
-      qs.iterator.zip(heaps.iterator).flatMap { case ((q, _), h) =>
-        h.iterator.map { case (c, id) => (q.vec_id, id, c) }
-      }
-    }
-    candidates.groupByKey(_._1).flatMapGroups { (qid, it) =>
-      it.toArray.sortBy { case (_, id, c) => (-c, id) }.take(k)
-        .iterator.zipWithIndex.map { case ((_, id, c), r) => Hit(qid, id, c, r + 1) }
-    }
+    val assigned = assignLists(vecs, spark.sparkContext.broadcast(centroids))
+    val probeSets = queryArr(spark, dir, numQueries)
+      .map(q => (q, rankedLists(centroids, q.embedding, nprobe).toSet))
+    TopK.hits(listCandidates(assigned, probeSets, k), k)
   }
 
   /** IVF with provable ball-pruning — EXACT top-k (recall 1.0 by
@@ -282,29 +195,61 @@ object Similarity {
     * the skip into parquet partition pruning. */
   def ivfTopKExact(spark: SparkSession, dir: String, numQueries: Int = 8, k: Int = 10,
                    nlist: Int = 16, nprobe: Int = 4): Dataset[Hit] = {
-    import spark.implicits._
     val vecs = vectors(spark, dir)
     val centroids = trainCentroids(vecs, nlist)
-    val bcCent = spark.sparkContext.broadcast(centroids)
-    // a local `val` lambda, not a `def`: a local def lifts to a method on the
-    // non-serializable Similarity$ object and the task closure would capture it
-    val nearestList: (Array[Array[Float]], Array[Float]) => Int = (cs, e) => {
-      var best = 0; var bestC = Double.NegativeInfinity
-      var i = 0
-      while (i < cs.length) {
-        val c = cosine(e, cs(i)); if (c > bestC) { bestC = c; best = i }; i += 1
-      }
-      best
-    }
-    val assigned = vecs
-      .map(v => (nearestList(bcCent.value, v.embedding), v))
-      .persist() // consumed by the radius agg + up to two scan passes
-    val radius = listRadii(assigned.rdd.map { case (l, v) => (l, v.embedding) },
-      bcCent, nlist)
+    // consumed by the radius agg + up to two scan passes
+    val (assigned, radius) = assignWithRadii(vecs, centroids)
     val queries = queryArr(spark, dir, numQueries)
     val out = exactScanMerge(spark, _ => assigned, centroids, radius, queries, k, nprobe)
     assigned.unpersist()
     out
+  }
+
+  // ------------------------------------------------------- list geometry
+
+  /** argmax-cosine list id; first index wins ties — identical to the rank-1
+    * entry of [[rankedLists]], so a member's home list is always the first
+    * list it would probe. */
+  private[sim] def nearestList(cs: Array[Array[Float]], e: Array[Float]): Int = {
+    var best = 0; var bestC = Double.NegativeInfinity
+    var i = 0
+    while (i < cs.length) {
+      val c = cosine(e, cs(i))
+      if (c > bestC) { bestC = c; best = i }
+      i += 1
+    }
+    best
+  }
+
+  /** The `np` nearest list ids by (cosine desc, index asc). */
+  private[sim] def rankedLists(cs: Array[Array[Float]], e: Array[Float], np: Int): Array[Int] =
+    cs.indices.map(i => (cosine(e, cs(i)), i))
+      .sortBy { case (c, i) => (-c, i) }.take(np).map(_._2).toArray
+
+  /** The best cosine any member of a list (centroid `c`, angular radius `r`)
+    * can reach against `q`: a member lies at angle >= θ(q, c) − r, so its
+    * cosine is at most cos(max(θ − r, 0)). */
+  private def ballBound(q: Array[Float], c: Array[Float], r: Double): Double = {
+    val theta = math.acos(math.max(-1.0, math.min(1.0, cosine(q, c))))
+    math.cos(math.max(theta - r, 0.0))
+  }
+
+  /** Map-only nearest-centroid assignment as (list_id, vec_id, embedding). */
+  private def assignLists(vecs: Dataset[Vec],
+                          bcCent: org.apache.spark.broadcast.Broadcast[Array[Array[Float]]])
+  : Dataset[(Int, Long, Array[Float])] = {
+    import vecs.sparkSession.implicits._
+    vecs.map(v => (nearestList(bcCent.value, v.embedding), v.vec_id, v.embedding))
+  }
+
+  /** [[assignLists]], persisted, plus every list's angular radius — the
+    * one assign + radii step of the exact IVF searches and the stored
+    * index. The caller unpersists. */
+  private def assignWithRadii(vecs: Dataset[Vec], centroids: Array[Array[Float]])
+  : (Dataset[(Int, Long, Array[Float])], Map[Int, Double]) = {
+    val bcCent = vecs.sparkSession.sparkContext.broadcast(centroids)
+    val assigned = assignLists(vecs, bcCent).persist()
+    (assigned, listRadii(assigned, bcCent, centroids.length))
   }
 
   /** Per-list angular radius r(l) = max angle(member, centroid), as one
@@ -312,12 +257,12 @@ object Similarity {
     * driver receives nlist doubles, not per-partition groups (same shape
     * argument as [[trainCentroids]]). Lists absent from the data are absent
     * from the map. */
-  private def listRadii(assigned: org.apache.spark.rdd.RDD[(Int, Array[Float])],
+  private def listRadii(assigned: Dataset[(Int, Long, Array[Float])],
                         bcCent: org.apache.spark.broadcast.Broadcast[Array[Array[Float]]],
                         nlist: Int): Map[Int, Double] = {
-    val mins = assigned.treeAggregate(Array.fill(nlist)(Double.NaN))(
-      seqOp = { (acc, lv) =>
-        val (l, e) = lv
+    val mins = assigned.rdd.treeAggregate(Array.fill(nlist)(Double.NaN))(
+      seqOp = { (acc, row) =>
+        val (l, _, e) = row
         val c = cosine(e, bcCent.value(l))
         if (acc(l).isNaN || c < acc(l)) acc(l) = c
         acc
@@ -335,6 +280,21 @@ object Similarity {
     }.toMap
   }
 
+  /** [[TopK.scan]] by cosine over (list, vector) rows, each query scoring
+    * only the rows of its own list set. */
+  private def listCandidates(rows: Dataset[(Int, Long, Array[Float])],
+                             listsPerQuery: Array[(Vec, Set[Int])],
+                             k: Int): Dataset[TopK.Cand] = {
+    val bcQ = rows.sparkSession.sparkContext.broadcast(listsPerQuery)
+    TopK.scan(rows, listsPerQuery.map(_._1.vec_id), k)(_._2) { () =>
+      val qs = bcQ.value
+      r => qi => {
+        val (q, lists) = qs(qi)
+        if (lists.contains(r._1)) cosine(q.embedding, r._3) else Double.NaN
+      }
+    }
+  }
+
   /** Shared two-phase exact IVF search over any (list, vector) source —
     * the in-memory path passes the persisted assignment; the stored-index
     * path passes a parquet read PRUNED to the requested lists. `scanSource`
@@ -342,59 +302,20 @@ object Similarity {
     * each scan ships at most Q × k candidate rows per partition and the
     * merge stays distributed (groupByKey on Q keys). */
   private def exactScanMerge(spark: SparkSession,
-                             scanSource: Set[Int] => Dataset[(Int, Vec)],
+                             scanSource: Set[Int] => Dataset[(Int, Long, Array[Float])],
                              centroids: Array[Array[Float]],
                              radius: Map[Int, Double],
                              queries: Array[Vec], k: Int, nprobe: Int): Dataset[Hit] = {
-    import spark.implicits._
-    val bcCent = spark.sparkContext.broadcast(centroids)
-    val probeSets: Array[(Vec, Set[Int])] = queries.map { q =>
-      val cs = bcCent.value
-      val probes = cs.indices.map(i => (cosine(q.embedding, cs(i)), i))
-        .sortBy { case (c, i) => (-c, i) }.take(nprobe).map(_._2).toSet
-      (q, probes)
-    }
-    def scan(listsPerQuery: Array[(Vec, Set[Int])]): Dataset[(Long, Long, Double)] = {
-      val bcQ = spark.sparkContext.broadcast(listsPerQuery)
-      scanSource(listsPerQuery.iterator.flatMap(_._2).toSet).mapPartitions { it =>
-        val qs = bcQ.value
-        val heaps = qs.map(_ => scala.collection.mutable.PriorityQueue.empty[(Double, Long)](
-          Ordering.by[(Double, Long), (Double, Long)] { case (c, id) => (-c, id) }))
-        it.foreach { case (list, v) =>
-          var qi = 0
-          while (qi < qs.length) {
-            val (q, lists) = qs(qi)
-            if (lists.contains(list) && v.vec_id != q.vec_id) {
-              val c = cosine(q.embedding, v.embedding)
-              val h = heaps(qi)
-              if (h.size < k) h.enqueue((c, v.vec_id))
-              else if (c > h.head._1 || (c == h.head._1 && v.vec_id < h.head._2)) {
-                h.dequeue(); h.enqueue((c, v.vec_id))
-              }
-            }
-            qi += 1
-          }
-        }
-        qs.iterator.zip(heaps.iterator).flatMap { case ((q, _), h) =>
-          h.iterator.map { case (c, id) => (q.vec_id, id, c) }
-        }
-      }
-    }
+    val probeSets: Array[(Vec, Set[Int])] =
+      queries.map(q => (q, rankedLists(centroids, q.embedding, nprobe).toSet))
+    def scan(listsPerQuery: Array[(Vec, Set[Int])]): Dataset[TopK.Cand] =
+      listCandidates(scanSource(listsPerQuery.iterator.flatMap(_._2).toSet), listsPerQuery, k)
     val phase1 = scan(probeSets).persist()
-    // τ (k-th best cosine per query) via a distributed top-k merge; only the
-    // Q-row (qid, τ) table reaches the driver
-    val tau: Map[Long, Double] = phase1.groupByKey(_._1).mapGroups { (qid, it) =>
-      val top = it.map(_._3).toArray.sorted(Ordering.Double.TotalOrdering.reverse)
-      (qid, if (top.length >= k) top(k - 1) else Double.NegativeInfinity)
-    }.collect().toMap
+    val tau = TopK.kthBest(phase1, k)
     val survivors: Array[(Vec, Set[Int])] = probeSets.map { case (q, probed) =>
-      val cs = bcCent.value
       val t = tau.getOrElse(q.vec_id, Double.NegativeInfinity)
-      val extra = cs.indices.filter { l =>
-        !probed.contains(l) && radius.contains(l) && {
-          val theta = math.acos(math.max(-1.0, math.min(1.0, cosine(q.embedding, cs(l)))))
-          math.cos(math.max(theta - radius(l), 0.0)) >= t
-        }
+      val extra = centroids.indices.filter { l =>
+        !probed.contains(l) && radius.get(l).exists(r => ballBound(q.embedding, centroids(l), r) >= t)
       }.toSet
       (q, extra)
     }
@@ -403,11 +324,7 @@ object Similarity {
     // scan each vector lives in exactly one partition's heap, so no (q, id)
     // candidate repeats — the union is duplicate-free by construction
     val all = if (needPhase2.nonEmpty) phase1.union(scan(needPhase2)) else phase1
-    val out = all.groupByKey(_._1).flatMapGroups { (qid, it) =>
-      it.toArray.sortBy { case (_, id, c) => (-c, id) }.take(k)
-        .iterator.zipWithIndex.map { case ((_, id, c), r) =>
-          Hit(qid, id, BigDecimal(c).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble, r + 1) }
-    }.persist()
+    val out = TopK.hits(all, k).persist()
     out.count() // materialize (Q × k rows) so the intermediates can be freed
     phase1.unpersist()
     out
@@ -435,41 +352,20 @@ object Similarity {
     * [[upsertIvfIndex]]. */
   def buildIvfIndexFrom(vecs: Dataset[Vec], path: String,
                         nlist: Int = 16): IvfIndex = {
-    val spark = vecs.sparkSession
     val centroids = trainCentroids(vecs, nlist)
-    val bcCent = spark.sparkContext.broadcast(centroids)
-    val assigned = assignLists(vecs, bcCent).persist()
-    assigned.write.mode("overwrite").partitionBy("list_id").parquet(path)
-    val radius = assignedRadii(assigned, bcCent, centroids.length)
+    IvfIndex(path, centroids, writeLists(vecs, centroids, "overwrite", path))
+  }
+
+  /** Assign `vecs` to `centroids`, write them `PARTITIONED BY (list_id)`
+    * at `path` with save mode `mode`, and return their per-list radii —
+    * the body shared by the build and both upserts. */
+  private def writeLists(vecs: Dataset[Vec], centroids: Array[Array[Float]],
+                         mode: String, path: String): Map[Int, Double] = {
+    val (assigned, radius) = assignWithRadii(vecs, centroids)
+    assigned.toDF("list_id", "vec_id", "embedding")
+      .write.mode(mode).partitionBy("list_id").parquet(path)
     assigned.unpersist()
-    IvfIndex(path, centroids, radius)
-  }
-
-  /** Map-only nearest-centroid assignment, shared by build and upsert. */
-  private def assignLists(vecs: Dataset[Vec],
-                          bcCent: org.apache.spark.broadcast.Broadcast[Array[Array[Float]]])
-  : DataFrame = {
-    import vecs.sparkSession.implicits._
-    val nearestList: (Array[Array[Float]], Array[Float]) => Int = (cs, e) => {
-      var best = 0; var bestC = Double.NegativeInfinity
-      var i = 0
-      while (i < cs.length) {
-        val c = cosine(e, cs(i)); if (c > bestC) { bestC = c; best = i }; i += 1
-      }
-      best
-    }
-    vecs.map(v => (nearestList(bcCent.value, v.embedding), v.vec_id, v.embedding))
-      .toDF("list_id", "vec_id", "embedding")
-  }
-
-  private def assignedRadii(assigned: DataFrame,
-                            bcCent: org.apache.spark.broadcast.Broadcast[Array[Array[Float]]],
-                            nlist: Int): Map[Int, Double] = {
-    import assigned.sparkSession.implicits._
-    listRadii(
-      assigned.select(col("list_id"), col("embedding")).as[(Int, Array[Float])]
-        .rdd.map { case (l, e) => (l, e) },
-      bcCent, nlist)
+    radius
   }
 
   /** Incremental IVF maintenance — the INGEST path at 100 TB, where
@@ -486,17 +382,17 @@ object Similarity {
     * saw the delta: codebook drift degrades list balance — cost — never
     * correctness. Rebalancing is then a background compaction decision
     * driven by observable list sizes, not a correctness deadline. */
-  def upsertIvfIndex(idx: IvfIndex, delta: Dataset[Vec]): IvfIndex = {
-    val spark = delta.sparkSession
-    val bcCent = spark.sparkContext.broadcast(idx.centroids)
-    val assigned = assignLists(delta, bcCent).persist()
-    assigned.write.mode("append").partitionBy("list_id").parquet(idx.path)
-    val deltaRadius = assignedRadii(assigned, bcCent, idx.centroids.length)
-    assigned.unpersist()
-    val merged = (idx.radius.keySet ++ deltaRadius.keySet).iterator.map { l =>
+  def upsertIvfIndex(idx: IvfIndex, delta: Dataset[Vec]): IvfIndex =
+    IvfIndex(idx.path, idx.centroids, upsertRadii(idx, delta, "append", idx.path))
+
+  /** The one upsert body: write `delta` against the frozen codebook and
+    * max-merge its radii into the index's (a radius only grows). */
+  private def upsertRadii(idx: IvfIndex, delta: Dataset[Vec], mode: String,
+                          path: String): Map[Int, Double] = {
+    val deltaRadius = writeLists(delta, idx.centroids, mode, path)
+    (idx.radius.keySet ++ deltaRadius.keySet).iterator.map { l =>
       l -> math.max(idx.radius.getOrElse(l, -1.0), deltaRadius.getOrElse(l, -1.0))
     }.toMap
-    IvfIndex(idx.path, idx.centroids, merged)
   }
 
   /** [[upsertIvfIndex]] writing the delta as its OWN generation directory
@@ -509,18 +405,10 @@ object Similarity {
     * many upsert batches (each registered `sim_index_upsert` invocation
     * appends ITS OWN delta generation and searches base ∪ delta). */
   def upsertIvfIndexTo(idx: IvfIndex, delta: Dataset[Vec], deltaPath: String): IvfIndex = {
-    val spark = delta.sparkSession
     require(!idx.path.split(',').contains(deltaPath),
       "delta generation must be a NEW directory, never an existing generation")
-    val bcCent = spark.sparkContext.broadcast(idx.centroids)
-    val assigned = assignLists(delta, bcCent).persist()
-    assigned.write.mode("overwrite").partitionBy("list_id").parquet(deltaPath)
-    val deltaRadius = assignedRadii(assigned, bcCent, idx.centroids.length)
-    assigned.unpersist()
-    val merged = (idx.radius.keySet ++ deltaRadius.keySet).iterator.map { l =>
-      l -> math.max(idx.radius.getOrElse(l, -1.0), deltaRadius.getOrElse(l, -1.0))
-    }.toMap
-    IvfIndex(s"${idx.path},$deltaPath", idx.centroids, merged)
+    IvfIndex(s"${idx.path},$deltaPath", idx.centroids,
+      upsertRadii(idx, delta, "overwrite", deltaPath))
   }
 
   /** Background COMPACTION — the third phase of the index lifecycle
@@ -579,9 +467,7 @@ object Similarity {
                         k: Int = 10, nprobe: Int = 4): Dataset[Hit] = {
     import spark.implicits._
     exactScanMerge(spark,
-      lists => storedLists(spark, idx.path, lists)
-        .as[(Int, Long, Array[Float])]
-        .map { case (l, id, e) => (l, Vec(id, e)) },
+      lists => storedLists(spark, idx.path, lists).as[(Int, Long, Array[Float])],
       idx.centroids, idx.radius, queries, k, nprobe)
   }
 
@@ -663,42 +549,13 @@ object Similarity {
                    k: Int = 10): Dataset[Hit] = {
     import spark.implicits._
     val base = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"), col("label"))
+      .select(col("vec_id"), col("embedding"), col("label")).as[LVec]
     // column predicate for the bounded query collect (pushes to the scan)
-    val queries = base.filter(col("vec_id") < numQueries).as[LVec].collect()
+    val queries = base.filter(col("vec_id") < numQueries).collect()
     val labels = queries.map(_.label).distinct.sorted
-    val bc = spark.sparkContext.broadcast(queries)
     // the label IN (...) pre-filter pushes into the parquet scan
-    val candidates = base
-      .filter(col("label").isin(labels.map(Int.box).toSeq: _*)).as[LVec]
-      .mapPartitions { it =>
-        val qs = bc.value
-        val heaps = qs.map(_ => scala.collection.mutable.PriorityQueue.empty[(Double, Long)](
-          Ordering.by[(Double, Long), (Double, Long)] { case (c, id) => (-c, id) }))
-        it.foreach { v =>
-          var qi = 0
-          while (qi < qs.length) {
-            val q = qs(qi)
-            if (v.label == q.label && v.vec_id != q.vec_id) {
-              val c = cosine(q.embedding, v.embedding)
-              val h = heaps(qi)
-              if (h.size < k) h.enqueue((c, v.vec_id))
-              else if (c > h.head._1 || (c == h.head._1 && v.vec_id < h.head._2)) {
-                h.dequeue(); h.enqueue((c, v.vec_id))
-              }
-            }
-            qi += 1
-          }
-        }
-        qs.iterator.zip(heaps.iterator).flatMap { case (q, h) =>
-          h.iterator.map { case (c, id) => (q.vec_id, id, c) }
-        }
-      }
-    candidates.groupByKey(_._1).flatMapGroups { (qid, it) =>
-      it.toArray.sortBy { case (_, id, c) => (-c, id) }.take(k)
-        .iterator.zipWithIndex.map { case ((_, id, c), r) =>
-          Hit(qid, id, BigDecimal(c).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble, r + 1) }
-    }
+    val corpus = base.filter(col("label").isin(labels.map(Int.box).toSeq: _*))
+    TopK.hits(labelCandidates(corpus, queries, k, same = true), k)
   }
 
   /** Recall@k of the *approximate* IVF path against the exact brute-force
@@ -813,66 +670,19 @@ object Similarity {
     val bcQ = spark.sparkContext.broadcast(queries)
     val idx = sq8Index(vecs).persist()
 
-    // one dequantize + per-query scoring pass; emits per-partition heaps so
-    // only Q×k rows leave each partition
-    val approxTopK: Dataset[(Long, Long, Double)] =
-      idx.mapPartitions { it =>
-        val qs = bcQ.value
-        val heaps = qs.map(_ => scala.collection.mutable.PriorityQueue.empty[(Double, Long)](
-          Ordering.by[(Double, Long), (Double, Long)] { case (c, id) => (-c, id) }))
-        it.foreach { sv =>
-          val d = sv.q.length
-          val deq = new Array[Float](d)
-          var i = 0
-          while (i < d) { deq(i) = (sv.q(i) * sv.scale).toFloat; i += 1 }
-          var qi = 0
-          while (qi < qs.length) {
-            val q = qs(qi)
-            if (sv.vec_id != q.vec_id) {
-              val c = cosine(q.embedding, deq)
-              val h = heaps(qi)
-              if (h.size < k) h.enqueue((c, sv.vec_id))
-              else if (c > h.head._1 || (c == h.head._1 && sv.vec_id < h.head._2)) {
-                h.dequeue(); h.enqueue((c, sv.vec_id))
-              }
-            }
-            qi += 1
-          }
-        }
-        qs.iterator.zip(heaps.iterator).flatMap { case (q, h) =>
-          h.iterator.map { case (c, id) => (q.vec_id, id, c) }
-        }
+    // one dequantize per row, then per-query scoring of the dequantized form
+    val approxTopK = TopK.scan(idx, queries.map(_.vec_id), k)(_.vec_id) { () =>
+      val qs = bcQ.value
+      sv => {
+        val deq = dequantize(sv)
+        qi => cosine(qs(qi).embedding, deq)
       }
-
-    // exact cosines for a bounded (qid, vec_id) candidate set, via a join
-    // against the float corpus — the only touches of the uncompressed data
-    def exactScores(cands: Dataset[(Long, Long)]): Dataset[(Long, Long, Double)] =
-      cands.toDF("qid", "vec_id")
-        .join(vecs.toDF().select(col("vec_id"), col("embedding")), "vec_id")
-        .as[(Long, Long, Array[Float])]
-        .mapPartitions { it =>
-          // index the broadcast ONCE per partition: O(1) per candidate row
-          // instead of an O(Q) linear scan per row
-          val byId = bcQ.value.iterator.map(q => q.vec_id -> q).toMap
-          it.map { case (vid, qid, emb) =>
-            val q = byId.getOrElse(qid,
-              throw new NoSuchElementException(s"query vec_id=$qid missing from broadcast query set"))
-            (qid, vid, cosine(q.embedding, emb))
-          }
-        }
+    }
 
     // phase 1: approx top-k, exact-reranked → τ per query
-    val phase1 = approxTopK
-      .groupByKey(_._1).flatMapGroups { (qid, it) =>
-        it.toArray.sortBy { case (_, id, c) => (-c, id) }.take(k)
-          .iterator.map { case (_, id, _) => (qid, id) }
-      }.persist()
-    val p1Exact = exactScores(phase1).persist()
-    val tau: Map[Long, Double] = p1Exact.groupByKey(_._1).mapGroups { (qid, it) =>
-      val top = it.map(_._3).toArray.sorted(Ordering.Double.TotalOrdering.reverse)
-      (qid, if (top.length >= k) top(k - 1) else Double.NegativeInfinity)
-    }.collect().toMap
-    val bcTau = spark.sparkContext.broadcast(tau)
+    val phase1 = TopK.ranked(approxTopK, k)((q, id, _, _) => (q, id)).persist()
+    val p1Exact = TopK.exactScores(phase1, vecs, bcQ).persist()
+    val bcTau = spark.sparkContext.broadcast(TopK.kthBest(p1Exact, k))
     val p1Ids: Map[Long, Set[Long]] = phase1.collect()
       .groupBy(_._1).map { case (q, xs) => q -> xs.map(_._2).toSet }
     val bcP1 = spark.sparkContext.broadcast(p1Ids)
@@ -881,9 +691,7 @@ object Similarity {
     val survivors = idx.flatMap { sv =>
       val qs = bcQ.value
       val d = sv.q.length
-      val deq = new Array[Float](d)
-      var i = 0
-      while (i < d) { deq(i) = (sv.q(i) * sv.scale).toFloat; i += 1 }
+      val deq = dequantize(sv)
       val nrm = norm(deq)
       val bound = if (sv.scale == 0.0 || nrm == 0.0) 0.0
         else math.sqrt(d.toDouble) * sv.scale / nrm + 1e-6
@@ -893,15 +701,18 @@ object Similarity {
           cosine(q.embedding, deq) + bound >= bcTau.value.getOrElse(q.vec_id, Double.NegativeInfinity)
       }.map(q => (q.vec_id, sv.vec_id))
     }
-    val all = p1Exact.union(exactScores(survivors))
-    val out = all.groupByKey(_._1).flatMapGroups { (qid, it) =>
-      it.toArray.sortBy { case (_, id, c) => (-c, id) }.take(k)
-        .iterator.zipWithIndex.map { case ((_, id, c), r) =>
-          Hit(qid, id, BigDecimal(c).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble, r + 1) }
-    }.persist()
+    val all = p1Exact.union(TopK.exactScores(survivors, vecs, bcQ))
+    val out = TopK.hits(all, k).persist()
     out.count() // materialize before releasing the intermediates
     phase1.unpersist(); p1Exact.unpersist(); idx.unpersist()
     out
+  }
+
+  private def dequantize(sv: SqVec): Array[Float] = {
+    val deq = new Array[Float](sv.q.length)
+    var i = 0
+    while (i < deq.length) { deq(i) = (sv.q(i) * sv.scale).toFloat; i += 1 }
+    deq
   }
 
   final case class EmbDup(d1: Long, d2: Long, cosine: Double)
@@ -911,8 +722,7 @@ object Similarity {
     * than 6 places, so rounding makes the compare engine-independent. */
   def cosine6(a: Array[Float], b: Array[Float]): Double = {
     val d = dot(a, a) * dot(b, b)
-    val c = if (d == 0.0) 0.0 else dot(a, b) / math.sqrt(d)
-    BigDecimal(c).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    TopK.round6(if (d == 0.0) 0.0 else dot(a, b) / math.sqrt(d))
   }
 
   /** SplitMix64 finalizer — deterministic id → chunk hashing. */
@@ -921,6 +731,14 @@ object Similarity {
     x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
     x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
     x ^ (x >>> 31)
+  }
+
+  /** The block-nested-loop fan-out: `id` hashes to chunk
+    * c = floorMod(mix64(id), nc) and is replicated once per partner chunk,
+    * keyed by the (min, max) chunk pair — yields (a, b, c). */
+  private def chunkPairs(id: Long, nc: Int): Iterator[(Int, Int, Int)] = {
+    val c = math.floorMod(mix64(id), nc.toLong).toInt
+    (0 until nc).iterator.map(other => if (other < c) (other, c, c) else (c, other, c))
   }
 
   /** Chunk-pair (block-nested-loop) decomposition of per-label all-pairs —
@@ -950,12 +768,7 @@ object Similarity {
       .map { case (l, n) => l -> math.max(1, ((n + maxBlock - 1) / maxBlock).toInt) }.toMap
     val bcNc = spark.sparkContext.broadcast(nChunks)
     vecs.flatMap { case (l, id, e) =>
-      val nc = bcNc.value(l)
-      val c = (math.floorMod(mix64(id), nc.toLong)).toInt
-      (0 until nc).iterator.map { other =>
-        val (a, b) = if (other < c) (other, c) else (c, other)
-        (l, a, b, c, id, e)
-      }
+      chunkPairs(id, bcNc.value(l)).map { case (a, b, c) => (l, a, b, c, id, e) }
     }.groupByKey(t => (t._1, t._2, t._3))
       .flatMapGroups { (key: (Int, Int, Int), it: Iterator[(Int, Int, Int, Int, Long, Array[Float])]) =>
         val (_, a, b) = key
@@ -1041,27 +854,7 @@ object Similarity {
     val n = vecs.count()
     val nc = math.max(1, ((n + maxBlock - 1) / maxBlock).toInt)
     val exploded = vecs.flatMap { v =>
-      val c = math.floorMod(mix64(v.vec_id), nc.toLong).toInt
-      (0 until nc).iterator.map { other =>
-        val (a, b) = if (other < c) (other, c) else (c, other)
-        (a, b, c, v.vec_id, v.embedding)
-      }
-    }
-    // local top-k of `self` against `others` — ties broken (cos desc, id asc)
-    def localTopK(id: Long, e: Array[Float],
-                  others: Iterator[(Long, Array[Float])]): Iterator[(Long, Long, Double)] = {
-      val heap = scala.collection.mutable.PriorityQueue.empty[(Double, Long)](
-        Ordering.by[(Double, Long), (Double, Long)] { case (c, nid) => (-c, nid) })
-      others.foreach { case (oid, oe) =>
-        if (oid != id) {
-          val c = cosine(e, oe)
-          if (heap.size < k) heap.enqueue((c, oid))
-          else if (c > heap.head._1 || (c == heap.head._1 && oid < heap.head._2)) {
-            heap.dequeue(); heap.enqueue((c, oid))
-          }
-        }
-      }
-      heap.iterator.map { case (c, nid) => (id, nid, c) }
+      chunkPairs(v.vec_id, nc).map { case (a, b, c) => (a, b, c, v.vec_id, v.embedding) }
     }
     // The chunk-pair kernel is CPU-dense but byte-TINY, which defeats both
     // layers of default parallelism (r14 StageTimeProbe: the whole n²/nc
@@ -1074,83 +867,40 @@ object Similarity {
     // coalescing) and the grouping runs partition-locally — same groups,
     // same kernel, and the kernel's bounded heaps are total-order
     // tie-broken, so the output set is identical from any partitioning.
+    // Sorting each partition by the key turns every group into one run of
+    // consecutive rows, so the kernel streams the partition one (a, b)
+    // group — at most 2·maxBlock vectors — at a time.
     val nGroups = nc.toLong * (nc + 1) / 2
     val p = math.max(1L, math.min(nGroups,
       spark.sparkContext.defaultParallelism.toLong)).toInt
     val partials = exploded.toDF("a", "b", "c", "id", "emb")
       .repartition(p, col("a"), col("b"))
+      .sortWithinPartitions(col("a"), col("b"))
       .as[(Int, Int, Int, Long, Array[Float])]
       .mapPartitions { it =>
-        val groups = new java.util.HashMap[Long,
-          scala.collection.mutable.ArrayBuffer[(Int, Long, Array[Float])]]()
-        it.foreach { case (a, b, c, id, e) =>
-          groups.computeIfAbsent((a.toLong << 32) | (b.toLong & 0xffffffffL),
-            _ => scala.collection.mutable.ArrayBuffer
-              .empty[(Int, Long, Array[Float])]) += ((c, id, e))
-        }
-        groups.entrySet().iterator().asScala.flatMap { ent =>
-          val a = (ent.getKey >> 32).toInt
-          val b = ent.getKey.toInt
-          val members = ent.getValue
+        val rows = it.buffered
+        Iterator.continually(rows).takeWhile(_.hasNext).flatMap { _ =>
+          val (a, b) = (rows.head._1, rows.head._2)
+          val members = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Array[Float])]
+          while (rows.hasNext && rows.head._1 == a && rows.head._2 == b) {
+            val (_, _, c, id, e) = rows.next(); members += ((c, id, e))
+          }
           if (a == b) {
             members.iterator.flatMap { case (_, id, e) =>
-              localTopK(id, e, members.iterator.map(m => (m._2, m._3)))
+              TopK.nearest(id, e, k, members.iterator.map(m => (m._2, m._3)))
             }
           } else {
             val left = members.filter(_._1 == a).map(m => (m._2, m._3))
             val right = members.filter(_._1 == b).map(m => (m._2, m._3))
-            left.iterator.flatMap { case (id, e) => localTopK(id, e, right.iterator) } ++
-              right.iterator.flatMap { case (id, e) => localTopK(id, e, left.iterator) }
+            left.iterator.flatMap { case (id, e) => TopK.nearest(id, e, k, right.iterator) } ++
+              right.iterator.flatMap { case (id, e) => TopK.nearest(id, e, k, left.iterator) }
           }
         }
       }
-    partials.groupByKey(_._1).flatMapGroups { (id: Long, it: Iterator[(Long, Long, Double)]) =>
-      it.toArray.sortBy { case (_, nid, c) => (-c, nid) }.take(k).iterator.zipWithIndex
-        .map { case ((_, nid, c), r) =>
-          KnnEdge(id, nid,
-            BigDecimal(c).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble, r + 1) }
-    }
+    TopK.ranked(partials, k)((id, nid, c, r) => KnnEdge(id, nid, TopK.round6(c), r))
   }
 
   // ---------------------------------------- pruned kNN graph (IVF composition)
-
-  /** argmax-cosine list id; first index wins ties — identical to the rank-1
-    * entry of [[rankedLists]], so a member's home list is always the first
-    * list it would probe. */
-  private def nearestList(cs: Array[Array[Float]], e: Array[Float]): Int = {
-    var best = 0; var bestC = Double.NegativeInfinity
-    var i = 0
-    while (i < cs.length) {
-      val c = cosine(e, cs(i))
-      if (c > bestC) { bestC = c; best = i }
-      i += 1
-    }
-    best
-  }
-
-  /** The `np` nearest list ids by (cosine desc, index asc). */
-  private def rankedLists(cs: Array[Array[Float]], e: Array[Float], np: Int): Array[Int] =
-    cs.indices.map(i => (cosine(e, cs(i)), i))
-      .sortBy { case (c, i) => (-c, i) }.take(np).map(_._2).toArray
-
-  /** Local top-k of `e` against `others` (self excluded), tie-broken
-    * (cosine desc, id asc) — the [[knnGraph]] per-chunk kernel, shared by
-    * the pruned variant. */
-  private def localTopKAgainst(id: Long, e: Array[Float], k: Int,
-      others: Iterator[(Long, Array[Float])]): Iterator[(Long, Long, Double)] = {
-    val heap = scala.collection.mutable.PriorityQueue.empty[(Double, Long)](
-      Ordering.by[(Double, Long), (Double, Long)] { case (c, nid) => (-c, nid) })
-    others.foreach { case (oid, oe) =>
-      if (oid != id) {
-        val c = cosine(e, oe)
-        if (heap.size < k) heap.enqueue((c, oid))
-        else if (c > heap.head._1 || (c == heap.head._1 && oid < heap.head._2)) {
-          heap.dequeue(); heap.enqueue((c, oid))
-        }
-      }
-    }
-    heap.iterator.map { case (c, nid) => (id, nid, c) }
-  }
 
   /** IVF-PRUNED kNN join: every query vector scores ONLY the members of its
     * `nprobe` nearest lists (frozen codebook), instead of every chunk pair.
@@ -1194,7 +944,7 @@ object Similarity {
     val spark = members.sparkSession
     import spark.implicits._
     val bcC = spark.sparkContext.broadcast(centroids)
-    val assigned = members.map(v => (nearestList(bcC.value, v.embedding), v.vec_id, v.embedding))
+    val assigned = assignLists(members, bcC)
     // nlist rows — the only driver-side state, same shape as chunkedNearDups
     val listCounts: Map[Int, Long] = assigned.groupByKey(_._1).count().collect().toMap
     val nmc: Map[Int, Int] = centroids.indices.map(l => l ->
@@ -1215,14 +965,9 @@ object Similarity {
       .cogroup(probeRows.groupByKey(t => (t._1, t._2))) { (_, mIt, pIt) =>
         val mem = mIt.map(t => (t._3, t._4)).toArray
         pIt.flatMap { case (_, _, np, qid, qe) =>
-          localTopKAgainst(qid, qe, k, mem.iterator)
-            .map { case (_, nid, c) => (np, qid, nid, c) } }
+          TopK.nearest(qid, qe, k, mem.iterator).map { case (_, nid, c) => ((np, qid), nid, c) } }
       }
-    partials.groupByKey(t => (t._1, t._2))
-      .flatMapGroups { (key: (Int, Long), it: Iterator[(Int, Long, Long, Double)]) =>
-        it.toArray.sortBy { case (_, _, nid, c) => (-c, nid) }.take(k).iterator
-          .map { case (np, qid, nid, _) => (np, qid, nid) }
-      }
+    TopK.ranked(partials, k)((key, nid, _, _) => (key._1, key._2, nid))
   }
 
   /** Exact top-k for a BOUNDED broadcast query set against the full corpus
@@ -1231,36 +976,8 @@ object Similarity {
     * side of the pruned-graph sweep: linear in n at fixed |queries|. */
   private[graft] def exactTopKBroadcast(corpus: Dataset[Vec], queries: Array[Vec],
                                         k: Int): Dataset[(Long, Long)] = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val bcQ = spark.sparkContext.broadcast(queries)
-    val partials = corpus.mapPartitions { it =>
-      val qs = bcQ.value
-      val heaps = qs.map(_ => scala.collection.mutable.PriorityQueue.empty[(Double, Long)](
-        Ordering.by[(Double, Long), (Double, Long)] { case (c, id) => (-c, id) }))
-      it.foreach { v =>
-        var qi = 0
-        while (qi < qs.length) {
-          val q = qs(qi)
-          if (v.vec_id != q.vec_id) {
-            val c = cosine(q.embedding, v.embedding)
-            val h = heaps(qi)
-            if (h.size < k) h.enqueue((c, v.vec_id))
-            else if (c > h.head._1 || (c == h.head._1 && v.vec_id < h.head._2)) {
-              h.dequeue(); h.enqueue((c, v.vec_id))
-            }
-          }
-          qi += 1
-        }
-      }
-      qs.iterator.zip(heaps.iterator).flatMap { case (q, h) =>
-        h.iterator.map { case (c, id) => (q.vec_id, id, c) }
-      }
-    }
-    partials.groupByKey(_._1).flatMapGroups { (qid: Long, it: Iterator[(Long, Long, Double)]) =>
-      it.toArray.sortBy { case (_, id, c) => (-c, id) }.take(k).iterator
-        .map { case (_, id, _) => (qid, id) }
-    }
+    import corpus.sparkSession.implicits._
+    TopK.ranked(exactCandidates(corpus, queries, k), k)((q, id, _, _) => (q, id))
   }
 
   /** Recall floors for the pruned-graph sweep, per rung, as exact integer
@@ -1466,39 +1183,23 @@ object Similarity {
     import spark.implicits._
     val vecs = vectors(spark, dir)
     val centroids = trainCentroids(vecs, nlist)
-    val bcCent = spark.sparkContext.broadcast(centroids)
-    val nearestList: (Array[Array[Float]], Array[Float]) => Int = (cs, e) => {
-      var best = 0; var bestC = Double.NegativeInfinity
-      var i = 0
-      while (i < cs.length) {
-        val c = cosine(e, cs(i)); if (c > bestC) { bestC = c; best = i }; i += 1
-      }
-      best
-    }
-    val assigned = vecs
-      .map(v => (nearestList(bcCent.value, v.embedding), v)).persist()
-    val radius = listRadii(assigned.rdd.map { case (l, v) => (l, v.embedding) },
-      bcCent, nlist)
+    val (assigned, radius) = assignWithRadii(vecs, centroids)
     val queries = queryArr(spark, dir, numQueries)
     // driver-side: per query, the lists the ball bound cannot exclude
     val admitted: Array[(Vec, Set[Int])] = queries.map { q =>
-      val cs = bcCent.value
-      val lists = cs.indices.filter { l =>
-        radius.get(l).exists { r =>
-          val theta = math.acos(math.max(-1.0, math.min(1.0, cosine(q.embedding, cs(l)))))
-          math.cos(math.max(theta - r, 0.0)) >= tau - 1e-6
-        }
+      val lists = centroids.indices.filter { l =>
+        radius.get(l).exists(r => ballBound(q.embedding, centroids(l), r) >= tau - 1e-6)
       }.toSet
       (q, lists)
     }
     val bcQ = spark.sparkContext.broadcast(admitted)
     val out = assigned.mapPartitions { it =>
       val qs = bcQ.value
-      it.flatMap { case (list, v) =>
+      it.flatMap { case (list, id, e) =>
         qs.iterator.flatMap { case (q, lists) =>
-          if (lists.contains(list) && v.vec_id != q.vec_id) {
-            val c = cosine6(q.embedding, v.embedding)
-            if (c >= tau) Iterator.single((q.vec_id, v.vec_id, c)) else Iterator.empty
+          if (lists.contains(list) && id != q.vec_id) {
+            val c = cosine6(q.embedding, e)
+            if (c >= tau) Iterator.single((q.vec_id, id, c)) else Iterator.empty
           } else Iterator.empty
         }
       }
