@@ -35,6 +35,11 @@ import graft.functions.{Cosine6Expr, Fnv32Expr, FingerprintTokensExpr, GramStats
   *   - [[graft.plans.AsOfJoinRule]]: expands the [[graft.plans.AsOfJoinPlan]]
   *     logical operator (see `graft.plans.AsOf.join`) into its linear
   *     union+window physical shape
+  *
+  * Injected planner strategies:
+  *   - [[graft.plans.TopKStrategy]]: per-key top-k (`graft.plans.TopK.perKey`)
+  *   - [[graft.plans.SetSimJoinStrategy]]: the prefix-filter token-set
+  *     Jaccard join (`graft.plans.SetSimJoin.jaccard`)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -57,6 +62,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectResolutionRule(session => new graft.plans.AsOfJoinRule(session))
     // physical tier: TopKPerKeyPlan → TopKFinalExec(TopKPartialExec(...))
     ext.injectPlannerStrategy(_ => new graft.plans.TopKStrategy)
+    // SetSimJoinPlan → SetSimJoinExec(SetSimPrefixExec(...))
+    ext.injectPlannerStrategy(_ => new graft.plans.SetSimJoinStrategy)
     ext.injectFunction((
       FunctionIdentifier("graft_fnv32"),
       info("graft_fnv32", "graft_fnv32(str) - FNV-1a 32-bit hash masked to 31 bits."),

@@ -8,7 +8,8 @@ import graft.text.TextAnalysis
 
 /** Deduplication family for a training-data pipeline, over `documents`.
   *
-  * Scale design: exact + token-jaccard are pure declarative plans. The
+  * Scale design: exact dedup is a pure declarative plan; token-jaccard is
+  * the fused prefix-filter join operator ([[graft.plans.SetSimJoin]]). The
   * MinHash-LSH and SimHash paths are the 100 TB answer to near-dup detection:
   * candidate generation is a *band-bucket shuffle* (linear in corpus size,
   * one wide exchange) instead of the quadratic all-pairs join; only
@@ -64,16 +65,16 @@ object Dedup {
     * (lang, source) blocks: |A∩B| / |A∪B| >= threshold. Exact integer
     * intersection counts make the jaccard double bit-exact for the oracle.
     *
-    * Scale shape — PREFIX FILTERING (Chaudhuri et al., ICDE'06), lossless
-    * for the threshold: J(A,B) ≥ t implies |A∩B| ≥ t·|A|, so at least one
-    * shared token sits inside A's `|A| − ⌈t·|A|⌉ + 1` RAREST tokens.
-    * Candidates therefore self-join only on those short rarity-ordered
-    * prefixes: a stopword shared by every document generates zero candidate
-    * pairs (it is never in anyone's prefix) instead of |block|² — the
-    * difference between linear-ish and quadratic at 100 TB. Verification
-    * computes the exact intersection on the (small) candidate set. */
+    * Scale shape — the fused PREFIX-FILTER join ([[graft.plans.SetSimJoin]],
+    * Vernica et al., SIGMOD'10): one vocabulary aggregate ranks each block's
+    * tokens rarest-first, then one shuffle on (lang, source, prefix rank)
+    * and a streaming per-group verify. J(A,B) ≥ t implies a shared token
+    * among A's `|A| − ⌈t·|A|⌉ + 1` RAREST tokens (Chaudhuri et al.,
+    * ICDE'06), so a stopword shared by every document generates zero
+    * candidate pairs (it is never in anyone's prefix) instead of |block|² —
+    * the difference between linear-ish and quadratic at 100 TB. */
   def tokenJaccard(spark: SparkSession, dir: String, threshold: Double = 0.8): DataFrame =
-    jaccardPairs(spark, dir, threshold, split = None)
+    graft.plans.SetSimJoin.jaccard(tokenSets(spark, dir), threshold)
 
   /** INCREMENTAL near-dup check — an arriving batch against the existing
     * corpus, without re-deduplicating the corpus against itself: pairs are
@@ -84,14 +85,12 @@ object Dedup {
     * would be degenerate on this fixture: the generator plants near-dups
     * at id deltas that are multiples of 20, so modulo splits never cross —
     * the same fixture-correlation trap CapStreamSpec hit with sources.)
-    * The candidate join's sides are filtered BEFORE the prefix join, so
-    * candidate generation cost scales with the BATCH (the delta prefix
-    * table is ingest-batch-sized and AQE broadcasts it), not with corpus²:
-    * at 100 TB this is the difference between a per-batch ingest gate and
-    * a nightly full re-dedup. Prefix + length filtering stay lossless
-    * across sides — the prefix theorem only needs the shared global
-    * (dfreq, word) token order, which both sides derive from the same
-    * corpus-wide frequency table. */
+    * The join tags each document's side and verifies only (base, delta)
+    * pairs, so verify cost scales with the BATCH, not with corpus²: at
+    * 100 TB this is the difference between a per-batch ingest gate and a
+    * nightly full re-dedup. Prefix + length filtering stay lossless across
+    * sides — the prefix theorem only needs the shared token order, which
+    * both sides take from the same corpus-wide frequency table. */
   def incrementalJaccard(spark: SparkSession, dir: String,
                          threshold: Double = 0.8): DataFrame = {
     // coalesce: max(doc_id) is NULL on an empty corpus (the Row's getLong
@@ -100,9 +99,16 @@ object Dedup {
     val m = Tables.documents(spark, dir)
       .agg(coalesce(max(col("doc_id")), lit(0L))).head().getLong(0)
     val cut = m - m / 5
-    jaccardPairs(spark, dir, threshold,
-      split = Some((col("doc_id") <= cut, col("doc_id") > cut)))
+    graft.plans.SetSimJoin.jaccard(
+      tokenSets(spark, dir).withColumn("base", col("doc_id") <= cut), threshold,
+      base = Some("base"))
   }
+
+  /** (doc_id, lang, source, toks): each document's distinct tokens, the
+    * input of the token-set jaccard join. */
+  private def tokenSets(spark: SparkSession, dir: String): DataFrame =
+    Tables.documents(spark, dir).select(col("doc_id"), col("lang"), col("source"),
+      array_distinct(TextAnalysis.tokensCol(col("text"))).as("toks"))
 
   /** ASYMMETRIC CONTAINMENT join — find documents CONTAINED in another
     * (C(A→B) = |grams(A) ∩ grams(B)| / |grams(A)| ≥ τ): the quote/excerpt/
@@ -127,7 +133,7 @@ object Dedup {
   def containment(spark: SparkSession, dir: String, threshold: Double = 0.5,
                   w: Int = 5): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
-    // shingle-hash ONCE, in parallel (r14, the jaccardDocs discipline): this
+    // shingle-hash ONCE, in parallel (r14): this
     // frame has THREE consumers (the gram explode and both verify-join
     // sides) and each re-derived the fused tokenize+shingle chain from the
     // single scan split. No-op at scale (Tables.materializeSmall).
@@ -140,7 +146,7 @@ object Dedup {
         .filter(size(col("gs")) > 0))
     val g = docs.select(col("doc_id"), size(col("gs")).as("n"), explode(col("gs")).as("g"))
     // gram document frequency: groupBy (map-side combined), AQE broadcasts
-    // the Zipf-small vocabulary back — the jaccard dfreq discipline
+    // the Zipf-small vocabulary back
     val dfreq = g.groupBy(col("g")).agg(count(lit(1)).as("dfreq"))
     val prefixes = g.join(dfreq, Seq("g"))
       .withColumn("rank", row_number().over(
@@ -163,107 +169,6 @@ object Dedup {
         col("shared"),
         (col("shared").cast("double") / col("n_grams")).as("containment"))
       .filter(col("containment") >= lit(threshold))
-  }
-
-  private def jaccardPairs(spark: SparkSession, dir: String, threshold: Double,
-                           split: Option[(org.apache.spark.sql.Column,
-                             org.apache.spark.sql.Column)]): DataFrame = {
-    val docs = jaccardDocs(spark, dir)
-    val cand = jaccardCandidates(docs, threshold, split)
-    // Verification: each doc's token set is sorted ONCE (amortized over all
-    // its candidate pairs), every pair scored by the allocation-free merge
-    // `sorted_intersect_count` instead of a per-pair hash set — see SetOps.
-    // sort_array, NOT array_sort: the lambda-comparator form is
-    // CodegenFallback, and constraint inference (isnotnull on the join
-    // output columns) re-expands the alias UNDER an interpreted Filter —
-    // the whole tokenize+sort then ran interpreted, 3× per row (one 14.7 s
-    // single-task stage at sf0.1, r13 StageTimeProbe). Same ascending
-    // order on null-free arrays, so the merge contract is unchanged.
-    val arr = docs.select(col("doc_id"), sort_array(col("toks")).as("toks"),
-      size(col("toks")).as("n"))
-    cand
-      .join(arr.select(col("doc_id").as("d1"), col("toks").as("t1"), col("n").as("n1")), "d1")
-      .join(arr.select(col("doc_id").as("d2"), col("toks").as("t2"), col("n").as("n2")), "d2")
-      .select(col("d1"), col("d2"),
-        graft.functions.SetOps.sortedIntersectCountCol(col("t1"), col("t2")).as("c"),
-        col("n1"), col("n2"))
-      .select(col("d1"), col("d2"),
-        (col("c").cast("double") / (col("n1") + col("n2") - col("c"))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
-
-  /** Tokenized (doc_id, lang, source, token-set) projection shared by the
-    * candidate and verify sides of the jaccard family. */
-  private def jaccardDocs(spark: SparkSession, dir: String): DataFrame =
-    // Tokenize ONCE: this frame has three consumers (the dfreq aggregate,
-    // the prefix side, the verify side), each of which re-derived the
-    // tokenization from its own corpus scan — and explode-inferred filters
-    // re-expanded it a further 2× per row below the scan, single-task on
-    // the one-split fixture file. spreadSmall parallelizes the tokenize
-    // pass; materializeSmall computes it once and is the optimizer barrier
-    // that stops the filter re-expansion. Both are no-ops at scale (see
-    // Tables.materializeSmall for the at-100TB argument).
-    Tables.materializeSmall(
-      Tables.spreadSmall(Tables.documents(spark, dir), col("doc_id"),
-          bytesPerTask = 16L << 10) // tokenize+dedupe-heavy rows: want cores
-        .select(col("doc_id"), col("lang"), col("source"),
-          array_distinct(TextAnalysis.tokensCol(col("text"))).as("toks")))
-
-  /** The prefix+length-filtered candidate pairs (d1, d2). */
-  private def jaccardCandidates(docs: DataFrame, threshold: Double,
-                                split: Option[(org.apache.spark.sql.Column,
-                                  org.apache.spark.sql.Column)]): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
-    val w = docs.select(col("doc_id"), col("lang"), col("source"),
-      size(col("toks")).as("n"), explode(col("toks")).as("word"))
-    // Document frequency as groupBy + join, NOT a count window: the groupBy
-    // gets map-side partial aggregation, so only the distinct vocabulary
-    // (Zipf-small vs the corpus) crosses the wire, and AQE broadcasts it back
-    // — the exploded token table then shuffles exactly once (the rank window
-    // by doc_id) instead of twice. A count().over(lang,source,word) window
-    // ships the whole exploded corpus unreduced.
-    val dfreq = w.groupBy(col("lang"), col("source"), col("word"))
-      .agg(count(lit(1)).as("dfreq"))
-    // NOTE (r14, measured): the window→candidate-join chain's exchanges
-    // carry sub-MB frames that AQE coalesces to single tasks (a ~0.8 s
-    // serial chain per invocation at sf0.1, StageTimeProbe). Replacing
-    // them with user-pinned keyed repartitions (AQE-exempt, same exchange
-    // count) was tried at cores granularity and REVERTED — like-for-like
-    // subset A/B, per-query min of 2: dedup_components 3436→4804 with the
-    // pair-dedup exchange pinned (the pin re-partitions the verify join's
-    // probe side and forces the token arrays through a new exchange), and
-    // still no win with only the window/join pins (token_jaccard
-    // 1193→1455, incremental 1164→1714 — 32-way sorts + lost AQE runtime
-    // flexibility cost more than the single-task stages). The serial
-    // chain is the measured floor here; at scale these frames are GBs and
-    // AQE sizes them correctly on its own.
-    val prefixes = w.join(dfreq, Seq("lang", "source", "word"))
-      .withColumn("rank", row_number().over(W.partitionBy(col("doc_id")).orderBy(col("dfreq"), col("word"))))
-      .filter(col("rank") <= col("n") - ceil(col("n") * threshold) + 1)
-      .select(col("lang"), col("source"), col("word"), col("doc_id"), col("n"))
-    // LENGTH FILTERING on top of the prefix filter (also Chaudhuri ICDE'06),
-    // equally lossless: J(A,B) >= t forces min(|A|,|B|) >= t*max(|A|,|B|)
-    // (c <= min and c >= t(|A|+|B|)/(1+t) combine to it), so size-mismatched
-    // bucket cohabitants drop BEFORE the verify join ever sees them. The
-    // 1e-9 slack only loosens the bound (never drops a qualifying pair); it
-    // absorbs double rounding of t*n at integer boundary cases like
-    // 0.8 * 5 = 4.000000000000000222.
-    // self-join: orientation d1 < d2 dedups the symmetric pair space;
-    // split join: the sides are DISJOINT doc sets (base × delta), so every
-    // pair appears once with base as d1 — no order predicate needed, and
-    // each side is filtered BEFORE the join (the incremental economics)
-    val left = split.fold(prefixes)(s => prefixes.filter(s._1))
-    val right = split.fold(prefixes)(s => prefixes.filter(s._2))
-    val orient = if (split.isEmpty) col("d1") < col("d2") else lit(true)
-    left.select(col("lang"), col("source"), col("word"),
-        col("doc_id").as("d1"), col("n").as("na"))
-      .join(right.select(col("lang"), col("source"), col("word"),
-          col("doc_id").as("d2"), col("n").as("nb"))
-        .hint("shuffle_merge"), Seq("lang", "source", "word"))
-      .filter(orient &&
-        col("nb") >= col("na") * threshold - 1e-9 &&
-        col("na") >= col("nb") * threshold - 1e-9)
-      .select(col("d1"), col("d2")).dropDuplicates("d1", "d2")
   }
 
   /** Reference implementation of [[tokenJaccard]] without prefix filtering —

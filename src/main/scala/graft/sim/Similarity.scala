@@ -1184,6 +1184,12 @@ object Similarity {
     val vecs = vectors(spark, dir)
     val centroids = trainCentroids(vecs, nlist)
     val (assigned, radius) = assignWithRadii(vecs, centroids)
+    // the returned frame scans the assignment after this builder returns:
+    // hold it as an eager checkpoint, released through the Checkpoints
+    // ledger once the query completes, instead of a cache that would be
+    // dropped here and recomputed from the embeddings scan
+    val held = graft.Checkpoints.track(assigned.toDF().localCheckpoint(true))
+    assigned.unpersist()
     val queries = queryArr(spark, dir, numQueries)
     // driver-side: per query, the lists the ball bound cannot exclude
     val admitted: Array[(Vec, Set[Int])] = queries.map { q =>
@@ -1193,7 +1199,7 @@ object Similarity {
       (q, lists)
     }
     val bcQ = spark.sparkContext.broadcast(admitted)
-    val out = assigned.mapPartitions { it =>
+    held.as[(Int, Long, Array[Float])].mapPartitions { it =>
       val qs = bcQ.value
       it.flatMap { case (list, id, e) =>
         qs.iterator.flatMap { case (q, lists) =>
@@ -1204,8 +1210,6 @@ object Similarity {
         }
       }
     }.toDF("query_id", "neighbor_id", "cosine")
-    assigned.unpersist()
-    out
   }
 
   /** DuckDB re-derivation of [[radiusSearch]]: the plain brute filter —

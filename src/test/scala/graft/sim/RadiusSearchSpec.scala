@@ -1,13 +1,15 @@
 package graft.sim
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
 import graft.SparkTestSession
 
 /** Radius search beyond the value oracle: the IVF-ball-pruned scan must
   * equal the driver-local brute ε-ball exactly (pruning is only allowed
   * to skip provably-below-τ lists), at more than one list count. */
-class RadiusSearchSpec extends AnyFunSuite {
+class RadiusSearchSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = SparkTestSession.spark
   val sf = SparkTestSession.sf
 
@@ -32,5 +34,15 @@ class RadiusSearchSpec extends AnyFunSuite {
       })
     }
     assert(want.nonEmpty, "no neighbor within the ball at fixture scale — degenerate τ")
+  }
+
+  test("sim_radius_search holds its list assignment: the returned plan scans no file") {
+    val df = Similarity.radiusSearch(spark, sf, 8, 0.3, 16)
+    try {
+      val plan = df.queryExecution.executedPlan
+      assert(find(plan)(_.isInstanceOf[FileSourceScanExec]).isEmpty,
+        s"the final scan re-runs the assignment over the embeddings:\n$plan")
+      assert(df.count() > 0)
+    } finally graft.Checkpoints.releaseTracked()
   }
 }

@@ -26,14 +26,20 @@ SPARK_HOME=/opt/spark SPARK_SCALA_VERSION=2.13 \
   java $CS_OPENS -Xmx4g -cp "$CS_CP" graft.tools.ClusterSmoke /root/testdata/sf0.001 2>/dev/null \
   | grep '\[clustersmoke\] total'
 echo "[gate] local-cluster smoke ok"
-# Benchmark smoke: one short perfbench run (the full-result timing path,
-# see BENCHMARK.json) must time every workload query with no failure and
-# match each query's committed digest. Its result line is the last line of
-# stdout; a crash or a missing result line exits nonzero.
-python3 perfbench/run.py --workload mixed_serial --seed 1 --seconds 10 --trace 0 \
-  | tail -n 1 | python3 -c '
+# Benchmark smokes: one short perfbench run per workload (the full-result
+# timing path, see BENCHMARK.json) must time every workload query with no
+# failure and match each query's committed digest. The serial run is one
+# client's latency path; the concurrent one runs a client per core, each on
+# its own session, over the shared checkpoint drain and per-client
+# broadcasts. The result line is the last line of stdout; a crash or a
+# missing result line exits nonzero.
+for W in mixed_serial mixed_concurrent; do
+  python3 perfbench/run.py --workload "$W" --seed 1 --seconds 10 --trace 0 \
+    | tail -n 1 | python3 -c '
 import json, sys
+w = sys.argv[1]
 r = json.loads(sys.stdin.read())
-assert r["correct"] is True and r["failed"] == 0, f"perfbench smoke failed: {r}"
-print("[gate] perfbench smoke ok")'
+assert r["correct"] is True and r["failed"] == 0, f"perfbench {w} smoke failed: {r}"
+print(f"[gate] perfbench {w} smoke ok")' "$W"
+done
 echo "[gate] all green"
