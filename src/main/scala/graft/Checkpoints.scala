@@ -1,40 +1,62 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Session-level ledger for eager `localCheckpoint(true)` frames whose
-  * blocks must OUTLIVE the builder function that made them — either the
-  * returned result itself (PageRank's final ranks) or an input a lazily
-  * returned plan still references (the LSH signature frame all of
-  * `pairsFrame`'s consumers share). Builders that can release eagerly do
-  * (the `ccIterate` round discipline); the ones that cannot register here,
-  * and the harnesses ([[Verify]], `perfbench`) drain the ledger between
-  * queries, once the previous query's result is materialized. Without the
-  * drain, repeated bench invocations accumulate non-fault-tolerant
-  * executor storage blocks that only ContextCleaner GC would free — at
-  * 100 TB those are corpus-sized pins.
+/** The one owner of how long a pinned intermediate lives. A frame that
+  * several consumers read is pinned as an eager `localCheckpoint(true)`,
+  * and one rule decides when its blocks go:
   *
-  * Thread-safe (Verify is single-threaded over queries, but
-  * streaming specs build frames from listener threads).
+  *  - the plan the builder RETURNS reads it: [[track]] it, and the
+  *    harnesses ([[Verify]], `perfbench`, the chaos and plan-dump tools)
+  *    drain the ledger with [[releaseTracked]] between queries, once the
+  *    previous result is materialized and no query is in flight on any
+  *    session of this JVM;
+  *  - only the builder reads it: [[release]] it in that builder once its
+  *    last reader has run.
+  *
+  * A checkpoint on neither path stays pinned until a ContextCleaner GC:
+  * non-fault-tolerant executor blocks that pile up over repeated queries
+  * and are corpus-sized at 100 TB. A `persist()` is only for a cache that
+  * its own function unpersists in a `finally`.
+  *
+  * Thread-safe: streaming specs build frames from listener threads.
   */
 object Checkpoints {
-  private val pending = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+  private val pending = new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]()
 
-  /** Register an eager-localCheckpoint frame for deferred release; returns
-    * the frame for inline use. `df` must satisfy
-    * [[graft.dedup.Dedup.releaseLocalCheckpoint]]'s single-LogicalRDD
-    * precondition. */
-  def track(df: DataFrame): DataFrame = { pending.add(df); df }
+  /** Register an eager checkpoint that the returned plan reads, for
+    * release at the next drain; returns it for inline use. `ds` must
+    * satisfy [[release]]'s precondition. */
+  def track[T](ds: Dataset[T]): Dataset[T] = { pending.add(ds); ds }
 
-  /** Release every tracked frame's checkpoint blocks. Safe to call at any
-    * query boundary: tracked frames belong to COMPLETED builder calls, and
-    * a re-invoked builder registers fresh frames. */
+  /** Unpersist the block set behind an eager `localCheckpoint(true)` frame.
+    * `Dataset.unpersist` only talks to the CacheManager and a checkpointed
+    * frame is not registered there; the blocks belong to the `LogicalRDD`
+    * leaf the checkpoint left in the plan.
+    *
+    * PRECONDITION: `ds` must be exactly the frame an eager localCheckpoint
+    * returned — its analyzed plan a single `LogicalRDD` leaf. Anything
+    * derived from MULTIPLE checkpointed inputs is rejected rather than
+    * risk unpersisting non-recomputable blocks a sibling frame still needs
+    * ("Checkpoint block not found" much later, far from the cause). */
+  def release(ds: Dataset[_]): Unit =
+    ds.queryExecution.analyzed match {
+      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
+      case other => throw new IllegalArgumentException(
+        "Checkpoints.release expects a frame whose plan is a single " +
+          s"LogicalRDD checkpoint leaf, got: ${other.nodeName}")
+    }
+
+  /** Release every tracked frame's checkpoint blocks. Safe at any query
+    * boundary with no query in flight: tracked frames belong to COMPLETED
+    * builder calls, and a re-invoked builder registers fresh frames. */
   def releaseTracked(): Unit = {
-    var df = pending.poll()
-    while (df != null) {
-      try graft.dedup.Dedup.releaseLocalCheckpoint(df)
+    var ds = pending.poll()
+    while (ds != null) {
+      try release(ds)
       catch { case scala.util.control.NonFatal(_) => () }
-      df = pending.poll()
+      ds = pending.poll()
     }
   }
 }

@@ -26,9 +26,11 @@ object Tables {
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val schema = schemaCache.computeIfAbsent(path, p => spark.read.parquet(p).schema)
-    spark.read.schema(schema).parquet(path)
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
   }
+
+  private def schemaOf(spark: SparkSession, path: String) =
+    schemaCache.computeIfAbsent(path, p => spark.read.parquet(p).schema)
 
   def region(s: SparkSession, d: String): DataFrame     = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = apply(s, d, "nation")
@@ -75,7 +77,7 @@ object Tables {
     * migration only, breaking every single-file streaming spec; the layout
     * check makes the choice from the filesystem. */
   def streamSource(s: SparkSession, d: String, table: String): DataFrame = {
-    val schema = s.read.parquet(s"$d/$table.parquet").schema
+    val schema = schemaOf(s, s"$d/$table.parquet")
     if (new java.io.File(s"$d/$table.parquet").isDirectory)
       s.readStream.schema(schema).parquet(s"$d/$table.parquet")
     else

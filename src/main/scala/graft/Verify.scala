@@ -22,6 +22,7 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
+      val held = spark.sparkContext.getPersistentRDDs.keySet
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -30,6 +31,11 @@ object Verify {
       // the previous query's result is on disk — drop any checkpoint
       // blocks its builder registered (see Checkpoints)
       Checkpoints.releaseTracked()
+      // leak check: whatever the query persisted must be gone after the
+      // drain. A ContextCleaner GC can hide a leak here, never fake one.
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- held
+      if (left.nonEmpty)
+        System.err.println(s"[verify] $name left ${left.size} persisted RDDs")
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

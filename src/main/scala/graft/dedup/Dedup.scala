@@ -481,7 +481,11 @@ object Dedup {
     // recompute (observed: a 16-node path graph spun for minutes). The
     // checkpoint truncates lineage each round instead.
     val sym = symmetrize(edges).localCheckpoint(true)
-    if (sym.count() < cutover) ccIterate(sym, nodes, maxIter, mergeHint = false)
+    if (sym.count() < cutover)
+      // every round is checkpointed: the returned plan reads only the
+      // final frontier, never the edges
+      try ccIterate(sym, nodes, maxIter, mergeHint = false)
+      finally graft.Checkpoints.release(sym)
     else ccBucketed(sym, nodes, maxIter)
   }
 
@@ -502,34 +506,10 @@ object Dedup {
     // the bucketed table now holds the edges: the checkpoint blocks are
     // dead weight — corpus-sized, non-fault-tolerant, and otherwise pinned
     // on executors for the whole iteration
-    releaseLocalCheckpoint(sym)
+    graft.Checkpoints.release(sym)
     try ccIterate(spark.table(table), nodes, maxIter, mergeHint = true)
     finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
-
-  /** Unpersist the block set behind an eager `localCheckpoint(true)` frame.
-    * `Dataset.unpersist` only talks to the CacheManager and a checkpointed
-    * frame is not registered there; the blocks belong to the `LogicalRDD`
-    * leaf the checkpoint left in the plan. Callers: [[ccIterate]] releases
-    * each superseded frontier once the next round's frontier is
-    * materialized, and [[connectedComponents]]' bucketed branch releases
-    * the pre-write edge frame — at 100 TB those are corpus- or |V|-sized
-    * non-fault-tolerant blocks that must not stay pinned for the whole
-    * iteration.
-    *
-    * PRECONDITION: `df` must be exactly the frame an eager localCheckpoint
-    * returned — its analyzed plan a single `LogicalRDD` leaf. Anything
-    * derived from MULTIPLE checkpointed inputs is rejected rather than
-    * risk unpersisting non-recomputable blocks a sibling frame still needs
-    * ("Checkpoint block not found" much later, far from the cause). */
-  private[graft] def releaseLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case other => throw new IllegalArgumentException(
-        "releaseLocalCheckpoint expects a frame whose plan is a single " +
-          s"LogicalRDD checkpoint leaf, got: ${other.nodeName}")
-    }
 
   /** Edge-count cutover between the two component variants. Measured on the
     * real dedup edge set (interleaved A/B): below ~10^6 sym
@@ -666,12 +646,14 @@ object Dedup {
       // `next` is materialized and `changed` counted: the previous frontier
       // is now a dead block set — release it eagerly instead of waiting for
       // the ContextCleaner (at 100 TB it is a |V|-row pinned set per round)
-      releaseLocalCheckpoint(chk)
+      graft.Checkpoints.release(chk)
       chk = next
       labels = next.select(col("node"), col("label"))
       converged = changed == 0
       it += 1
     }
+    // the returned plan reads the final frontier
+    graft.Checkpoints.track(chk)
     require(converged, s"connectedComponents did not converge in $maxIter rounds")
     nodes.join(bcast(labels), Seq("node"), "left")
       .select(col("node"), coalesce(col("label"), col("node")).as("label"))

@@ -92,7 +92,7 @@ object Bfs {
       // engine's round-12 chaos-gate lesson). Confirm a zero against the
       // materialized blocks — one cache-scan job, drain round only.
       if (acc.value == 0L && nextCounted.isEmpty) {
-        graft.dedup.Dedup.releaseLocalCheckpoint(nextCounted)
+        graft.Checkpoints.release(nextCounted)
         drained = true
       } else {
         graft.Checkpoints.track(nextCounted)
@@ -101,7 +101,7 @@ object Bfs {
         d += 1
       }
     }
-    graft.dedup.Dedup.releaseLocalCheckpoint(adj)
+    graft.Checkpoints.release(adj)
     dist
   }
 

@@ -65,15 +65,15 @@ object KCore {
       graft.tools.PlanProbe.tap(s"kcoreround_$round", roundDf)
       val nextDeg = roundDf.localCheckpoint(true)
       val nextN = nextDeg.count()
-      if (deg != null) graft.dedup.Dedup.releaseLocalCheckpoint(deg)
-      graft.dedup.Dedup.releaseLocalCheckpoint(alive)
+      if (deg != null) graft.Checkpoints.release(deg)
+      graft.Checkpoints.release(alive)
       deg = nextDeg
       alive = nextDeg.select(col("node")).localCheckpoint(true)
       converged = nextN == aliveN
       aliveN = nextN
     }
-    graft.dedup.Dedup.releaseLocalCheckpoint(adj)
-    graft.dedup.Dedup.releaseLocalCheckpoint(alive)
+    graft.Checkpoints.release(adj)
+    graft.Checkpoints.release(alive)
     // converged round's degrees were computed WITHIN the fixpoint set —
     // they are the within-core degrees. Released at the harness's
     // between-queries drain (the PageRank.ranks discipline).

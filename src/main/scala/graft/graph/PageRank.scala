@@ -81,10 +81,10 @@ object PageRank {
       // iteration-invariant: materialize once, reuse every round
       e0.join(if (smallE) broadcast(wout) else wout, "src")
         .localCheckpoint(true)
-    } finally graft.dedup.Dedup.releaseLocalCheckpoint(e0)
+    } finally graft.Checkpoints.release(e0)
     try {
       ranksFromEj(ej, iterations, scale)
-    } finally graft.dedup.Dedup.releaseLocalCheckpoint(ej)
+    } finally graft.Checkpoints.release(ej)
   }
 
   /** The iteration over a CHECKPOINTED edge⋈wout relation — split out so
@@ -99,7 +99,7 @@ object PageRank {
       .distinct().localCheckpoint(true)
     try {
       ranksIterate(ej, nodes, iterations, scale)
-    } finally graft.dedup.Dedup.releaseLocalCheckpoint(nodes)
+    } finally graft.Checkpoints.release(nodes)
   }
 
   private def ranksIterate(ej: DataFrame, nodes: DataFrame,
@@ -132,7 +132,7 @@ object PageRank {
         .agg((lit(teleport) + expr("(85 * sum(c)) DIV 100")).as("rank"))
       graft.tools.PlanProbe.tap(s"prround_$i", round)
       val next = round.localCheckpoint(true)
-      graft.dedup.Dedup.releaseLocalCheckpoint(ranks)
+      graft.Checkpoints.release(ranks)
       ranks = next
     }
     // ej/nodes are released by the callers' finally blocks

@@ -58,8 +58,8 @@ object Triangles {
     val nEdges = und.count()
     val nNodes = deg.count()
     val spark = edges.sparkSession
-    graft.dedup.Dedup.releaseLocalCheckpoint(und)
-    graft.dedup.Dedup.releaseLocalCheckpoint(oriented)
+    graft.Checkpoints.release(und)
+    graft.Checkpoints.release(oriented)
     import spark.implicits._
     Seq((nNodes, nEdges, nTri)).toDF("n_nodes", "n_edges", "n_triangles")
   }

@@ -661,16 +661,16 @@ object RelationalQueries {
     * corpus size. Leading gaps (no value yet to carry) stay NULL. */
   def evGapFill(spark: SparkSession, dir: String): DataFrame = {
     val ms = Tables.eventMs
-    // localCheckpoint: the hourly aggregate feeds THREE consumers (range,
-    // type list, join) — without it each re-plans the corpus scan (plan
-    // audit showed scans=3). The checkpointed frame is |types|×|hours|
-    // rows, so materializing it is free at any corpus size and the corpus
-    // is scanned ONCE.
-    val hourly = Tables.events(spark, dir)
+    // checkpoint: the hourly aggregate feeds THREE consumers (range, type
+    // list, join) — without it each re-plans the corpus scan (plan audit
+    // showed scans=3). The checkpointed frame is |types|×|hours| rows, so
+    // materializing it is free at any corpus size and the corpus is
+    // scanned ONCE. The returned plan reads it: tracked.
+    val hourly = graft.Checkpoints.track(Tables.events(spark, dir)
       .groupBy(col("event_type"), (ms - (ms % 3600000L)).as("hour_ms"))
       .agg(sum(dec(col("value"))).cast("double").as("sum_value"),
         count(lit(1)).as("n_events"))
-      .localCheckpoint()
+      .localCheckpoint(true))
     val range = hourly.agg(min(col("hour_ms")).as("lo"), max(col("hour_ms")).as("hi"))
     val spine = hourly.select(col("event_type")).distinct()
       .crossJoin(broadcast(range))
@@ -783,10 +783,10 @@ object RelationalQueries {
     * moments are a |type|-row map-side-combined aggregate. */
   def evForecast(spark: SparkSession, dir: String): DataFrame = {
     val ms = Tables.eventMs
-    val hourly = Tables.events(spark, dir)
+    val hourly = graft.Checkpoints.track(Tables.events(spark, dir)
       .groupBy(col("event_type"), (ms - (ms % 3600000L)).as("hour_ms"))
       .agg(sum(dec(col("value"))).as("y"))
-      .localCheckpoint()
+      .localCheckpoint(true))
     val minHour = hourly.agg(min(col("hour_ms")).as("h0"))
     val d = hourly.crossJoin(broadcast(minHour))
       .select(col("event_type"),

@@ -80,8 +80,9 @@ object Dsir {
   def importanceTop(spark: SparkSession, dir: String,
                     targetLang: String = "en"): DataFrame = {
     // ONE corpus scan: the per-(doc,bucket) count table feeds the raw
-    // distribution, the target distribution, and the scoring join
-    val cnts = gramCounts(spark, dir).localCheckpoint(true)
+    // distribution, the target distribution, and the scoring join; the
+    // returned plan reads it, so it is tracked
+    val cnts = graft.Checkpoints.track(gramCounts(spark, dir).localCheckpoint(true))
     cnts.join(broadcast(llrFrame(cnts, targetLang)), "bucket")
       .groupBy(col("doc_id"))
       .agg(sum(col("c") * col("llr_fx")).as("score_fx"), sum(col("c")).as("n_grams"))

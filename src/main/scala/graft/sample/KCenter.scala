@@ -58,12 +58,12 @@ object KCenter {
           .withColumn("mc", greatest(col("mc"),
             graft.functions.VecOps.cosine6Col(col("emb"), typedlit(pickEmb))))
           .localCheckpoint(true)
-        graft.dedup.Dedup.releaseLocalCheckpoint(cur)
+        graft.Checkpoints.release(cur)
         cur = next
       }
       r += 1
     }
-    graft.dedup.Dedup.releaseLocalCheckpoint(cur)
+    graft.Checkpoints.release(cur)
     picks.toSeq.toDF("sel_rank", "vec_id", "max_cos")
       .select(col("sel_rank").cast("int"), col("vec_id"), col("max_cos"))
   }

@@ -40,11 +40,12 @@ object Packing {
     // job, the shuffle, and both prefix-sum phases all read checkpoint
     // blocks, never the parquet+tokenize pipeline. (Checkpointing after the
     // exchange would be too late: the partitioner's sample pass and the
-    // shuffle-map pass would each re-run the scan.)
-    val countedOnce = docs
+    // shuffle-map pass would each re-run the scan.) The returned frame's
+    // phase-2 lineage reads it: tracked (see Checkpoints).
+    val countedOnce = graft.Checkpoints.track(docs
       .select(col("doc_id"),
         size(TextAnalysis.tokensCol(col("text"))).cast("bigint").as("n_tokens"))
-      .localCheckpoint(true)
+      .localCheckpoint(true))
     val counted = countedOnce
       .repartitionByRange(col("doc_id"))
       .sortWithinPartitions(col("doc_id"))

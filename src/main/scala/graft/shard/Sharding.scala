@@ -165,21 +165,22 @@ object Sharding {
       // eager checkpoint: breaks lineage so the overwrite below can't race
       // its own input (Spark refuses to overwrite a path it is reading)
       .localCheckpoint(true)
-    retagged.write
-      // per-write option, not a session conf mutation: later
-      // mode("overwrite").partitionBy writes in this session keep their own
-      // semantics
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").partitionBy("gid").parquet(path)
+    val writtenGids = try {
+      retagged.write
+        // per-write option, not a session conf mutation: later
+        // mode("overwrite").partitionBy writes in this session keep their
+        // own semantics
+        .option("partitionOverwriteMode", "dynamic")
+        .mode("overwrite").partitionBy("gid").parquet(path)
+      // retagged is checkpointed, so the distinct is a cheap bounded scan
+      retagged.select(col("gid")).distinct().collect().map(_.getInt(0)).toSet
+    } finally graft.Checkpoints.release(retagged)
     // GC: dynamic overwrite only replaces partitions PRESENT in the output,
     // so any affected gid that ends up with zero rows — whether it lost all
     // its shards, or still owns shards but every row it held moved away —
     // keeps a stale directory (its rows now duplicated under the new gid).
     // The emptied set is exactly affectedGids minus the gids the retagged
-    // output actually wrote; retagged is checkpointed, so the distinct is a
-    // cheap bounded scan.
-    val writtenGids = retagged.select(col("gid")).distinct()
-      .collect().map(_.getInt(0)).toSet
+    // output actually wrote.
     affectedGids.filterNot(writtenGids).foreach { g =>
       val dir = new org.apache.hadoop.fs.Path(path, s"gid=$g")
       val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -202,6 +203,7 @@ object Sharding {
       // one keyed-state table feeds all six census branches: materialize it
       // once instead of re-scanning events per config hop
       .localCheckpoint(true)
+    graft.Checkpoints.track(base) // the returned census union reads it
     val c1 = configScript(1)
     var state = base.withColumn("gid", gidCol(c1, col("shard")))
     val censuses = Seq.newBuilder[DataFrame]

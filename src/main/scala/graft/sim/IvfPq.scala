@@ -174,22 +174,18 @@ object IvfPq {
     // exact by construction
     val sweep = Seq((8, 16 * k, 3)).filter(p => p._1 < nlist && p._2 < n) :+ ((nlist, n, k))
     // ONE encode pass (coarse assignment + residual PQ codes) shared by
-    // every operating point — the code table is index-determined. Lazy
-    // persist: the first point's scan materializes the cache in-line; the
-    // blocks are ContextCleaner-reclaimed (see Pq.pqRecallSweep).
-    val codes = encode(vecs, idx).persist()
-    val all = sweep.map { case (np, rr, _) =>
+    // every operating point — the code table is index-determined. Same
+    // lifetimes as Pq.pqRecallSweep: the codes are released once the
+    // (|sweep| x Q x k)-row result, read twice below, is checkpointed; the
+    // returned plan reads that result, so it is tracked.
+    val codes = encode(vecs, idx).localCheckpoint(true)
+    val all = try graft.Checkpoints.track(sweep.map { case (np, rr, _) =>
       topK(spark, dir, numQueries, k, nlist, m, ksub, np, rr,
         trained = Some(idx), codes = Some(codes)).toDF()
         .select(lit(np).as("nprobe"), lit(rr).as("rerank"),
           col("query_id"), col("neighbor_id"))
-    }.reduce(_ unionAll _)
-      // referenced twice below (hit counts + match join): cache the tiny
-      // (|sweep| x Q x k)-row result so the expensive ADC+rerank subtree
-      // runs once per operating point, not twice; released together with
-      // `codes` right after the caller's action (CacheLifecycle)
-      .persist()
-    graft.CacheLifecycle.releaseAfterNextAction(spark, codes, all)
+    }.reduce(_ unionAll _).localCheckpoint(true))
+    finally graft.Checkpoints.release(codes)
     val matched = all.join(brute, Seq("query_id", "neighbor_id"))
       .groupBy(col("nprobe"), col("rerank"), col("query_id"))
       .agg(count(lit(1)).as("n_matched"))

@@ -220,24 +220,19 @@ object Pq {
     val sweep = Seq(4 * k -> 2, 16 * k -> 5).filter(_._1 < n) :+ (n -> k)
     // ONE encode pass shared by every operating point — the code table is
     // codebook-determined, so re-encoding per width would rescan the corpus
-    // |sweep| times at 100 TB. persist() is LAZY: the first operating
-    // point's scan job materializes the cache in-line (no extra action);
-    // the blocks (9 bytes/vector) back the returned frame and are
-    // reclaimed by the ContextCleaner when it is GC'd — the same lifecycle
-    // as pack_sequences' checkpointed projection.
-    val codes = encode(vecs, book).persist()
-    val pqAll = sweep.map { case (rr, _) =>
+    // |sweep| times at 100 TB. The codes (9 bytes/vector) are checkpointed
+    // and read only here: released once the sweep result is materialized.
+    val codes = encode(vecs, book).localCheckpoint(true)
+    // referenced twice below (hit counts + match join): the tiny
+    // (|sweep| x Q x k)-row result is checkpointed so the expensive
+    // ADC+rerank subtree runs once per operating point, not twice; the
+    // returned plan reads it, so it is tracked
+    val pqAll = try graft.Checkpoints.track(sweep.map { case (rr, _) =>
       pqTopK(spark, dir, numQueries, k, m, ksub, rr,
         trained = Some(book), codes = Some(codes)).toDF()
         .select(lit(rr).as("rerank"), col("query_id"), col("neighbor_id"))
-    }.reduce(_ unionAll _)
-      // referenced twice below (hit counts + match join): cache the tiny
-      // (|sweep| x Q x k)-row result so the expensive ADC+rerank subtree
-      // runs once per operating point, not twice; released together with
-      // `codes` right after the caller's action (CacheLifecycle) instead of
-      // leaking until ContextCleaner GC across repeated sweep runs
-      .persist()
-    graft.CacheLifecycle.releaseAfterNextAction(spark, codes, pqAll)
+    }.reduce(_ unionAll _).localCheckpoint(true))
+    finally graft.Checkpoints.release(codes)
     val matched = pqAll.join(brute, Seq("query_id", "neighbor_id"))
       .groupBy(col("rerank"), col("query_id")).agg(count(lit(1)).as("n_matched"))
     val thr = sweep.tail.foldLeft(when(col("rerank") === sweep.head._1, lit(sweep.head._2))) {

@@ -166,15 +166,24 @@ object Similarity {
     * the recall/speedup trade. At 100 TB the corpus would additionally be
     * *stored* partitioned by list id so probing prunes parquet partitions. */
   def ivfTopK(spark: SparkSession, dir: String, numQueries: Int = 8, k: Int = 10,
-              nlist: Int = 16, nprobe: Int = 4,
-              trained: Option[Array[Array[Float]]] = None): Dataset[Hit] = {
+              nlist: Int = 16, nprobe: Int = 4): Dataset[Hit] = {
     val vecs = vectors(spark, dir)
-    val centroids = trained.getOrElse(trainCentroids(vecs, nlist))
-    val assigned = assignLists(vecs, spark.sparkContext.broadcast(centroids))
-    val probeSets = queryArr(spark, dir, numQueries)
-      .map(q => (q, rankedLists(centroids, q.embedding, nprobe).toSet))
-    TopK.hits(listCandidates(assigned, probeSets, k), k)
+    val centroids = trainCentroids(vecs, nlist)
+    probeLists(assignLists(vecs, spark.sparkContext.broadcast(centroids)), centroids,
+      queryArr(spark, dir, numQueries), k, nprobe)
   }
+
+  /** The IVF probe over a (list, vector) assignment: each query scores only
+    * its `nprobe` nearest lists. */
+  private def probeLists(assigned: Dataset[(Int, Long, Array[Float])],
+                         centroids: Array[Array[Float]], queries: Array[Vec],
+                         k: Int, nprobe: Int): Dataset[Hit] =
+    TopK.hits(listCandidates(assigned, probeSets(centroids, queries, nprobe), k), k)
+
+  /** Each query with its `nprobe` nearest list ids. */
+  private def probeSets(centroids: Array[Array[Float]], queries: Array[Vec],
+                        nprobe: Int): Array[(Vec, Set[Int])] =
+    queries.map(q => (q, rankedLists(centroids, q.embedding, nprobe).toSet))
 
   /** IVF with provable ball-pruning — EXACT top-k (recall 1.0 by
     * construction), not best-effort probing:
@@ -197,12 +206,11 @@ object Similarity {
                    nlist: Int = 16, nprobe: Int = 4): Dataset[Hit] = {
     val vecs = vectors(spark, dir)
     val centroids = trainCentroids(vecs, nlist)
-    // consumed by the radius agg + up to two scan passes
+    // consumed by the radius agg + up to two scan passes, all in this builder
     val (assigned, radius) = assignWithRadii(vecs, centroids)
-    val queries = queryArr(spark, dir, numQueries)
-    val out = exactScanMerge(spark, _ => assigned, centroids, radius, queries, k, nprobe)
-    assigned.unpersist()
-    out
+    try exactScanMerge(spark, _ => assigned, centroids, radius,
+      queryArr(spark, dir, numQueries), k, nprobe)
+    finally graft.Checkpoints.release(assigned)
   }
 
   // ------------------------------------------------------- list geometry
@@ -242,13 +250,14 @@ object Similarity {
     vecs.map(v => (nearestList(bcCent.value, v.embedding), v.vec_id, v.embedding))
   }
 
-  /** [[assignLists]], persisted, plus every list's angular radius — the
-    * one assign + radii step of the exact IVF searches and the stored
-    * index. The caller unpersists. */
+  /** [[assignLists]] as an eager checkpoint, plus every list's angular
+    * radius — the one assign + radii step of the exact IVF searches and
+    * the stored index. The caller tracks or releases the checkpoint
+    * ([[graft.Checkpoints]]). */
   private def assignWithRadii(vecs: Dataset[Vec], centroids: Array[Array[Float]])
   : (Dataset[(Int, Long, Array[Float])], Map[Int, Double]) = {
     val bcCent = vecs.sparkSession.sparkContext.broadcast(centroids)
-    val assigned = assignLists(vecs, bcCent).persist()
+    val assigned = assignLists(vecs, bcCent).localCheckpoint(true)
     (assigned, listRadii(assigned, bcCent, centroids.length))
   }
 
@@ -296,38 +305,38 @@ object Similarity {
   }
 
   /** Shared two-phase exact IVF search over any (list, vector) source —
-    * the in-memory path passes the persisted assignment; the stored-index
-    * path passes a parquet read PRUNED to the requested lists. `scanSource`
-    * may over-deliver rows (the scan re-checks per-query list membership);
-    * each scan ships at most Q × k candidate rows per partition and the
-    * merge stays distributed (groupByKey on Q keys). */
+    * the in-memory path passes the checkpointed assignment; the
+    * stored-index path passes a parquet read PRUNED to the requested lists.
+    * `scanSource` may over-deliver rows (the scan re-checks per-query list
+    * membership); each scan ships at most Q × k candidate rows per
+    * partition and the merge stays distributed (groupByKey on Q keys). The
+    * Q × k result is a tracked checkpoint, so no source outlives the call. */
   private def exactScanMerge(spark: SparkSession,
                              scanSource: Set[Int] => Dataset[(Int, Long, Array[Float])],
                              centroids: Array[Array[Float]],
                              radius: Map[Int, Double],
                              queries: Array[Vec], k: Int, nprobe: Int): Dataset[Hit] = {
-    val probeSets: Array[(Vec, Set[Int])] =
-      queries.map(q => (q, rankedLists(centroids, q.embedding, nprobe).toSet))
+    val probed = probeSets(centroids, queries, nprobe)
     def scan(listsPerQuery: Array[(Vec, Set[Int])]): Dataset[TopK.Cand] =
       listCandidates(scanSource(listsPerQuery.iterator.flatMap(_._2).toSet), listsPerQuery, k)
-    val phase1 = scan(probeSets).persist()
-    val tau = TopK.kthBest(phase1, k)
-    val survivors: Array[(Vec, Set[Int])] = probeSets.map { case (q, probed) =>
-      val t = tau.getOrElse(q.vec_id, Double.NegativeInfinity)
-      val extra = centroids.indices.filter { l =>
-        !probed.contains(l) && radius.get(l).exists(r => ballBound(q.embedding, centroids(l), r) >= t)
-      }.toSet
-      (q, extra)
-    }
-    val needPhase2 = survivors.filter(_._2.nonEmpty)
-    // probe lists and survivor lists are disjoint per query, and within one
-    // scan each vector lives in exactly one partition's heap, so no (q, id)
-    // candidate repeats — the union is duplicate-free by construction
-    val all = if (needPhase2.nonEmpty) phase1.union(scan(needPhase2)) else phase1
-    val out = TopK.hits(all, k).persist()
-    out.count() // materialize (Q × k rows) so the intermediates can be freed
-    phase1.unpersist()
-    out
+    val phase1 = scan(probed).persist()
+    try {
+      val tau = TopK.kthBest(phase1, k)
+      val survivors: Array[(Vec, Set[Int])] = probed.map { case (q, lists) =>
+        val t = tau.getOrElse(q.vec_id, Double.NegativeInfinity)
+        val extra = centroids.indices.filter { l =>
+          !lists.contains(l) && radius.get(l).exists(r => ballBound(q.embedding, centroids(l), r) >= t)
+        }.toSet
+        (q, extra)
+      }
+      val needPhase2 = survivors.filter(_._2.nonEmpty)
+      // probe lists and survivor lists are disjoint per query, and within
+      // one scan each vector lives in exactly one partition's heap, so no
+      // (q, id) candidate repeats — the union is duplicate-free by
+      // construction
+      val all = if (needPhase2.nonEmpty) phase1.union(scan(needPhase2)) else phase1
+      graft.Checkpoints.track(TopK.hits(all, k).localCheckpoint(true))
+    } finally phase1.unpersist()
   }
 
   // ------------------------------------------------ stored IVF index
@@ -362,9 +371,9 @@ object Similarity {
   private def writeLists(vecs: Dataset[Vec], centroids: Array[Array[Float]],
                          mode: String, path: String): Map[Int, Double] = {
     val (assigned, radius) = assignWithRadii(vecs, centroids)
-    assigned.toDF("list_id", "vec_id", "embedding")
+    try assigned.toDF("list_id", "vec_id", "embedding")
       .write.mode(mode).partitionBy("list_id").parquet(path)
-    assigned.unpersist()
+    finally graft.Checkpoints.release(assigned)
     radius
   }
 
@@ -576,11 +585,16 @@ object Similarity {
     val centroids = trainCentroids(vecs, nlist)
     val brute = bruteForceTopK(spark, dir, numQueries, k).toDF()
       .select(col("query_id"), col("neighbor_id"))
+    // ONE corpus assignment shared by every sweep point (the
+    // Pq.pqRecallSweep encode): the returned plan reads it, so it is tracked
+    val assigned = graft.Checkpoints.track(
+      assignLists(vecs, spark.sparkContext.broadcast(centroids)).localCheckpoint(true))
+    val queries = queryArr(spark, dir, numQueries)
     // (nprobe, min matched-out-of-k for recall_ok); drop intermediate probe
     // widths that collide with nlist so no sweep row duplicates
     val sweep = Seq(4 -> 1, 8 -> 3).filter(_._1 < nlist) :+ (nlist -> k)
     val ivfAll = sweep.map { case (np, _) =>
-      ivfTopK(spark, dir, numQueries, k, nlist, np, trained = Some(centroids)).toDF()
+      probeLists(assigned, centroids, queries, k, np).toDF()
         .select(lit(np).as("nprobe"), col("query_id"), col("neighbor_id"))
     }.reduce(_ unionAll _)
     val matched = ivfAll.join(brute, Seq("query_id", "neighbor_id"))
@@ -668,6 +682,8 @@ object Similarity {
     val vecs = vectors(spark, dir)
     val queries = queryArr(spark, dir, numQueries)
     val bcQ = spark.sparkContext.broadcast(queries)
+    // three caches, each read more than once below and all dropped once
+    // the Q × k result is checkpointed
     val idx = sq8Index(vecs).persist()
 
     // one dequantize per row, then per-query scoring of the dequantized form
@@ -682,30 +698,29 @@ object Similarity {
     // phase 1: approx top-k, exact-reranked → τ per query
     val phase1 = TopK.ranked(approxTopK, k)((q, id, _, _) => (q, id)).persist()
     val p1Exact = TopK.exactScores(phase1, vecs, bcQ).persist()
-    val bcTau = spark.sparkContext.broadcast(TopK.kthBest(p1Exact, k))
-    val p1Ids: Map[Long, Set[Long]] = phase1.collect()
-      .groupBy(_._1).map { case (q, xs) => q -> xs.map(_._2).toSet }
-    val bcP1 = spark.sparkContext.broadcast(p1Ids)
+    try {
+      val bcTau = spark.sparkContext.broadcast(TopK.kthBest(p1Exact, k))
+      val p1Ids: Map[Long, Set[Long]] = phase1.collect()
+        .groupBy(_._1).map { case (q, xs) => q -> xs.map(_._2).toSet }
+      val bcP1 = spark.sparkContext.broadcast(p1Ids)
 
-    // phase 2: every vector whose error ball reaches τ and wasn't reranked
-    val survivors = idx.flatMap { sv =>
-      val qs = bcQ.value
-      val d = sv.q.length
-      val deq = dequantize(sv)
-      val nrm = norm(deq)
-      val bound = if (sv.scale == 0.0 || nrm == 0.0) 0.0
-        else math.sqrt(d.toDouble) * sv.scale / nrm + 1e-6
-      qs.iterator.filter { q =>
-        sv.vec_id != q.vec_id &&
-          !bcP1.value.getOrElse(q.vec_id, Set.empty).contains(sv.vec_id) &&
-          cosine(q.embedding, deq) + bound >= bcTau.value.getOrElse(q.vec_id, Double.NegativeInfinity)
-      }.map(q => (q.vec_id, sv.vec_id))
-    }
-    val all = p1Exact.union(TopK.exactScores(survivors, vecs, bcQ))
-    val out = TopK.hits(all, k).persist()
-    out.count() // materialize before releasing the intermediates
-    phase1.unpersist(); p1Exact.unpersist(); idx.unpersist()
-    out
+      // phase 2: every vector whose error ball reaches τ and wasn't reranked
+      val survivors = idx.flatMap { sv =>
+        val qs = bcQ.value
+        val d = sv.q.length
+        val deq = dequantize(sv)
+        val nrm = norm(deq)
+        val bound = if (sv.scale == 0.0 || nrm == 0.0) 0.0
+          else math.sqrt(d.toDouble) * sv.scale / nrm + 1e-6
+        qs.iterator.filter { q =>
+          sv.vec_id != q.vec_id &&
+            !bcP1.value.getOrElse(q.vec_id, Set.empty).contains(sv.vec_id) &&
+            cosine(q.embedding, deq) + bound >= bcTau.value.getOrElse(q.vec_id, Double.NegativeInfinity)
+        }.map(q => (q.vec_id, sv.vec_id))
+      }
+      val all = p1Exact.union(TopK.exactScores(survivors, vecs, bcQ))
+      graft.Checkpoints.track(TopK.hits(all, k).localCheckpoint(true))
+    } finally { phase1.unpersist(); p1Exact.unpersist(); idx.unpersist() }
   }
 
   private def dequantize(sv: SqVec): Array[Float] = {
@@ -1183,13 +1198,10 @@ object Similarity {
     import spark.implicits._
     val vecs = vectors(spark, dir)
     val centroids = trainCentroids(vecs, nlist)
+    // the returned frame scans the assignment checkpoint after this builder
+    // returns: tracked, released once the query completes
     val (assigned, radius) = assignWithRadii(vecs, centroids)
-    // the returned frame scans the assignment after this builder returns:
-    // hold it as an eager checkpoint, released through the Checkpoints
-    // ledger once the query completes, instead of a cache that would be
-    // dropped here and recomputed from the embeddings scan
-    val held = graft.Checkpoints.track(assigned.toDF().localCheckpoint(true))
-    assigned.unpersist()
+    graft.Checkpoints.track(assigned)
     val queries = queryArr(spark, dir, numQueries)
     // driver-side: per query, the lists the ball bound cannot exclude
     val admitted: Array[(Vec, Set[Int])] = queries.map { q =>
@@ -1199,7 +1211,7 @@ object Similarity {
       (q, lists)
     }
     val bcQ = spark.sparkContext.broadcast(admitted)
-    held.as[(Int, Long, Array[Float])].mapPartitions { it =>
+    assigned.mapPartitions { it =>
       val qs = bcQ.value
       it.flatMap { case (list, id, e) =>
         qs.iterator.flatMap { case (q, lists) =>

@@ -281,17 +281,18 @@ object TextAnalysis {
   def lmQuality(spark: SparkSession, dir: String): DataFrame = {
     // the tokenized corpus feeds FOUR consumers (bigram stream for counting,
     // bigram stream for scoring, vocab, final doc list) and Spark never
-    // dedups common subplans — without the lazy persist this query would
+    // dedups common subplans — without the checkpoint this query would
     // scan the documents parquet five times (the pack_sequences defect
-    // class). Released right after the caller's action (CacheLifecycle).
-    val docs = Tables.documents(spark, dir)
+    // class). The returned plan reads it: tracked (see Checkpoints).
+    val docs = graft.Checkpoints.track(Tables.documents(spark, dir)
       .select(col("doc_id"), tokensCol(lower(col("text"))).as("t"))
-      .persist()
+      .localCheckpoint(true))
     val bi = docs.select(col("doc_id"), explode(pairsCol(col("t"), 1)).as("b"))
       .select(col("doc_id"), col("b.a").as("w1"), col("b.b").as("w2"))
     // vocab²-bounded (≪ corpus) and referenced by both c1 and the scoring
-    // join — the ideal cache candidate
-    val c2 = bi.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2")).persist()
+    // join: computed once, tracked like `docs`
+    val c2 = graft.Checkpoints.track(
+      bi.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2")).localCheckpoint(true))
     val c1 = c2.groupBy(col("w1")).agg(sum(col("c2")).as("c1"))
     val vocab = docs.select(explode(col("t")).as("w"))
       .agg(countDistinct(col("w")).as("v"))
@@ -303,16 +304,8 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_bigrams"),
         round(avg(-log((col("c2") + lit(1.0)) / (col("c1") + col("v")))), 6)
           .as("lm_score"))
-    // Fully lazy, like every other query constructor: the caller's action
-    // materializes both caches in-line (a lazy persist dedups the subtree
-    // within that one action), and the one-shot listener releases them the
-    // moment the action completes — holding the tokenized corpus past the
-    // computation is a leak that taxes every later query's memory
-    // (measured: the neighboring bench queries slowed 0.1 → 0.8 s).
-    val out = docs.select(col("doc_id"), size(col("t")).cast("bigint").as("n_tokens"))
+    docs.select(col("doc_id"), size(col("t")).cast("bigint").as("n_tokens"))
       .join(scored, Seq("doc_id"), "left")
-    graft.CacheLifecycle.releaseAfterNextAction(spark, docs, c2)
-    out
   }
 
   /** C4-style WORDLIST FILTER (Raffel et al., "Exploring the Limits of
@@ -455,10 +448,10 @@ object TextAnalysis {
     val tfCols = terms.zipWithIndex.map { case (t, i) =>
       size(filter(col("tk"), x => x === t)).cast("bigint").as(s"tf$i")
     }
-    val base = Tables.documents(spark, dir)
+    val base = graft.Checkpoints.track(Tables.documents(spark, dir)
       .select(col("doc_id"), tokensCol(lower(col("text"))).as("tk"))
       .select(col("doc_id") +: size(col("tk")).cast("bigint").as("len") +: tfCols: _*)
-      .localCheckpoint(true)
+      .localCheckpoint(true))
     val aggs = count(lit(1)).cast("bigint").as("n_docs") +:
       sum(col("len")).as("tot_len") +:
       terms.indices.map(i => count(when(col(s"tf$i") > 0, 1)).cast("bigint").as(s"df$i"))
@@ -560,14 +553,14 @@ object TextAnalysis {
       .head()
     val cands = sketch.keys.toSeq.sorted
     val other = " other" // leading space: collides with no letter-only token
-    // localCheckpoint: `counts` (≤ capacity+1 rows) feeds both the total
-    // and the output — without it both consumers re-plan the corpus scan
-    // + tokenize (the evGapFill lesson), making pass 2 cost double
-    val counts = toks
+    // checkpoint: `counts` (≤ capacity+1 rows) feeds both the total and
+    // the output — without it both consumers re-plan the corpus scan +
+    // tokenize (the evGapFill lesson), making pass 2 cost double
+    val counts = graft.Checkpoints.track(toks
       .groupBy(when(col("word").isInCollection(cands), col("word"))
         .otherwise(lit(other)).as("word"))
       .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .localCheckpoint(true))
     val total = counts.agg(sum(col("cnt")).as("n_total"))
     counts.crossJoin(broadcast(total))
       .filter(col("word") =!= other && col("cnt") * denom >= col("n_total"))

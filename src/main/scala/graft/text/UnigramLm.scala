@@ -49,13 +49,19 @@ object UnigramLm {
 
   final case class Piece(piece: String, count: Long, logp: Double)
 
-  /** Distinct corpus words with counts — the ONE corpus scan, checkpointed
-    * (vocabulary-sized by Zipf; every EM pass reads this, never parquet). */
+  /** Distinct corpus words with counts — the ONE corpus scan, which the
+    * trainers checkpoint (vocabulary-sized by Zipf; every EM pass reads
+    * it, never parquet) and release once the model is fit. */
   def wordCounts(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(explode(TextAnalysis.tokensCol(lower(col("text")))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+
+  /** `fit` over the checkpointed [[wordCounts]], released afterwards. */
+  private def overWords[T](spark: SparkSession, dir: String)(fit: DataFrame => T): T = {
+    val words = wordCounts(spark, dir).localCheckpoint(true)
+    try fit(words) finally graft.Checkpoints.release(words)
+  }
 
   /** Viterbi segmentation of `word` under piece log-probs; `fallback` is
     * the out-of-vocab single-char penalty (set below every real logp so a
@@ -166,11 +172,10 @@ object UnigramLm {
             seedSize: Int = 512, maxPieceLen: Int = 6, emIters: Int = 2): Seq[Piece] =
     graft.sources.ArtifactCache.memo(
       s"uni:$vocabSize:$seedSize:$maxPieceLen:$emIters:${graft.sources.ArtifactCache.fixtureKey(dir)}")(
-      trainNow(spark, dir, vocabSize, seedSize, maxPieceLen, emIters))
+      overWords(spark, dir)(trainOn(_, vocabSize, seedSize, maxPieceLen, emIters)))
 
-  private def trainNow(spark: SparkSession, dir: String, vocabSize: Int,
-                       seedSize: Int, maxPieceLen: Int, emIters: Int): Seq[Piece] = {
-    val words = wordCounts(spark, dir)
+  private def trainOn(words: DataFrame, vocabSize: Int, seedSize: Int,
+                      maxPieceLen: Int, emIters: Int): Seq[Piece] = {
     val seeded = seed(words, seedSize, maxPieceLen)
     var model = toModel(seeded)
     for (_ <- 1 to emIters)
@@ -308,7 +313,7 @@ object UnigramLm {
                 seedSize: Int = 512, maxPieceLen: Int = 6, emIters: Int = 2): Seq[Piece] =
     graft.sources.ArtifactCache.memo(
       s"unisoft:$vocabSize:$seedSize:$maxPieceLen:$emIters:${graft.sources.ArtifactCache.fixtureKey(dir)}")(
-      trainSoftOn(wordCounts(spark, dir), vocabSize, seedSize, maxPieceLen, emIters))
+      overWords(spark, dir)(trainSoftOn(_, vocabSize, seedSize, maxPieceLen, emIters)))
 
   /** [[trainSoft]] over an explicit (word, count) frame. */
   private def trainSoftOn(words: DataFrame, vocabSize: Int, seedSize: Int,

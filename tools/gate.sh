@@ -7,9 +7,17 @@ cd "$(dirname "$0")/.."
 sbt -batch compile
 sbt -batch test
 OUT=$(mktemp -d /tmp/gate_verify.XXXXXX)
-trap 'rm -rf "$OUT"' EXIT
-sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $OUT" > /dev/null
+LOG=$(mktemp /tmp/gate_verify_log.XXXXXX)
+trap 'rm -rf "$OUT" "$LOG"' EXIT
+sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $OUT" > "$LOG" 2>&1
 python3 tools/check.py /root/testdata/sf0.01 "$OUT"
+# Leak check: Verify names every query that still holds a persisted RDD
+# after the between-queries checkpoint drain (see graft.Checkpoints).
+if grep -E '\[verify\] .* left [0-9]+ persisted RDDs' "$LOG"; then
+  echo "[gate] leak check failed: a query left persisted RDDs behind" >&2
+  exit 1
+fi
+echo "[gate] leak check ok"
 # Full-set local-cluster smoke: every registered query once across REAL
 # executor child JVMs (local-cluster[2,2,2048]) — catches closure-capture /
 # classpath / codegen-visibility bugs that local[32] structurally cannot
