@@ -90,34 +90,21 @@ object Tables {
   private val SmallBytes: Long = 64L << 20
 
   /** Spread a CPU-HEAVY narrow pipeline across the session's cores when its
-    * input relation is tiny: the driver fixtures are single sub-MB parquet
+    * input relation is small: the driver fixtures are single sub-MB parquet
     * files, so every scan is ONE split and per-row-expensive operators
     * (MinHash/shingle hashing, tokenize+explode fan-out, PNG/WAV decode,
-    * URL canonicalization) ran single-threaded — measured 6-15 s
-    * single-task stages at sf0.1 (r13 StageTimeProbe).
+    * URL canonicalization) run single-threaded.
     *
-    * Scale-adaptive: the repartition fires only below [[SmallBytes]] of
-    * estimated input (plan stats ≈ file bytes), where the added exchange
-    * moves a provably trivial volume; at real scale the scan already
-    * yields ≥ cores splits and this is a no-op. Hash-keyed (deterministic
-    * under retry — the chaos-gate contract), never round-robin.
-    *
-    * `bytesPerTask` scales the TARGET partition count with the estimated
-    * input instead of always using the session's core count (r13 verdict:
-    * always-cores over-partitioned sub-MB frames — `sample_dsir` and
-    * `text_window_cooc` measured FASTER at 8 cores than 32, scheduling +
-    * exchange overhead exceeding the win). The caller picks it from the
-    * known per-row cost of the consumer: per-row DECODE (ImageIO/WAV) and
-    * fused MinHash want every core even on tiny bytes (≈8-16 KB/task);
-    * tokenize/explode pipelines saturate around 64 KB/task. */
-  def spreadSmall(df: DataFrame, key: Column, bytesPerTask: Long = 64L << 10): DataFrame = {
+    * One rule, from what the code can observe: a frame whose estimate
+    * ([[sizeOf]]) is at most [[SmallBytes]] is hash-repartitioned on `key`
+    * into `defaultParallelism` partitions; a larger frame, whose scan
+    * already yields one split per file block, or a 1-core context, is
+    * returned as is. Hash-keyed (deterministic under retry — the
+    * chaos-gate contract), never round-robin. Each call site keeps its
+    * spread only on a measured win at this host's core count. */
+  def spreadSmall(df: DataFrame, key: Column): DataFrame = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
-    val bytes = sizeOf(df)
-    if (bytes <= SmallBytes && cores > 1) {
-      val target = (bytes + bytesPerTask - 1) / bytesPerTask
-      val p = target.min(BigInt(cores)).max(BigInt(1)).toInt
-      if (p > 1) df.repartition(p, key) else df
-    } else df
+    if (cores > 1 && sizeOf(df) <= SmallBytes) df.repartition(cores, key) else df
   }
 
   /** Estimated size of `df` in bytes, from its optimized plan's statistics
@@ -126,18 +113,15 @@ object Tables {
   def sizeOf(df: DataFrame): BigInt = df.queryExecution.optimizedPlan.stats.sizeInBytes
 
   /** Eager materialization of a derived (projected) frame that several
-    * consumers re-derive, usually over a [[spreadSmall]] input: at most
-    * [[SmallBytes]] the projection is computed ONCE and checkpointed
-    * (released at the harness's between-queries drain via
-    * [[graft.Checkpoints]]); above it the frame is returned as-is — the
+    * consumers re-derive: at most [[SmallBytes]] the projection is computed
+    * ONCE and checkpointed (released at the harness's between-queries drain
+    * via [[graft.Checkpoints]]); above it the frame is returned as is — the
     * consumers' re-derivation is the at-scale shape (a corpus-sized pinned
     * block set would be worse than recompute). The checkpoint leaf is also
-    * an optimizer barrier: without it, filters INFERRED from a downstream
-    * explode (size > 0, isnotnull) re-expand the projection's expensive
-    * expressions below the spread exchange and the whole derivation runs
-    * 2-3× per row on the single scan split — the r13 StageTimeProbe
-    * measured 3-4.4 s single-task tokenize stages per consumer at sf0.1
-    * from exactly that. */
+    * an optimizer barrier: filters inferred from a downstream explode
+    * (size > 0, isnotnull) cannot re-expand the projection's expensive
+    * expressions below it. Like [[spreadSmall]], each call site keeps it
+    * only on a measured win. */
   def materializeSmall(df: DataFrame): DataFrame =
     if (sizeOf(df) <= SmallBytes) graft.Checkpoints.track(df.localCheckpoint(true))
     else df

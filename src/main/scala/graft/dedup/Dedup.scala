@@ -133,13 +133,14 @@ object Dedup {
   def containment(spark: SparkSession, dir: String, threshold: Double = 0.5,
                   w: Int = 5): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
-    // shingle-hash ONCE, in parallel (r14): this
-    // frame has THREE consumers (the gram explode and both verify-join
-    // sides) and each re-derived the fused tokenize+shingle chain from the
-    // single scan split. No-op at scale (Tables.materializeSmall).
+    // shingle-hash ONCE: this frame has THREE consumers (the gram explode
+    // and both verify-join sides), each of which re-derived the fused
+    // tokenize+shingle chain; no-op at scale (Tables.materializeSmall).
+    // Measured at sf0.1, local[4], median of 28: 1062-1115 ms checkpointed
+    // vs 1378-1521 ms re-derived; a spread of the scan below it won nothing
+    // (860 vs 829 ms without).
     val docs = Tables.materializeSmall(
-      Tables.spreadSmall(Tables.documents(spark, dir), col("doc_id"),
-          bytesPerTask = 16L << 10)
+      Tables.documents(spark, dir)
         .select(col("doc_id"),
           graft.functions.TextHash.shingleHashesCol(
             TextAnalysis.tokensCol(lower(col("text"))), w).as("gs"))
@@ -233,10 +234,10 @@ object Dedup {
   def signaturesDF(spark: SparkSession, dir: String): DataFrame =
     // spreadSmall: the fused tokenizer+MinHash is the expensive per-row op
     // here, and the single-file fixture scan is ONE split — without the
-    // spread the whole corpus signed on one core (a 6-10 s single-task
-    // stage at sf0.1); no-op at scale (see Tables.spreadSmall)
-    Tables.spreadSmall(Tables.documents(spark, dir), col("doc_id"),
-        bytesPerTask = 8L << 10).select( // MinHash-heavy rows: want cores
+    // spread the whole corpus signs on one core (sf0.1, local[4], median
+    // of 14: dedup_dropped_buckets 334 ms spread vs 382 ms unspread,
+    // dedup_minhash_lsh 535 vs 551 ms); no-op at scale
+    Tables.spreadSmall(Tables.documents(spark, dir), col("doc_id")).select(
       col("doc_id"),
       graft.functions.MinHash.minhashTokensCol(
         TextAnalysis.tokensCol(lower(col("text")))).as("sig"))
@@ -727,11 +728,12 @@ object Dedup {
     * fraction of the eval doc (exact IEEE division of exact integers). */
   def decontamOverlap(spark: SparkSession, dir: String, w: Int = 5,
                       evalMod: Long = 50, minShared: Int = 1): DataFrame = {
-    // shingle-hash once, in parallel (r14): the train explode and the eval
-    // side re-derived the fused chain from the one scan split
+    // shingle-hash once, in parallel: the train explode and the eval side
+    // re-derived the fused chain from the one scan split (sf0.1, local[4],
+    // median of 14: 244 ms as is, 328 ms without the spread, 529 ms
+    // without both)
     val sh = Tables.materializeSmall(
-      Tables.spreadSmall(Tables.documents(spark, dir), col("doc_id"),
-          bytesPerTask = 16L << 10)
+      Tables.spreadSmall(Tables.documents(spark, dir), col("doc_id"))
         .select(col("doc_id"),
           graft.functions.TextHash.shingleHashesCol(
             TextAnalysis.tokensCol(lower(col("text"))), w).as("sh")))
@@ -873,11 +875,12 @@ object Dedup {
   def spanExtents(spark: SparkSession, dir: String, w: Int = 5): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
     // spread: positional shingle hashing is the per-row cost and both
-    // occurrence derivations ran it on the one scan split (r14); the
+    // occurrence derivations ran it on the one scan split (sf0.1,
+    // local[4], median of 14: dedup_span_extents 362 ms spread vs 782 ms
+    // unspread, dedup_span_clean 599 vs 795 ms); the
     // derive-twice-instead-of-cache choice itself is documented above and
     // unchanged. No-op at scale.
-    def occurrences = Tables.spreadSmall(Tables.documents(spark, dir),
-        col("doc_id"), bytesPerTask = 16L << 10)
+    def occurrences = Tables.spreadSmall(Tables.documents(spark, dir), col("doc_id"))
       .select(col("doc_id"),
         TextAnalysis.tokensCol(lower(col("text"))).as("t"))
       .select(col("doc_id"), size(col("t")).cast("bigint").as("n_tokens"),
@@ -981,14 +984,14 @@ object Dedup {
                          evalMod: Long = 50, minShared: Int = 1,
                          fpp: Double = 1e-4): DataFrame = {
     import spark.implicits._
-    // shingle-hash once, in parallel (r14): the bloom-build side and the
-    // train probe side re-derived the fused chain from the one scan split
-    val sh = Tables.materializeSmall(
-      Tables.spreadSmall(Tables.documents(spark, dir), col("doc_id"),
-          bytesPerTask = 16L << 10)
-        .select(col("doc_id"),
-          graft.functions.TextHash.shingleHashesCol(
-            TextAnalysis.tokensCol(lower(col("text"))), w).as("sh")))
+    // the bloom-build side and the train probe side each derive the fused
+    // shingle chain: neither a spread of the scan nor a checkpoint of the
+    // chain won (sf0.1, local[4], median of 28: 443-456 ms checkpointed vs
+    // 432-454 ms re-derived)
+    val sh = Tables.documents(spark, dir)
+      .select(col("doc_id"),
+        graft.functions.TextHash.shingleHashesCol(
+          TextAnalysis.tokensCol(lower(col("text"))), w).as("sh"))
     // persisted across its TWO actions (sizing count + filter build) so the
     // eval split's scan + shingle pipeline runs once, not twice
     val evalGrams = sh.filter(col("doc_id") % evalMod === 0)
@@ -1171,9 +1174,10 @@ object Dedup {
     // per-row op, and this frame feeds BOTH the group aggregate and the
     // join-back side — the unmaterialized form re-ran it twice on the
     // single scan split. No-op at scale (Tables.materializeSmall).
+    // Without the spread and the checkpoint, pipeline_crawl at sf0.01,
+    // local[4] rose from 1.28-1.48 s to 1.71-1.96 s a run.
     val canon = Tables.materializeSmall(
-      Tables.spreadSmall(graft.Fixtures.urlDocs(spark, dir), col("doc_id"),
-          bytesPerTask = 8L << 10) // regex-chain-heavy rows: want cores
+      Tables.spreadSmall(graft.Fixtures.urlDocs(spark, dir), col("doc_id"))
         .select(col("doc_id"), canonicalUrl(col("url")).as("canon_url")))
     val groups = canon.groupBy(col("canon_url"))
       .agg(min(col("doc_id")).as("canonical_id"), count(lit(1)).as("group_size"))

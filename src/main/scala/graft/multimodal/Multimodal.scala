@@ -199,15 +199,10 @@ object Multimodal {
   /** Derive a deterministic fake media table from `documents`: the UTF-8 text
     * bytes stand in for an encoded payload; metadata derives from doc fields. */
   def mediaTable(spark: SparkSession, dir: String): Dataset[Media] =
-    // spreadSmall: every consumer runs a per-row DECODE (ImageIO/WAV/codec
-    // work) and the single-file fixture scan is one split — spread the
-    // (tiny) corpus so the decode pass uses the whole session; no-op at
-    // scale (see Tables.spreadSmall). Batch path only: the streaming twin
-    // calls mediaProjection directly and keeps its source partitioning.
-    // bytesPerTask 8 KB: per-row codec work is orders of magnitude above
-    // the bytes, so even a sub-MB corpus wants every core (r14 scaling fix)
-    mediaProjection(Tables.spreadSmall(Tables.documents(spark, dir), col("doc_id"),
-      bytesPerTask = 8L << 10))
+    // no spread: a spread of the scan measured slower in all five
+    // consumers (sf0.1, local[4], median of 14: mm_features 155 vs 96 ms
+    // unspread, mm_summary 156 vs 117 ms)
+    mediaProjection(Tables.documents(spark, dir))
 
   /** The documents→media projection on any frame with the documents schema —
     * including a `readStream` source: every step is a stateless column
@@ -384,12 +379,10 @@ object Multimodal {
     * text-bytes stand-in. */
   def imageTable(spark: SparkSession, dir: String): Dataset[Media] =
     // spreadSmall: PNG encode+decode fuse into this pipeline's one task
-    // per split — spread the tiny single-file fixture scan (see
-    // Tables.spreadSmall; batch path only, the streaming twin calls
-    // imageProjection directly)
-    // bytesPerTask 8 KB: codec-heavy rows (see mediaTable)
-    imageProjection(Tables.spreadSmall(Tables.documents(spark, dir), col("doc_id"),
-      bytesPerTask = 8L << 10))
+    // per split — spread the tiny single-file fixture scan (sf0.1,
+    // local[4], median of 14: 250 ms spread vs 451 ms unspread; batch path
+    // only, the streaming twin calls imageProjection directly)
+    imageProjection(Tables.spreadSmall(Tables.documents(spark, dir), col("doc_id")))
 
   /** [[imageTable]] over any documents-shaped frame — including a
     * `readStream` source: the PNG encode is a stateless per-row map, so
@@ -531,10 +524,9 @@ object Multimodal {
     import docs.sparkSession.implicits._
     // spreadSmall: PNG ENCODE happens right here in the flatMap and the
     // real decode immediately downstream — single-split input serialized
-    // the whole codec pass onto one core (4.4 s single-task checkpoint
-    // stage at sf0.1, r13 StageTimeProbe); no-op at scale
-    Tables.spreadSmall(docs.select(col("doc_id")), col("doc_id"),
-        bytesPerTask = 1L << 10).as[Long].flatMap { id =>
+    // the whole codec pass onto one core (sf0.1, local[4], median of 14:
+    // 475 ms spread vs 791 ms unspread); no-op at scale
+    Tables.spreadSmall(docs.select(col("doc_id")), col("doc_id")).as[Long].flatMap { id =>
       val w = 4 + (id % 13).toInt
       val h = 4 + (id % 11).toInt
       val base = Media(id, "image", phashPng(id, 0), w, h, 0L)

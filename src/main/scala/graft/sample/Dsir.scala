@@ -66,7 +66,8 @@ object Dsir {
     // aggregate over ~2 grams per token, not the pair build — with the
     // pairs codegen'd, this stage still measured 560-670 ms on the one
     // scan split vs 240-370 ms spread (sf0.1, local[4], median of 5);
-    // no-op at scale (Tables.spreadSmall)
+    // sample_dsir at sf0.01: 279 ms spread vs 306 ms unspread (median of
+    // 28). No-op at scale (Tables.spreadSmall)
     Tables.spreadSmall(Tables.documents(spark, dir), col("doc_id"))
       .select(col("doc_id"), col("lang"), TextAnalysis.tokensCol(col("text")).as("tk"))
       .select(col("doc_id"), col("lang"), explode(gramsCol(col("tk"))).as("g"))

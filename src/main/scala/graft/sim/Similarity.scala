@@ -161,6 +161,16 @@ object Similarity {
     centroids
   }
 
+  /** [[trainCentroids]] over the fixture's whole corpus `vecs`: the coarse
+    * codebook is INGEST, trained once per (nlist, fixture state) like the
+    * Pq/IvfPq/BPE/unigram trainers (ArtifactCache contract), so a query
+    * times its assign + probe, not five corpus passes of Lloyd. */
+  private def corpusCentroids(vecs: Dataset[Vec], dir: String,
+                              nlist: Int): Array[Array[Float]] =
+    graft.sources.ArtifactCache.memo(
+      s"ivfbook:$nlist:${graft.sources.ArtifactCache.fixtureKey(dir)}")(
+      trainCentroids(vecs, nlist))
+
   /** IVF (inverted-file) ANN with a trained k-means codebook: corpus assigned
     * to its nearest centroid, queries probe only the nprobe nearest lists —
     * the recall/speedup trade. At 100 TB the corpus would additionally be
@@ -168,7 +178,7 @@ object Similarity {
   def ivfTopK(spark: SparkSession, dir: String, numQueries: Int = 8, k: Int = 10,
               nlist: Int = 16, nprobe: Int = 4): Dataset[Hit] = {
     val vecs = vectors(spark, dir)
-    val centroids = trainCentroids(vecs, nlist)
+    val centroids = corpusCentroids(vecs, dir, nlist)
     probeLists(assignLists(vecs, spark.sparkContext.broadcast(centroids)), centroids,
       queryArr(spark, dir, numQueries), k, nprobe)
   }
@@ -205,7 +215,7 @@ object Similarity {
   def ivfTopKExact(spark: SparkSession, dir: String, numQueries: Int = 8, k: Int = 10,
                    nlist: Int = 16, nprobe: Int = 4): Dataset[Hit] = {
     val vecs = vectors(spark, dir)
-    val centroids = trainCentroids(vecs, nlist)
+    val centroids = corpusCentroids(vecs, dir, nlist)
     // consumed by the radius agg + up to two scan passes, all in this builder
     val (assigned, radius) = assignWithRadii(vecs, centroids)
     try exactScanMerge(spark, _ => assigned, centroids, radius,
@@ -582,7 +592,7 @@ object Similarity {
   def ivfRecallSweep(spark: SparkSession, dir: String, numQueries: Int = 8,
                      k: Int = 10, nlist: Int = 16): DataFrame = {
     val vecs = vectors(spark, dir)
-    val centroids = trainCentroids(vecs, nlist)
+    val centroids = corpusCentroids(vecs, dir, nlist)
     val brute = bruteForceTopK(spark, dir, numQueries, k).toDF()
       .select(col("query_id"), col("neighbor_id"))
     // ONE corpus assignment shared by every sweep point (the
@@ -1197,7 +1207,7 @@ object Similarity {
                    tau: Double = 0.3, nlist: Int = 16): DataFrame = {
     import spark.implicits._
     val vecs = vectors(spark, dir)
-    val centroids = trainCentroids(vecs, nlist)
+    val centroids = corpusCentroids(vecs, dir, nlist)
     // the returned frame scans the assignment checkpoint after this builder
     // returns: tracked, released once the query completes
     val (assigned, radius) = assignWithRadii(vecs, centroids)

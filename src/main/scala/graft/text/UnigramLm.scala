@@ -263,8 +263,7 @@ object UnigramLm {
           val micro = math.rint(expCnt * cnt * Micro).toLong
           if (micro > 0L) {
             val piece = word.substring(s, e)
-            val prev = out.get(piece)
-            out.put(piece, (if (prev == null) 0L else prev.longValue) + micro)
+            out.put(piece, out.getOrDefault(piece, 0L) + micro)
           }
         }
         e += 1

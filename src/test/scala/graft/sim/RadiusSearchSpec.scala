@@ -45,4 +45,23 @@ class RadiusSearchSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(df.count() > 0)
     } finally graft.Checkpoints.releaseTracked()
   }
+
+  // the coarse codebook is ingest (ArtifactCache): a repeated search skips
+  // the seed collect and the 4 Lloyd treeAggregates, each a corpus scan —
+  // same FS-statistics measurement as LmQualitySpec
+  test("a second sim_radius_search call reads at least 4 corpus scans fewer than the first") {
+    def fileBytesRead: Long =
+      org.apache.hadoop.fs.GlobalStorageStatistics.INSTANCE.get("file").getLong("bytesRead")
+    def bytesOf(f: => Unit): Long = { val b0 = fileBytesRead; f; fileBytesRead - b0 }
+    def search(): Unit =
+      try Similarity.radiusSearch(spark, sf, 8, 0.3, 16).collect()
+      finally graft.Checkpoints.releaseTracked()
+    val oneScan = bytesOf(Similarity.vectors(spark, sf).rdd.count())
+    assert(oneScan > 0L)
+    graft.sources.ArtifactCache.clear()
+    val first = bytesOf(search())
+    val second = bytesOf(search())
+    assert(first - second >= 4 * oneScan,
+      s"first call read $first bytes, second $second, one corpus scan $oneScan")
+  }
 }
