@@ -8,8 +8,9 @@ import org.apache.spark.sql.execution.LogicalRDD
   * and one rule decides when its blocks go:
   *
   *  - the plan the builder RETURNS reads it: [[track]] it, and the
-  *    harnesses ([[Verify]], `perfbench`, the chaos and plan-dump tools)
-  *    drain the ledger with [[releaseTracked]] between queries, once the
+  *    harnesses ([[Verify]], `perfbench`, and through `tools.Harness` the
+  *    `ClusterSmoke`, chaos and plan-dump tools) drain the ledger with
+  *    [[releaseTracked]] between queries, once the
   *    previous result is materialized and no query is in flight on any
   *    session of this JVM;
   *  - only the builder reads it: [[release]] it in that builder once its

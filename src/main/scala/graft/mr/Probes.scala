@@ -81,21 +81,20 @@ object Probes {
     * (workers randomly dying and rejoining under load the whole run,
     * /root/reference/src/main/test-mr.sh:160-200 + crash.go `maybeCrash`:
     * 33% die, else maybe stall): every task attempt of BOTH stages decides
-    * from hash(seed, partition, attempt) to die (~`pCrashPct`%, possibly on
-    * consecutive attempts) or stall up to 200 ms (reordering stress). The
-    * final attempt allowed by `spark.task.maxFailures` is left clean so the
-    * job always completes — the reference's crash loop likewise never kills
-    * the coordinator. Output must be byte-equal to the fault-free run for
+    * from hash(seed, partition, attempt) to die (40%, possibly on
+    * consecutive attempts) or stall up to 200 ms (reordering stress).
+    * Attempts from the third on (keep < `spark.task.maxFailures`) run
+    * clean so the job always completes — the reference's crash loop
+    * likewise never kills the coordinator. Output must be byte-equal to the fault-free run for
     * EVERY seed; each injected death exercises scheduler reassignment plus
     * shuffle-refetch on the reduce side. */
-  def chaosLoop(app: MrApp, seed: Long, pCrashPct: Int = 40,
-                maxInjectedFailures: Int = 2): MrApp = new MrApp {
+  def chaosLoop(app: MrApp, seed: Long): MrApp = new MrApp {
     val name: String = app.name + s"_chaosloop$seed"
     private def maybeCrash(stage: String): Unit = {
       val tc = TaskContext.get()
-      if (tc != null && tc.attemptNumber() < maxInjectedFailures) {
+      if (tc != null && tc.attemptNumber() < 2) {
         val h = chaosHash(seed, tc.partitionId(), tc.attemptNumber())
-        if (h < pCrashPct)
+        if (h < 40)
           throw new RuntimeException(
             s"[chaosLoop] injected $stage death, task ${tc.partitionId()} attempt ${tc.attemptNumber()} seed $seed")
         if (h >= 80) Thread.sleep(h % 200L) // crash.go's stall branch

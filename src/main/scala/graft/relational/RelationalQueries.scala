@@ -9,7 +9,7 @@ import graft.Tables
 
 /** Relational query surface over the TPC-H-ish fixture tables.
   *
-  * Design notes for scale (local[32] today, 1000-executor cluster tomorrow):
+  * Design notes for scale (one host today, 1000-executor cluster tomorrow):
   *   - Money/quantity math is done in `DECIMAL(18,2)` and cast back to double
   *     at the output boundary — exact, engine-independent results (the
   *     DuckDB oracle computes the identical decimal sums), and still

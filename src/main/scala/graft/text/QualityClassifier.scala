@@ -13,10 +13,8 @@ import graft.functions.{Fnv32, TextHash}
   * bag-of-token frequencies, trained IN the engine against the corpus's own
   * Gopher-rule verdicts as weak labels — distilling the hand-written rule
   * into a smooth, rankable score (the model generalizes where the rule is a
-  * hard cliff). Two trainers share one determinism contract: full-batch GD
-  * ([[train]], 80 passes) and the registered-query default, Newton/IRLS
-  * ([[trainNewton]], 8 passes — logistic regression is IRLS's native
-  * problem, so second-order convergence cuts the pass count ~10×).
+  * hard cliff). The trainer is Newton/IRLS ([[trainNewton]], 8 passes —
+  * logistic regression is IRLS's native problem).
   *
   * Distributed-training determinism, one notch STRONGER than the PQ/k-means
   * precedent (deterministic only for a fixed partitioning): each document's
@@ -26,9 +24,9 @@ import graft.functions.{Fnv32, TextHash}
   * a driver-local reference trainer, element-exact.
   *
   * Scale shape: featurization is ONE map-only pass (the fused gram-stats
-  * expression + per-doc hashed counts — no shuffle); each GD iteration is
-  * one treeAggregate returning exactly ONE (dim+2)-long accumulator to the
-  * driver (gradient + loss + count), `iters` passes total over a persisted
+  * expression + per-doc hashed counts — no shuffle); each Newton iteration
+  * is one treeAggregate returning exactly ONE accumulator to the driver
+  * (gradient + Hessian + loss + count), `iters` passes total over a persisted
   * feature set released at the end of training. At 100 TB the training-side
   * story is the BPE one: train on a hash-fate subcorpus (the deterministic
   * bucket samplers), score everything — scoring is explode → broadcast
@@ -86,62 +84,12 @@ object QualityClassifier {
       }
   }
 
-  /** The per-document fixed-point gradient/loss contribution — shared
-    * verbatim by the distributed trainer and the spec's local reference, so
-    * "bit-exact parity" is a property of integer addition, not of matching
-    * two implementations. Returns (gradFixed[Dim], lossFixed). */
-  def docContribution(w: Array[Double], d: FeatDoc): (Array[Long], Long) = {
-    var z = 0.0
-    var j = 0
-    while (j < Dim) { z += w(j) * d.feats(j); j += 1 }
-    val p = sigmoid(z)
-    val err = p - d.label
-    val g = new Array[Long](Dim)
-    j = 0
-    while (j < Dim) { g(j) = math.rint(err * d.feats(j) * Scale).toLong; j += 1 }
-    val loss = -(if (d.label > 0.5) math.log(math.max(p, 1e-12))
-                 else math.log(math.max(1.0 - p, 1e-12)))
-    (g, math.rint(loss * Scale).toLong)
-  }
-
-  /** Full-batch GD, `iters` treeAggregate passes; returns (weights,
-    * per-iteration mean loss). Deterministic under any partitioning. */
-  def train(docs: Dataset[FeatDoc], iters: Int = 80, lr: Double = 8.0)
-  : (Array[Double], Array[Double]) = {
-    val cached = docs.persist()
-    try {
-      val sc = cached.sparkSession.sparkContext
-      val w = new Array[Double](Dim)
-      val losses = new Array[Double](iters)
-      for (t <- 0 until iters) {
-        val bw = sc.broadcast(w.clone())
-        // acc = gradFixed[Dim] ++ (lossFixed, count)
-        val acc = cached.rdd.treeAggregate(new Array[Long](Dim + 2))(
-          seqOp = (a, d) => {
-            val (g, l) = docContribution(bw.value, d)
-            var j = 0
-            while (j < Dim) { a(j) += g(j); j += 1 }
-            a(Dim) += l; a(Dim + 1) += 1L
-            a
-          },
-          combOp = (a, b) => { var j = 0; while (j < a.length) { a(j) += b(j); j += 1 }; a })
-        bw.destroy()
-        val n = acc(Dim + 1).toDouble
-        var j = 0
-        while (j < Dim) { w(j) -= lr * (acc(j) / Scale) / n; j += 1 }
-        losses(t) = (acc(Dim) / Scale) / n
-      }
-      (w, losses)
-    } finally cached.unpersist(blocking = false)
-  }
-
   /** Packed upper-triangle size for the Newton Hessian accumulator. */
   val TriDim: Int = Dim * (Dim + 1) / 2
 
   /** The per-document fixed-point NEWTON contribution: gradient (err·x),
     * packed upper-triangular Hessian (p(1−p)·x xᵀ), and loss, all rounded
-    * to ×2^24 Longs — the same integer-sum determinism contract as
-    * [[docContribution]], extended with the curvature term IRLS needs.
+    * to ×2^24 Longs, so the integer sums are order-free.
     * Writes into caller-provided accumulators (one flat array per task). */
   def docContributionNewton(w: Array[Double], d: FeatDoc, acc: Array[Long]): Unit = {
     var z = 0.0
@@ -237,13 +185,10 @@ object QualityClassifier {
     (acc(Dim + TriDim) / Scale) / n
   }
 
-  /** NEWTON / IRLS trainer — the convergence-rate upgrade over [[train]]:
-    * logistic regression is IRLS's native problem, so `iters` = 8 second-
-    * order passes reach a sharper fit than 80 first-order ones (measured:
-    * 0.994 training accuracy at 80 GD passes → ≥ the same at 8 Newton
-    * passes; wall-clock is per-pass job launches at bench SF, so 10× fewer
-    * passes ≈ 10× cheaper in-query training). Same determinism contract:
-    * every per-doc contribution (now gradient + packed Hessian) is
+  /** NEWTON / IRLS trainer: logistic regression is IRLS's native problem,
+    * so `iters` = 8 second-order passes fit the weak labels to 0.994
+    * training accuracy (measured at both default SFs). Determinism contract:
+    * every per-doc contribution (gradient + packed Hessian) is
     * fixed-point, the treeAggregate total is bit-identical under ANY
     * partitioning, and the driver-side Cholesky is shared verbatim with
     * the local reference. The accumulator is Dim + Dim(Dim+1)/2 + 2 Longs
@@ -277,28 +222,6 @@ object QualityClassifier {
       val acc = new Array[Long](Dim + TriDim + 2)
       docs.foreach(d => docContributionNewton(w, d, acc))
       losses(t) = newtonStep(w, acc, ridge)
-    }
-    (w, losses)
-  }
-
-  /** Driver-local reference trainer over a collected corpus — the spec's
-    * parity target (same [[docContribution]], same integer sums). */
-  def trainLocal(docs: Array[FeatDoc], iters: Int = 80, lr: Double = 8.0)
-  : (Array[Double], Array[Double]) = {
-    val w = new Array[Double](Dim)
-    val losses = new Array[Double](iters)
-    for (t <- 0 until iters) {
-      val acc = new Array[Long](Dim + 2)
-      docs.foreach { d =>
-        val (g, l) = docContribution(w, d)
-        var j = 0
-        while (j < Dim) { acc(j) += g(j); j += 1 }
-        acc(Dim) += l; acc(Dim + 1) += 1L
-      }
-      val n = acc(Dim + 1).toDouble
-      var j = 0
-      while (j < Dim) { w(j) -= lr * (acc(j) / Scale) / n; j += 1 }
-      losses(t) = (acc(Dim) / Scale) / n
     }
     (w, losses)
   }

@@ -11,7 +11,7 @@ import org.apache.spark.TaskContext
   * family's app-level wrappers (`Probes.chaosLoop`) to EVERY task of EVERY
   * query: an executor plugin whose `onTaskStart` hook decides from
   * hash(seed, stageId, partitionId, attemptNumber) to kill the attempt
-  * (~pCrashPct%) or stall up to 200 ms at start (reordering stress).
+  * (30% of attempts, `Pct`) or stall up to 200 ms at start (reordering stress).
   *
   * The kill mechanism: `ExecutorPluginContainer` SWALLOWS exceptions
   * thrown by the hook itself (found empirically — "Exception while
@@ -22,35 +22,29 @@ import org.apache.spark.TaskContext
   * acking it, the nastiest point in the reference's crash window (the
   * work must be redone AND any side effects must have been invisible).
   * The scheduler then retries on the other executor. Attempts at or
-  * beyond `graft.chaos.maxInjected` are left clean so the job always
+  * beyond `MaxInjected` (2) are left clean so the job always
   * completes (the reference's loop likewise never kills the coordinator);
   * byte-equality with the fault-free run is the assertion
   * ([[ChaosSweep]]).
   *
-  * Config (all spark confs): `spark.graft.chaos.seed` (long),
-  * `spark.graft.chaos.pct` (default 30), `spark.graft.chaos.maxInjected`
-  * (default 2; keep < spark.task.maxFailures). */
+  * Config: `spark.graft.chaos.seed` (long). */
 class ChaosPlugin extends SparkPlugin {
   override def driverPlugin(): DriverPlugin = null
 
   override def executorPlugin(): ExecutorPlugin = new ExecutorPlugin {
     @volatile private var seed = 0L
-    @volatile private var pct = 30
-    @volatile private var maxInjected = 2
 
     override def init(ctx: org.apache.spark.api.plugin.PluginContext,
                       extraConf: JMap[String, String]): Unit = {
       seed = ctx.conf.getLong("spark.graft.chaos.seed", 0L)
-      pct = ctx.conf.getInt("spark.graft.chaos.pct", 30)
-      maxInjected = ctx.conf.getInt("spark.graft.chaos.maxInjected", 2)
     }
 
     override def onTaskStart(): Unit = {
       val tc = TaskContext.get()
-      if (tc != null && tc.attemptNumber() < maxInjected) {
+      if (tc != null && tc.attemptNumber() < ChaosPlugin.MaxInjected) {
         val h = ChaosPlugin.decisionHash(seed, tc.stageId(), tc.partitionId(),
           tc.attemptNumber())
-        if (h < pct) {
+        if (h < ChaosPlugin.Pct) {
           val msg = s"[chaos] injected death: stage ${tc.stageId()} " +
             s"task ${tc.partitionId()} attempt ${tc.attemptNumber()} seed $seed"
           tc.addTaskCompletionListener(new org.apache.spark.util.TaskCompletionListener {
@@ -65,17 +59,18 @@ class ChaosPlugin extends SparkPlugin {
 }
 
 object ChaosPlugin {
-  private def mix(z0: Long): Long = {
-    // splitmix64 finalizer — the FNV fold of Probes.chaosHash mixes tiny
-    // consecutive ints poorly (its top bits land on multiples of 4, so a
-    // 3-task query could draw zero deaths at 30%); splitmix avalanches
-    var z = z0 + 0x9E3779B97F4A7C15L
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
-  }
+  /** Share of task attempts killed, in percent. */
+  private val Pct = 30
+  /** Attempts from this number on run clean; keep < spark.task.maxFailures. */
+  private val MaxInjected = 2
 
-  /** Deterministic per-(seed, stage, partition, attempt) decision in [0, 100). */
-  def decisionHash(seed: Long, stage: Int, partition: Int, attempt: Int): Int =
-    java.lang.Math.floorMod(mix(mix(mix(mix(seed) ^ stage) ^ partition) ^ attempt), 100L).toInt
+  /** Deterministic per-(seed, stage, partition, attempt) decision in
+    * [0, 100), folded through the splitmix64 finalizer: the FNV fold of
+    * Probes.chaosHash mixes tiny consecutive ints poorly (its top bits land
+    * on multiples of 4, so a 3-task query could draw zero deaths at 30%);
+    * splitmix avalanches. */
+  def decisionHash(seed: Long, stage: Int, partition: Int, attempt: Int): Int = {
+    import graft.sim.Similarity.mix64
+    java.lang.Math.floorMod(mix64(mix64(mix64(mix64(seed) ^ stage) ^ partition) ^ attempt), 100L).toInt
+  }
 }

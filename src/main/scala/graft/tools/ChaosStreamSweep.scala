@@ -10,18 +10,16 @@ import graft.streaming.{CapStream, EventStreams, ShardStream}
   * registered QUERY deterministic under injected task deaths, but the
   * stateful streaming twins — state stores, checkpoint commits, foreachBatch
   * sinks — claim retry/restart safety without ever having run under
-  * injection. This sweep drives the five stateful twins end-to-end twice
-  * (fault-free `local[8]` truth vs [[ChaosPlugin]] on local-cluster, the
-  * [[ChaosSweep]] recipe) and requires the SETTLED result byte-equal.
+  * injection. [[ChaosSweep]] drives these five stateful twins end-to-end
+  * twice (fault-free `local[8]` truth vs [[ChaosPlugin]] on local-cluster)
+  * through [[Harness.chaosCompare]] and requires the SETTLED result
+  * byte-equal.
   *
   * Each runner mirrors its parity spec's choreography (same slicing, same
   * micro-batch structure — deterministic in both sessions) and returns the
   * batch-boundary-INVARIANT settled frame (final state per key / the full
   * append set), so the comparison asserts end-state determinism, not
-  * emission timing.
-  *
-  * Run: `runMain graft.tools.ChaosStreamSweep <sfDir> [seed] [outFile]`.
-  * Writes `CHAOS_STREAM_r{round}.json` via tools/chaos.sh. */
+  * emission timing. */
 object ChaosStreamSweep {
 
   private def scratch(spark: SparkSession, name: String): String =
@@ -163,75 +161,4 @@ object ChaosStreamSweep {
     "stream_attribution" -> (attribution _),
     "stream_source_cap" -> (cap _),
     "stream_shard_kv" -> (shard _))
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val seed = if (args.length > 1) args(1).toLong else 12L
-    val out = args.drop(2).headOption.filter(_ != "-")
-    val pct = if (args.length > 3) args(3).toInt else 30
-
-    def sweep(spark: SparkSession): (Map[String, String], Map[String, String]) = {
-      var hashes = Map.empty[String, String]
-      var errs = Map.empty[String, String]
-      runners.foreach { case (name, fn) =>
-        try hashes += name -> ChaosSweep.canonicalMd5(fn(spark, sfDir))
-        catch { case e: Throwable =>
-          var root: Throwable = e
-          while (root.getCause != null) root = root.getCause
-          errs += name -> root.toString.linesIterator.next().take(300)
-        }
-      }
-      (hashes, errs)
-    }
-
-    val clean = ChaosSweep.session(None, pct)
-    val (want, cleanErrs) = sweep(clean)
-    clean.stop()
-
-    val chaos = ChaosSweep.session(Some(seed), pct)
-    println(s"[chstream] plugins=${chaos.conf.get("spark.plugins", "<unset>")} " +
-      s"master=${chaos.sparkContext.master}")
-    val injected = new java.util.concurrent.atomic.AtomicInteger
-    chaos.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        te.reason match {
-          case ef: org.apache.spark.ExceptionFailure
-            if ef.description != null && ef.description.contains("[chaos]") =>
-            injected.incrementAndGet(): Unit
-          case _ => ()
-        }
-    })
-    val (got, chaosErrs) = sweep(chaos)
-    chaos.stop()
-    println(s"[chstream] injected_task_deaths=${injected.get()}")
-
-    val names = runners.map(_._1)
-    var failed = 0
-    val rows = names.map { n =>
-      val status =
-        if (cleanErrs.contains(n)) s"clean_err:${cleanErrs(n)}"
-        else if (chaosErrs.contains(n)) s"chaos_err:${chaosErrs(n)}"
-        else if (want(n) != got(n)) "MISMATCH"
-        else "ok"
-      if (status != "ok") failed += 1
-      println(s"[chstream] ${if (status == "ok") "ok" else "FAIL"} $n" +
-        (if (status == "ok") "" else s" $status"))
-      n -> status
-    }
-    if (injected.get() == 0 && pct > 0) {
-      println("[chstream] FAIL: zero injected deaths — plugin not active")
-      failed += 1
-    }
-    println(s"[chstream] total=${names.size} failed=$failed seed=$seed " +
-      s"injected=${injected.get()}")
-    out.foreach { p =>
-      def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-      val json = rows.map { case (n, s) => s"${q(n)}: ${q(s)}" }
-        .mkString(s"""{"sf": ${q(new java.io.File(sfDir).getName)}, "seed": $seed, """ +
-          s""""total": ${names.size}, "failed": $failed, """ +
-          s""""injected_task_deaths": ${injected.get()}, "streams": {""", ",", "}}")
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(p), json + "\n"): Unit
-    }
-    if (failed > 0) sys.exit(1)
-  }
 }

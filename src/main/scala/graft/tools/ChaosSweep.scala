@@ -1,173 +1,39 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SparkEntry
 
-import graft.{Checkpoints, GraftExtensions, SparkEntry}
-
-/** Full-surface chaos gate (round-12, VERDICT r11 #5): every registered
-  * query runs twice — once fault-free, once under [[ChaosPlugin]]'s
-  * whole-run crash/stall injection (every stage, every task, ~pct% of
-  * attempts die) — and the results must be BYTE-EQUAL (canonical
-  * sorted-row md5 over stringified cells). The reference's hardest gate is
-  * exactly this (`test-mr.sh` crash tests: output with workers dying must
-  * equal the fault-free output); here it proves every operator — not just
-  * the MR family the app-level chaos wrappers cover — is deterministic
-  * under task retry and shuffle refetch. A query whose values survived
-  * retries but whose builder is retry-UNSAFE (nondeterministic sampling,
-  * accumulator-driven values, uncommitted side effects) fails the hash.
+/** Full-surface chaos gate: every registered query runs twice — once
+  * fault-free, once under [[ChaosPlugin]]'s whole-run crash/stall
+  * injection (every stage, every task, ~30% of attempts die) — and the
+  * results must be BYTE-EQUAL (canonical sorted-row md5 over stringified
+  * cells). The reference's hardest gate is exactly this (`test-mr.sh` crash
+  * tests: output with workers dying must equal the fault-free output); here
+  * it proves every operator — not just the MR family the app-level chaos
+  * wrappers cover — is deterministic under task retry and shuffle refetch.
+  * A query whose values survived retries but whose builder is retry-UNSAFE
+  * (nondeterministic sampling, accumulator-driven values, uncommitted side
+  * effects) fails the hash.
   *
-  * Writes `CHAOS_r{round}.json` when `--out` given; exits nonzero on any
-  * failure or mismatch.
+  * The five stateful streaming twins ([[ChaosStreamSweep.runners]]) then
+  * go through the same compare on their own fresh sessions: state stores,
+  * checkpoint commits and foreachBatch sinks under injection, settled
+  * result byte-equal.
   *
-  * Run: `runMain graft.tools.ChaosSweep <sfDir> [seed] [outFile]`. */
+  * Run: `runMain graft.tools.ChaosSweep <sfDir> <seed> <out> <streamOut> [q1,q2,…]`.
+  * `out`/`streamOut` take `-` for no artifact; a query subset (debug)
+  * skips the streaming twins. Prints `[chaossweep]` and `[chstream]` lines;
+  * exits nonzero on any failure or mismatch. */
 object ChaosSweep {
-  private[tools] def canonicalMd5(df: DataFrame): String = {
-    val cols = df.columns.sorted
-    val rows = df.select(cols.head, cols.tail: _*).collect()
-      .map(_.toSeq.map {
-        case null => "\u0000"
-        case b: Array[Byte] => b.map("%02x".format(_)).mkString
-        case x => x.toString
-      }.mkString("\u0001"))
-      .sorted
-    val md = java.security.MessageDigest.getInstance("MD5")
-    rows.foreach(r => md.update((r + "\u0002").getBytes("UTF-8")))
-    md.digest().map("%02x".format(_)).mkString
-  }
-
-  /** Fault-free truth on plain local; chaos on `local-cluster[2,2,2048]`
-    * — REAL executor child JVMs, so every injected death exercises
-    * scheduler reassignment and shuffle refetch across process boundaries
-    * (the ClusterSmoke classpath/add-opens recipe; local[n] would need
-    * the nonstandard local[n,f] retry master and retries nothing across
-    * JVMs anyway). */
-  private[tools] def session(chaosSeed: Option[Long], pct: Int): SparkSession = {
-    val b = SparkSession.builder()
-      .appName(s"graft-chaos-${chaosSeed.getOrElse(-1L)}")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-    chaosSeed match {
-      case None => b.master("local[8]")
-      case Some(s) =>
-        val addOpens = Seq(
-          "java.base/java.lang", "java.base/java.lang.invoke",
-          "java.base/java.lang.reflect", "java.base/java.io",
-          "java.base/java.net", "java.base/java.nio",
-          "java.base/java.util", "java.base/java.util.concurrent",
-          "java.base/java.util.concurrent.atomic",
-          "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-          "java.base/sun.security.action", "java.base/sun.util.calendar",
-        ).map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
-        val absCp = sys.props("java.class.path").split(java.io.File.pathSeparator)
-          .filter(_.nonEmpty).map(p => new java.io.File(p).getAbsolutePath)
-          .mkString(java.io.File.pathSeparator)
-        b.master("local-cluster[2,2,2048]")
-          .config("spark.executor.extraClassPath", absCp)
-          .config("spark.executor.extraJavaOptions", addOpens)
-          .config("spark.plugins", "graft.tools.ChaosPlugin")
-          .config("spark.graft.chaos.seed", s.toString)
-          .config("spark.graft.chaos.pct", pct.toString)
-          .config("spark.graft.chaos.maxInjected", "2")
-    }
-    b.getOrCreate()
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val seed = if (args.length > 1) args(1).toLong else 12L
-    val out = args.drop(2).headOption.filter(_ != "-")
-    // debug subset (4th arg, comma-separated); the gate runs the full set
-    val only: Option[Set[String]] = args.drop(3).headOption.map(_.split(',').toSet)
-    // debug injection rate (5th arg): pct=0 reruns the "chaos" session
-    // fault-free — a mismatch that SURVIVES pct=0 is a local-cluster/
-    // parallelism sensitivity, not a retry one
-    val pct = if (args.length > 4) args(4).toInt else 30
-
-    def sweep(spark: SparkSession): (Map[String, String], Map[String, String]) = {
-      // each session trains its own artifacts: without this the chaos
-      // session reuses models memoized fault-free by the clean session
-      // (keys carry only the fixture fingerprint) and BPE/unigram/IRLS/
-      // codebook training never actually runs under injection
-      graft.sources.ArtifactCache.clear()
-      var hashes = Map.empty[String, String]
-      var errs = Map.empty[String, String]
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (n, _) => only.forall(_.contains(n)) }
-        .foreach { case (name, fn) =>
-        try hashes += name -> canonicalMd5(fn(spark, sfDir))
-        catch { case e: Throwable =>
-          var root: Throwable = e
-          while (root.getCause != null) root = root.getCause
-          errs += name -> root.toString.linesIterator.next().take(300)
-        }
-        Checkpoints.releaseTracked()
-      }
-      (hashes, errs)
-    }
-
-    val clean = session(None, pct)
-    val (want, cleanErrs) = sweep(clean)
-    clean.stop()
-
-    val chaos = session(Some(seed), pct)
-    println(s"[chaossweep] plugins=${chaos.conf.get("spark.plugins", "<unset>")} " +
-      s"master=${chaos.sparkContext.master}")
-    // the gate must PROVE it bit: count tasks that died to an injected
-    // crash (driver sees every TaskEnd reason) — zero means the plugin
-    // never loaded and the "chaos" run was a plain re-run
-    val injected = new java.util.concurrent.atomic.AtomicInteger
-    chaos.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        te.reason match {
-          case ef: org.apache.spark.ExceptionFailure
-            if ef.description != null && ef.description.contains("[chaos]") =>
-            injected.incrementAndGet(): Unit
-          case _ => ()
-        }
-    })
-    val (got, chaosErrs) = sweep(chaos)
-    chaos.stop()
-    println(s"[chaossweep] injected_task_deaths=${injected.get()}")
-
-    val names = (want.keySet ++ got.keySet ++ cleanErrs.keySet ++ chaosErrs.keySet).toSeq.sorted
-    var failed = 0
-    val rows = names.map { n =>
-      val status =
-        if (cleanErrs.contains(n)) s"clean_err:${cleanErrs(n)}"
-        else if (chaosErrs.contains(n)) s"chaos_err:${chaosErrs(n)}"
-        else if (want(n) != got(n)) "MISMATCH"
-        else "ok"
-      if (status != "ok") failed += 1
-      println(s"[chaossweep] ${if (status == "ok") "ok" else "FAIL"} $n" +
-        (if (status == "ok") "" else s" $status"))
-      n -> status
-    }
-    if (injected.get() == 0 && pct > 0) {
-      println("[chaossweep] FAIL: zero injected deaths — plugin not active")
-      failed += 1
-    }
-    // SELF-SEALING (VERDICT r12 #2): a gate artifact that silently covers
-    // fewer queries than the registry stops being "full-surface" the day a
-    // new query registers. A non-debug run (no subset filter) must sweep
-    // exactly the registry; the recorded "registry" field lets ChaosGateSpec
-    // re-check the committed artifact against the registry on every test run.
-    val registry = SparkEntry.queries.size
-    if (only.isEmpty && names.size != registry) {
-      println(s"[chaossweep] FAIL: swept ${names.size} != registry $registry")
-      failed += 1
-    }
-    println(s"[chaossweep] total=${names.size} failed=$failed seed=$seed " +
-      s"injected=${injected.get()}")
-    out.foreach { p =>
-      def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-      val json = rows.map { case (n, s) => s"${q(n)}: ${q(s)}" }
-        .mkString(s"""{"sf": ${q(new java.io.File(sfDir).getName)}, "seed": $seed, """ +
-          s""""total": ${names.size}, "registry": $registry, "failed": $failed, """ +
-          s""""injected_task_deaths": ${injected.get()}, "queries": {""", ",", "}}")
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(p), json + "\n"): Unit
-    }
+    def artifact(i: Int) = args.lift(i).filter(_ != "-")
+    val only: Option[Set[String]] = args.lift(4).map(_.split(',').toSet)
+    var failed = Harness.chaosCompare("chaossweep", "queries", sfDir, seed,
+      Harness.registry(only), if (only.isEmpty) Some(SparkEntry.queries.size) else None, artifact(2))
+    if (only.isEmpty)
+      failed += Harness.chaosCompare("chstream", "streams", sfDir, seed,
+        ChaosStreamSweep.runners, None, artifact(3))
     if (failed > 0) sys.exit(1)
   }
 }

@@ -4,14 +4,15 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dev-only: dump the physical plans of named registered queries — the
   * before/after plan evidence the optimization rounds commit under
   * `plans/rNN/`. The session is the benchmark's (`perfbench`): every core,
-  * shuffle partitions = cores, AQE on, UTC, [[graft.GraftExtensions]], so
-  * the captured plan is the one the benchmark times.
+  * shuffle partitions = cores, AQE on (Spark's default), UTC,
+  * [[graft.GraftExtensions]], so the captured plan is the one the benchmark
+  * times.
   *
   * Run: `runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> <q1,q2,...>`
   *  - `<outDir>/<query>_<suffix>.txt`: the formatted plan, then the final
@@ -27,15 +28,7 @@ object PlanDump {
     val outDir = Paths.get(out)
     Files.createDirectories(outDir)
     val cores = Runtime.getRuntime.availableProcessors
-    val spark = SparkSession.builder()
-      .master("local[*]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("local[*]", cores, logLevel = "ERROR")
     def write(file: String, body: String): Unit = {
       Files.write(outDir.resolve(file), body.getBytes("UTF-8"))
       System.err.println(s"[plandump] wrote $file")

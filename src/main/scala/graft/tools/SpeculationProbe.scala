@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerSpeculativeTaskSubmitted, SparkListenerTaskStart}
-import org.apache.spark.sql.SparkSession
 
 import graft.mr.Probes
 
@@ -31,30 +30,12 @@ import graft.mr.Probes
 object SpeculationProbe {
   def main(args: Array[String]): Unit = {
     val slowMs = if (args.nonEmpty) args(0).toLong else 10000L
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar",
-    ).map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,1,1024]")
-      .appName("graft-speculation-probe")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.speculation", "true")
-      .config("spark.speculation.interval", "100ms")
-      .config("spark.speculation.multiplier", "4")
-      .config("spark.speculation.quantile", "0.75")
-      // executors are fresh JVMs: give them this JVM's classpath + the
-      // JDK17 module opens spark-submit would normally inject
-      .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-      .config("spark.executor.extraJavaOptions", addOpens)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel(if (args.length > 1) args(1) else "WARN")
+    val spark = Harness.session("local-cluster[2,1,1024]", 4,
+      logLevel = if (args.length > 1) args(1) else "WARN", conf = Seq(
+        "spark.speculation" -> "true",
+        "spark.speculation.interval" -> "100ms",
+        "spark.speculation.multiplier" -> "4",
+        "spark.speculation.quantile" -> "0.75"))
     @volatile var submitted = false
     @volatile var launched = false
     spark.sparkContext.addSparkListener(new SparkListener {

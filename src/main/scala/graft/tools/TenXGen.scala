@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Self-generated 10× fixture for the full-set scale recording (BASELINE.md
@@ -29,11 +29,7 @@ object TenXGen {
     val out = args.headOption.getOrElse("/tmp/sf1x10")
     val src = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val nCopies = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("local[*]", Runtime.getRuntime.availableProcessors)
     import spark.implicits._
 
     // The per-copy ID offsets below assume the base fixture's ID ranges;

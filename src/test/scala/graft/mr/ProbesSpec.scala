@@ -38,16 +38,8 @@ class ProbesSpec extends AnyFunSuite {
     // launch — backups are never placed on the original's host by design)
     import scala.sys.process._
     val java = sys.props("java.home") + "/bin/java"
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar",
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = Seq(java) ++ addOpens ++ Seq(
+    val cmd = Seq(java) ++
+      org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptionArray().toSeq ++ Seq(
       "-Xmx2g", "-cp", sys.props("java.class.path"),
       "graft.tools.SpeculationProbe", "8000")
     val out = new StringBuilder

@@ -19,19 +19,13 @@ if grep -E '\[verify\] .* left [0-9]+ persisted RDDs' "$LOG"; then
 fi
 echo "[gate] leak check ok"
 # Full-set local-cluster smoke: every registered query once across REAL
-# executor child JVMs (local-cluster[2,2,2048]) — catches closure-capture /
-# classpath / codegen-visibility bugs that local[32] structurally cannot
-# (round 8 found a relative-classpath bug this way on its first run).
-# ClusterSmoke exits nonzero on any query failure; pipefail propagates it.
-CS_CP="target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
-CS_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  CS_OPENS="$CS_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+# executor child JVMs (local-cluster[2,2,2048]), each full result written to
+# the noop sink — catches closure-capture / classpath / codegen-visibility
+# bugs that local[n] structurally cannot (round 8 found a relative-classpath
+# bug this way on its first run). ClusterSmoke exits nonzero on any query
+# failure; pipefail propagates it.
 SPARK_HOME=/opt/spark SPARK_SCALA_VERSION=2.13 \
-  java $CS_OPENS -Xmx4g -cp "$CS_CP" graft.tools.ClusterSmoke /root/testdata/sf0.001 2>/dev/null \
+  SPARK_DRIVER_MEM=4g sbt -batch "runMain graft.tools.ClusterSmoke /root/testdata/sf0.001" 2>&1 \
   | grep '\[clustersmoke\] total'
 echo "[gate] local-cluster smoke ok"
 # Benchmark smokes: one short perfbench run per workload (the full-result
