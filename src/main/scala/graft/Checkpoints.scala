@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graft.RddBridge
 
 /** The one owner of how long a pinned intermediate lives. A frame that
   * several consumers read is pinned as an eager `localCheckpoint(true)`,
@@ -34,7 +35,9 @@ object Checkpoints {
   /** Unpersist the block set behind an eager `localCheckpoint(true)` frame.
     * `Dataset.unpersist` only talks to the CacheManager and a checkpointed
     * frame is not registered there; the blocks belong to the `LogicalRDD`
-    * leaf the checkpoint left in the plan.
+    * leaf the checkpoint left in the plan. They are freed through
+    * [[RddBridge.unpersistQuietly]]: `RDD.unpersist` would log a
+    * truncated-lineage WARN for every release.
     *
     * PRECONDITION: `ds` must be exactly the frame an eager localCheckpoint
     * returned — its analyzed plan a single `LogicalRDD` leaf. Anything
@@ -43,7 +46,7 @@ object Checkpoints {
     * ("Checkpoint block not found" much later, far from the cause). */
   def release(ds: Dataset[_]): Unit =
     ds.queryExecution.analyzed match {
-      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
+      case lr: LogicalRDD => RddBridge.unpersistQuietly(lr.rdd)
       case other => throw new IllegalArgumentException(
         "Checkpoints.release expects a frame whose plan is a single " +
           s"LogicalRDD checkpoint leaf, got: ${other.nodeName}")

@@ -40,6 +40,8 @@ import graft.functions.{Cosine6Expr, Fnv32Expr, FingerprintTokensExpr, GramStats
   *   - [[graft.plans.TopKStrategy]]: per-key top-k (`graft.plans.TopK.perKey`)
   *   - [[graft.plans.SetSimJoinStrategy]]: the prefix-filter token-set
   *     Jaccard join (`graft.plans.SetSimJoin.jaccard`)
+  *   - [[graft.plans.KnnJoinStrategy]]: the block-partitioned exact kNN
+  *     join (`graft.plans.KnnJoin.edges`)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -64,6 +66,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPlannerStrategy(_ => new graft.plans.TopKStrategy)
     // SetSimJoinPlan → SetSimJoinExec(SetSimPrefixExec(...))
     ext.injectPlannerStrategy(_ => new graft.plans.SetSimJoinStrategy)
+    // KnnJoinPlan → KnnMergeExec(KnnBlockExec(Exchange(KnnChunkExec(...))))
+    ext.injectPlannerStrategy(_ => new graft.plans.KnnJoinStrategy)
     ext.injectFunction((
       FunctionIdentifier("graft_fnv32"),
       info("graft_fnv32", "graft_fnv32(str) - FNV-1a 32-bit hash masked to 31 bits."),

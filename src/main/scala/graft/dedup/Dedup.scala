@@ -1153,10 +1153,13 @@ object Dedup {
     val pathQ = regexp_replace(rest, "^[^/?]+", "")
     val path0 = regexp_replace(regexp_extract(pathQ, "^([^?]*)", 1), "/+$", "")
     val path = when(path0 === "", lit("/")).otherwise(path0)
-    val params = filter(split(regexp_extract(pathQ, "\\?(.*)$", 1), "&"), p =>
-      !(p.startsWith("utm_") || p.startsWith("fbclid=") ||
-        p.startsWith("gclid=") || p === ""))
-    val qs = array_join(array_sort(params), "&")
+    // tracking params blanked by one regex, the blanks dropped with the
+    // empty ones, and the rest sorted: all native expressions, where a
+    // filter lambda or array_sort's default comparator runs interpreted
+    val tracked = regexp_replace(regexp_extract(pathQ, "\\?(.*)$", 1),
+      "(^|&)(utm_|fbclid=|gclid=)[^&]*", "$1")
+    val params = array_remove(split(tracked, "&"), "")
+    val qs = array_join(sort_array(params), "&")
     concat(scheme, lit("://"), host, path,
       when(qs === "", lit("")).otherwise(concat(lit("?"), qs)))
   }
@@ -1169,8 +1172,7 @@ object Dedup {
     * 100 TB the canonical key also makes the natural bucketed-layout /
     * frontier-partitioning column. */
   def urlDedup(spark: SparkSession, dir: String): DataFrame = {
-    // canonicalize ONCE, in parallel: the regex chain (plus the
-    // CodegenFallback filter() lambda over query params) is the expensive
+    // canonicalize ONCE, in parallel: the regex chain is the expensive
     // per-row op, and this frame feeds BOTH the group aggregate and the
     // join-back side — the unmaterialized form re-ran it twice on the
     // single scan split. No-op at scale (Tables.materializeSmall).

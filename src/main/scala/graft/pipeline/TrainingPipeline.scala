@@ -67,8 +67,10 @@ object TrainingPipeline {
     * pipeline share this column, so the two funnels cannot drift). */
   def hygienePass(tk: org.apache.spark.sql.Column,
                   blocked: Seq[String] = Seq("slow", "big", "bad")): org.apache.spark.sql.Column = {
-    val blockedFrac =
-      size(filter(tk, t => t.isInCollection(blocked))).cast("double") / size(tk)
+    // blocked tokens = those array_remove drops: a native expression
+    // chain, where a filter lambda would run interpreted, per row
+    val unblocked = blocked.foldLeft(tk)((arr, b) => array_remove(arr, lit(b)))
+    val blockedFrac = (size(tk) - size(unblocked)).cast("double") / size(tk)
     val meanWordLen = TextAnalysis.charCountCol(tk).cast("double") / size(tk)
     val gs = graft.functions.TextHash.gramStatsCol(tk)
     !(blockedFrac > 0.05) &&

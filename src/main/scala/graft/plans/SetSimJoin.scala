@@ -12,7 +12,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.{ExplainUtils, SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.graft.{ColumnBridge, RddBridge}
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DoubleType, IntegerType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -106,7 +106,9 @@ object TokenOrder {
     * One pass over the rows the join's map side also reads: each task
     * counts its partition into per-block maps (the partial aggregate), so
     * only the distinct vocabulary is shuffled to the summing reduce and
-    * collected. Rows with a null key are left out, like their documents. */
+    * collected, under the session's artifacts ([[RddBridge.inSession]]), so
+    * the scan stage's generated classes are the join's own. Rows with a null
+    * key are left out, like their documents. */
   def count(docs: DataFrame): TokenOrder = {
     // the rows of `docs` itself, not a narrower projection: the join's map
     // side then runs the same generated scan stage
@@ -134,7 +136,8 @@ object TokenOrder {
       }
     }
     // one partition's partial counts are already the totals
-    val vocab = (if (partial.getNumPartitions > 1) partial.reduceByKey(_ + _) else partial).collect()
+    val vocab = RddBridge.inSession(docs.sparkSession)(
+      (if (partial.getNumPartitions > 1) partial.reduceByKey(_ + _) else partial).collect())
     val utf8Order = Ordering.fromLessThan[UTF8String]((a, b) => a.compareTo(b) < 0)
     val byBlock = vocab.groupBy { case ((lang, source, _), _) => (lang, source) }
     val blocks = byBlock.keys.toArray

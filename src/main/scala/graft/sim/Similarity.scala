@@ -44,9 +44,10 @@ object Similarity {
     * at sf0.1): these scans are fixed-cost-bound (50-250 ms stages whose
     * real CPU is single-digit ms at sub-MB corpus sizes), so the added
     * exchange + 32-task scheduling outweighs the parallelism everywhere
-    * except the n²-dense [[knnGraph]] chunk kernel, which keeps its own
-    * explicit repartition below. At real scale the scan yields ≥ cores
-    * splits by itself, so nothing is lost. */
+    * except the n²-dense [[knnGraph]] chunk kernel, whose operator
+    * ([[graft.plans.KnnJoin]]) pins its own kernel partition count. At
+    * real scale the scan yields ≥ cores splits by itself, so nothing is
+    * lost. */
 
   /** The bounded broadcast query set, collected through a COLUMN predicate
     * so it pushes into the parquet scan — the former typed
@@ -761,7 +762,7 @@ object Similarity {
   /** The block-nested-loop fan-out: `id` hashes to chunk
     * c = floorMod(mix64(id), nc) and is replicated once per partner chunk,
     * keyed by the (min, max) chunk pair — yields (a, b, c). */
-  private def chunkPairs(id: Long, nc: Int): Iterator[(Int, Int, Int)] = {
+  private[graft] def chunkPairs(id: Long, nc: Int): Iterator[(Int, Int, Int)] = {
     val c = math.floorMod(mix64(id), nc.toLong).toInt
     (0 until nc).iterator.map(other => if (other < c) (other, c, c) else (c, other, c))
   }
@@ -850,8 +851,9 @@ object Similarity {
     * chunks, each (chunkA, chunkB) pair is one bounded shuffle group, and
     * each group emits ONLY a per-member local top-k against the partner
     * chunk — k·nc candidate rows per vector cross the second exchange,
-    * where the final per-vector merge keeps the global top-k. At 100 TB
-    * the same merge shape composes with IVF pruning (score only vectors
+    * where the final per-vector merge keeps the global top-k. It runs as
+    * one fused operator, [[graft.plans.KnnJoin]], with no typed stage. At
+    * 100 TB the same merge shape composes with IVF pruning (score only vectors
     * sharing nearby lists — [[ivfTopK]]'s ball bound) instead of all
     * chunk pairs; this operator is the exact-semantics baseline.
     *
@@ -871,58 +873,12 @@ object Similarity {
   def knnGraph(spark: SparkSession, dir: String, k: Int = 3,
                maxBlock: Int = 256, sampleN: Int = 0): Dataset[KnnEdge] = {
     import spark.implicits._
-    val all = vectors(spark, dir)
+    val all = vectors(spark, dir).toDF()
     val vecs = if (sampleN <= 0) all else
       all.orderBy(graft.functions.Fnv32.fnv32(
           concat(col("vec_id").cast("string"), lit(":kg"))), col("vec_id"))
-        .limit(sampleN).as[Vec]
-    val n = vecs.count()
-    val nc = math.max(1, ((n + maxBlock - 1) / maxBlock).toInt)
-    val exploded = vecs.flatMap { v =>
-      chunkPairs(v.vec_id, nc).map { case (a, b, c) => (a, b, c, v.vec_id, v.embedding) }
-    }
-    // The chunk-pair kernel is CPU-dense but byte-TINY, which defeats both
-    // layers of default parallelism (r14 StageTimeProbe: the whole n²/nc
-    // kernel ran as ONE 3 s task): the sampled form's global limit yields a
-    // single partition, which SATISFIES groupByKey's clustering requirement
-    // outright (zero exchanges planned), and even with an exchange AQE's
-    // byte-driven coalescing folds a few-MB shuffle back to 1-4 tasks. So
-    // the group stage is an EXPLICIT repartition on the chunk-pair key with
-    // a pinned partition count (user-specified counts are exempt from AQE
-    // coalescing) and the grouping runs partition-locally — same groups,
-    // same kernel, and the kernel's bounded heaps are total-order
-    // tie-broken, so the output set is identical from any partitioning.
-    // Sorting each partition by the key turns every group into one run of
-    // consecutive rows, so the kernel streams the partition one (a, b)
-    // group — at most 2·maxBlock vectors — at a time.
-    val nGroups = nc.toLong * (nc + 1) / 2
-    val p = math.max(1L, math.min(nGroups,
-      spark.sparkContext.defaultParallelism.toLong)).toInt
-    val partials = exploded.toDF("a", "b", "c", "id", "emb")
-      .repartition(p, col("a"), col("b"))
-      .sortWithinPartitions(col("a"), col("b"))
-      .as[(Int, Int, Int, Long, Array[Float])]
-      .mapPartitions { it =>
-        val rows = it.buffered
-        Iterator.continually(rows).takeWhile(_.hasNext).flatMap { _ =>
-          val (a, b) = (rows.head._1, rows.head._2)
-          val members = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Array[Float])]
-          while (rows.hasNext && rows.head._1 == a && rows.head._2 == b) {
-            val (_, _, c, id, e) = rows.next(); members += ((c, id, e))
-          }
-          if (a == b) {
-            members.iterator.flatMap { case (_, id, e) =>
-              TopK.nearest(id, e, k, members.iterator.map(m => (m._2, m._3)))
-            }
-          } else {
-            val left = members.filter(_._1 == a).map(m => (m._2, m._3))
-            val right = members.filter(_._1 == b).map(m => (m._2, m._3))
-            left.iterator.flatMap { case (id, e) => TopK.nearest(id, e, k, right.iterator) } ++
-              right.iterator.flatMap { case (id, e) => TopK.nearest(id, e, k, left.iterator) }
-          }
-        }
-      }
-    TopK.ranked(partials, k)((id, nid, c, r) => KnnEdge(id, nid, TopK.round6(c), r))
+        .limit(sampleN)
+    graft.plans.KnnJoin.edges(vecs, k, maxBlock).as[KnnEdge]
   }
 
   // ---------------------------------------- pruned kNN graph (IVF composition)

@@ -23,7 +23,7 @@ import Similarity.{Vec, Hit, cosine}
   * NaN score means "skip this row for this query" (an unprobed IVF list, a
   * label outside the filter). Only Q × k candidate rows leave each
   * partition; the merge is a groupByKey on Q keys. */
-private[sim] object TopK {
+private[graft] object TopK {
 
   /** (query id, candidate id, raw score) */
   type Cand = (Long, Long, Double)
@@ -44,6 +44,9 @@ private[sim] object TopK {
         q.dequeue(); q.enqueue((score, id))
       }
     def iterator: Iterator[(Double, Long)] = q.iterator
+    /** The kept entries, best first, under the order `offer` keeps. */
+    def best: Array[(Double, Long)] = q.toArray.sortWith { case ((s1, id1), (s2, id2)) =>
+      s1 > s2 || (s1 == s2 && id1 < id2) }
   }
 
   /** One query's top k by cosine of `e` against `others`, self (`id`)

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FormattedMode
 
@@ -17,7 +18,11 @@ import org.apache.spark.sql.execution.FormattedMode
   * Run: `runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> <q1,q2,...>`
   *  - `<outDir>/<query>_<suffix>.txt`: the formatted plan, then the final
   *    AQE plan after executing the query's own queryExecution (so join
-  *    strategies, reuse and coalescing show as they ran).
+  *    strategies, reuse and coalescing show as they ran), and the number
+  *    of generated classes compiled across the query's build and run (the
+  *    JVM-wide count of Spark's codegen compile histogram; a class already
+  *    in Spark's codegen cache is not compiled again, so the first query
+  *    of a run counts its whole set).
   *  - `<outDir>/<query>__<op>round_<suffix>.txt` per operator tapped
   *    through [[PlanProbe]]: the final AQE plan of its round 2 (round 1 can
   *    carry seed-only shapes), or of round 1 when it stops there. */
@@ -46,23 +51,32 @@ object PlanDump {
         if (n <= 2) roundPlans(op) = s"== tapped round frame: $tag ==\n${finalPlan(df)}"
       }
       try PlanProbe.withSink(sink) {
+        val compiled0 = compiles
         val df = graft.SparkEntry.queries(name)(spark, sfDir)
         val formatted = df.queryExecution.explainString(FormattedMode)
+        val executed = finalPlan(df)
         write(s"${name}_$suffix.txt",
           s"""== explain("formatted") ==
              |$formatted
              |== final AQE executedPlan (after execution) ==
-             |${finalPlan(df)}""".stripMargin)
+             |$executed
+             |generated classes compiled: ${compiles - compiled0}
+             |""".stripMargin)
       } finally graft.Checkpoints.releaseTracked()
       roundPlans.foreach { case (op, plan) => write(s"${name}__${op}_$suffix.txt", plan) }
     }
     spark.stop()
   }
 
+  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** Execute `df`'s own queryExecution, so AQE finalizes in place, and
     * return the final adaptive plan without its initial-plan appendix. */
   private def finalPlan(df: DataFrame): String = {
-    df.queryExecution.toRdd.count(): Unit
+    // under the session's artifacts, as a SQL execution runs, so the
+    // compile count is the one the query's own actions see
+    org.apache.spark.sql.graft.RddBridge.inSession(df.sparkSession)(
+      df.queryExecution.toRdd.count()): Unit
     df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
   }
 }

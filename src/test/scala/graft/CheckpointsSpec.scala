@@ -57,4 +57,35 @@ class CheckpointsSpec extends AnyFunSuite {
     Checkpoints.release(chk)
     assert(!sc.getPersistentRDDs.contains(id))
   }
+
+  test("release logs nothing: no truncated-lineage WARN for a tracked checkpoint") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val capture = new AbstractAppender("checkpoints-spec", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val root = LogManager.getContext(false).asInstanceOf[LoggerContext].getRootLogger
+    root.addAppender(capture)
+    def truncated = lines.toArray.map(_.toString).filter(_.contains("lineage has been truncated"))
+    try {
+      // positive control: the plain RDD unpersist does log the line here
+      val probe = spark.range(4).toDF("id").localCheckpoint(true)
+      probe.queryExecution.analyzed.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+        .rdd.unpersist(blocking = false)
+      assert(truncated.nonEmpty, "the capture saw no truncated-lineage WARN from RDD.unpersist")
+      lines.clear()
+      Checkpoints.releaseTracked()
+      val chk = Checkpoints.track(spark.range(16).toDF("id").localCheckpoint(true))
+      assert(chk.count() == 16L)
+      Checkpoints.releaseTracked()
+      assert(truncated.isEmpty, truncated.mkString("\n"))
+    } finally {
+      root.removeAppender(capture)
+      capture.stop()
+    }
+  }
 }

@@ -99,4 +99,25 @@ class UrlDedupSpec extends AnyFunSuite {
       assert(cid == g.map(_._1).min)
     }
   }
+
+  test("tracking params at the start, adjacent, doubled '&' and bare prefixes all drop") {
+    assert(canon("https://example.com/a?utm_a=1&utm_b=2&id=7&&fbclid=&gclid=x&utm_")
+      == Seq("https://example.com/a?id=7"))
+    // only a whole param's PREFIX is tracking: a value or a longer name is kept
+    assert(canon("https://example.com/a?x=utm_1&fbclidx=2&agclid=3")
+      == Seq("https://example.com/a?agclid=3&fbclidx=2&x=utm_1"))
+    assert(canon(null: String) == Seq(null))
+  }
+
+  test("canonicalUrl plans no lambda: its own plan and dedup_url's final plan") {
+    import spark.implicits._
+    def lambdas(df: org.apache.spark.sql.DataFrame): Int = {
+      df.collect()
+      val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+      "lambdafunction".r.findAllMatchIn(plan).size
+    }
+    assert(lambdas(Seq("https://example.com/a?utm_a=1&b=2").toDF("url")
+      .select(Dedup.canonicalUrl(col("url")))) == 0)
+    assert(lambdas(graft.SparkEntry.queries("dedup_url")(spark, sf)) == 0)
+  }
 }

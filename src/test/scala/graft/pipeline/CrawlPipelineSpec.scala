@@ -82,4 +82,11 @@ class CrawlPipelineSpec extends AnyFunSuite {
     assert(spark.table("crawl_gate_empty").collect().forall(_.getBoolean(1)),
       "unseen pages must default to keep_url = true")
   }
+
+  test("pipeline_crawl's final plan keeps only the three html-extraction lambdas") {
+    val df = graft.SparkEntry.queries("pipeline_crawl")(spark, sf)
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    assert("lambdafunction".r.findAllMatchIn(plan).size == 3, plan)
+  }
 }
