@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation}
+import org.apache.spark.sql.functions.count_if
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.graft.RddBridge
 
@@ -51,6 +52,24 @@ object Checkpoints {
         "Checkpoints.release expects a frame whose plan is a single " +
           s"LogicalRDD checkpoint leaf, got: ${other.nodeName}")
     }
+
+  /** Eager `localCheckpoint(true)` of `df`, returned with the number of its
+    * rows where `changed` holds, counted by an observation on that same job:
+    * the retry-safe change count of an iterative operator's round. A
+    * nonzero count is trusted (only successful tasks report, and any real
+    * change keeps the loop running), but it may under-count under task
+    * retry, and a zero may be one: a task that fails after its block was
+    * cached is retried against the cache, the observation never re-runs,
+    * and the failed attempt's metrics are dropped (an injected task death
+    * once let connected components converge a round early). So a zero is
+    * confirmed by one scan of the materialized blocks, paid on the terminal
+    * round only. The caller owns the returned checkpoint. */
+  def checkpointCounting(df: DataFrame, changed: Column): (DataFrame, Long) = {
+    val obs = Observation()
+    val chk = df.observe(obs, count_if(changed).as("changed")).localCheckpoint(true)
+    val observed = obs.get("changed").asInstanceOf[Long]
+    (chk, if (observed != 0L) observed else chk.filter(changed).count())
+  }
 
   /** Release every tracked frame's checkpoint blocks. Safe at any query
     * boundary with no query in flight: tracked frames belong to COMPLETED

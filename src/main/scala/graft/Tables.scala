@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.functions.{broadcast, expr}
 
 /** Loaders for the driver-provided parquet fixtures (TESTDATA.md).
   *
@@ -106,6 +106,20 @@ object Tables {
     val cores = df.sparkSession.sparkContext.defaultParallelism
     if (cores > 1 && sizeOf(df) <= SmallBytes) df.repartition(cores, key) else df
   }
+
+  /** Row count at or below which an iterative graph operator (CC,
+    * PageRank, BFS, k-core) broadcasts its per-round |V|-sized side: a
+    * 2M-row (node, value) relation is ~100 MB hashed, comfortably inside
+    * executor memory, and the edge relation then moves zero bytes per round.
+    * 2^21 keeps the symmetrized bipartite graph at sf0.1 (1,173,742 edges)
+    * on the broadcast side. */
+  private val BroadcastRows: Long = 1L << 21
+
+  /** The one broadcast rule of the iterative graph operators: `broadcast`
+    * at or below [[BroadcastRows]] `rows` (a count the operator measured on
+    * its own checkpoint), plain shuffled joins above it. */
+  def broadcastUpTo(rows: Long): DataFrame => DataFrame =
+    if (rows <= BroadcastRows) broadcast _ else identity _
 
   /** Estimated size of `df` in bytes, from its optimized plan's statistics
     * (≈ file bytes for a scan-rooted frame): the one size statistic that

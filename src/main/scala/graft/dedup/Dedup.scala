@@ -448,33 +448,17 @@ object Dedup {
     * real corpus can produce. The frontier is `localCheckpoint`ed so the
     * plan stays flat across iterations.
     *
-    * The edge layout is decided FROM THE DATA: symmetrize + materialize the
-    * edges once (localCheckpoint), count them (free on the checkpointed
-    * blocks), and run the in-memory iteration below `cutover` sym rows,
-    * the bucketed-table iteration at or above it — the same adaptive shape
-    * AQE applies to join strategies, applied to iteration-invariant
-    * layout. Below the cutover the label table is ≤ 2·cutover rows (every
-    * label row is an edge endpoint), so it rides a broadcast and each
-    * round's joins move ZERO edge bytes. Above it the symmetrized edges are
-    * written once as a managed table bucketed (and bucket-sorted) by
-    * `src`, so EVERY round's neighbor join reads pre-partitioned buckets
-    * and plans no Exchange on the edge side — only the
-    * (label-table-sized) side shuffles. A checkpointed frontier's RDD
-    * partitioning is invisible to Catalyst, so without the bucketed table
-    * the edge relation would re-exchange every round; at 100 TB that is
-    * the difference between shuffling the edge corpus O(log d) times and
-    * once. The labels join side carries a shuffle_merge hint there: at
-    * scale labels is |V|-sized, and letting AQE broadcast it would both be
-    * wrong at 100 TB and silently discard the bucket partitioning. The
-    * table is dropped before returning — safe because every round's
-    * labels are eagerly checkpointed. `cutover = 0` forces the bucketed
-    * branch.
+    * The edges are symmetrized and materialized once (localCheckpoint) and
+    * counted on the checkpointed blocks. At or below the one broadcast
+    * cutover ([[Tables.broadcastUpTo]]) the label table is at most twice
+    * that many rows (every label row is an edge endpoint), so it rides a
+    * broadcast and each round's neighbor join moves zero edge bytes; above
+    * it every join is a plain shuffled join.
     *
     * `edges` needs columns (d1, d2), undirected, any orientation; `nodes`
     * one column `node` covering at least every endpoint — isolated nodes
     * keep their own label. */
-  def connectedComponents(edges: DataFrame, nodes: DataFrame, maxIter: Int = 20,
-                          cutover: Long = BucketedEdgeCutover): DataFrame = {
+  def connectedComponents(edges: DataFrame, nodes: DataFrame, maxIter: Int = 20): DataFrame = {
     // Frontier handling: localCheckpoint(true), NOT persist+unpersist.
     // Unpersisting an upstream cached frame (cascade=false) re-caches its
     // dependents LAZILY against the raw lineage, discarding materialized
@@ -482,64 +466,15 @@ object Dedup {
     // recompute (observed: a 16-node path graph spun for minutes). The
     // checkpoint truncates lineage each round instead.
     val sym = symmetrize(edges).localCheckpoint(true)
-    if (sym.count() < cutover)
-      // every round is checkpointed: the returned plan reads only the
-      // final frontier, never the edges
-      try ccIterate(sym, nodes, maxIter, mergeHint = false)
-      finally graft.Checkpoints.release(sym)
-    else ccBucketed(sym, nodes, maxIter)
+    // every round is checkpointed: the returned plan reads only the final
+    // frontier, never the edges
+    try ccIterate(sym, nodes, maxIter)
+    finally graft.Checkpoints.release(sym)
   }
-
-  /** Bucket count of [[connectedComponents]]' at-scale edge table. */
-  private val CcBuckets = 32
-
-  private def ccBucketed(sym: DataFrame, nodes: DataFrame, maxIter: Int): DataFrame = {
-    val spark = sym.sparkSession
-    val table = "graft_cc_edges_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    // repartition by the bucket key first so each task writes only its own
-    // buckets (one file per bucket, which also lets SortMergeJoin skip the
-    // per-partition sort — the files are bucket-sorted)
-    sym.repartition(CcBuckets, col("src"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .bucketBy(CcBuckets, "src").sortBy("src")
-      .saveAsTable(table)
-    // the bucketed table now holds the edges: the checkpoint blocks are
-    // dead weight — corpus-sized, non-fault-tolerant, and otherwise pinned
-    // on executors for the whole iteration
-    graft.Checkpoints.release(sym)
-    try ccIterate(spark.table(table), nodes, maxIter, mergeHint = true)
-    finally spark.sql(s"DROP TABLE IF EXISTS $table")
-  }
-
-  /** Edge-count cutover between the two component variants. Measured on the
-    * real dedup edge set (interleaved A/B): below ~10^6 sym
-    * rows the bucketed table's fixed costs (write + per-round parquet scan +
-    * metastore round-trips) cost MORE than just re-exchanging the tiny edge
-    * relation each round (best 2.9 s plain vs 5.2 s bucketed at sf0.1's 12k
-    * sym rows); above it, re-shuffling the edge corpus O(log d) times
-    * dominates and the one-time bucketed write wins — at 100 TB it is the
-    * only sane plan. The cutover is deliberately conservative (a 10^6-row
-    * edge table re-exchanges in milliseconds either way). */
-  val BucketedEdgeCutover: Long = 1L << 20
 
   private def symmetrize(edges: DataFrame): DataFrame =
     edges.select(col("d1").as("src"), col("d2").as("dst"))
       .unionAll(edges.select(col("d2").as("src"), col("d1").as("dst")))
-
-  /** One round's neighbor join, exposed for the plan-shape spec: labels
-    * renamed to the edge key and joined on `src`. With a bucketed `sym` this
-    * must plan exactly one Exchange (the labels side). */
-  private[dedup] def neighborJoin(sym: DataFrame, labels: DataFrame,
-                                  mergeHint: Boolean): DataFrame = {
-    val l0 = labels.withColumnRenamed("node", "src")
-    // two shapes: bucketed (hint pins the merge join so AQE cannot discard
-    // the bucket layout), small (labels broadcast — the edge side moves
-    // zero bytes per round)
-    val l = if (mergeHint) l0.hint("shuffle_merge") else broadcast(l0)
-    sym.join(l, "src")
-      .select(col("dst").as("node"), col("label"))
-  }
 
   /** PRECONDITION: `sym` must be SYMMETRIZED (for every (s,d) row a (d,s)
     * row exists — all callers go through [[symmetrize]]). The pointer-jump
@@ -549,14 +484,13 @@ object Dedup {
     * to the jump target's. An asymmetric caller would silently corrupt the
     * convergence metric — CcRoundPlanSpec pins the no-null-prev invariant
     * on every tapped round. */
-  private def ccIterate(sym: DataFrame, nodes: DataFrame, maxIter: Int,
-                        mergeHint: Boolean): DataFrame = {
-    // below the cutover (no merge hint), the |V|-sized labels into the
-    // neighbor join and the terminal label table ride a broadcast: the
-    // per-round exchange count drops from 3-4 to 1 (the union-aggregate),
-    // and the edge relation is never re-exchanged. Values are exact
-    // integer min/sum — join strategy cannot change them.
-    val bcast: DataFrame => DataFrame = if (mergeHint) identity _ else broadcast _
+  private def ccIterate(sym: DataFrame, nodes: DataFrame, maxIter: Int): DataFrame = {
+    // below the cutover the |V|-sized labels into the neighbor join and the
+    // terminal label table ride a broadcast: the per-round exchange count
+    // drops from 3-4 to 1 (the union-aggregate), and the edge relation is
+    // never re-exchanged. Values are exact integer min/sum — join strategy
+    // cannot change them.
+    val bcast = Tables.broadcastUpTo(sym.count())
     // only nodes that appear in an edge can ever change label — iterate over
     // those (typically a small fraction of the corpus) and fold the isolated
     // majority back in at the end with label = self. The node list needs one
@@ -571,7 +505,8 @@ object Dedup {
     var converged = false
     var it = 0
     while (!converged && it < maxIter) {
-      val nbr = neighborJoin(sym, labels, mergeHint)
+      val nbr = sym.join(bcast(labels.withColumnRenamed("node", "src")), "src")
+        .select(col("dst").as("node"), col("label"))
       // The round's ONE materialization: the old label rides through the
       // min-aggregation as `prev` (each node contributes exactly one non-null
       // prev row, so max() recovers it), which makes the convergence check a
@@ -620,30 +555,11 @@ object Dedup {
         .select(col("node"), coalesce(col("jl"), col("label")).as("label"),
           coalesce(col("prev"), col("jp")).as("prev"))
       graft.tools.PlanProbe.tap(s"ccround_$it", jumped)
-      // convergence metric OBSERVED inside the checkpoint job itself — the
-      // round runs exactly one action. A nonzero observation is always
-      // trustworthy (only successful tasks contribute, and any real change
-      // row keeps the loop running), but ZERO is not: a task that fails
-      // AFTER its block was cached is retried, the retry short-circuits on
-      // the cached block, the observe projection never re-runs, and the
-      // failed attempt's updates are DROPPED — the metric under-counts and
-      // can report 0 with changes still in flight. The round-12 chaos gate
-      // caught exactly this (dedup_lsh_components converged one round
-      // early under injected post-body task deaths). So zero is CONFIRMED
-      // against the materialized blocks themselves — one cache-scan job,
-      // paid only on the terminal round (and on the rare under-counted
-      // one, where it correctly keeps the loop alive).
-      val obs = org.apache.spark.sql.Observation(s"cc_round_$it")
-      val next = jumped
-        .observe(obs, sum(when(col("label") =!= col("prev"), 1L).otherwise(0L)).as("changed"))
-        .localCheckpoint(true)
-      val observed = obs.get.get("changed") match {
-        case Some(n: Long) => n
-        case _ => 0L // empty frontier: sum over zero rows is null
-      }
-      val changed =
-        if (observed != 0L) observed
-        else next.filter(col("label") =!= col("prev")).count()
+      // the round's one job materializes `next` and counts its changed
+      // labels (Checkpoints.checkpointCounting: a zero is confirmed against
+      // the blocks, so a retried task cannot fake convergence)
+      val (next, changed) =
+        graft.Checkpoints.checkpointCounting(jumped, col("label") =!= col("prev"))
       // `next` is materialized and `changed` counted: the previous frontier
       // is now a dead block set — release it eagerly instead of waiting for
       // the ContextCleaner (at 100 TB it is a |V|-row pinned set per round)

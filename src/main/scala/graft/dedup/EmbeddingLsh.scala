@@ -263,8 +263,7 @@ object EmbeddingLsh {
 
   /** END-TO-END embedding dedup: LSH candidates → exact cosine verify →
     * connected components → canonical keep-list (the vector-space twin of
-    * [[Dedup.nearDupComponents]], sharing its auto-cutover components
-    * engine — so the same bucketed-edge path takes over past 2^20 edges).
+    * [[Dedup.nearDupComponents]], sharing its components engine).
     * Vectors in no verified pair keep themselves. */
   def dedupKeep(spark: SparkSession, dir: String, bands: Int = 8, width: Int = 2,
                 threshold: Double = 0.35): DataFrame = {
@@ -298,8 +297,8 @@ object EmbeddingLsh {
     * fixture-config [[dedupKeep]] stays registered as the low-τ physics
     * exhibit; THIS is the scaling twin: candidate volume inherits
     * `pairs_prod`'s measured ~1.1 exponent (3.7× at 10× data), and the
-    * components engine is the same auto-cutover iteration every other
-    * dedup family shares. */
+    * components engine is the same iteration every other dedup family
+    * shares. */
   def dedupKeepProd(spark: SparkSession, dir: String): DataFrame = {
     val frame = prodFrame(spark, dir)
     val p = pairsProd(spark, dir).select(col("d1"), col("d2"))

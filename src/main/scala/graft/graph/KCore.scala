@@ -16,12 +16,15 @@ import org.apache.spark.sql.functions._
   * under-degree nodes each round — reaches it deterministically: exactly
   * the CC/BFS round discipline. Each round is ONE degree aggregation over
   * the both-endpoints-alive edge subset (two semi joins + a count); every
-  * round materializes once (eager localCheckpoint) and releases the
-  * previous round's blocks. The edge relation is checkpointed once; at
-  * 100 TB it rides a bucketed-by-src layout so each round's semi joins
-  * co-locate (the `Dedup.BucketedEdgeCutover` argument) and the round
-  * count is bounded by the peel depth (typically ≤ 10 even on web-scale
-  * graphs — cores collapse geometrically), never the node count.
+  * round pins one frame (eager localCheckpoint of the surviving degrees,
+  * which is also the next round's alive set) and releases the previous
+  * round's. The edge relation is checkpointed once; at or below the one
+  * broadcast cutover ([[graft.Tables.broadcastUpTo]], on the alive-node
+  * count) the alive set rides a broadcast into both semi joins, so the edge
+  * relation moves zero bytes per round, and above it the joins are
+  * shuffled. The round count is bounded by the peel depth (typically ≤ 10
+  * even on web-scale graphs — cores collapse geometrically), never the
+  * node count.
   *
   * The round bound `maxRounds` is the honest production contract (the BFS
   * maxHops stance): the engine REQUIRES convergence within it — loudly,
@@ -31,67 +34,62 @@ import org.apache.spark.sql.functions._
   */
 object KCore {
 
-  /** Nodes of the k-core of the distinct (already-symmetrized) edge
-    * relation, with their within-core degree: `(node, core_deg)`. */
-  def kcore(edges: DataFrame, k: Int, maxRounds: Int = 16,
-            edgesDistinct: Boolean = false): DataFrame = {
-    // edgesDistinct: the registered repeat-interaction relation is an
-    // aggregate output (distinct by construction) — skip the |E| exchange
-    val dedup = if (edgesDistinct) edges.select(col("src"), col("dst"))
-                else edges.select(col("src"), col("dst")).distinct()
-    val adj = dedup.localCheckpoint(true)
+  /** Nodes of the k-core of the DISTINCT, already-symmetrized edge
+    * relation, with their within-core degree: `(node, core_deg)`. A
+    * repeated edge would count twice toward its endpoint's degree. */
+  def kcore(edges: DataFrame, k: Int, maxRounds: Int = 16): DataFrame = {
+    val adj = edges.select(col("src"), col("dst")).localCheckpoint(true)
+    // the round's one pinned frame: its `node` column is the alive set; from
+    // round 1 on it is the surviving (node, core_deg) rows
     var alive = adj.select(col("src").as("node")).distinct().localCheckpoint(true)
-    var aliveN = alive.count()
-    // below the cutover each round broadcasts the (shrinking) alive set
-    // into both semi joins — the edge relation moves zero bytes per round
-    val bcast: DataFrame => DataFrame =
-      if (aliveN <= PageRank.BroadcastRanksCutover) broadcast _ else identity _
-    var deg: DataFrame = null
-    var round = 0
-    var converged = false
-    while (!converged) {
-      round += 1
-      require(round <= maxRounds,
-        s"[kcore] no fixpoint after $maxRounds peel rounds — raise maxRounds " +
-          "(and the oracle's unroll count with it); refusing to emit a half-peeled core")
-      // degree within the current alive set: both endpoints must survive.
-      // Symmetrized edges mean the per-src count IS the undirected degree.
-      val roundDf = adj
-        .join(bcast(alive.select(col("node").as("src"))), "src")
-        .join(bcast(alive.select(col("node").as("dst"))), "dst")
-        .groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("core_deg"))
-        .filter(col("core_deg") >= k)
-      graft.tools.PlanProbe.tap(s"kcoreround_$round", roundDf)
-      val nextDeg = roundDf.localCheckpoint(true)
-      val nextN = nextDeg.count()
-      if (deg != null) graft.Checkpoints.release(deg)
-      graft.Checkpoints.release(alive)
-      deg = nextDeg
-      alive = nextDeg.select(col("node")).localCheckpoint(true)
-      converged = nextN == aliveN
-      aliveN = nextN
-    }
-    graft.Checkpoints.release(adj)
-    graft.Checkpoints.release(alive)
-    // converged round's degrees were computed WITHIN the fixpoint set —
-    // they are the within-core degrees. Released at the harness's
-    // between-queries drain (the PageRank.ranks discipline).
-    graft.Checkpoints.track(deg)
-    deg
+    try {
+      // exact counts, not Checkpoints.checkpointCounting: the peel stops
+      // when a round's count EQUALS the previous one, and a count that a
+      // retried task under-reports could equal it and stop the peel early
+      var aliveN = alive.count()
+      val bcast = graft.Tables.broadcastUpTo(aliveN)
+      var round = 0
+      var converged = false
+      while (!converged) {
+        round += 1
+        require(round <= maxRounds,
+          s"[kcore] no fixpoint after $maxRounds peel rounds — raise maxRounds " +
+            "(and the oracle's unroll count with it); refusing to emit a half-peeled core")
+        // degree within the current alive set: both endpoints must survive.
+        // Symmetrized edges mean the per-src count IS the undirected degree.
+        val roundDf = adj
+          .join(bcast(alive.select(col("node").as("src"))), "src")
+          .join(bcast(alive.select(col("node").as("dst"))), "dst")
+          .groupBy(col("src").as("node"))
+          .agg(count(lit(1)).as("core_deg"))
+          .filter(col("core_deg") >= k)
+        graft.tools.PlanProbe.tap(s"kcoreround_$round", roundDf)
+        val next = roundDf.localCheckpoint(true)
+        val nextN = next.count()
+        graft.Checkpoints.release(alive)
+        alive = next
+        converged = nextN == aliveN
+        aliveN = nextN
+      }
+      // converged round's degrees were computed WITHIN the fixpoint set —
+      // they are the within-core degrees. Released at the harness's
+      // between-queries drain (the PageRank.ranks discipline).
+      graft.Checkpoints.track(alive)
+    } catch { case e: Throwable => graft.Checkpoints.release(alive); throw e }
+    finally graft.Checkpoints.release(adj)
   }
 
   /** The registered query: 3-core of the REPEAT-interaction graph — the
-    * customer–supplier bipartite edges ([[PageRank.bipartiteEdges]])
-    * thresholded to pairs with ≥ `minW` interactions. The raw bipartite
-    * graph is near-complete at every tested scale (everyone touches
-    * everyone once — no peel structure); the repeat threshold is what
-    * makes cohesion a real signal, and the measured peel depth is 2-4
-    * rounds at sf0.001-sf0.01 against the 16-round bound. */
+    * customer–supplier bipartite edges ([[PageRank.bipartiteEdges]], an
+    * aggregate output, so distinct) thresholded to pairs with ≥ `minW`
+    * interactions. The raw bipartite graph is near-complete at every
+    * tested scale (everyone touches everyone once — no peel structure);
+    * the repeat threshold is what makes cohesion a real signal, and the
+    * measured peel depth is 2-4 rounds at sf0.001-sf0.01 against the
+    * 16-round bound. */
   def graphKcore(spark: SparkSession, dir: String,
                  k: Int = 3, minW: Int = 3): DataFrame =
-    kcore(PageRank.bipartiteEdges(spark, dir).filter(col("w") >= minW), k,
-      edgesDistinct = true)
+    kcore(PageRank.bipartiteEdges(spark, dir).filter(col("w") >= minW), k)
       .select(PageRank.nodeName(col("node")).as("node"), col("core_deg"))
 
   /** DuckDB re-derivation: the peel unrolled as exactly `maxRounds`

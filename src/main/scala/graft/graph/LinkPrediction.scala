@@ -37,22 +37,19 @@ object LinkPrediction {
   private[graph] def weightTable(maxApexDeg: Int): Seq[(Int, Long)] =
     (2 to maxApexDeg).map(d => d -> math.rint(1e6 / math.log(d.toDouble)).toLong)
 
-  /** Predicted links over a distinct symmetrized edge relation:
+  /** Predicted links over a DISTINCT symmetrized edge relation:
     * `(u, v, common_neighbors, aa_micro)` for non-adjacent pairs with ≥ 2
     * common neighbors of degree ≤ maxApexDeg, aa_micro the exact integer
-    * micro-unit Adamic-Adar score. */
-  def adamicAdar(edges: DataFrame, maxApexDeg: Int = 64,
-                 edgesDistinct: Boolean = false): DataFrame = {
+    * micro-unit Adamic-Adar score. A repeated edge would inflate degrees
+    * and wedge counts. */
+  def adamicAdar(edges: DataFrame, maxApexDeg: Int = 64): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     // materialized ONCE: the plan consumes the edge relation four ways
     // (apex degrees, both wedge sides, the non-adjacency anti-join) — the
     // unchecked form recomputed the fact join per consumer (PlanAudit
     // showed scans=6); released at the harness's between-queries drain.
-    // edgesDistinct skips re-distincting an aggregate-output relation.
-    val dedup = if (edgesDistinct) edges.select(col("src"), col("dst"))
-                else edges.select(col("src"), col("dst")).distinct()
-    val adj = graft.Checkpoints.track(dedup.localCheckpoint(true))
+    val adj = graft.Checkpoints.track(edges.select(col("src"), col("dst")).localCheckpoint(true))
     val wtab = weightTable(maxApexDeg).toDF("deg", "w_micro")
     // per-node degree; apexes filtered to the weighted band before the
     // wedge join, so the C(deg,2) blow-up never materializes for hubs
@@ -85,8 +82,7 @@ object LinkPrediction {
     * sharing repeat customers) — co-behavior affinity. */
   def graphAdamicAdar(spark: SparkSession, dir: String,
                       minW: Int = 3, maxApexDeg: Int = 64): DataFrame =
-    adamicAdar(PageRank.bipartiteEdges(spark, dir).filter(col("w") >= minW), maxApexDeg,
-      edgesDistinct = true)
+    adamicAdar(PageRank.bipartiteEdges(spark, dir).filter(col("w") >= minW), maxApexDeg)
       // long ids inside (pair canonicalization u<v is NUMERIC, mirrored by
       // the oracle); names formatted on the result rows only
       .select(PageRank.nodeName(col("u")).as("u"), PageRank.nodeName(col("v")).as("v"),

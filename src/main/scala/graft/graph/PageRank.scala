@@ -30,11 +30,11 @@ import graft.Tables
   * the edge relation joined with its out-weights is materialized ONCE
   * (`localCheckpoint`) and re-used every round; each round is exactly one
   * materialization (rank join → dst-aggregate → left join back to nodes),
-  * and the previous round's checkpoint blocks are released eagerly. The
-  * rank join shuffles on `src` each round — at 100 TB the edge side rides
-  * a bucketed-by-src layout so only the (|V|-row) rank frame moves, the
-  * same cutover argument as `Dedup.BucketedEdgeCutover`. Iteration count
-  * is a fixed small K (power iteration at damping 0.85 contracts by
+  * and the previous round's checkpoint blocks are released eagerly. At or
+  * below the one broadcast cutover ([[Tables.broadcastUpTo]], on |V|) the
+  * rank frame rides a broadcast into the edge join, so the edge relation
+  * moves zero bytes per round; above it the join is shuffled. Iteration
+  * count is a fixed small K (power iteration at damping 0.85 contracts by
   * 0.85^K; K=5 ranks keywords stably), so lineage stays bounded.
   */
 object PageRank {
@@ -42,16 +42,6 @@ object PageRank {
   /** Default rank mass: 1e9 micro-units. Bounded so `rank · w` stays in
     * Long for any edge weight up to ~9e9 (guarded in [[ranks]]). */
   val Scale: Long = 1000000000L
-
-  /** Node-count cutover below which each round BROADCASTS the |V|-row rank
-    * frame into the edge join instead of shuffling the edge relation: a
-    * 2M-row (node, rank) relation is ~100 MB hashed — comfortably inside
-    * executor memory — and the edge side (the corpus-scale operand) then
-    * moves ZERO bytes per round. Above the cutover the join reverts to the
-    * shuffled shape whose at-scale fix is the bucketed-by-src edge layout
-    * (`Dedup.BucketedEdgeCutover`'s argument). Decided FROM THE DATA (the
-    * iteration counts |V| anyway), like `Dedup.connectedComponents`. */
-  val BroadcastRanksCutover: Long = 1L << 21
 
   /** Power-iterate ranks over weighted directed `edges` (columns `src`,
     * `dst`, `w: Long`; parallel edges must be pre-aggregated). Returns
@@ -72,15 +62,14 @@ object PageRank {
     // empty-graph require and the overflow guard can all throw, and the
     // happy-path releases alone leaked e0/ej/nodes on those paths.
     val ej = try {
-      // |E| measured on the materialized blocks (one cache-scan job): below
-      // the cutover the |srcs|-row wout relation rides a broadcast into the
-      // ej join, so the edge side is never exchanged — the same argument as
-      // the per-round rank broadcast below (wout rows ≤ |E| ≤ cutover).
-      val smallE = e0.count() <= BroadcastRanksCutover
+      // |E| measured on the materialized blocks (one cache-scan job): at or
+      // below the cutover the |srcs|-row wout relation rides a broadcast
+      // into the ej join, so the edge side is never exchanged — the same
+      // argument as the per-round rank broadcast below (wout rows ≤ |E|).
+      val bcast = Tables.broadcastUpTo(e0.count())
       val wout = e0.groupBy(col("src")).agg(sum(col("w")).as("wout"))
       // iteration-invariant: materialize once, reuse every round
-      e0.join(if (smallE) broadcast(wout) else wout, "src")
-        .localCheckpoint(true)
+      e0.join(bcast(wout), "src").localCheckpoint(true)
     } finally graft.Checkpoints.release(e0)
     try {
       ranksFromEj(ej, iterations, scale)
@@ -110,10 +99,10 @@ object PageRank {
     require(maxW <= Long.MaxValue / scale,
       s"edge weight $maxW overflows rank*w at scale $scale")
     val teleport = (15L * scale) / (100L * n)
-    // |V| is measured: below the cutover every round's rank frame rides a
-    // broadcast and the (checkpointed) edge relation is never re-exchanged
-    val bcast: DataFrame => DataFrame =
-      if (n <= BroadcastRanksCutover) broadcast _ else identity _
+    // |V| is measured: at or below the cutover every round's rank frame
+    // rides a broadcast and the (checkpointed) edge relation is never
+    // re-exchanged
+    val bcast = Tables.broadcastUpTo(n)
     var ranks = nodes.select(col("node"), lit(scale / n).as("rank"))
       .localCheckpoint(true)
     for (i <- 1 to iterations) {

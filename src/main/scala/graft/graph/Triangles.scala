@@ -36,30 +36,29 @@ object Triangles {
     val deg = und.select(col("a").as("node"))
       .unionAll(und.select(col("b").as("node")))
       .groupBy(col("node")).agg(cnt.as("deg"))
-    // orient toward the higher (deg, node): u -> v iff (deg_u, u) < (deg_v, v)
-    val oriented = und
-      .join(deg.select(col("node").as("a"), col("deg").as("da")), "a")
-      .join(deg.select(col("node").as("b"), col("deg").as("db")), "b")
-      .select(
-        when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
-          struct(col("a").as("u"), col("b").as("v")))
-          .otherwise(struct(col("b").as("u"), col("a").as("v"))).as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"))
-      .localCheckpoint(true)
-    // wedges at their apex (the triangle's lowest-ordered vertex), the
-    // neighbor pair canonicalized by string order so it matches und's (a, b)
-    val wedges = oriented.select(col("u"), col("v").as("v1"))
-      .join(oriented.select(col("u"), col("v").as("v2")), "u")
-      .filter(col("v1") < col("v2"))
-    // a wedge closes iff the undirected edge {v1, v2} exists
-    val closed = wedges.join(
-      und.select(col("a").as("v1"), col("b").as("v2")), Seq("v1", "v2"))
-    val nTri = closed.agg(cnt.as("n")).head.getLong(0)
-    val nEdges = und.count()
-    val nNodes = deg.count()
+    val (nNodes, nEdges, nTri) = try {
+      // orient toward the higher (deg, node): u -> v iff (deg_u, u) < (deg_v, v)
+      val oriented = und
+        .join(deg.select(col("node").as("a"), col("deg").as("da")), "a")
+        .join(deg.select(col("node").as("b"), col("deg").as("db")), "b")
+        .select(
+          when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
+            struct(col("a").as("u"), col("b").as("v")))
+            .otherwise(struct(col("b").as("u"), col("a").as("v"))).as("e"))
+        .select(col("e.u").as("u"), col("e.v").as("v"))
+        .localCheckpoint(true)
+      // wedges at their apex (the triangle's lowest-ordered vertex), the
+      // neighbor pair canonicalized by string order so it matches und's (a, b)
+      val wedges = oriented.select(col("u"), col("v").as("v1"))
+        .join(oriented.select(col("u"), col("v").as("v2")), "u")
+        .filter(col("v1") < col("v2"))
+      // a wedge closes iff the undirected edge {v1, v2} exists
+      val closed = wedges.join(
+        und.select(col("a").as("v1"), col("b").as("v2")), Seq("v1", "v2"))
+      try (deg.count(), und.count(), closed.agg(cnt.as("n")).head.getLong(0))
+      finally graft.Checkpoints.release(oriented)
+    } finally graft.Checkpoints.release(und)
     val spark = edges.sparkSession
-    graft.Checkpoints.release(und)
-    graft.Checkpoints.release(oriented)
     import spark.implicits._
     Seq((nNodes, nEdges, nTri)).toDF("n_nodes", "n_edges", "n_triangles")
   }

@@ -46,24 +46,23 @@ object KCenter {
     var cur = vecs.filter(col("vec_id") =!= seedId)
       .withColumn("mc", graft.functions.VecOps.cosine6Col(col("emb"), typedlit(seedEmb)))
       .localCheckpoint(true)
-    var r = 2
-    while (r <= k) {
-      // bounded: ONE argmin row to the driver per round
-      val pick = cur.orderBy(col("mc"), col("vec_id")).limit(1).head()
-      val pickId = pick.getLong(0)
-      val pickEmb = pick.getSeq[Double](1).toArray
-      picks += ((r, pickId, Some(pick.getDouble(2))))
-      if (r < k) {
-        val next = cur.filter(col("vec_id") =!= pickId)
-          .withColumn("mc", greatest(col("mc"),
-            graft.functions.VecOps.cosine6Col(col("emb"), typedlit(pickEmb))))
-          .localCheckpoint(true)
-        graft.Checkpoints.release(cur)
-        cur = next
+    try {
+      for (r <- 2 to k) {
+        // bounded: ONE argmin row to the driver per round
+        val pick = cur.orderBy(col("mc"), col("vec_id")).limit(1).head()
+        val pickId = pick.getLong(0)
+        val pickEmb = pick.getSeq[Double](1).toArray
+        picks += ((r, pickId, Some(pick.getDouble(2))))
+        if (r < k) {
+          val next = cur.filter(col("vec_id") =!= pickId)
+            .withColumn("mc", greatest(col("mc"),
+              graft.functions.VecOps.cosine6Col(col("emb"), typedlit(pickEmb))))
+            .localCheckpoint(true)
+          graft.Checkpoints.release(cur)
+          cur = next
+        }
       }
-      r += 1
-    }
-    graft.Checkpoints.release(cur)
+    } finally graft.Checkpoints.release(cur)
     picks.toSeq.toDF("sel_rank", "vec_id", "max_cos")
       .select(col("sel_rank").cast("int"), col("vec_id"), col("max_cos"))
   }

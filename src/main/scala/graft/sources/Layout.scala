@@ -17,9 +17,8 @@ import org.apache.spark.sql.functions.{col, lit, shiftleft, shiftrightunsigned}
   * measured directly by LayoutSpec via filesystem byte statistics.
   *
   * This is the same at-rest argument as the IVF index's `partitionBy
-  * (list_id)` (prune by list) and the bucketed CC edge table (pre-placed
-  * join) — here applied to the general "big fact table scanned by range
-  * predicates" case, e.g. event time. At scale the sort is a one-time
+  * (list_id)` (prune by list) — here applied to the general "big fact
+  * table scanned by range predicates" case, e.g. event time. At scale the sort is a one-time
   * write-amplification cost paid once per ingest batch, amortized over
   * every subsequent scan. */
 object Layout {
@@ -130,8 +129,7 @@ object Layout {
     * catalog records the layout. Two tables bucketed the same way on their
     * join key then sort-merge join with ZERO exchange on either side — the
     * repeated-join shuffle is paid once at ingest instead of per query.
-    * This is the at-rest form of the co-located fact-fact join (the same
-    * argument as the CC engine's bucketed edge table, generalized): at
+    * This is the at-rest form of the co-located fact-fact join: at
     * 100 TB, orders⋈lineitem on orderkey is THE recurring join, and
     * bucketing both sides makes every instance of it exchange-free. */
   def bucketedWrite(df: DataFrame, table: String, path: String,

@@ -45,6 +45,31 @@ class CheckpointsSpec extends AnyFunSuite {
     }
   }
 
+  test("checkpointCounting: the changed-row count of the checkpointed blocks, 0 iff none") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    for (seed <- 1 to 4) {
+      val rnd = new scala.util.Random(seed)
+      // seed 4 changes nothing: the zero must come back as an exact 0
+      val rows = Seq.fill(1 + rnd.nextInt(200)) {
+        val label = rnd.nextInt(50).toLong
+        (label, if (seed == 4) label else rnd.nextInt(50).toLong)
+      }
+      val df = rows.toDF("label", "prev").repartition(1 + rnd.nextInt(5))
+      val changed = col("label") =!= col("prev")
+      val (chk, n) = Checkpoints.checkpointCounting(df, changed)
+      try {
+        assert(n == df.filter(changed).count(), s"seed $seed")
+        assert(n == chk.filter(changed).count(), s"seed $seed")
+        assert((n == 0L) == chk.filter(changed).isEmpty, s"seed $seed")
+        assert(chk.count() == rows.size.toLong, s"seed $seed")
+      } finally Checkpoints.release(chk)
+    }
+    val (empty, n) = Checkpoints.checkpointCounting(spark.range(0).toDF("id"), col("id") > 0)
+    Checkpoints.release(empty)
+    assert(n == 0L)
+  }
+
   test("release takes exactly one checkpoint leaf and frees its blocks") {
     val sc = spark.sparkContext
     val chk = spark.range(16).toDF("id").localCheckpoint(true)

@@ -157,52 +157,6 @@ class DedupSpec extends AnyFunSuite {
     assert(got.size == 301)
   }
 
-  test("connectedComponentsBucketed equals the plain variant on a random graph") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(41)
-    val n = 150
-    val edges = Seq.fill(120)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-      .filter(e => e._1 != e._2)
-    val nodes = (0L until n.toLong).toDF("node")
-    val plain = Dedup.connectedComponents(edges.toDF("d1", "d2"), nodes)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // cutover 0 forces the bucketed branch
-    val bucketed = Dedup.connectedComponents(edges.toDF("d1", "d2"), nodes, cutover = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(bucketed == plain)
-    // the working table was dropped on exit
-    assert(!spark.catalog.listTables().collect().exists(_.name.startsWith("graft_cc_edges_")))
-  }
-
-  test("bucketed edges: per-round neighbor join plans no Exchange on the edge side") {
-    import spark.implicits._
-    val table = "cc_edges_planspec"
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val edges = (0L until 64L).map(i => (i, (i + 1) % 64)).toDF("d1", "d2")
-    // same write shape as connectedComponents' bucketed branch: one file per bucket,
-    // bucket-sorted by the join key
-    edges.select(col("d1").as("src"), col("d2").as("dst"))
-      .unionAll(edges.select(col("d2").as("src"), col("d1").as("dst")))
-      .repartition(8, col("src"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .bucketBy(8, "src").sortBy("src").saveAsTable(table)
-    try {
-      val sym = spark.table(table)
-      val labels = sym.select(col("src").as("node")).distinct()
-        .select(col("node"), col("node").as("label")).localCheckpoint(true)
-      val joined = Dedup.neighborJoin(sym, labels, mergeHint = true)
-      joined.collect() // finalize the AQE plan of THIS dataset
-      // AQE plan toString prints Final + Initial sections; assert on Final only
-      val plan = joined.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==")(0)
-      assert(plan.contains("SelectedBucketsCount"),
-        s"edge side must be a bucketed scan:\n$plan")
-      val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
-      assert(exchanges == 1,
-        s"want exactly one shuffle (labels side), got $exchanges:\n$plan")
-    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
-  }
-
   test("nearDupComponents: canonical ids are component minima, keep iff canonical") {
     val rows = Dedup.nearDupComponents(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))

@@ -37,6 +37,19 @@ class KCoreSpec extends AnyFunSuite {
     assert(got == Map("a" -> 2L, "b" -> 2L, "c" -> 2L))
   }
 
+  test("a peel that overruns maxRounds throws and leaves nothing pinned after the drain") {
+    import spark.implicits._
+    val und = Seq(("a", "b"), ("b", "c"), ("a", "c"), ("a", "d"))
+    val sym = (und ++ und.map(_.swap)).toDF("src", "dst")
+    graft.Checkpoints.releaseTracked()
+    val held = spark.sparkContext.getPersistentRDDs.keySet
+    // round 1 peels the pendant, so the fixpoint needs a second round
+    intercept[IllegalArgumentException](KCore.kcore(sym, 2, maxRounds = 1))
+    graft.Checkpoints.releaseTracked()
+    val left = spark.sparkContext.getPersistentRDDs -- held
+    assert(left.isEmpty, s"kcore left ${left.size} persisted RDDs")
+  }
+
   test("graph_kcore == driver-local reference peel; min-degree and maximality hold") {
     // format long ids to names up front — the peel is representation-
     // independent, so the string reference pins the formatted engine output

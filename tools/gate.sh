@@ -28,6 +28,16 @@ SPARK_HOME=/opt/spark SPARK_SCALA_VERSION=2.13 \
   SPARK_DRIVER_MEM=4g sbt -batch "runMain graft.tools.ClusterSmoke /root/testdata/sf0.001" 2>&1 \
   | grep '\[clustersmoke\] total'
 echo "[gate] local-cluster smoke ok"
+# Targeted chaos step over the iterative operators' queries (connected
+# components, BFS, k-core, PageRank/TextRank): their pinned frames and their
+# retry-safe convergence counts, fault-free on local[8] vs under injected
+# task deaths on local-cluster[2,2,2048]; results must hash equal. ChaosSweep
+# exits nonzero on any mismatch or when nothing was injected.
+SPARK_HOME=/opt/spark SPARK_SCALA_VERSION=2.13 \
+  SPARK_DRIVER_MEM=4g sbt -batch "runMain graft.tools.ChaosSweep /root/testdata/sf0.001 12 - - \
+dedup_components,dedup_lsh_components,dedup_lsh_components_prod,graph_bfs,graph_kcore,graph_pagerank,text_textrank" \
+  2>&1 | grep -E '\[chaossweep\] (FAIL|total)'
+echo "[gate] iterative-operator chaos ok"
 # Benchmark smokes: one short perfbench run per workload (the full-result
 # timing path, see BENCHMARK.json) must time every workload query with no
 # failure and match each query's committed digest. The serial run is one
