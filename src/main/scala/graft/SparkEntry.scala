@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.OracleSql._
 import graft.relational.RelationalQueries
 import graft.mr.{MrJob, MrQueries, WordCount}
 import graft.kv.OpLog
@@ -579,19 +580,91 @@ object SparkEntry {
     }),
   )
 
-  // Shared SQL fragments for the oracle side.
-  private val tokEx = "string_split_regex(text, '[^\\p{L}]+')"
-  /** FNV-1a 32-bit of an ASCII VARCHAR column, masked to 31 bits — the
-    * DuckDB re-derivation of [[graft.functions.Fnv32]] (mod-2^32 wraparound
-    * in HUGEINT, xor on the low byte since ASCII < 128). */
-  private def fnvFull(s: String) =
-    s"""CAST(list_reduce(list_prepend(CAST(2166136261 AS HUGEINT),
-        list_transform(range(1, length($s) + 1), i -> CAST(ascii(($s)[i]) AS HUGEINT))),
-        (h, c) -> ((h - h % 256 + CAST(xor(CAST(h % 256 AS BIGINT), CAST(c AS BIGINT)) AS HUGEINT)) * 16777619)
-          % CAST(4294967296 AS HUGEINT)) % CAST(2147483648 AS HUGEINT) AS INT)"""
-  /** [[fnvFull]] mod 100 — the sampling bucket. */
-  private def fnvBucket(s: String) = s"(${fnvFull(s)} % 100)"
-  private def toks(src: String) = s"list_filter(string_split_regex($src, '[^\\p{L}]+'), x -> x <> '')"
+  /** The first 8 vectors as top-k queries, the sim_topk_* engine default. */
+  private val truthQueries = "SELECT vec_id AS query_id, label, emb AS qe FROM e WHERE vec_id < 8"
+  /** Exact all-pairs top-10 of [[truthQueries]]: the truth every exact
+    * top-k search (brute, pruned IVF, SQ8 rescan, stored and upserted
+    * index) must reproduce. */
+  private val bruteTopK = topKTruth(truthQueries, "v.vec_id <> query_id", 10)
+  /** Token-jaccard operands — distinct (doc, lang, source, word) rows `w`,
+    * each doc's word-set size `sz` — and the shared-word `pairs` (`d1`,
+    * `d2`, count `c`) of the same lang and source that `pairPred` admits
+    * over word rows `x`, `y`. */
+  private def jaccardCtes(pairPred: String) =
+    s"""w AS (SELECT DISTINCT doc_id, lang, source, word FROM
+       |    (SELECT doc_id, lang, source, unnest(${tokens("text")}) AS word FROM documents)),
+       |  sz AS (SELECT doc_id, COUNT(*) AS n FROM w GROUP BY doc_id),
+       |  pairs AS (SELECT x.doc_id AS d1, y.doc_id AS d2, COUNT(*) AS c FROM w x JOIN w y
+       |    ON x.lang = y.lang AND x.source = y.source AND x.word = y.word AND $pairPred
+       |    GROUP BY 1, 2)""".stripMargin
+  /** Jaccard of a [[jaccardCtes]] pair over its `sz` rows `s1`, `s2`. */
+  private val jaccard = "CAST(c AS DOUBLE) / (s1.n + s2.n - c)"
+  /** The dedup_components truth as CTEs ending in `cc` (`node`, `label`):
+    * min-label components of the jaccard ≥ 0.8 ∪ exact-text edges, as a
+    * recursive CTE (the query needs `WITH RECURSIVE`). */
+  private val componentsCtes =
+    s"""${jaccardCtes("x.doc_id < y.doc_id")},
+       |  jpairs AS (SELECT d1, d2 FROM pairs JOIN sz s1 ON d1 = s1.doc_id JOIN sz s2 ON d2 = s2.doc_id
+       |    WHERE $jaccard >= 0.8),
+       |  ex AS (SELECT x.doc_id AS d1, y.doc_id AS d2 FROM documents x JOIN documents y
+       |    ON x.text = y.text AND x.doc_id < y.doc_id),
+       |  e0 AS (SELECT d1, d2 FROM jpairs UNION SELECT d1, d2 FROM ex),
+       |  edges AS (SELECT d1 AS src, d2 AS dst FROM e0 UNION SELECT d2 AS src, d1 AS dst FROM e0),
+       |  cc AS (SELECT doc_id AS node, doc_id AS label FROM documents
+       |    UNION SELECT e.dst AS node, cc.label FROM cc JOIN edges e ON cc.node = e.src)""".stripMargin
+  /** Stopword-language scores `s_de` … `s_zh` per doc as CTE `s` (with
+    * `lang_declared`), over lowered tokens. */
+  private val langScoresCtes =
+    s"""t AS (SELECT doc_id, lang, ${tokens("lower(text)")} AS tk FROM documents),
+       |  s AS (SELECT doc_id, lang AS lang_declared,
+       |    CAST(len(list_filter(tk, x -> x IN ('der','und','die','das'))) AS BIGINT) AS s_de,
+       |    CAST(len(list_filter(tk, x -> x IN ('the','a','of','and'))) AS BIGINT) AS s_en,
+       |    CAST(len(list_filter(tk, x -> x IN ('el','la','los','de'))) AS BIGINT) AS s_es,
+       |    CAST(len(list_filter(tk, x -> x IN ('le','les','une','est'))) AS BIGINT) AS s_fr,
+       |    CAST(len(list_filter(tk, x -> x IN ('zh'))) AS BIGINT) AS s_zh
+       |    FROM t)""".stripMargin
+  /** The predicted language over [[langScoresCtes]]: highest score, ties to
+    * the earlier of de, en, es, fr, zh. */
+  private val langPred =
+    """CASE WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr AND s_de >= s_zh THEN 'de'
+      |  WHEN s_en >= s_es AND s_en >= s_fr AND s_en >= s_zh THEN 'en'
+      |  WHEN s_es >= s_fr AND s_es >= s_zh THEN 'es'
+      |  WHEN s_fr >= s_zh THEN 'fr'
+      |  ELSE 'zh' END""".stripMargin
+  /** Token, stopword and distinct-token counts per doc as CTE `s`. */
+  private val qualityCountsCtes =
+    s"""t AS (SELECT doc_id, ${tokens("text")} AS tk FROM documents),
+       |  s AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_tokens,
+       |    CAST(len(list_filter(tk, x -> x IN ('the','a','of','and','to','in','is'))) AS BIGINT) AS n_stop,
+       |    CAST(len(list_distinct(tk)) AS BIGINT) AS n_distinct FROM t)""".stripMargin
+  /** The text_quality score over [[qualityCountsCtes]]. */
+  private val qualityScore =
+    """(CASE WHEN n_tokens < 10 THEN 0.0 ELSE 1.0 END) *
+      |  (0.5 * (CASE WHEN CAST(n_stop AS DOUBLE) / n_tokens > 0.03 THEN 1.0
+      |               ELSE CAST(n_stop AS DOUBLE) / n_tokens * 10.0 END) +
+      |   0.5 * (CAST(n_distinct AS DOUBLE) / n_tokens))""".stripMargin
+  /** The UTF-8 bytes of `text` as an INT list, rebuilt from code points. */
+  private val utf8Bytes =
+    """flatten(list_transform(string_split(text, ''), c -> CASE
+      |  WHEN unicode(c) < 128 THEN [unicode(c)]
+      |  WHEN unicode(c) < 2048 THEN [192 + unicode(c) // 64, 128 + unicode(c) % 64]
+      |  WHEN unicode(c) < 65536 THEN [224 + unicode(c) // 4096, 128 + (unicode(c) // 64) % 64, 128 + unicode(c) % 64]
+      |  ELSE [240 + unicode(c) // 262144, 128 + (unicode(c) // 4096) % 64, 128 + (unicode(c) // 64) % 64, 128 + unicode(c) % 64]
+      |END))""".stripMargin
+  /** Each purchase with the latest earlier-or-tied view of its user: the
+    * as-of join truth of both the SQL and the operator form. */
+  private val asofTruth =
+    """WITH ev AS (SELECT user_id, epoch_ms(CAST(ts AS TIMESTAMP)) AS ms, event_id, event_type FROM events),
+      |  t AS (SELECT user_id, ms, 0 AS side, event_id FROM ev WHERE event_type = 'view'
+      |        UNION ALL
+      |        SELECT user_id, ms, 1 AS side, event_id FROM ev WHERE event_type = 'purchase'),
+      |  w AS (SELECT user_id, ms, side, event_id,
+      |          last_value(CASE WHEN side = 0 THEN event_id END IGNORE NULLS) OVER win AS last_view_id,
+      |          last_value(CASE WHEN side = 0 THEN ms END IGNORE NULLS) OVER win AS last_view_ms
+      |        FROM t WINDOW win AS (PARTITION BY user_id ORDER BY ms, side, event_id
+      |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
+      |SELECT user_id, event_id AS purchase_id, ms AS purchase_ms, last_view_id, last_view_ms
+      |FROM w WHERE side = 1""".stripMargin
   private val revenue =
     "CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE)"
 
@@ -717,30 +790,8 @@ object SparkEntry {
            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_idx FROM g)
          SELECT user_id, session_idx, COUNT(*) AS n_events, MIN(ms) AS start_ms, MAX(ms) AS end_ms
          FROM s GROUP BY user_id, session_idx""",
-    "q_asof_join" ->
-      """WITH ev AS (SELECT user_id, epoch_ms(CAST(ts AS TIMESTAMP)) AS ms, event_id, event_type FROM events),
-         t AS (SELECT user_id, ms, 0 AS side, event_id FROM ev WHERE event_type = 'view'
-               UNION ALL
-               SELECT user_id, ms, 1 AS side, event_id FROM ev WHERE event_type = 'purchase'),
-         w AS (SELECT user_id, ms, side, event_id,
-                 last_value(CASE WHEN side = 0 THEN event_id END IGNORE NULLS) OVER win AS last_view_id,
-                 last_value(CASE WHEN side = 0 THEN ms END IGNORE NULLS) OVER win AS last_view_ms
-               FROM t WINDOW win AS (PARTITION BY user_id ORDER BY ms, side, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-         SELECT user_id, event_id AS purchase_id, ms AS purchase_ms, last_view_id, last_view_ms
-         FROM w WHERE side = 1""",
-    "q_asof_operator" ->
-      """WITH ev AS (SELECT user_id, epoch_ms(CAST(ts AS TIMESTAMP)) AS ms, event_id, event_type FROM events),
-         t AS (SELECT user_id, ms, 0 AS side, event_id FROM ev WHERE event_type = 'view'
-               UNION ALL
-               SELECT user_id, ms, 1 AS side, event_id FROM ev WHERE event_type = 'purchase'),
-         w AS (SELECT user_id, ms, side, event_id,
-                 last_value(CASE WHEN side = 0 THEN event_id END IGNORE NULLS) OVER win AS last_view_id,
-                 last_value(CASE WHEN side = 0 THEN ms END IGNORE NULLS) OVER win AS last_view_ms
-               FROM t WINDOW win AS (PARTITION BY user_id ORDER BY ms, side, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-         SELECT user_id, event_id AS purchase_id, ms AS purchase_ms, last_view_id, last_view_ms
-         FROM w WHERE side = 1""",
+    "q_asof_join" -> asofTruth,
+    "q_asof_operator" -> asofTruth,
     "ev_approx_users" ->
       """SELECT event_type,
            COUNT(DISTINCT user_id) AS exact_users,
@@ -1046,7 +1097,7 @@ object SparkEntry {
       s"""WITH u AS (SELECT user_id,
               MAX(CASE WHEN event_type = 'purchase' AND value > 100 THEN 1 ELSE 0 END) AS converted
             FROM events GROUP BY 1),
-          t AS (SELECT ${fnvFull("CAST(user_id AS VARCHAR) || ':ab'")} % 2 AS arm,
+          t AS (SELECT ${fnv32("CAST(user_id AS VARCHAR) || ':ab'")} % 2 AS arm,
                   converted FROM u),
           arms AS (SELECT arm, COUNT(*) AS n, SUM(converted) AS conv FROM t GROUP BY 1),
           j AS (SELECT a.n AS n_a, b.n AS n_b, a.conv AS conv_a, b.conv AS conv_b
@@ -1256,8 +1307,8 @@ object SparkEntry {
             (SELECT COUNT(*) FROM sn WHERE k NOT IN (SELECT n_nationkey FROM nation))""",
     "sample_epochs" ->
       s"""WITH d AS (SELECT doc_id, source,
-            2 + ${fnvFull("source")} % 5 AS e2,
-            ${fnvFull("CAST(doc_id AS VARCHAR) || ':epoch'")} % 100 AS fate
+            2 + ${fnv32("source")} % 5 AS e2,
+            ${fnv32("CAST(doc_id AS VARCHAR) || ':epoch'")} % 100 AS fate
           FROM documents),
           n AS (SELECT doc_id, source,
             e2 // 2 + CASE WHEN e2 % 2 = 1 AND fate < 50 THEN 1 ELSE 0 END AS nc
@@ -1266,7 +1317,7 @@ object SparkEntry {
             CAST(unnest(generate_series(1, nc)) AS BIGINT) AS copy_idx
           FROM n""",
     "pack_greedy_bins" ->
-      s"""WITH t AS (SELECT doc_id, CAST(len(${toks("text")}) AS BIGINT) AS n
+      s"""WITH t AS (SELECT doc_id, CAST(len(${tokens("text")}) AS BIGINT) AS n
             FROM documents),
           c AS (SELECT doc_id, n, CAST(SUM(n) OVER (ORDER BY doc_id
               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
@@ -1357,10 +1408,10 @@ object SparkEntry {
          FROM events GROUP BY event_type""",
     "mr_wordcount" ->
       s"""SELECT word, COUNT(*) AS cnt FROM
-          (SELECT unnest($tokEx) AS word FROM documents) WHERE word <> '' GROUP BY word""",
+          (SELECT unnest(${tokens("text")}) AS word FROM documents) GROUP BY word""",
     "mr_inverted_index" ->
       s"""WITH t AS (SELECT DISTINCT word, CAST(doc_id AS VARCHAR) AS doc FROM
-           (SELECT doc_id, unnest($tokEx) AS word FROM documents) WHERE word <> '')
+           (SELECT doc_id, unnest(${tokens("text")}) AS word FROM documents))
           SELECT word, COUNT(*) AS n_docs, string_agg(doc, ',' ORDER BY doc) AS doc_list
           FROM t GROUP BY word""",
     "mr_sorted_concat" ->
@@ -1369,7 +1420,7 @@ object SparkEntry {
          FROM documents GROUP BY lang""",
     "mr_wc_typed" ->
       s"""SELECT word AS key, CAST(COUNT(*) AS VARCHAR) AS value FROM
-          (SELECT unnest($tokEx) AS word FROM documents) WHERE word <> '' GROUP BY word""",
+          (SELECT unnest(${tokens("text")}) AS word FROM documents) GROUP BY word""",
     "kv_append_fold" ->
       """WITH ops AS (SELECT CAST(user_id AS VARCHAR) AS key, epoch_ms(CAST(ts AS TIMESTAMP)) AS ts,
            event_id AS seq, CAST(event_id AS VARCHAR) AS value FROM events)
@@ -1432,7 +1483,7 @@ object SparkEntry {
            CASE WHEN user_id % 5 = 0 THEN 'violation' ELSE 'linearizable' END AS verdict
          FROM events GROUP BY user_id""",
     "text_token_stats" ->
-      s"""WITH t AS (SELECT doc_id, ${toks("text")} AS tk, length(text) AS text_len FROM documents)
+      s"""WITH t AS (SELECT doc_id, ${tokens("text")} AS tk, length(text) AS text_len FROM documents)
           SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_tokens,
             CAST(len(list_distinct(tk)) AS BIGINT) AS n_distinct,
             CAST(text_len AS BIGINT) AS n_chars,
@@ -1444,61 +1495,34 @@ object SparkEntry {
            CAST(len(regexp_extract_all(text, '''(s|t|re|ve|m|ll|d)| ?[\p{L}]+| ?[\p{N}]+| ?[^\s\p{L}\p{N}]+|\s+')) AS BIGINT) AS n_bpe_tokens
          FROM documents""",
     "text_quality" ->
-      s"""WITH t AS (SELECT doc_id, ${toks("text")} AS tk FROM documents),
-          s AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_tokens,
-            CAST(len(list_filter(tk, x -> x IN ('the','a','of','and','to','in','is'))) AS BIGINT) AS n_stop,
-            CAST(len(list_distinct(tk)) AS BIGINT) AS n_distinct FROM t)
+      s"""WITH $qualityCountsCtes
           SELECT doc_id, n_tokens,
             CAST(n_stop AS DOUBLE) / n_tokens AS stop_ratio,
             CAST(n_distinct AS DOUBLE) / n_tokens AS distinct_ratio,
-            (CASE WHEN n_tokens < 10 THEN 0.0 ELSE 1.0 END) *
-              (0.5 * (CASE WHEN CAST(n_stop AS DOUBLE) / n_tokens > 0.03 THEN 1.0
-                           ELSE CAST(n_stop AS DOUBLE) / n_tokens * 10.0 END) +
-               0.5 * (CAST(n_distinct AS DOUBLE) / n_tokens)) AS quality_score
+            $qualityScore AS quality_score
           FROM s""",
     "text_langid" ->
-      s"""WITH t AS (SELECT doc_id, lang, ${toks("lower(text)")} AS tk FROM documents),
-          s AS (SELECT doc_id, lang AS lang_declared,
-            CAST(len(list_filter(tk, x -> x IN ('der','und','die','das'))) AS BIGINT) AS s_de,
-            CAST(len(list_filter(tk, x -> x IN ('the','a','of','and'))) AS BIGINT) AS s_en,
-            CAST(len(list_filter(tk, x -> x IN ('el','la','los','de'))) AS BIGINT) AS s_es,
-            CAST(len(list_filter(tk, x -> x IN ('le','les','une','est'))) AS BIGINT) AS s_fr,
-            CAST(len(list_filter(tk, x -> x IN ('zh'))) AS BIGINT) AS s_zh
-            FROM t)
-          SELECT doc_id, lang_declared, s_de, s_en, s_es, s_fr, s_zh,
-            CASE WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr AND s_de >= s_zh THEN 'de'
-                 WHEN s_en >= s_es AND s_en >= s_fr AND s_en >= s_zh THEN 'en'
-                 WHEN s_es >= s_fr AND s_es >= s_zh THEN 'es'
-                 WHEN s_fr >= s_zh THEN 'fr'
-                 ELSE 'zh' END AS lang_pred
+      s"""WITH $langScoresCtes
+          SELECT doc_id, lang_declared, s_de, s_en, s_es, s_fr, s_zh, $langPred AS lang_pred
           FROM s""",
     "text_fingerprint" ->
-      s"""SELECT doc_id, md5(array_to_string(list_sort(list_distinct(${toks("lower(text)")})), ' ')) AS fp
+      s"""SELECT doc_id, md5(array_to_string(list_sort(list_distinct(${tokens("lower(text)")})), ' ')) AS fp
           FROM documents""",
     "text_gopher_filters" ->
-      s"""WITH t AS (SELECT doc_id, ${toks("text")} AS tk FROM documents),
-          g2 AS (SELECT doc_id, tk[i] || ' ' || tk[i+1] AS gram
-                 FROM t, unnest(generate_series(1, len(tk)-1)) AS u(i)),
-          g2c AS (SELECT doc_id, gram, COUNT(*) AS c FROM g2 GROUP BY 1, 2),
-          g2s AS (SELECT doc_id, MAX(c) AS g2_max, SUM(c) AS g2_n FROM g2c GROUP BY 1),
-          g3 AS (SELECT doc_id, tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] AS gram
-                 FROM t, unnest(generate_series(1, len(tk)-2)) AS u(i)),
-          g3c AS (SELECT doc_id, gram, COUNT(*) AS c FROM g3 GROUP BY 1, 2),
-          g3s AS (SELECT doc_id, SUM(c) AS g3_n, COUNT(*) AS g3_d FROM g3c GROUP BY 1),
+      s"""WITH t AS (SELECT doc_id, ${tokens("text")} AS tk FROM documents),
+          ${gramStatsCtes("t")},
           base AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_words,
-                 CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE) / len(tk) AS mean_word_len
+                 ${meanTokenLen("tk")} AS mean_word_len
                FROM t)
           SELECT b.doc_id, b.n_words, b.mean_word_len,
-            CAST(g2_max AS DOUBLE) / g2_n AS top_bigram_frac,
-            CAST(g3_n - g3_d AS DOUBLE) / g3_n AS dup_trigram_frac,
-            (b.n_words >= 30 AND b.mean_word_len >= 3.0 AND b.mean_word_len <= 10.0
-             AND CAST(g2_max AS DOUBLE) / g2_n <= 0.1
-             AND CAST(g3_n - g3_d AS DOUBLE) / g3_n <= 0.05) AS gopher_ok
+            $topBigramFrac AS top_bigram_frac,
+            $dupTrigramFrac AS dup_trigram_frac,
+            ${gopherOk("b.n_words", "b.mean_word_len", topBigramFrac, dupTrigramFrac)} AS gopher_ok
           FROM base b JOIN g2s USING (doc_id) JOIN g3s USING (doc_id)""",
     // wordlist filter: same token mechanics, same IEEE integer-ratio and
     // same scrub join — the verdict threshold compares the exact double
     "text_blocklist" ->
-      s"""WITH t AS (SELECT doc_id, ${toks("text")} AS tk FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${tokens("text")} AS tk FROM documents),
           s AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_tokens,
                   CAST(len(list_filter(tk, x -> x IN ('slow','big','bad'))) AS BIGINT) AS n_blocked,
                   array_to_string(list_filter(tk, x -> x NOT IN ('slow','big','bad')), ' ') AS scrubbed
@@ -1528,7 +1552,7 @@ object SparkEntry {
     // per-source profile: exact integer totals, interpolated quantiles
     // (the q_quantiles acceptance), IEEE divisions of exact ints
     "text_profile" ->
-      s"""WITH t AS (SELECT source, ${toks("text")} AS tk FROM documents),
+      s"""WITH t AS (SELECT source, ${tokens("text")} AS tk FROM documents),
           b AS (SELECT source, CAST(len(tk) AS BIGINT) AS n_tok, tk FROM t),
           s AS (SELECT source, COUNT(*) AS n_docs, CAST(SUM(n_tok) AS BIGINT) AS total_tokens,
                   quantile_cont(n_tok, 0.5) AS p50_tokens,
@@ -1550,8 +1574,8 @@ object SparkEntry {
     "text_bm25" -> TextAnalysis.bm25OracleSql(),
     "dedup_cross_source" -> Dedup.crossSourceOracleSql,
     "text_top_ngrams" ->
-      s"""WITH t AS (SELECT ${toks("text")} AS tk FROM documents),
-          g AS (SELECT tk[i] || ' ' || tk[i+1] AS gram
+      s"""WITH t AS (SELECT ${tokens("text")} AS tk FROM documents),
+          g AS (SELECT ${gram("tk", "i", 2)} AS gram
                 FROM t, unnest(generate_series(1, len(tk)-1)) AS u(i)
                 WHERE len(tk) >= 2)
           SELECT gram, CAST(COUNT(*) AS BIGINT) AS n FROM g
@@ -1623,10 +1647,8 @@ object SparkEntry {
     // train/eval decontamination re-derived on n-gram STRINGS (the engine
     // joins on their fnv64 hashes — equal counts absent a collision)
     "decontam_overlap" ->
-      s"""WITH t AS (SELECT doc_id, ${toks("lower(text)")} AS tk FROM documents),
-          s AS (SELECT doc_id, CASE WHEN len(tk) < 5 THEN [array_to_string(tk, ' ')]
-                 ELSE list_distinct(list_transform(generate_series(1, len(tk)-4),
-                   i -> tk[i]||' '||tk[i+1]||' '||tk[i+2]||' '||tk[i+3]||' '||tk[i+4])) END AS sh FROM t),
+      s"""WITH t AS (SELECT doc_id, ${tokens("lower(text)")} AS tk FROM documents),
+          s AS (SELECT doc_id, list_distinct(${shingles("tk", 5)}) AS sh FROM t),
           w AS (SELECT doc_id, unnest(sh) AS g FROM s),
           sz AS (SELECT doc_id, len(sh) AS n FROM s),
           p AS (SELECT tr.doc_id AS train_id, ev.doc_id AS eval_id, COUNT(*) AS c
@@ -1641,10 +1663,8 @@ object SparkEntry {
     // acceptance); the oracle's all-pairs gram join IS the completeness
     // proof for the engine's prefix-filtered candidates
     "dedup_containment" ->
-      s"""WITH t AS (SELECT doc_id, ${toks("lower(text)")} AS tk FROM documents),
-          s AS (SELECT doc_id, CASE WHEN len(tk) < 5 THEN [array_to_string(tk, ' ')]
-                 ELSE list_distinct(list_transform(generate_series(1, len(tk)-4),
-                   i -> tk[i]||' '||tk[i+1]||' '||tk[i+2]||' '||tk[i+3]||' '||tk[i+4])) END AS sh FROM t),
+      s"""WITH t AS (SELECT doc_id, ${tokens("lower(text)")} AS tk FROM documents),
+          s AS (SELECT doc_id, list_distinct(${shingles("tk", 5)}) AS sh FROM t),
           w AS (SELECT doc_id, unnest(sh) AS g FROM s),
           sz AS (SELECT doc_id, CAST(len(sh) AS BIGINT) AS n FROM s WHERE len(sh) > 0),
           p AS (SELECT a.doc_id AS d1, b.doc_id AS d2, CAST(COUNT(*) AS BIGINT) AS shared
@@ -1658,10 +1678,8 @@ object SparkEntry {
     // joins on 64-bit gram hashes — same count parity + collision
     // acceptance as decontam_overlap: per-doc gram sets are distinct)
     "dedup_span_overlap" ->
-      s"""WITH t AS (SELECT doc_id, ${toks("lower(text)")} AS tk FROM documents),
-          s AS (SELECT doc_id, CASE WHEN len(tk) < 5 THEN [array_to_string(tk, ' ')]
-                 ELSE list_distinct(list_transform(generate_series(1, len(tk)-4),
-                   i -> tk[i]||' '||tk[i+1]||' '||tk[i+2]||' '||tk[i+3]||' '||tk[i+4])) END AS sh FROM t),
+      s"""WITH t AS (SELECT doc_id, ${tokens("lower(text)")} AS tk FROM documents),
+          s AS (SELECT doc_id, list_distinct(${shingles("tk", 5)}) AS sh FROM t),
           w AS (SELECT doc_id, CAST(len(sh) AS BIGINT) AS n_grams, unnest(sh) AS g FROM s),
           d AS (SELECT g FROM w GROUP BY g HAVING COUNT(*) >= 2)
           SELECT w.doc_id, w.n_grams, COUNT(d.g) AS n_dup_grams,
@@ -1674,10 +1692,8 @@ object SparkEntry {
     // duplicated positions window-merged gaps-and-islands style with the
     // same gap-≤-w rule and end cap as the Spark plan
     "dedup_span_extents" ->
-      s"""WITH t AS (SELECT doc_id, ${toks("lower(text)")} AS tk FROM documents),
-          s AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS n, CASE WHEN len(tk) < 5 THEN [array_to_string(tk, ' ')]
-                 ELSE list_transform(generate_series(1, len(tk)-4),
-                   i -> tk[i]||' '||tk[i+1]||' '||tk[i+2]||' '||tk[i+3]||' '||tk[i+4]) END AS sh FROM t),
+      s"""WITH t AS (SELECT doc_id, ${tokens("lower(text)")} AS tk FROM documents),
+          s AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS n, ${shingles("tk", 5)} AS sh FROM t),
           o AS (SELECT doc_id, n, unnest(list_transform(generate_series(1, len(sh)),
                    i -> {'p': i - 1, 'g': sh[i]})) AS u FROM s),
           x AS (SELECT doc_id, n, CAST(u.p AS BIGINT) AS pos, u.g AS g FROM o),
@@ -1695,10 +1711,8 @@ object SparkEntry {
     // re-joined ORDER BY position; 0-token docs appended so both engines
     // emit every document
     "dedup_span_clean" ->
-      s"""WITH t AS (SELECT doc_id, ${toks("lower(text)")} AS tk FROM documents),
-          s AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS n, CASE WHEN len(tk) < 5 THEN [array_to_string(tk, ' ')]
-                 ELSE list_transform(generate_series(1, len(tk)-4),
-                   i -> tk[i]||' '||tk[i+1]||' '||tk[i+2]||' '||tk[i+3]||' '||tk[i+4]) END AS sh FROM t),
+      s"""WITH t AS (SELECT doc_id, ${tokens("lower(text)")} AS tk FROM documents),
+          s AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS n, ${shingles("tk", 5)} AS sh FROM t),
           o AS (SELECT doc_id, n, unnest(list_transform(generate_series(1, len(sh)),
                    i -> {'p': i - 1, 'g': sh[i]})) AS u FROM s),
           x AS (SELECT doc_id, n, CAST(u.p AS BIGINT) AS pos, u.g AS g FROM o),
@@ -1720,19 +1734,14 @@ object SparkEntry {
             COALESCE(string_agg(CASE WHEN NOT dup THEN w END, ' ' ORDER BY i), '') AS clean_text
           FROM m GROUP BY doc_id
           UNION ALL SELECT doc_id, CAST(0 AS BIGINT), CAST(0 AS BIGINT), '' FROM t WHERE len(tk) = 0""",
-    // per-source greedy near-dup rate: the token-jaccard pair CTE again
-    // (same arithmetic as dedup_token_jaccard's oracle), drop set = every
-    // d2 of a qualifying pair, aggregated per source
+    // per-source greedy near-dup rate: dedup_token_jaccard's pairs
+    // (jaccardCtes), drop set = every d2 of a qualifying pair, aggregated
+    // per source
     "dedup_source_rate" ->
-      s"""WITH w AS (SELECT DISTINCT doc_id, lang, source, word FROM
-            (SELECT doc_id, lang, source, unnest($tokEx) AS word FROM documents) WHERE word <> ''),
-          sz AS (SELECT doc_id, COUNT(*) AS n FROM w GROUP BY doc_id),
-          pairs AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS c FROM w a JOIN w b
-            ON a.lang = b.lang AND a.source = b.source AND a.word = b.word AND a.doc_id < b.doc_id
-            GROUP BY 1, 2),
+      s"""WITH ${jaccardCtes("x.doc_id < y.doc_id")},
           dropped AS (SELECT DISTINCT d2 AS doc_id FROM pairs
             JOIN sz s1 ON pairs.d1 = s1.doc_id JOIN sz s2 ON pairs.d2 = s2.doc_id
-            WHERE CAST(c AS DOUBLE) / (s1.n + s2.n - c) >= 0.8)
+            WHERE $jaccard >= 0.8)
           SELECT d.source, COUNT(*) AS n_docs,
             CAST(SUM(CASE WHEN dr.doc_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
             ROUND(CAST(SUM(CASE WHEN dr.doc_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*), 6) AS dup_rate
@@ -1741,17 +1750,11 @@ object SparkEntry {
     // the same jaccard arithmetic restricted to (base, delta) pairs —
     // delta = doc_id above the 80% watermark of the id range
     "dedup_incremental" ->
-      s"""WITH w AS (SELECT DISTINCT doc_id, lang, source, word FROM
-            (SELECT doc_id, lang, source, unnest($tokEx) AS word FROM documents) WHERE word <> ''),
-          sz AS (SELECT doc_id, COUNT(*) AS n FROM w GROUP BY doc_id),
-          cut AS (SELECT COALESCE(MAX(doc_id), 0) - COALESCE(MAX(doc_id), 0) // 5 AS c FROM documents),
-          pairs AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS c FROM w a JOIN w b
-            ON a.lang = b.lang AND a.source = b.source AND a.word = b.word
-            AND a.doc_id <= (SELECT c FROM cut) AND b.doc_id > (SELECT c FROM cut)
-            GROUP BY 1, 2)
-          SELECT d1, d2, CAST(c AS DOUBLE) / (s1.n + s2.n - c) AS jaccard
+      s"""WITH cut AS (SELECT COALESCE(MAX(doc_id), 0) - COALESCE(MAX(doc_id), 0) // 5 AS c FROM documents),
+          ${jaccardCtes("x.doc_id <= (SELECT c FROM cut) AND y.doc_id > (SELECT c FROM cut)")}
+          SELECT d1, d2, $jaccard AS jaccard
           FROM pairs JOIN sz s1 ON pairs.d1 = s1.doc_id JOIN sz s2 ON pairs.d2 = s2.doc_id
-          WHERE CAST(c AS DOUBLE) / (s1.n + s2.n - c) >= 0.8""",
+          WHERE $jaccard >= 0.8""",
     // TF-IDF re-derived end-to-end; ranking compares the ROUNDED score so
     // the one non-IEEE-exact op (ln, faithful to ~1 ulp in both engines)
     // cannot flip an order
@@ -1761,7 +1764,7 @@ object SparkEntry {
     // c1 cast to BIGINT so DuckDB's HUGEINT SUM widening stays out of the
     // double arithmetic
     "text_lm_quality" ->
-      s"""WITH t AS (SELECT doc_id, ${toks("lower(text)")} AS t FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${tokens("lower(text)")} AS t FROM documents),
           bi AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(t) - 1),
                    i -> {'w1': t[i], 'w2': t[i + 1]})) AS b
                  FROM t WHERE len(t) >= 2),
@@ -1778,7 +1781,7 @@ object SparkEntry {
                  s.n_bigrams, s.lm_score
           FROM t LEFT JOIN s ON t.doc_id = s.doc_id""",
     "text_tfidf_top" ->
-      s"""WITH t AS (SELECT doc_id, ${toks("lower(text)")} AS tk FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${tokens("lower(text)")} AS tk FROM documents),
           w AS (SELECT doc_id, unnest(tk) AS word FROM t),
           tf AS (SELECT doc_id, word, COUNT(*) AS tf FROM w GROUP BY 1, 2),
           df AS (SELECT word, COUNT(*) AS df FROM tf GROUP BY 1),
@@ -1793,32 +1796,23 @@ object SparkEntry {
     // all-pairs exact distinct-3-shingle jaccard — the quadratic ground
     // truth the LSH+verify pipeline must reproduce
     "dedup_minhash_lsh" ->
-      s"""WITH t AS (SELECT doc_id, ${toks("lower(text)")} AS tk FROM documents),
-          s AS (SELECT doc_id, CASE WHEN len(tk) < 3 THEN [array_to_string(tk, ' ')]
-                 ELSE list_distinct(list_transform(generate_series(1, len(tk)-2),
-                   i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) END AS sh FROM t),
+      s"""WITH t AS (SELECT doc_id, ${tokens("lower(text)")} AS tk FROM documents),
+          s AS (SELECT doc_id, list_distinct(${shingles("tk", 3)}) AS sh FROM t),
           w AS (SELECT doc_id, unnest(sh) AS shingle FROM s),
           sz AS (SELECT doc_id, len(sh) AS n FROM s),
           pairs AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS c FROM w a JOIN w b
             ON a.shingle = b.shingle AND a.doc_id < b.doc_id GROUP BY 1, 2)
-          SELECT d1, d2, CAST(c AS DOUBLE) / (s1.n + s2.n - c) AS jaccard
+          SELECT d1, d2, $jaccard AS jaccard
           FROM pairs JOIN sz s1 ON d1 = s1.doc_id JOIN sz s2 ON d2 = s2.doc_id
-          WHERE CAST(c AS DOUBLE) / (s1.n + s2.n - c) >= 0.8""",
-    // full independent recomputation of fnv64 + SimHash + pigeonhole in SQL:
-    // FNV-1a's 64-bit wraparound runs in HUGEINT mod 2^64, the xor touches
-    // only the low byte (tokens are ASCII letters, so c < 128), bit
-    // extraction is exact because powers of two are exact doubles. No cap
+          WHERE $jaccard >= 0.8""",
+    // full independent recomputation of fnv64 (OracleSql.fnv64) + SimHash
+    // + pigeonhole in SQL: bit extraction is exact because powers of two
+    // are exact doubles. No cap
     // term: dedup_dropped_buckets pins that no bucket overflows at this sf
     "dedup_simhash" ->
-      s"""WITH occ AS (SELECT doc_id, unnest(${toks("lower(text)")}) AS tok FROM documents),
+      s"""WITH occ AS (SELECT doc_id, unnest(${tokens("lower(text)")}) AS tok FROM documents),
           vocab AS (SELECT DISTINCT tok FROM occ),
-          hashed AS (SELECT tok,
-              list_reduce(
-                list_prepend(CAST(14695981039346656037 AS HUGEINT),
-                  list_transform(range(1, length(tok) + 1), i -> CAST(ascii(tok[i]) AS HUGEINT))),
-                (h, c) -> ((h - h % 256 + CAST(xor(CAST(h % 256 AS BIGINT), CAST(c AS BIGINT)) AS HUGEINT))
-                           * 1099511628211) % CAST(18446744073709551616 AS HUGEINT)) AS h
-            FROM vocab),
+          hashed AS (SELECT tok, ${fnv64("tok")} AS h FROM vocab),
           bits AS (SELECT o.doc_id, b.b,
               SUM(CASE WHEN (h.h // CAST(power(2, b.b) AS HUGEINT)) % 2 = 1 THEN 1 ELSE -1 END) AS acc
             FROM occ o JOIN hashed h USING (tok)
@@ -1837,20 +1831,14 @@ object SparkEntry {
             GROUP BY d1, d2)
           SELECT d1, d2, CAST(hamming AS INT) AS hamming FROM ham WHERE hamming <= 3""",
     // full winnowing recomputation: 5-token shingles of the lowered token
-    // stream, fnv64 in HUGEINT (same arithmetic as dedup_simhash's oracle),
+    // stream, hashed with OracleSql.fnv64 (as dedup_simhash's oracle),
     // keep h % 4 == 0, distinct per doc, pairs sharing >= 2 fingerprints
     "dedup_fp_overlap" ->
-      s"""WITH t AS (SELECT doc_id, ${toks("lower(text)")} AS tk FROM documents),
-          sh AS (SELECT doc_id, tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' || tk[i+4] AS shingle
+      s"""WITH t AS (SELECT doc_id, ${tokens("lower(text)")} AS tk FROM documents),
+          sh AS (SELECT doc_id, ${gram("tk", "i", 5)} AS shingle
                  FROM t, unnest(generate_series(1, len(tk) - 4)) AS u(i)),
           vocab AS (SELECT DISTINCT shingle FROM sh),
-          hashed AS (SELECT shingle,
-              list_reduce(
-                list_prepend(CAST(14695981039346656037 AS HUGEINT),
-                  list_transform(range(1, length(shingle) + 1), i -> CAST(ascii(shingle[i]) AS HUGEINT))),
-                (h, c) -> ((h - h % 256 + CAST(xor(CAST(h % 256 AS BIGINT), CAST(c AS BIGINT)) AS HUGEINT))
-                           * 1099511628211) % CAST(18446744073709551616 AS HUGEINT)) AS h
-            FROM vocab),
+          hashed AS (SELECT shingle, ${fnv64("shingle")} AS h FROM vocab),
           fp AS (SELECT DISTINCT sh.doc_id, hashed.h
                  FROM sh JOIN hashed USING (shingle) WHERE hashed.h % 4 = 0),
           pairs AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS n_shared
@@ -1862,23 +1850,7 @@ object SparkEntry {
     // min-label connectivity as a recursive CTE — grounds the iterative
     // Spark propagation in DuckDB's fixpoint semantics
     "dedup_components" ->
-      s"""WITH RECURSIVE
-          w AS (SELECT DISTINCT doc_id, lang, source, word FROM
-            (SELECT doc_id, lang, source, unnest($tokEx) AS word FROM documents) WHERE word <> ''),
-          sz AS (SELECT doc_id, COUNT(*) AS n FROM w GROUP BY doc_id),
-          jp AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS c FROM w a JOIN w b
-            ON a.lang = b.lang AND a.source = b.source AND a.word = b.word AND a.doc_id < b.doc_id
-            GROUP BY 1, 2),
-          jpairs AS (SELECT d1, d2 FROM jp JOIN sz s1 ON d1 = s1.doc_id JOIN sz s2 ON d2 = s2.doc_id
-            WHERE CAST(c AS DOUBLE) / (s1.n + s2.n - c) >= 0.8),
-          ex AS (SELECT a.doc_id AS d1, b.doc_id AS d2 FROM documents a JOIN documents b
-            ON a.text = b.text AND a.doc_id < b.doc_id),
-          e0 AS (SELECT d1, d2 FROM jpairs UNION SELECT d1, d2 FROM ex),
-          edges AS (SELECT d1 AS src, d2 AS dst FROM e0 UNION SELECT d2 AS src, d1 AS dst FROM e0),
-          cc AS (
-            SELECT doc_id AS node, doc_id AS label FROM documents
-            UNION
-            SELECT e.dst AS node, cc.label FROM cc JOIN edges e ON cc.node = e.src)
+      s"""WITH RECURSIVE $componentsCtes
           SELECT node AS doc_id, MIN(label) AS canonical_id, (node = MIN(label)) AS keep
           FROM cc GROUP BY node""",
     // the caps lose nothing at this sf: the overflow-bucket report is empty,
@@ -1890,65 +1862,29 @@ object SparkEntry {
     // hyperplane-LSH pairs and tuning sweep: the oracle re-derives the
     // signatures from the SAME ±1 plane literals the engine projects onto
     // (interpolated from one Scala constant — zero duplication)
-    "dedup_lsh_pairs" -> graft.dedup.EmbeddingLsh.oraclePairsSql(
-      fnvFull("CAST(vec_id AS VARCHAR) || ':lshsweep'")),
+    "dedup_lsh_pairs" -> graft.dedup.EmbeddingLsh.oraclePairsSql,
     "dedup_lsh_pairs_prod" -> graft.dedup.EmbeddingLsh.oraclePairsProdSql,
-    "dedup_lsh_sweep" -> graft.dedup.EmbeddingLsh.oracleSweepSql(
-      fnvFull("CAST(vec_id AS VARCHAR) || ':lshsweep'")),
-    "dedup_lsh_components" -> graft.dedup.EmbeddingLsh.oracleDedupKeepSql(
-      fnvFull("CAST(vec_id AS VARCHAR) || ':lshsweep'")),
+    "dedup_lsh_sweep" -> graft.dedup.EmbeddingLsh.oracleSweepSql(),
+    "dedup_lsh_components" -> graft.dedup.EmbeddingLsh.oracleDedupKeepSql,
     "dedup_lsh_components_prod" -> graft.dedup.EmbeddingLsh.oracleDedupKeepProdSql,
-    // the funnel re-derived end-to-end: hygiene (wordlist + Gopher rules),
-    // dedup keep (recursive-CTE components over jaccard+exact edges),
-    // decontamination (5-gram strings vs the eval split), mixture (fnv
-    // bucket), and the packing arithmetic — every fragment is the same
-    // text as its standalone stage oracle
+    // the funnel re-derived end-to-end: hygiene (OracleSql.hygieneCte),
+    // dedup keep (componentsCtes, the dedup_components truth),
+    // decontamination (OracleSql.shingles 5-gram strings vs the eval
+    // split), mixture (OracleSql.fnv32 bucket), and the packing arithmetic
     "pipeline_training_set" ->
       s"""WITH RECURSIVE
-          t AS (SELECT doc_id, lang, source, text, ${toks("text")} AS tk FROM documents),
+          t AS (SELECT doc_id, lang, source, text, ${tokens("text")} AS tk FROM documents),
           b AS (SELECT doc_id, lang, source, text, tk, CAST(len(tk) AS BIGINT) AS n_tok FROM t),
-          g2 AS (SELECT doc_id, tk[i] || ' ' || tk[i+1] AS gram
-                 FROM b, unnest(generate_series(1, len(tk)-1)) AS u(i)),
-          g2c AS (SELECT doc_id, gram, COUNT(*) AS c FROM g2 GROUP BY 1, 2),
-          g2s AS (SELECT doc_id, MAX(c) AS g2_max, SUM(c) AS g2_n FROM g2c GROUP BY 1),
-          g3 AS (SELECT doc_id, tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] AS gram
-                 FROM b, unnest(generate_series(1, len(tk)-2)) AS u(i)),
-          g3c AS (SELECT doc_id, gram, COUNT(*) AS c FROM g3 GROUP BY 1, 2),
-          g3s AS (SELECT doc_id, SUM(c) AS g3_n, COUNT(*) AS g3_d FROM g3c GROUP BY 1),
-          hy AS (SELECT b.doc_id,
-                   (CAST(len(list_filter(tk, x -> x IN ('slow','big','bad'))) AS DOUBLE) / len(tk) <= 0.05
-                    AND b.n_tok >= 30
-                    AND CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE) / len(tk) >= 3.0
-                    AND CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE) / len(tk) <= 10.0
-                    AND CAST(g2_max AS DOUBLE) / g2_n <= 0.1
-                    AND CAST(g3_n - g3_d AS DOUBLE) / g3_n <= 0.05) AS ph
-                 FROM b LEFT JOIN g2s ON b.doc_id = g2s.doc_id
-                        LEFT JOIN g3s ON b.doc_id = g3s.doc_id),
-          w2 AS (SELECT DISTINCT doc_id, lang, source, word FROM
-            (SELECT doc_id, lang, source, unnest(tk) AS word FROM b) WHERE word <> ''),
-          sz AS (SELECT doc_id, COUNT(*) AS n FROM w2 GROUP BY doc_id),
-          jp AS (SELECT a.doc_id AS d1, b2.doc_id AS d2, COUNT(*) AS c FROM w2 a JOIN w2 b2
-            ON a.lang = b2.lang AND a.source = b2.source AND a.word = b2.word AND a.doc_id < b2.doc_id
-            GROUP BY 1, 2),
-          jpairs AS (SELECT d1, d2 FROM jp JOIN sz s1 ON d1 = s1.doc_id JOIN sz s2 ON d2 = s2.doc_id
-            WHERE CAST(c AS DOUBLE) / (s1.n + s2.n - c) >= 0.8),
-          ex AS (SELECT a.doc_id AS d1, b2.doc_id AS d2 FROM documents a JOIN documents b2
-            ON a.text = b2.text AND a.doc_id < b2.doc_id),
-          e0 AS (SELECT d1, d2 FROM jpairs UNION SELECT d1, d2 FROM ex),
-          edges AS (SELECT d1 AS src, d2 AS dst FROM e0 UNION SELECT d2 AS src, d1 AS dst FROM e0),
-          cc AS (
-            SELECT doc_id AS node, doc_id AS label FROM documents
-            UNION
-            SELECT e.dst AS node, cc.label FROM cc JOIN edges e ON cc.node = e.src),
+          ${gramStatsCtes("b")},
+          ${hygieneCte("b")},
+          $componentsCtes,
           keepd AS (SELECT node AS doc_id, (node = MIN(label)) AS kd FROM cc GROUP BY node),
-          lt AS (SELECT doc_id, ${toks("lower(text)")} AS ltk FROM documents),
-          shg AS (SELECT doc_id, CASE WHEN len(ltk) < 5 THEN [array_to_string(ltk, ' ')]
-                   ELSE list_distinct(list_transform(generate_series(1, len(ltk)-4),
-                     i -> ltk[i]||' '||ltk[i+1]||' '||ltk[i+2]||' '||ltk[i+3]||' '||ltk[i+4])) END AS s FROM lt),
+          lt AS (SELECT doc_id, ${tokens("lower(text)")} AS ltk FROM documents),
+          shg AS (SELECT doc_id, list_distinct(${shingles("ltk", 5)}) AS s FROM lt),
           wg AS (SELECT doc_id, unnest(s) AS g FROM shg),
           evg AS (SELECT DISTINCT g FROM wg WHERE doc_id % 50 = 0),
           cont AS (SELECT DISTINCT wg.doc_id FROM wg JOIN evg USING (g) WHERE wg.doc_id % 50 <> 0),
-          mx AS (SELECT doc_id, (${fnvBucket("CAST(doc_id AS VARCHAR)")} <
+          mx AS (SELECT doc_id, ((${fnv32("CAST(doc_id AS VARCHAR)")} % 100) <
                    CASE lang WHEN 'en' THEN 90 WHEN 'fr' THEN 75 WHEN 'de' THEN 50
                              WHEN 'es' THEN 25 WHEN 'zh' THEN 10 ELSE 0 END) AS pm FROM documents),
           flags AS (SELECT b.doc_id, b.n_tok,
@@ -1970,31 +1906,21 @@ object SparkEntry {
             kept_tokens, CAST((kept_tokens + 511) // 512 AS BIGINT) AS n_sequences
           FROM funnel""",
     "dedup_embedding" ->
-      """WITH e AS (SELECT label, vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-         p AS (SELECT a.vec_id AS d1, b.vec_id AS d2,
-                 ROUND(list_inner_product(a.emb, b.emb) /
-                   sqrt(list_inner_product(a.emb, a.emb) * list_inner_product(b.emb, b.emb)), 6) AS cosine
+      s"""WITH e AS (SELECT label, vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+         p AS (SELECT a.vec_id AS d1, b.vec_id AS d2, ${cosine6("a.emb", "b.emb")} AS cosine
                FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id)
          SELECT d1, d2, cosine FROM p WHERE cosine >= 0.35""",
     "dedup_semantic" -> graft.dedup.SemDedup.oracleSql(),
     "decontam_semantic" -> graft.dedup.SemDedup.decontamOracleSql(),
-    "sample_dsir" -> graft.sample.Dsir.oracleSql(s => fnvFull(s)),
+    "sample_dsir" -> graft.sample.Dsir.oracleSql(),
     // the kNN join is exact all-pairs truth over the fixed-count
     // hash-order sample (sample == table at sf <= 0.1, so values are the
     // full exact graph there; the sample pins the quadratic cost forever)
     "sim_knn_graph" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
-           ORDER BY ${graft.text.TrainedOracles.fnvSql("CAST(vec_id AS VARCHAR) || ':kg'")},
-             vec_id LIMIT 2000),
-         c AS (SELECT a.vec_id AS vec_id, b.vec_id AS neighbor_id,
-                 list_inner_product(a.emb, b.emb) /
-                   sqrt(list_inner_product(a.emb, a.emb) * list_inner_product(b.emb, b.emb)) AS cos
-               FROM e a JOIN e b ON a.vec_id <> b.vec_id),
-         r AS (SELECT vec_id, neighbor_id, cos,
-                 ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY cos DESC, neighbor_id) AS rank
-               FROM c)
-         SELECT vec_id, neighbor_id, ROUND(cos, 6) AS cosine, CAST(rank AS INT) AS rank
-         FROM r WHERE rank <= 3""",
+      s"""SELECT query_id AS vec_id, neighbor_id, cosine, rank FROM (${topKTruth(
+        s"""SELECT vec_id AS query_id, emb AS qe FROM e
+            ORDER BY ${fnv32("CAST(vec_id AS VARCHAR) || ':kg'")}, vec_id LIMIT 2000""",
+        "v.vec_id <> query_id AND v.vec_id IN (SELECT query_id FROM q)", 3)})""",
     // pruned-kNN sweep: engine-guaranteed booleans over the ratio-stable
     // rung surface (nlist/8, nlist/4, nlist), completeness (3 edges per
     // query) and recall floors; the endpoint row's guarantee is exact
@@ -2011,22 +1937,12 @@ object SparkEntry {
          UNION ALL SELECT CAST(nlist AS INT), LEAST(128, n),
                 CAST(3 * LEAST(128, n) AS BIGINT), TRUE FROM p""",
     "sim_topk_brute" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-         q AS (SELECT vec_id AS query_id, emb AS qe FROM e WHERE vec_id < 8),
-         c AS (SELECT query_id, v.vec_id AS neighbor_id,
-                 list_inner_product(qe, v.emb) /
-                   sqrt(list_inner_product(qe, qe) * list_inner_product(v.emb, v.emb)) AS cos
-               FROM q JOIN e v ON v.vec_id <> query_id),
-         r AS (SELECT query_id, neighbor_id, cos,
-                 ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-               FROM c)
-         SELECT query_id, neighbor_id, ROUND(cos, 6) AS cosine, CAST(rank AS INT) AS rank
-         FROM r WHERE rank <= 10""",
+      bruteTopK,
     "sim_hybrid_rrf" -> graft.sim.Similarity.hybridRrfOracleSql(),
     "sim_radius_search" -> graft.sim.Similarity.radiusSearchOracleSql(),
     "sample_interleave" ->
       s"""WITH b AS (SELECT doc_id, source,
-            ${fnvFull("CAST(doc_id AS VARCHAR) || ':ilv'")} AS h FROM documents),
+            ${fnv32("CAST(doc_id AS VARCHAR) || ':ilv'")} AS h FROM documents),
           r AS (SELECT doc_id, source,
             ROW_NUMBER() OVER (PARTITION BY source ORDER BY h DESC, doc_id) AS rank
           FROM b),
@@ -2038,21 +1954,8 @@ object SparkEntry {
           WHERE (rank - 1) * ns + idx + 1 <= 200""",
     "graph_degree_dist" -> graft.graph.PageRank.degreeDistributionSql,
     "text_langid_confusion" ->
-      s"""WITH t AS (SELECT doc_id, lang, ${toks("lower(text)")} AS tk FROM documents),
-          s AS (SELECT doc_id, lang AS lang_declared,
-            CAST(len(list_filter(tk, x -> x IN ('der','und','die','das'))) AS BIGINT) AS s_de,
-            CAST(len(list_filter(tk, x -> x IN ('the','a','of','and'))) AS BIGINT) AS s_en,
-            CAST(len(list_filter(tk, x -> x IN ('el','la','los','de'))) AS BIGINT) AS s_es,
-            CAST(len(list_filter(tk, x -> x IN ('le','les','une','est'))) AS BIGINT) AS s_fr,
-            CAST(len(list_filter(tk, x -> x IN ('zh'))) AS BIGINT) AS s_zh
-            FROM t),
-          p AS (SELECT lang_declared,
-            CASE WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr AND s_de >= s_zh THEN 'de'
-                 WHEN s_en >= s_es AND s_en >= s_fr AND s_en >= s_zh THEN 'en'
-                 WHEN s_es >= s_fr AND s_es >= s_zh THEN 'es'
-                 WHEN s_fr >= s_zh THEN 'fr'
-                 ELSE 'zh' END AS lang_pred
-            FROM s),
+      s"""WITH $langScoresCtes,
+          p AS (SELECT lang_declared, $langPred AS lang_pred FROM s),
           m AS (SELECT lang_declared, lang_pred, COUNT(*) AS n_docs FROM p GROUP BY 1, 2)
           SELECT lang_declared, lang_pred, n_docs,
             CAST(n_docs AS DOUBLE) /
@@ -2061,86 +1964,26 @@ object SparkEntry {
     "sim_topk_mmr" -> graft.sim.Mmr.mmrOracleSql(),
     "sim_topk_mmr_ivf" -> graft.sim.Mmr.mmrOracleSql(),
     "sim_hard_negatives" ->
-      """WITH e AS (SELECT label, vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-         q AS (SELECT label AS qlabel, vec_id AS query_id, emb AS qe FROM e WHERE vec_id < 8),
-         c AS (SELECT query_id, v.vec_id AS neighbor_id,
-                 list_inner_product(qe, v.emb) /
-                   sqrt(list_inner_product(qe, qe) * list_inner_product(v.emb, v.emb)) AS cos
-               FROM q JOIN e v ON v.label <> qlabel),
-         r AS (SELECT query_id, neighbor_id, cos,
-                 ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-               FROM c)
-         SELECT query_id, neighbor_id, ROUND(cos, 6) AS cosine, CAST(rank AS INT) AS rank
-         FROM r WHERE rank <= 10""",
+      topKTruth(truthQueries, "v.label <> q.label", 10),
     // ball-pruned IVF returns the exact top-k, so its oracle is the same
     // all-pairs truth as sim_topk_brute
     "sim_topk_ivf" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-         q AS (SELECT vec_id AS query_id, emb AS qe FROM e WHERE vec_id < 8),
-         c AS (SELECT query_id, v.vec_id AS neighbor_id,
-                 list_inner_product(qe, v.emb) /
-                   sqrt(list_inner_product(qe, qe) * list_inner_product(v.emb, v.emb)) AS cos
-               FROM q JOIN e v ON v.vec_id <> query_id),
-         r AS (SELECT query_id, neighbor_id, cos,
-                 ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-               FROM c)
-         SELECT query_id, neighbor_id, ROUND(cos, 6) AS cosine, CAST(rank AS INT) AS rank
-         FROM r WHERE rank <= 10""",
+      bruteTopK,
     // the SQ8-searched top-k is exact by its error-ball rescan: identical
     // all-pairs truth again
     "sim_topk_sq8" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-         q AS (SELECT vec_id AS query_id, emb AS qe FROM e WHERE vec_id < 8),
-         c AS (SELECT query_id, v.vec_id AS neighbor_id,
-                 list_inner_product(qe, v.emb) /
-                   sqrt(list_inner_product(qe, qe) * list_inner_product(v.emb, v.emb)) AS cos
-               FROM q JOIN e v ON v.vec_id <> query_id),
-         r AS (SELECT query_id, neighbor_id, cos,
-                 ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-               FROM c)
-         SELECT query_id, neighbor_id, ROUND(cos, 6) AS cosine, CAST(rank AS INT) AS rank
-         FROM r WHERE rank <= 10""",
+      bruteTopK,
     // the stored-index search is exact too: identical all-pairs truth
     "sim_topk_ivf_stored" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-         q AS (SELECT vec_id AS query_id, emb AS qe FROM e WHERE vec_id < 8),
-         c AS (SELECT query_id, v.vec_id AS neighbor_id,
-                 list_inner_product(qe, v.emb) /
-                   sqrt(list_inner_product(qe, qe) * list_inner_product(v.emb, v.emb)) AS cos
-               FROM q JOIN e v ON v.vec_id <> query_id),
-         r AS (SELECT query_id, neighbor_id, cos,
-                 ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-               FROM c)
-         SELECT query_id, neighbor_id, ROUND(cos, 6) AS cosine, CAST(rank AS INT) AS rank
-         FROM r WHERE rank <= 10""",
+      bruteTopK,
     // the incrementally maintained index is exact by the same ball-pruning
     // argument (radii max-merged on upsert): identical all-pairs truth
     "sim_index_upsert" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-         q AS (SELECT vec_id AS query_id, emb AS qe FROM e WHERE vec_id < 8),
-         c AS (SELECT query_id, v.vec_id AS neighbor_id,
-                 list_inner_product(qe, v.emb) /
-                   sqrt(list_inner_product(qe, qe) * list_inner_product(v.emb, v.emb)) AS cos
-               FROM q JOIN e v ON v.vec_id <> query_id),
-         r AS (SELECT query_id, neighbor_id, cos,
-                 ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-               FROM c)
-         SELECT query_id, neighbor_id, ROUND(cos, 6) AS cosine, CAST(rank AS INT) AS rank
-         FROM r WHERE rank <= 10""",
+      bruteTopK,
     // filtered search: the truth restricts candidates to the query's label
     // BEFORE ranking (pre-filter semantics, exact within the filtered set)
     "sim_topk_filtered" ->
-      """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-         q AS (SELECT vec_id AS query_id, label, emb AS qe FROM e WHERE vec_id < 8),
-         c AS (SELECT query_id, v.vec_id AS neighbor_id,
-                 list_inner_product(qe, v.emb) /
-                   sqrt(list_inner_product(qe, qe) * list_inner_product(v.emb, v.emb)) AS cos
-               FROM q JOIN e v ON v.label = q.label AND v.vec_id <> query_id),
-         r AS (SELECT query_id, neighbor_id, cos,
-                 ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-               FROM c)
-         SELECT query_id, neighbor_id, ROUND(cos, 6) AS cosine, CAST(rank AS INT) AS rank
-         FROM r WHERE rank <= 10""",
+      topKTruth(truthQueries, "v.label = q.label AND v.vec_id <> query_id", 10),
     // every (nprobe, query) row must report k hits and clear its recall
     // threshold; the nprobe=16 endpoint is a hard recall-1.0 guarantee
     "sim_ivf_recall" ->
@@ -2201,31 +2044,21 @@ object SparkEntry {
                 ELSE list_reduce(list_transform(err, v -> abs(v)), (a, b) -> greatest(a, b)) END AS max_err
          FROM r""",
     "dedup_token_jaccard" ->
-      s"""WITH w AS (SELECT DISTINCT doc_id, lang, source, word FROM
-           (SELECT doc_id, lang, source, unnest($tokEx) AS word FROM documents) WHERE word <> ''),
-          sz AS (SELECT doc_id, COUNT(*) AS n FROM w GROUP BY doc_id),
-          pairs AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS c FROM w a JOIN w b
-            ON a.lang = b.lang AND a.source = b.source AND a.word = b.word AND a.doc_id < b.doc_id
-            GROUP BY 1, 2)
-          SELECT d1, d2, CAST(c AS DOUBLE) / (s1.n + s2.n - c) AS jaccard
+      s"""WITH ${jaccardCtes("x.doc_id < y.doc_id")}
+          SELECT d1, d2, $jaccard AS jaccard
           FROM pairs JOIN sz s1 ON pairs.d1 = s1.doc_id JOIN sz s2 ON pairs.d2 = s2.doc_id
-          WHERE CAST(c AS DOUBLE) / (s1.n + s2.n - c) >= 0.8""",
+          WHERE $jaccard >= 0.8""",
     // resize re-derived on the full UTF-8 byte stream: stride keep via an
     // index lambda, order-free byte-sum checksum, integer-DIV metadata
     // rescale — every op exact in both engines
     "mm_resize" ->
-      """WITH m AS (
+      s"""WITH m AS (
            SELECT doc_id,
              CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS media_type,
              text, CAST(n_chars % 640 AS INT) AS width, CAST(n_chars % 480 AS INT) AS height
            FROM documents),
          b AS (SELECT doc_id, media_type, width, height,
-             flatten(list_transform(string_split(text, ''), c -> CASE
-               WHEN unicode(c) < 128 THEN [unicode(c)]
-               WHEN unicode(c) < 2048 THEN [192 + unicode(c) // 64, 128 + unicode(c) % 64]
-               WHEN unicode(c) < 65536 THEN [224 + unicode(c) // 4096, 128 + (unicode(c) // 64) % 64, 128 + unicode(c) % 64]
-               ELSE [240 + unicode(c) // 262144, 128 + (unicode(c) // 4096) % 64, 128 + (unicode(c) // 64) % 64, 128 + unicode(c) % 64]
-             END)) AS bl FROM m),
+             $utf8Bytes AS bl FROM m),
          s AS (SELECT doc_id, media_type, width, height, bl, len(bl) AS n,
              GREATEST(1, (len(bl) + 63) // 64) AS stride FROM b),
          k AS (SELECT doc_id, media_type, width, height, n,
@@ -2328,12 +2161,12 @@ object SparkEntry {
            CAST(SUM(strlen(text)) AS DOUBLE) / COUNT(*) AS avg_bytes
          FROM documents GROUP BY 1""",
     "sample_mixture" ->
-      s"""WITH b AS (SELECT doc_id, lang, ${fnvBucket("CAST(doc_id AS VARCHAR)")} AS bucket FROM documents)
+      s"""WITH b AS (SELECT doc_id, lang, (${fnv32("CAST(doc_id AS VARCHAR)")} % 100) AS bucket FROM documents)
           SELECT doc_id, lang, bucket FROM b
           WHERE bucket < CASE lang WHEN 'en' THEN 90 WHEN 'fr' THEN 75 WHEN 'de' THEN 50
                                    WHEN 'es' THEN 25 WHEN 'zh' THEN 10 ELSE 0 END""",
     "sample_split" ->
-      s"""WITH b AS (SELECT doc_id, lang, ${fnvBucket("CAST(doc_id AS VARCHAR)")} AS bucket FROM documents)
+      s"""WITH b AS (SELECT doc_id, lang, (${fnv32("CAST(doc_id AS VARCHAR)")} % 100) AS bucket FROM documents)
           SELECT doc_id, lang, bucket,
             CASE WHEN bucket < 80 THEN 'train' WHEN bucket < 90 THEN 'val' ELSE 'test' END AS split
           FROM b""",
@@ -2342,7 +2175,7 @@ object SparkEntry {
     // order
     "sample_shuffle" ->
       s"""WITH b AS (SELECT doc_id,
-            ${fnvFull("CAST(doc_id AS VARCHAR) || ':shuffle'")} AS h FROM documents)
+            ${fnv32("CAST(doc_id AS VARCHAR) || ':shuffle'")} AS h FROM documents)
           SELECT doc_id, h, CAST(h % 8 AS INT) AS shard,
             CAST(ROW_NUMBER() OVER (PARTITION BY h % 8 ORDER BY h, doc_id) AS BIGINT) AS pos
           FROM b""",
@@ -2366,24 +2199,17 @@ object SparkEntry {
     // quality score re-derived (text_quality's exact arithmetic), salted
     // bucket, and the same IEEE keep comparison
     "sample_weighted" ->
-      s"""WITH t AS (SELECT doc_id, ${toks("text")} AS tk FROM documents),
-          s AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_tokens,
-            CAST(len(list_filter(tk, x -> x IN ('the','a','of','and','to','in','is'))) AS BIGINT) AS n_stop,
-            CAST(len(list_distinct(tk)) AS BIGINT) AS n_distinct FROM t),
-          q AS (SELECT doc_id,
-            (CASE WHEN n_tokens < 10 THEN 0.0 ELSE 1.0 END) *
-              (0.5 * (CASE WHEN CAST(n_stop AS DOUBLE) / n_tokens > 0.03 THEN 1.0
-                           ELSE CAST(n_stop AS DOUBLE) / n_tokens * 10.0 END) +
-               0.5 * (CAST(n_distinct AS DOUBLE) / n_tokens)) AS quality_score FROM s),
+      s"""WITH $qualityCountsCtes,
+          q AS (SELECT doc_id, $qualityScore AS quality_score FROM s),
           b AS (SELECT doc_id, quality_score,
-            ${fnvBucket("CAST(doc_id AS VARCHAR) || ':wq'")} AS bucket FROM q)
+            (${fnv32("CAST(doc_id AS VARCHAR) || ':wq'")} % 100) AS bucket FROM q)
           SELECT doc_id, quality_score, bucket FROM b
           WHERE CAST(bucket AS DOUBLE) < quality_score * 100""",
     // the same salted-hash fate re-derived; rank semantics match the
     // TopKPerKey operator (order desc on h, ties to the smaller doc_id)
     "sample_source_cap" ->
       s"""WITH b AS (SELECT doc_id, source,
-            ${fnvFull("CAST(doc_id AS VARCHAR) || ':cap'")} AS h FROM documents),
+            ${fnv32("CAST(doc_id AS VARCHAR) || ':cap'")} AS h FROM documents),
           r AS (SELECT doc_id, source, h,
             CAST(ROW_NUMBER() OVER (PARTITION BY source ORDER BY h DESC, doc_id) AS BIGINT) AS rank
           FROM b)
@@ -2391,7 +2217,7 @@ object SparkEntry {
     // naive single-window truth of the engine's two-phase threshold
     // selection: identical set by the prefix-sum/boundary-layer algebra
     "sample_budget_select" ->
-      s"""WITH t AS (SELECT doc_id, source, ${toks("text")} AS tk FROM documents),
+      s"""WITH t AS (SELECT doc_id, source, ${tokens("text")} AS tk FROM documents),
           s AS (SELECT doc_id, source, CAST(len(tk) AS BIGINT) AS n_tokens,
               CAST(len(list_distinct(tk)) AS BIGINT) * 1000000 // CAST(len(tk) AS BIGINT) AS score
             FROM t WHERE len(tk) > 0),
@@ -2418,7 +2244,7 @@ object SparkEntry {
             FROM a0, bs),
           r AS (SELECT doc_id, source, lang,
               ROW_NUMBER() OVER (PARTITION BY source, lang
-                ORDER BY ${fnvFull("CAST(doc_id AS VARCHAR) || ':st'")} DESC, doc_id) AS rn
+                ORDER BY ${fnv32("CAST(doc_id AS VARCHAR) || ':st'")} DESC, doc_id) AS rn
             FROM documents),
           p AS (SELECT r.source, r.lang, COUNT(*) AS n_picked,
               string_agg(r.doc_id, ',' ORDER BY r.doc_id) AS members
@@ -2430,7 +2256,7 @@ object SparkEntry {
           FROM a LEFT JOIN p ON a.source = p.source AND a.lang = p.lang""",
     // the windowed-cumsum twin of the engine's two-phase prefix sum
     "pack_sequences" ->
-      s"""WITH t AS (SELECT doc_id, CAST(len(${toks("text")}) AS BIGINT) AS n_tokens FROM documents),
+      s"""WITH t AS (SELECT doc_id, CAST(len(${tokens("text")}) AS BIGINT) AS n_tokens FROM documents),
           c AS (SELECT doc_id, n_tokens,
                   CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS token_start
@@ -2447,14 +2273,9 @@ object SparkEntry {
     // scene cuts replay the frame offsets + byte sums from the UTF-8
     // expansion of the same payload recipe (the mm_resize byte device)
     "mm_scene_cuts" ->
-      """WITH m AS (SELECT doc_id, text FROM documents WHERE CAST(doc_id % 3 AS INT) = 2),
+      s"""WITH m AS (SELECT doc_id, text FROM documents WHERE CAST(doc_id % 3 AS INT) = 2),
          b AS (SELECT doc_id,
-             flatten(list_transform(string_split(text, ''), c -> CASE
-               WHEN unicode(c) < 128 THEN [unicode(c)]
-               WHEN unicode(c) < 2048 THEN [192 + unicode(c) // 64, 128 + unicode(c) % 64]
-               WHEN unicode(c) < 65536 THEN [224 + unicode(c) // 4096, 128 + (unicode(c) // 64) % 64, 128 + unicode(c) % 64]
-               ELSE [240 + unicode(c) // 262144, 128 + (unicode(c) // 4096) % 64, 128 + (unicode(c) // 64) % 64, 128 + unicode(c) % 64]
-             END)) AS bl FROM m),
+             $utf8Bytes AS bl FROM m),
          s AS (SELECT doc_id, bl, len(bl) AS n FROM b WHERE len(bl) > 0),
          f AS (SELECT doc_id, n, bl, unnest(range(0, 16)) AS i FROM s),
          st AS (SELECT doc_id, CAST(i AS INT) AS i,

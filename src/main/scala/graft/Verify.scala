@@ -23,11 +23,11 @@ object Verify {
     // a data-trained model. Skipped when a subset excludes them all.
     val wanted = only.map(_.intersect(graft.text.TrainedOracles.names))
       .getOrElse(graft.text.TrainedOracles.names)
-    // a training failure must degrade those queries to rows-only, never
-    // take down the whole dump (an unwritten oracle_sql.json would zero
-    // every query's correctness signal for the round) — but only NonFatal
-    // failures: an OOM/LinkageError must abort rather than write a
-    // partially valid oracle_sql.json
+    // a training failure leaves only those queries without an oracle (the
+    // compare fails them), never takes down the whole dump (an unwritten
+    // oracle_sql.json would zero every query's correctness signal) — but
+    // only NonFatal failures: an OOM/LinkageError must abort rather than
+    // write a partially valid oracle_sql.json
     val trained: Map[String, String] =
       if (wanted.isEmpty) Map.empty
       else try graft.text.TrainedOracles.all(spark, sfDir, wanted)

@@ -73,13 +73,11 @@ object CdcChunks {
     * FNV-1a, chunk id = prefix count of boundaries STRICTLY BEFORE each
     * token, ordered string_agg reassembly, then the same census. */
   def oracleSql(maskMod: Int = 16, residue: Int = 4): String =
-    s"""WITH t AS (SELECT doc_id,
-       |    list_filter(string_split_regex(lower(text), '[^\\p{L}]+'), x -> x <> '') AS tk
-       |  FROM documents),
+    s"""WITH t AS (SELECT doc_id, ${graft.OracleSql.tokens("lower(text)")} AS tk FROM documents),
        |p AS (SELECT doc_id, tk, unnest(range(1, len(tk) + 1)) AS o FROM t WHERE len(tk) > 0),
        |q AS (SELECT doc_id, CAST(o AS INT) AS o, tk[CAST(o AS INT)] AS tok FROM p),
        |b AS (SELECT doc_id, o, tok,
-       |    CASE WHEN ${graft.text.TrainedOracles.fnvSql("tok")} % $maskMod = $residue
+       |    CASE WHEN ${graft.OracleSql.fnv32("tok")} % $maskMod = $residue
        |         THEN 1 ELSE 0 END AS bd FROM q),
        |c AS (SELECT doc_id, o, tok,
        |    COALESCE(SUM(bd) OVER (PARTITION BY doc_id ORDER BY o

@@ -706,10 +706,8 @@ object Dedup {
 
   /** DuckDB re-derivation of [[crossSourceOverlap]] on gram strings. */
   def crossSourceOracleSql: String =
-    """WITH t AS (SELECT doc_id, source, list_filter(string_split_regex(lower(text), '[^\p{L}]+'), x -> x <> '') AS tk FROM documents),
-      |s AS (SELECT source, CASE WHEN len(tk) < 5 THEN [array_to_string(tk, ' ')]
-      |       ELSE list_distinct(list_transform(generate_series(1, len(tk)-4),
-      |         i -> tk[i]||' '||tk[i+1]||' '||tk[i+2]||' '||tk[i+3]||' '||tk[i+4])) END AS sh FROM t),
+    s"""WITH t AS (SELECT doc_id, source, ${graft.OracleSql.tokens("lower(text)")} AS tk FROM documents),
+      |s AS (SELECT source, list_distinct(${graft.OracleSql.shingles("tk", 5)}) AS sh FROM t),
       |src AS (SELECT DISTINCT source, g FROM (SELECT source, unnest(sh) AS g FROM s)),
       |n AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n FROM src GROUP BY source),
       |p AS (SELECT a.source AS s1, b.source AS s2, CAST(COUNT(*) AS BIGINT) AS shared_grams

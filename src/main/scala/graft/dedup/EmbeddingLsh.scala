@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{OracleSql, Tables}
 
 /** Random-hyperplane LSH over the embedding column (Charikar, "Similarity
   * Estimation Techniques from Rounding Algorithms", STOC 2002): each vector
@@ -350,15 +350,15 @@ object EmbeddingLsh {
       }
     }.mkString(" UNION ALL ")
 
-  private val cosineSql =
-    """ROUND(list_inner_product(x.emb, y.emb) /
-      |sqrt(list_inner_product(x.emb, x.emb) * list_inner_product(y.emb, y.emb)), 6)""".stripMargin
+  private val cosineSql = OracleSql.cosine6("x.emb", "y.emb")
+
+  /** The diagnostic sample's order: [[sampleTopN]]'s salted hash. */
+  private val sampleHashSql = OracleSql.fnv32("CAST(vec_id AS VARCHAR) || ':lshsweep'")
 
   /** The pairs pipeline as a CTE list, shared by the pairs and keep-list
     * oracles (8×2 default config, over the same fixed-count diagnostic
-    * sample as the engine — `sampleHashSql` is the caller's FNV
-    * re-derivation, the sweep-oracle contract). */
-  private def pairsCtes(sampleHashSql: String): String =
+    * sample as the engine). */
+  private def pairsCtes: String =
     s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
        |       ORDER BY $sampleHashSql, vec_id LIMIT $DiagSampleN),
        |sig AS (SELECT vec_id, emb, $bitsCols FROM e),
@@ -370,8 +370,8 @@ object EmbeddingLsh {
        |      FROM cand JOIN e x ON x.vec_id = cand.d1 JOIN e y ON y.vec_id = cand.d2)""".stripMargin
 
   /** DuckDB re-derivation of [[pairs]] (8×2 default). */
-  def oraclePairsSql(sampleHashSql: String): String =
-    s"""WITH ${pairsCtes(sampleHashSql)}
+  def oraclePairsSql: String =
+    s"""WITH $pairsCtes
        |SELECT d1, d2, cosine FROM v WHERE cosine >= 0.35""".stripMargin
 
   /** The production-point pairs pipeline as a CTE list — re-plant the
@@ -415,8 +415,8 @@ object EmbeddingLsh {
   /** DuckDB re-derivation of [[dedupKeep]]: the same pairs pipeline, then
     * min-label connected components as a recursive CTE (the
     * dedup_components oracle shape) over the diagnostic sample's nodes. */
-  def oracleDedupKeepSql(sampleHashSql: String): String =
-    s"""WITH RECURSIVE ${pairsCtes(sampleHashSql)},
+  def oracleDedupKeepSql: String =
+    s"""WITH RECURSIVE $pairsCtes,
        |p AS (SELECT d1, d2 FROM v WHERE cosine >= 0.35),
        |edges AS (SELECT d1 AS src, d2 AS dst FROM p UNION SELECT d2 AS src, d1 AS dst FROM p),
        |cc AS (SELECT vec_id AS node, vec_id AS label FROM e
@@ -424,15 +424,13 @@ object EmbeddingLsh {
        |SELECT node AS vec_id, MIN(label) AS canonical_id, (node = MIN(label)) AS keep
        |FROM cc GROUP BY node""".stripMargin
 
-  /** DuckDB re-derivation of [[sweep]]: `sampleHashSql` is the caller's
-    * FNV re-derivation of `fnv32(vec_id || ':lshsweep')` (the shared
-    * oracle helper lives with the other fnv-sampling oracles); the sample
-    * CTE mirrors [[sampleTopN]]'s fixed-count total order exactly
+  /** DuckDB re-derivation of [[sweep]]: the sample CTE mirrors
+    * [[sampleTopN]]'s fixed-count total order exactly
     * (hash asc, vec_id tiebreak, LIMIT sampleN). The final select
     * LEFT-JOINs from the config list so a configuration with zero
     * candidates still emits its (zeroed) dashboard row, matching the
     * engine's empty-frame aggregation. */
-  def oracleSweepSql(sampleHashSql: String, sampleN: Int = 1000): String = {
+  def oracleSweepSql(sampleN: Int = 1000): String = {
     val cfgs = Seq((16, 2), (8, 4), (4, 8))
     val cfgValues = cfgs.map { case (b, w) => s"('${b}x$w')" }.mkString(", ")
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
@@ -450,8 +448,7 @@ object EmbeddingLsh {
        |cfgs AS (SELECT * FROM (VALUES $cfgValues) AS c(cfg)),
        |tru AS (SELECT COUNT(*) AS n_true FROM (
        |          SELECT 1 FROM e a JOIN e b ON a.vec_id < b.vec_id
-       |          WHERE ROUND(list_inner_product(a.emb, b.emb) /
-       |            sqrt(list_inner_product(a.emb, a.emb) * list_inner_product(b.emb, b.emb)), 6) >= 0.35)),
+       |          WHERE ${OracleSql.cosine6("a.emb", "b.emb")} >= 0.35)),
        |n AS (SELECT COUNT(*) AS n_vec FROM e)
        |SELECT cfg, COALESCE(n_cand, 0) AS n_cand, COALESCE(n_found, 0) AS n_found,
        |  CAST(n_true AS BIGINT) AS n_true,

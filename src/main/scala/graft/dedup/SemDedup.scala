@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.OracleSql.cosine6
 import graft.Tables
 import graft.sim.Similarity
 
@@ -144,9 +145,7 @@ object SemDedup {
     * tie-break. */
   def decontamOracleSql(threshold: Double = 0.9): String =
     s"""WITH ${graft.Fixtures.contamCtesSql},
-       |c AS (SELECT train_id, eval_id,
-       |        ROUND(list_inner_product(te, ee) /
-       |          sqrt(list_inner_product(te, te) * list_inner_product(ee, ee)), 6) AS cosine
+       |c AS (SELECT train_id, eval_id, ${cosine6("te", "ee")} AS cosine
        |      FROM tr CROSS JOIN ev),
        |r AS (SELECT train_id, eval_id, cosine,
        |        row_number() OVER (PARTITION BY train_id ORDER BY cosine DESC, eval_id) AS rn
@@ -158,15 +157,10 @@ object SemDedup {
   /** DuckDB re-derivation of [[semanticKeep]] (k=8, τ=0.35): seeds from
     * `ORDER BY vec_id LIMIT 8`, nearest-seed by the rounded cosine with the
     * seed-id tie-break, intra-cluster pairs, greedy min-id keep. */
-  def oracleSql(k: Int = 8, threshold: Double = 0.35): String = {
-    val cos = (a: String, b: String) =>
-      s"""ROUND(list_inner_product($a.emb, $b.emb) /
-         |sqrt(list_inner_product($a.emb, $a.emb) * list_inner_product($b.emb, $b.emb)), 6)""".stripMargin
+  def oracleSql(k: Int = 8, threshold: Double = 0.35): String =
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
        |seeds AS (SELECT vec_id AS seed_id, emb AS semb FROM e ORDER BY vec_id LIMIT $k),
-       |sims AS (SELECT e.vec_id, s.seed_id,
-       |           ROUND(list_inner_product(e.emb, s.semb) /
-       |             sqrt(list_inner_product(e.emb, e.emb) * list_inner_product(s.semb, s.semb)), 6) AS cos
+       |sims AS (SELECT e.vec_id, s.seed_id, ${cosine6("e.emb", "s.semb")} AS cos
        |         FROM e CROSS JOIN seeds s),
        |asg AS (SELECT vec_id, seed_id AS cluster_id FROM (
        |          SELECT vec_id, seed_id,
@@ -176,9 +170,8 @@ object SemDedup {
        |      FROM asg ax JOIN e x ON x.vec_id = ax.vec_id
        |        JOIN asg ay ON ax.cluster_id = ay.cluster_id
        |        JOIN e y ON y.vec_id = ay.vec_id
-       |      WHERE x.vec_id < y.vec_id AND ${cos("x", "y")} >= $threshold)
+       |      WHERE x.vec_id < y.vec_id AND ${cosine6("x.emb", "y.emb")} >= $threshold)
        |SELECT asg.vec_id, asg.cluster_id,
        |  (asg.vec_id NOT IN (SELECT d2 FROM p)) AS keep
        |FROM asg""".stripMargin
-  }
 }

@@ -25,7 +25,8 @@ trait MrApp extends Serializable {
   * `strings.FieldsFunc(contents, !unicode.IsLetter)`
   * (/root/reference/src/mrapps/wc.go:26-29). */
 object Tokenize {
-  private val NonLetter = "[^\\p{L}]+"
+  /** The split pattern of every engine tokenizer. */
+  val NonLetter = "[^\\p{L}]+"
   def apply(contents: String): Array[String] =
     contents.split(NonLetter).filter(_.nonEmpty)
 }

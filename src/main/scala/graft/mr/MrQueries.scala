@@ -18,12 +18,10 @@ import graft.Tables
   */
 object MrQueries {
 
-  private val NonLetter = "[^\\p{L}]+"
-
   /** explode documents into non-empty word tokens (P1, wc.go:26-29). */
   private def words(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(split(col("text"), NonLetter)).as("word"))
+      .select(col("doc_id"), explode(split(col("text"), Tokenize.NonLetter)).as("word"))
       .filter(length(col("word")) > 0)
 
   /** Word count (A2, /root/reference/src/mrapps/wc.go). */

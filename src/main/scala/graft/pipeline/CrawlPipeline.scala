@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.OracleSql.{gramStatsCtes, htmlExtractCtes, hygieneCte, shingles, tokens}
 import graft.dedup.Dedup
 import graft.text.TextAnalysis
 
@@ -101,65 +102,28 @@ object CrawlPipeline {
   }
 
   /** DuckDB re-derivation of [[crawlFunnel]] end-to-end: the url canon
-    * chain ([[Dedup.urlCanonCtesSql]]), the page plant + extraction chain
-    * (same text as `text_html_extract`'s oracle, CTEs renamed), the
-    * hygiene fragment over the EXTRACTED tokens (same text as
-    * `pipeline_training_set`'s), and the 5-gram decontam probe with eval
-    * grams from the ORIGINAL documents vs train grams from the extracted
-    * text — every fragment the same device as its standalone stage. */
-  def crawlFunnelOracleSql: String = {
-    def toks(src: String) =
-      s"list_filter(string_split_regex($src, '[^\\p{L}]+'), x -> x <> '')"
-    def txt(b: String): String =
-      s"trim(regexp_replace(regexp_replace($b, '<[^>]*>', ' ', 'g'), '\\s+', ' ', 'g'))"
-    def noAnchorTxt(b: String): String =
-      s"trim(regexp_replace(regexp_replace(regexp_replace($b, '<a[^>]*>.*?</a>', ' ', 'g'), '<[^>]*>', ' ', 'g'), '\\s+', ' ', 'g'))"
-    def shingles(tkCol: String): String =
-      s"""CASE WHEN len($tkCol) < 5 THEN [array_to_string($tkCol, ' ')]
-         |  ELSE list_distinct(list_transform(generate_series(1, len($tkCol)-4),
-         |    i -> $tkCol[i]||' '||$tkCol[i+1]||' '||$tkCol[i+2]||' '||$tkCol[i+3]||' '||$tkCol[i+4])) END""".stripMargin
+    * chain ([[Dedup.urlCanonCtesSql]]), the page extraction
+    * ([[graft.OracleSql.htmlExtractCtes]]), the hygiene verdict over the
+    * EXTRACTED tokens ([[graft.OracleSql.hygieneCte]]), and the 5-gram
+    * decontam probe ([[graft.OracleSql.shingles]]) with eval grams from
+    * the ORIGINAL documents vs train grams from the extracted text. */
+  def crawlFunnelOracleSql: String =
     s"""WITH ${Dedup.urlCanonCtesSql},
        |uk AS (SELECT k.doc_id, k.doc_id = g.canonical_id AS keep_url
        |       FROM k JOIN g USING (canon_url)),
-       |hd AS (${graft.Fixtures.htmlDocsSql}),
-       |hb AS (SELECT doc_id,
-       |    string_split(regexp_replace(html, '<(p|div|h1|li)([ >])',
-       |      chr(1) || '<\\1\\2', 'g'), chr(1)) AS blocks FROM hd),
-       |hk AS (SELECT doc_id,
-       |    list_filter(blocks, b ->
-       |      len(string_split(${txt("b")}, ' ')) >= 5 AND
-       |      (length(${txt("b")}) - length(${noAnchorTxt("b")})) * 3
-       |        <= length(${txt("b")})) AS kept FROM hb),
-       |he AS (SELECT doc_id, kept,
-       |    array_to_string(list_transform(kept, b -> ${txt("b")}), chr(10)) AS extracted
-       |  FROM hk),
-       |tb AS (SELECT doc_id, ${toks("extracted")} AS tk,
+       |$htmlExtractCtes,
+       |tb AS (SELECT doc_id, ${tokens("extracted")} AS tk,
        |    CAST(length(extracted) AS BIGINT) AS n_chars,
        |    CAST(len(kept) AS INT) AS n_blocks,
-       |    ${toks("lower(extracted)")} AS xtk FROM he),
+       |    ${tokens("lower(extracted)")} AS xtk FROM he),
        |b2 AS (SELECT doc_id, tk, CAST(len(tk) AS BIGINT) AS n_tok FROM tb),
-       |g2 AS (SELECT doc_id, tk[i] || ' ' || tk[i+1] AS gram
-       |       FROM b2, unnest(generate_series(1, len(tk)-1)) AS u(i)),
-       |g2c AS (SELECT doc_id, gram, COUNT(*) AS c FROM g2 GROUP BY 1, 2),
-       |g2s AS (SELECT doc_id, MAX(c) AS g2_max, SUM(c) AS g2_n FROM g2c GROUP BY 1),
-       |g3 AS (SELECT doc_id, tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] AS gram
-       |       FROM b2, unnest(generate_series(1, len(tk)-2)) AS u(i)),
-       |g3c AS (SELECT doc_id, gram, COUNT(*) AS c FROM g3 GROUP BY 1, 2),
-       |g3s AS (SELECT doc_id, SUM(c) AS g3_n, COUNT(*) AS g3_d FROM g3c GROUP BY 1),
-       |hy AS (SELECT b2.doc_id,
-       |         (CAST(len(list_filter(tk, x -> x IN ('slow','big','bad'))) AS DOUBLE) / len(tk) <= 0.05
-       |          AND b2.n_tok >= 30
-       |          AND CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE) / len(tk) >= 3.0
-       |          AND CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE) / len(tk) <= 10.0
-       |          AND CAST(g2_max AS DOUBLE) / g2_n <= 0.1
-       |          AND CAST(g3_n - g3_d AS DOUBLE) / g3_n <= 0.05) AS ph
-       |       FROM b2 LEFT JOIN g2s ON b2.doc_id = g2s.doc_id
-       |              LEFT JOIN g3s ON b2.doc_id = g3s.doc_id),
-       |lt AS (SELECT doc_id, ${toks("lower(text)")} AS ltk FROM documents),
-       |shg AS (SELECT doc_id, ${shingles("ltk")} AS s FROM lt),
+       |${gramStatsCtes("b2")},
+       |${hygieneCte("b2")},
+       |lt AS (SELECT doc_id, ${tokens("lower(text)")} AS ltk FROM documents),
+       |shg AS (SELECT doc_id, list_distinct(${shingles("ltk", 5)}) AS s FROM lt),
        |wg AS (SELECT doc_id, unnest(s) AS g FROM shg),
        |evg AS (SELECT DISTINCT g FROM wg WHERE doc_id % 50 = 0),
-       |xshg AS (SELECT doc_id, ${shingles("xtk")} AS s FROM tb),
+       |xshg AS (SELECT doc_id, list_distinct(${shingles("xtk", 5)}) AS s FROM tb),
        |xwg AS (SELECT doc_id, unnest(s) AS g FROM xshg),
        |cont AS (SELECT DISTINCT xwg.doc_id FROM xwg JOIN evg USING (g)
        |         WHERE xwg.doc_id % 50 <> 0),
@@ -179,5 +143,4 @@ object CrawlPipeline {
        |  CAST(SUM(CASE WHEN keep_url AND pe AND ph AND pd THEN n_chars ELSE 0 END) AS BIGINT) AS kept_chars,
        |  CAST(SUM(CASE WHEN keep_url AND pe AND ph AND pd THEN n_tok ELSE 0 END) AS BIGINT) AS kept_tokens
        |FROM flags""".stripMargin
-  }
 }

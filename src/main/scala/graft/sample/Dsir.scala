@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.OracleSql.{fnv32, gram, tokens}
 import graft.Tables
 import graft.functions.Fnv32
 import graft.text.TextAnalysis
@@ -140,15 +141,12 @@ object Dsir {
         size(col("grams")).cast("bigint").as("n_grams"))
   }
 
-  /** DuckDB re-derivation of [[importanceTop]]. `fnv` renders the caller's
-    * FNV-1a SQL fragment over a varchar expression (the shared oracle
-    * helper). */
-  def oracleSql(fnv: String => String, targetLang: String = "en"): String =
-    s"""WITH tk AS (SELECT doc_id, lang,
-       |  list_filter(string_split_regex(text, '[^\\p{L}]+'), x -> x <> '') AS t FROM documents),
+  /** DuckDB re-derivation of [[importanceTop]]. */
+  def oracleSql(targetLang: String = "en"): String =
+    s"""WITH tk AS (SELECT doc_id, lang, ${tokens("text")} AS t FROM documents),
        |g AS (SELECT doc_id, lang,
-       |  list_concat(t, list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS grams FROM tk),
-       |c AS (SELECT doc_id, lang, ${fnv("gram")} % $NumBuckets AS bucket,
+       |  list_concat(t, list_transform(range(1, len(t)), i -> ${gram("t", "i", 2)})) AS grams FROM tk),
+       |c AS (SELECT doc_id, lang, ${fnv32("gram")} % $NumBuckets AS bucket,
        |        CAST(COUNT(*) AS BIGINT) AS c
        |      FROM (SELECT doc_id, lang, unnest(grams) AS gram FROM g)
        |      GROUP BY doc_id, lang, bucket),

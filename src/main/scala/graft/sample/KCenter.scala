@@ -3,6 +3,8 @@ package graft.sample
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.OracleSql.cosine6
+
 /** CORESET SELECTION by greedy k-center (Gonzalez 1985 farthest-point
   * traversal — the 2-approximation to the k-center cover): pick the
   * vector farthest (in cosine distance) from everything picked so far,
@@ -72,18 +74,15 @@ object KCenter {
     * rounded cosine to the picks so far; s_{i+1} is its (mc, vec_id)
     * argmin. */
   def oracleSql(k: Int = 8): String = {
-    def cos(a: String, b: String) =
-      s"""ROUND(list_inner_product($a, $b) /
-         |  sqrt(list_inner_product($a, $a) * list_inner_product($b, $b)), 6)""".stripMargin
     val base =
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
          |s1 AS (SELECT vec_id AS id, emb FROM e ORDER BY vec_id LIMIT 1),
-         |m1 AS (SELECT v.vec_id, v.emb, ${cos("v.emb", "s.emb")} AS mc
+         |m1 AS (SELECT v.vec_id, v.emb, ${cosine6("v.emb", "s.emb")} AS mc
          |       FROM e v, s1 s WHERE v.vec_id <> s.id)""".stripMargin
     val steps = (2 until k).map { i =>
       s"""s$i AS (SELECT vec_id AS id, emb, mc FROM m${i - 1} ORDER BY mc, vec_id LIMIT 1),
          |m$i AS (SELECT v.vec_id, v.emb,
-         |    GREATEST(v.mc, ${cos("v.emb", "s.emb")}) AS mc
+         |    GREATEST(v.mc, ${cosine6("v.emb", "s.emb")}) AS mc
          |  FROM m${i - 1} v, s$i s WHERE v.vec_id <> s.id)""".stripMargin
     }
     val last =

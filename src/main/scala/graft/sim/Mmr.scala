@@ -114,8 +114,9 @@ object Mmr {
   }
 
   /** DuckDB re-derivation: same pool primitive as the sim_topk_brute
-    * oracle, pairwise rounded sims, and the greedy UNROLLED one CTE per
-    * pick (sel1..sel`outK`) — argmax with the id tie-break at every step. */
+    * oracle ([[graft.OracleSql.topKTruth]]), pairwise rounded sims, and
+    * the greedy UNROLLED one CTE per pick (sel1..sel`outK`) — argmax with
+    * the id tie-break at every step. */
   def mmrOracleSql(numQueries: Int = 8, poolK: Int = 20, outK: Int = 5,
                    lambda: Double = 0.7): String = {
     // CAST to DOUBLE so DuckDB cannot keep the literal as DECIMAL and
@@ -125,18 +126,11 @@ object Mmr {
     val M = s"CAST(${1.0 - lambda} AS DOUBLE)"
     val base =
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-         |q AS (SELECT vec_id AS query_id, emb AS qe FROM e WHERE vec_id < $numQueries),
-         |c0 AS (SELECT query_id, v.vec_id AS id,
-         |         list_inner_product(qe, v.emb) /
-         |           sqrt(list_inner_product(qe, qe) * list_inner_product(v.emb, v.emb)) AS cos
-         |       FROM q JOIN e v ON v.vec_id <> query_id),
-         |pool AS (SELECT query_id, id, ROUND(cos, 6) AS rel FROM (
-         |           SELECT query_id, id, cos, ROW_NUMBER() OVER (PARTITION BY query_id
-         |             ORDER BY cos DESC, id) AS rnk FROM c0) WHERE rnk <= $poolK),
+         |pool AS (SELECT query_id, neighbor_id AS id, cosine AS rel FROM (${graft.OracleSql.topKTruth(
+              s"SELECT vec_id AS query_id, emb AS qe FROM e WHERE vec_id < $numQueries",
+              "v.vec_id <> query_id", poolK)})),
          |ps AS (SELECT a.query_id, a.id AS ia, b.id AS ib,
-         |         ROUND(list_inner_product(ea.emb, eb.emb) /
-         |           sqrt(list_inner_product(ea.emb, ea.emb)
-         |              * list_inner_product(eb.emb, eb.emb)), 6) AS sim
+         |         ${graft.OracleSql.cosine6("ea.emb", "eb.emb")} AS sim
          |       FROM pool a JOIN pool b ON a.query_id = b.query_id AND a.id <> b.id
          |       JOIN e ea ON ea.vec_id = a.id JOIN e eb ON eb.vec_id = b.id),
          |sel1 AS (SELECT query_id, id, rel, $L * rel AS mmr, 1 AS mmr_rank FROM (

@@ -3,7 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{OracleSql, Tables}
 
 /** Approximate-nearest-neighbor search over the `embeddings` fixture
   * (`Array[Float]`, 64-dim).
@@ -1083,16 +1083,9 @@ object Similarity {
     s"""WITH lex AS (SELECT doc_id,
        |    ROW_NUMBER() OVER (ORDER BY bm25 DESC, doc_id) AS lex_rank
        |  FROM ($bm25) b),
-       |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-       |q AS (SELECT emb AS qe FROM e WHERE vec_id = 0),
-       |c AS (SELECT v.vec_id AS neighbor_id,
-       |    list_inner_product(qe, v.emb) /
-       |      sqrt(list_inner_product(qe, qe) * list_inner_product(v.emb, v.emb)) AS cos
-       |  FROM q JOIN e v ON v.vec_id <> 0),
-       |vec AS (SELECT neighbor_id, vec_rank FROM (
-       |    SELECT neighbor_id,
-       |      ROW_NUMBER() OVER (ORDER BY cos DESC, neighbor_id) AS vec_rank
-       |    FROM c) WHERE vec_rank <= $n)
+       |vec AS (SELECT neighbor_id, rank AS vec_rank FROM (${OracleSql.topKTruth(
+            "SELECT vec_id AS query_id, emb AS qe FROM e WHERE vec_id = 0",
+            "v.vec_id <> query_id", n)}))
        |SELECT COALESCE(l.doc_id, v.neighbor_id) AS item_id,
        |  CAST(l.lex_rank AS INT) AS lex_rank, CAST(v.vec_rank AS INT) AS vec_rank,
        |  COALESCE(CAST(1 AS DOUBLE) / CAST($rrfK + l.lex_rank AS DOUBLE), CAST(0 AS DOUBLE)) +
@@ -1134,10 +1127,9 @@ object Similarity {
     * rounded cosine, same integer binning. */
   def pairCosineHistOracleSql(sampleN: Int = 1000): String =
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
-       |           ORDER BY ${graft.text.TrainedOracles.fnvSql("CAST(vec_id AS VARCHAR) || ':ph'")},
+       |           ORDER BY ${OracleSql.fnv32("CAST(vec_id AS VARCHAR) || ':ph'")},
        |             vec_id LIMIT $sampleN),
-       |c AS (SELECT ROUND(list_inner_product(a.emb, b.emb) /
-       |        sqrt(list_inner_product(a.emb, a.emb) * list_inner_product(b.emb, b.emb)), 6) AS c
+       |c AS (SELECT ${OracleSql.cosine6("a.emb", "b.emb")} AS c
        |      FROM e a JOIN e b ON a.vec_id < b.vec_id),
        |bins AS (SELECT LEAST(CAST(FLOOR((c + CAST(1.0 AS DOUBLE)) * CAST(10.0 AS DOUBLE)) AS INT), 19) AS bin FROM c)
        |SELECT bin, CAST(bin AS DOUBLE) / 10.0 - 1.0 AS bin_lo,
@@ -1196,9 +1188,7 @@ object Similarity {
   def radiusSearchOracleSql(numQueries: Int = 8, tau: Double = 0.3): String =
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
        |q AS (SELECT vec_id AS query_id, emb AS qe FROM e WHERE vec_id < $numQueries),
-       |c AS (SELECT query_id, v.vec_id AS neighbor_id,
-       |    ROUND(list_inner_product(qe, v.emb) /
-       |      sqrt(list_inner_product(qe, qe) * list_inner_product(v.emb, v.emb)), 6) AS cosine
+       |c AS (SELECT query_id, v.vec_id AS neighbor_id, ${OracleSql.cosine6("qe", "v.emb")} AS cosine
        |  FROM q JOIN e v ON v.vec_id <> query_id)
        |SELECT query_id, neighbor_id, cosine FROM c
        |WHERE cosine >= CAST($tau AS DOUBLE)""".stripMargin

@@ -14,7 +14,8 @@ import Similarity.{Vec, Hit, cosine}
   *
   *   - ORDER: score desc, id asc. It is a total order, so a bounded heap
   *     keeps the same set from any partitioning and the merge reproduces
-  *     the oracles' `ORDER BY cos DESC, id`;
+  *     the oracle truth's `ORDER BY cos DESC, id`
+  *     ([[graft.OracleSql.topKTruth]]);
   *   - ROUNDING: 6 decimals HALF_UP ([[round6]]), applied to the output
   *     column only, after ranks are assigned — ranking always sees the raw
   *     doubles both engines compute with the same left-to-right dot fold.

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.OracleSql.{fnv32, htmlExtractCtes, tokens}
 import graft.Tables
 
 /** Text-analysis operators for a training-data pipeline, over the `documents`
@@ -12,11 +13,9 @@ import graft.Tables
   */
 object TextAnalysis {
 
-  private val NonLetter = "[^\\p{L}]+"
-
   /** Non-empty letter tokens of `text` as an array column. */
   def tokensCol(text: Column): Column =
-    array_remove(split(text, NonLetter), "")
+    array_remove(split(text, graft.mr.Tokenize.NonLetter), "")
 
   /** Token pairs at distance 1..`w` of a token array, as
     * `array<struct<a, b>>`: for each k ≤ w, (t[i], t[i+k]) for every
@@ -180,14 +179,11 @@ object TextAnalysis {
          |    THEN doc_id END) AS n_docs,
          |  COUNT(DISTINCT CASE WHEN doc_id <= (SELECT MAX(doc_id) * $p // 100 FROM documents)
          |    THEN tok END) AS vocab
-         |FROM (SELECT doc_id, unnest(${toksSqlLower}) AS tok FROM documents)""".stripMargin
+         |FROM (SELECT doc_id, unnest(${tokens("lower(text)")}) AS tok FROM documents)""".stripMargin
     }.mkString("\nUNION ALL ")
     s"SELECT CAST(pct AS INT) AS pct, CAST(n_docs AS BIGINT) AS n_docs, " +
       s"CAST(vocab AS BIGINT) AS vocab FROM ($body)"
   }
-
-  private val toksSqlLower =
-    """list_filter(string_split_regex(lower(text), '[^\p{L}]+'), x -> x <> '')"""
 
   /** LANGID CONFUSION MATRIX — the model-eval readout for [[langId]]:
     * per (declared, predicted) language pair, the doc count and its share
@@ -488,7 +484,7 @@ object TextAnalysis {
          |(CAST(tf$i AS DOUBLE) * $k1p1) / (CAST(tf$i AS DOUBLE) + $c0 + $c1 * CAST(len AS DOUBLE) /
          |(CAST(tot_len AS DOUBLE) / CAST(n_docs AS DOUBLE)))""".stripMargin
     }.mkString(" + ")
-    s"""WITH t AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '[^\\p{L}]+'), x -> x <> '') AS tk FROM documents),
+    s"""WITH t AS (SELECT doc_id, ${tokens("lower(text)")} AS tk FROM documents),
        |d AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS len, $tfSel FROM t),
        |st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(SUM(len) AS BIGINT) AS tot_len, $dfSel FROM d)
        |SELECT doc_id, len AS n_tok, ROUND($scoreSql, 6) AS bm25
@@ -572,8 +568,7 @@ object TextAnalysis {
   /** DuckDB re-derivation of [[heavyHitters]]: the plain (vocab-sized)
     * GROUP BY + integer threshold — the sketch path must agree exactly. */
   def heavyHittersOracleSql(denom: Long = 100L): String =
-    s"""WITH w AS (SELECT unnest(list_filter(string_split_regex(text, '[^\\p{L}]+'),
-       |             x -> x <> '')) AS word FROM documents),
+    s"""WITH w AS (SELECT unnest(${tokens("text")}) AS word FROM documents),
        |t AS (SELECT COUNT(*) AS n_total FROM w),
        |c AS (SELECT word, COUNT(*) AS cnt FROM w GROUP BY 1)
        |SELECT word, cnt, n_total FROM c, t WHERE cnt * $denom >= n_total""".stripMargin
@@ -670,9 +665,7 @@ object TextAnalysis {
   /** DuckDB re-derivation of [[windowCooc]] — the positional self-join
     * truth of the engine's map-only pair generation. */
   def windowCoocOracleSql(w: Int = 3, minCount: Long = 5L): String =
-    s"""WITH t AS (SELECT doc_id,
-       |    list_filter(string_split_regex(lower(text), '[^\\p{L}]+'), x -> x <> '') AS tk
-       |  FROM documents),
+    s"""WITH t AS (SELECT doc_id, ${tokens("lower(text)")} AS tk FROM documents),
        |tok AS (SELECT doc_id, unnest(tk) AS tok, generate_subscripts(tk, 1) AS i FROM t),
        |n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_tok FROM tok),
        |cx AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS c FROM tok GROUP BY 1),
@@ -691,8 +684,7 @@ object TextAnalysis {
   /** DuckDB re-derivation of [[chunks]] (64-token windows, 16 overlap). */
   def chunksOracleSql(chunkTokens: Int = 64, overlap: Int = 16): String = {
     val stride = chunkTokens - overlap
-    s"""WITH tk AS (SELECT doc_id,
-       |  list_filter(string_split_regex(text, '[^\\p{L}]+'), x -> x <> '') AS t FROM documents),
+    s"""WITH tk AS (SELECT doc_id, ${tokens("text")} AS t FROM documents),
        |s AS (SELECT doc_id, t, unnest(range(0, len(t), $stride)) AS start
        |      FROM tk WHERE len(t) > 0),
        |ck AS (SELECT doc_id, CAST(start // $stride AS INT) AS chunk_idx,
@@ -734,15 +726,13 @@ object TextAnalysis {
 
   /** DuckDB re-derivation of [[featureHash]]: the naive explode →
     * GROUP BY (doc, dim) with in-SQL UTF-8 FNV-1a
-    * ([[TrainedOracles.fnvSql]] — the classifier-oracle device), zero-token
+    * ([[graft.OracleSql.fnv32]]), zero-token
     * docs re-joined with all-zero summaries (engine: a zero vector's
     * argmax is position 1 → dim 0). */
   def featureHashOracleSql(dims: Int = 16): String =
-    s"""WITH t AS (SELECT doc_id,
-       |    list_filter(string_split_regex(lower(text), '[^\\p{L}]+'), x -> x <> '') AS tk
-       |  FROM documents),
+    s"""WITH t AS (SELECT doc_id, ${tokens("lower(text)")} AS tk FROM documents),
        |x AS (SELECT doc_id, unnest(tk) AS tok FROM t),
-       |g AS (SELECT doc_id, ${TrainedOracles.fnvSql("tok")} % $dims AS dim,
+       |g AS (SELECT doc_id, ${fnv32("tok")} % $dims AS dim,
        |        COUNT(*) AS tf FROM x GROUP BY 1, 2),
        |s AS (SELECT doc_id, COUNT(*) AS nnz, SUM(tf * tf) AS norm2 FROM g GROUP BY 1),
        |top AS (SELECT doc_id, dim AS top_dim, tf AS top_tf FROM (
@@ -804,29 +794,12 @@ object TextAnalysis {
         length(col("extracted")).cast("bigint").as("n_chars"))
   }
 
-  /** DuckDB re-derivation of [[htmlExtract]]: the same plant
-    * ([[graft.Fixtures.htmlDocsSql]]), the same mark-split-classify chain
-    * as list lambdas. RE2 has no lookahead, so the block split marks tags
-    * with a control char first (both engines). */
-  def htmlExtractOracleSql: String = {
-    def txt(b: String): String =
-      s"trim(regexp_replace(regexp_replace($b, '<[^>]*>', ' ', 'g'), '\\s+', ' ', 'g'))"
-    def noAnchorTxt(b: String): String =
-      s"trim(regexp_replace(regexp_replace(regexp_replace($b, '<a[^>]*>.*?</a>', ' ', 'g'), '<[^>]*>', ' ', 'g'), '\\s+', ' ', 'g'))"
-    s"""WITH hd AS (${graft.Fixtures.htmlDocsSql}),
-       |b AS (SELECT doc_id,
-       |    string_split(regexp_replace(html, '<(p|div|h1|li)([ >])',
-       |      chr(1) || '<\\1\\2', 'g'), chr(1)) AS blocks FROM hd),
-       |k AS (SELECT doc_id,
-       |    list_filter(blocks, b ->
-       |      len(string_split(${txt("b")}, ' ')) >= 5 AND
-       |      (length(${txt("b")}) - length(${noAnchorTxt("b")})) * 3
-       |        <= length(${txt("b")})) AS kept FROM b),
-       |e AS (SELECT doc_id, kept,
-       |    array_to_string(list_transform(kept, b -> ${txt("b")}), chr(10)) AS extracted
-       |  FROM k)
+  /** DuckDB re-derivation of [[htmlExtract]]: the same plant and the
+    * same mark-split-classify chain as list lambdas
+    * ([[graft.OracleSql.htmlExtractCtes]]). */
+  def htmlExtractOracleSql: String =
+    s"""WITH $htmlExtractCtes
        |SELECT doc_id, md5(extracted) AS text_md5,
        |  CAST(len(kept) AS INT) AS n_blocks_kept,
-       |  CAST(length(extracted) AS BIGINT) AS n_chars FROM e""".stripMargin
-  }
+       |  CAST(length(extracted) AS BIGINT) AS n_chars FROM he""".stripMargin
 }

@@ -2,6 +2,8 @@ package graft.text
 
 import org.apache.spark.sql.SparkSession
 
+import graft.OracleSql._
+
 /** DuckDB value-oracles for the three TRAINED-MODEL apply queries — the
   * last rows of the surface that previously rode on rows-only checks.
   *
@@ -26,10 +28,6 @@ import org.apache.spark.sql.SparkSession
   * genuinely inexact op (`exp`) sits behind the surface's ROUND(…, 6). */
 object TrainedOracles {
 
-  /** DuckDB tokenization identical to [[TextAnalysis.tokensCol]]. */
-  private def toks(src: String) =
-    s"list_filter(string_split_regex($src, '[^\\p{L}]+'), x -> x <> '')"
-
   /** Shortest-repr double literal, CAST so DuckDB cannot keep it DECIMAL. */
   private def d(x: Double): String = s"CAST(${x.toString} AS DOUBLE)"
 
@@ -50,7 +48,7 @@ object TrainedOracles {
     val chain = merges.foldLeft("regexp_replace(w, '(.)', '|\\1|', 'g')") {
       case (acc, (a, b)) => s"replace($acc, ${sq(s"|$a||$b|")}, ${sq(s"|$a$b|")})"
     }
-    s"""WITH t AS (SELECT doc_id, ${toks("lower(text)")} AS tk FROM documents),
+    s"""WITH t AS (SELECT doc_id, ${tokens("lower(text)")} AS tk FROM documents),
         tokw AS (SELECT doc_id, u.w FROM t, unnest(tk) AS u(w)),
         dw AS (SELECT DISTINCT w FROM tokw),
         seg AS (SELECT w, (length(s) - length(replace(s, '|', ''))) // 2 AS n_sub
@@ -88,7 +86,7 @@ object TrainedOracles {
     val plp = model.map(p => d(p.logp)).mkString("[", ",", "]")
     val sub = s"substr(w, CAST(s AS INT) + 1, e + 1 - CAST(s AS INT))"
     s"""WITH RECURSIVE
-        t AS (SELECT doc_id, ${toks("lower(text)")} AS tk FROM documents),
+        t AS (SELECT doc_id, ${tokens("lower(text)")} AS tk FROM documents),
         tokw AS (SELECT doc_id, u.w FROM t, unnest(tk) AS u(w)),
         words AS (SELECT DISTINCT w FROM tokw),
         dp AS (
@@ -118,26 +116,14 @@ object TrainedOracles {
         FROM documents d LEFT JOIN agg a USING (doc_id)"""
   }
 
-  /** FNV-1a (32-bit, sign-bit-masked — byte-compatible with
-    * [[graft.functions.Fnv32.hash]]) as a `list_reduce` over the UTF-8
-    * bytes of `$col`, recovered from `hex(encode(…))` pairs. */
-  private[graft] def fnvSql(col: String): String = {
-    val hx = s"hex(encode($col))"
-    s"""list_reduce(
-         list_prepend(CAST(2166136261 AS BIGINT),
-           list_transform(range(1, 2 * octet_length(encode($col)), 2),
-             i -> CAST(16 * (strpos('0123456789ABCDEF', $hx[CAST(i AS INT)]) - 1)
-                  + (strpos('0123456789ABCDEF', $hx[CAST(i AS INT) + 1]) - 1) AS BIGINT))),
-         (h, b) -> (xor(h, b) * 16777619) % 4294967296) % 2147483648"""
-  }
-
   /** `text_quality_classifier`: retrain the Newton/IRLS fit (bit-exact
     * under any partitioning), freeze the 69 weights, and score in SQL —
-    * the shape margin mirrors the green `text_gopher_filters` gram-stat
-    * CTEs operand-for-operand; the token margin hashes each DISTINCT token
-    * with in-SQL FNV-1a and sums the broadcastable weight table in the
-    * same ×2^24 fixed-point Longs the Spark query sums, so the only
-    * inexact op on the whole surface is the final `exp` behind ROUND 6. */
+    * the shape margin builds on the Gopher statistics of
+    * [[graft.OracleSql.gramStatsCtes]]; the token margin hashes each
+    * DISTINCT token with [[graft.OracleSql.fnv32]] and sums the
+    * broadcastable weight table in the same ×2^24 fixed-point Longs the
+    * Spark query sums, so the only inexact op on the whole surface is the
+    * final `exp` behind ROUND 6. */
   def classifierSql(spark: SparkSession, dir: String): String = {
     import QualityClassifier._
     val (w, _) = trainNewton(featurize(spark, dir))
@@ -147,26 +133,19 @@ object TrainedOracles {
     val shapeZ = s"${d(w(0))} + ${d(w(1))} * (n_words / ${d(100.0)}) + " +
       s"${d(w(2))} * (mean_word_len / ${d(10.0)}) + ${d(w(3))} * top_bigram_frac + " +
       s"${d(w(4))} * dup_trigram_frac"
-    s"""WITH t AS (SELECT doc_id, ${toks("text")} AS tk FROM documents),
+    s"""WITH t AS (SELECT doc_id, ${tokens("text")} AS tk FROM documents),
         f AS (SELECT doc_id, tk FROM t WHERE len(tk) >= 3),
-        g2 AS (SELECT doc_id, tk[i] || ' ' || tk[i+1] AS gram
-               FROM f, unnest(generate_series(1, len(tk)-1)) AS u(i)),
-        g2c AS (SELECT doc_id, gram, COUNT(*) AS c FROM g2 GROUP BY 1, 2),
-        g2s AS (SELECT doc_id, MAX(c) AS g2_max, SUM(c) AS g2_n FROM g2c GROUP BY 1),
-        g3 AS (SELECT doc_id, tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] AS gram
-               FROM f, unnest(generate_series(1, len(tk)-2)) AS u(i)),
-        g3c AS (SELECT doc_id, gram, COUNT(*) AS c FROM g3 GROUP BY 1, 2),
-        g3s AS (SELECT doc_id, SUM(c) AS g3_n, COUNT(*) AS g3_d FROM g3c GROUP BY 1),
+        ${gramStatsCtes("f")},
         base AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_words,
-               CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE) / len(tk) AS mean_word_len
+               ${meanTokenLen("tk")} AS mean_word_len
              FROM f),
         shp AS (SELECT b.doc_id, b.n_words,
-               CAST(g2_max AS DOUBLE) / g2_n AS top_bigram_frac,
-               CAST(g3_n - g3_d AS DOUBLE) / g3_n AS dup_trigram_frac,
+               $topBigramFrac AS top_bigram_frac,
+               $dupTrigramFrac AS dup_trigram_frac,
                b.mean_word_len
              FROM base b JOIN g2s USING (doc_id) JOIN g3s USING (doc_id)),
         tokw AS (SELECT doc_id, u.w FROM f, unnest(tk) AS u(w)),
-        dw AS (SELECT w, ${fnvSql("w")} % ${NumBuckets} AS bucket
+        dw AS (SELECT w, ${fnv32("w")} % ${NumBuckets} AS bucket
                FROM (SELECT DISTINCT w FROM tokw)),
         wtab(bucket, wfix) AS (VALUES $wtab),
         tokz AS (SELECT doc_id, CAST(SUM(wfix) AS BIGINT) AS sfix
@@ -174,8 +153,8 @@ object TrainedOracles {
         z AS (SELECT s.doc_id, s.n_words,
                $shapeZ AS shape_z,
                (t.sfix / ${d(Scale)}) / s.n_words AS tok_z,
-               (s.n_words >= 30 AND s.mean_word_len >= 3.0 AND s.mean_word_len <= 10.0
-                AND s.top_bigram_frac <= 0.1 AND s.dup_trigram_frac <= 0.05) AS gopher_ok
+               ${gopherOk("s.n_words", "s.mean_word_len", "s.top_bigram_frac", "s.dup_trigram_frac")}
+                 AS gopher_ok
              FROM shp s JOIN tokz t USING (doc_id))
         SELECT doc_id, n_words,
           ROUND(${d(1.0)} / (${d(1.0)} + exp(-(shape_z + tok_z))), 6) AS quality_score,

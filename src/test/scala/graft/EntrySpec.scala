@@ -34,11 +34,18 @@ class EntrySpec extends AnyFunSuite {
     assert((dynamicOracle & SparkEntry.oracleSql.keySet).isEmpty)
   }
 
+  test("no oracle SQL carries an uninterpolated fragment") {
+    // a shared OracleSql fragment spliced into a string without the `s`
+    // interpolator reaches DuckDB as literal `${...}` text
+    SparkEntry.oracleSql.foreach { case (name, s) => assert(!s.contains("${"), name) }
+  }
+
   test("trained-model oracles generate non-empty DuckDB SQL at sf0.001") {
     val sqls = text.TrainedOracles.all(spark, sf)
     assert(sqls.keySet == text.TrainedOracles.names)
     sqls.foreach { case (name, s) =>
       assert(s.contains("FROM documents"), name)
+      assert(!s.contains("${"), name)
       // the whole point is interpolated literals: each SQL must embed the
       // trained artifact (a CAST(… AS DOUBLE) logp/weight or a merge pair)
       assert(s.contains("AS DOUBLE") || s.contains("replace("), name)
