@@ -91,9 +91,12 @@ private[graft] object OracleSql {
   }
 
   /** Cosine of two DOUBLE lists in [[graft.functions.VecOps.cosine6]]'s
-    * operand order: a·b / sqrt(a·a · b·b). */
-  private def cosine(a: String, b: String): String =
-    s"list_inner_product($a, $b) / sqrt(list_inner_product($a, $a) * list_inner_product($b, $b))"
+    * operand order: a·b / sqrt(a·a · b·b), and 0.0 when a norm is zero
+    * (the engine's contract; DuckDB's division would give NULL). */
+  private def cosine(a: String, b: String): String = {
+    val d = s"(list_inner_product($a, $a) * list_inner_product($b, $b))"
+    s"CASE WHEN $d = 0 THEN 0.0::DOUBLE ELSE list_inner_product($a, $b) / sqrt($d) END"
+  }
 
   /** [[cosine]] rounded to 6 decimals — the compared cosine surface. */
   def cosine6(a: String, b: String): String = s"ROUND(${cosine(a, b)}, 6)"

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graft.ColumnBridge
@@ -31,11 +31,6 @@ object Fnv32 {
   /** Reference-compatible reduce-bucket id: `ihash(key) % nReduce`
     * (/root/reference/src/mr/worker.go:109; nReduce=10 at mrmaster.go:26). */
   def mrBucket(c: Column, nReduce: Int = 10): Column = fnv32(c) % nReduce
-
-  /** SQL registration: `SELECT graft_fnv32(key) FROM ...`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_fnv32", exprs => Fnv32Expr(exprs.head), "scala_udf")
 }
 
 case class Fnv32Expr(child: Expression) extends UnaryExpression {

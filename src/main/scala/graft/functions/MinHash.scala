@@ -1,12 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** MinHash signature core: 64 permutations of a 64-bit FNV-1a base hash,
   * `sig[i] = min over shingles of (a_i * x + b_i) mod p` (Mersenne prime
@@ -40,11 +37,15 @@ object MinHash {
   }
 
   /** FNV-1a 64 over UTF-8 bytes, masked positive (public-domain constants). */
-  def baseHash(bytes: Array[Byte]): Long = {
-    var h = 0xcbf29ce484222325L
+  def baseHash(bytes: Array[Byte]): Long = fnvBytes(0xcbf29ce484222325L, bytes) & Long.MaxValue
+
+  /** FNV-1a 64 of `h` continued over `bytes`: the one byte loop behind
+    * [[baseHash]] and the fused shingle hash of [[computeFromTokens]]. */
+  private def fnvBytes(h0: Long, bytes: Array[Byte]): Long = {
+    var h = h0
     var i = 0
     while (i < bytes.length) { h ^= (bytes(i) & 0xffL); h *= 0x100000001b3L; i += 1 }
-    h & Long.MaxValue
+    h
   }
 
   /** Exact (a*x) mod p for p = 2^61-1 via 128-bit product: with
@@ -114,9 +115,7 @@ object MinHash {
       var j = from
       while (j < until) {
         if (j > from) { h ^= 0x20L; h *= 0x100000001b3L } // ' ' separator
-        val b = bytes(j)
-        var k = 0
-        while (k < b.length) { h ^= (b(k) & 0xffL); h *= 0x100000001b3L; k += 1 }
+        h = fnvBytes(h, bytes(j))
         j += 1
       }
       h & Long.MaxValue
@@ -132,31 +131,16 @@ object MinHash {
   /** Column form of the fused tokens→signature path: `minhashTokensCol(toks)`. */
   def minhashTokensCol(c: Column, w: Int = 3): Column =
     ColumnBridge.column(MinHashTokensExpr(ColumnBridge.expression(c), w))
-
-  /** SQL registration: `SELECT graft_minhash_sig(shingles) FROM ...`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_sig", exprs => MinHashSigExpr(exprs.head), "scala_udf")
 }
 
 /** `minhash_sig(array<string>) -> array<bigint>` as a native Catalyst
   * expression: whole-stage codegen emits one static call per row into
   * [[MinHash.computeArray]] — no UDF boxing, no interpreted lambdas. */
-case class MinHashSigExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"minhash_sig requires array<string>, got $other")
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    MinHash.computeArray(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MinHash.computeArray($c)")
-  override protected def withNewChildInternal(newChild: Expression): MinHashSigExpr =
-    copy(child = newChild)
+case class MinHashSigExpr(child: Expression) extends TokenKernelExpr {
   override def prettyName: String = "graft_minhash_sig"
+  protected def kernel = "MinHash.computeArray"
+  protected def call(t: ArrayData): Any = MinHash.computeArray(t)
+  override protected def withNewChildInternal(c: Expression): MinHashSigExpr = copy(child = c)
 }
 
 /** `minhash_tokens(array<string> tokens) -> array<bigint>`: fused
@@ -165,19 +149,11 @@ case class MinHashSigExpr(child: Expression) extends UnaryExpression {
   * (`transform`/`slice`/`concat_ws` shingling into `minhash_sig`) leaves
   * whole-stage codegen for interpreted lambda eval on every shingle, which
   * measured ~10× the cost of the entire fused computation. */
-case class MinHashTokensExpr(child: Expression, w: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) if w >= 1 => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"minhash_tokens requires array<string> and w >= 1, got $other, w=$w")
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    MinHash.computeFromTokens(input.asInstanceOf[ArrayData], w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MinHash.computeFromTokens($c, $w)")
-  override protected def withNewChildInternal(newChild: Expression): MinHashTokensExpr =
-    copy(child = newChild)
+case class MinHashTokensExpr(child: Expression, w: Int) extends TokenKernelExpr {
   override def prettyName: String = "graft_minhash_tokens"
+  protected def kernel = "MinHash.computeFromTokens"
+  protected def call(t: ArrayData): Any = MinHash.computeFromTokens(t, w)
+  override protected def params = Seq("w" -> w)
+  override protected def rules = Seq((w >= 1) -> "w >= 1")
+  override protected def withNewChildInternal(c: Expression): MinHashTokensExpr = copy(child = c)
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -83,12 +83,6 @@ object SetOps {
   def posEqCountCol(a: Column, b: Column): Column =
     ColumnBridge.column(PosEqCountExpr(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  /** SQL registration: `graft_sorted_intersect_count(a, b)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sorted_intersect_count",
-      exprs => SortedIntersectCountExpr(exprs(0), exprs(1)), "scala_udf")
 }
 
 /** `sorted_intersect_count(array<T>, array<T>) -> int` for T in

@@ -34,17 +34,42 @@ object TextHash {
   def fingerprintTokensCol(c: Column, w: Int = 5, keepMod: Int = 4): Column =
     ColumnBridge.column(FingerprintTokensExpr(ColumnBridge.expression(c), w, keepMod))
 
+  /** The tokens as strings, a null element as "": the one decode step of
+    * every kernel here. */
+  private def decode(arr: ArrayData): Array[String] = {
+    val toks = new Array[String](arr.numElements())
+    var i = 0
+    while (i < toks.length) {
+      toks(i) = if (arr.isNullAt(i)) "" else arr.getUTF8String(i).toString
+      i += 1
+    }
+    toks
+  }
+
+  /** Char-FNV64 of `toks(from until until)` joined by single 0x20
+    * separators, i.e. `Dedup.fnv64(window.mkString(" "))` with the string
+    * never materialized: the one window hash of every kernel here. */
+  private def windowHash(toks: Array[String], from: Int, until: Int): Long = {
+    var h = FnvOffset
+    var j = from
+    while (j < until) {
+      if (j > from) { h ^= 0x20L; h *= FnvPrime }
+      val t = toks(j)
+      var k = 0
+      while (k < t.length) { h ^= t.charAt(k).toLong; h *= FnvPrime; k += 1 }
+      j += 1
+    }
+    h
+  }
+
   /** Hot-path entry referenced from generated code. Null tokens are skipped. */
   def simhashArray(arr: ArrayData): Long = {
+    val toks = decode(arr)
     val acc = new Array[Int](64)
-    val n = arr.numElements()
     var i = 0
-    while (i < n) {
+    while (i < toks.length) {
       if (!arr.isNullAt(i)) {
-        val s = arr.getUTF8String(i).toString
-        var h = FnvOffset
-        var k = 0
-        while (k < s.length) { h ^= s.charAt(k).toLong; h *= FnvPrime; k += 1 }
+        val h = windowHash(toks, i, i + 1)
         var b = 0
         while (b < 64) {
           if (((h >>> b) & 1L) == 1L) acc(b) += 1 else acc(b) -= 1
@@ -95,30 +120,12 @@ object TextHash {
     new GenericArrayData(shingleHashesRaw(arr, w))
 
   private def shingleHashesRaw(arr: ArrayData, w: Int): Array[Long] = {
-    val n = arr.numElements()
-    val toks = new Array[String](n)
-    var i = 0
-    while (i < n) {
-      toks(i) = if (arr.isNullAt(i)) "" else arr.getUTF8String(i).toString
-      i += 1
-    }
+    val toks = decode(arr)
+    val n = toks.length
     val nWindows = if (n < w) 1 else n - w + 1 // n = 0 → one empty shingle ""
     val out = new Array[Long](nWindows)
     var s = 0
-    while (s < nWindows) {
-      val until = math.min(s + w, n)
-      var h = FnvOffset
-      var j = s
-      while (j < until) {
-        if (j > s) { h ^= 0x20L; h *= FnvPrime }
-        val t = toks(j)
-        var k = 0
-        while (k < t.length) { h ^= t.charAt(k).toLong; h *= FnvPrime; k += 1 }
-        j += 1
-      }
-      out(s) = h
-      s += 1
-    }
+    while (s < nWindows) { out(s) = windowHash(toks, s, math.min(s + w, n)); s += 1 }
     out
   }
 
@@ -140,31 +147,14 @@ object TextHash {
 
   /** Hot-path entry referenced from generated code for [[gramStatsCol]]. */
   def gramStatsFromTokens(arr: ArrayData): ArrayData = {
-    val n = arr.numElements()
-    val toks = new Array[String](n)
-    var i = 0
-    while (i < n) {
-      toks(i) = if (arr.isNullAt(i)) "" else arr.getUTF8String(i).toString
-      i += 1
-    }
-    @inline def gramHash(from: Int, w: Int): Long = {
-      var h = FnvOffset
-      var j = from
-      while (j < from + w) {
-        if (j > from) { h ^= 0x20L; h *= FnvPrime }
-        val t = toks(j)
-        var k = 0
-        while (k < t.length) { h ^= t.charAt(k).toLong; h *= FnvPrime; k += 1 }
-        j += 1
-      }
-      h
-    }
+    val toks = decode(arr)
+    val n = toks.length
     var g2max = 0L; var g2n = 0L; var g3n = 0L; var g3d = 0L
     if (n >= 2) {
       val counts = new java.util.HashMap[Long, Long]()
       var s = 0
       while (s <= n - 2) {
-        val c = counts.merge(gramHash(s, 2), 1L, (a, b) => a + b)
+        val c = counts.merge(windowHash(toks, s, s + 2), 1L, (a, b) => a + b)
         if (c > g2max) g2max = c
         s += 1
       }
@@ -174,7 +164,7 @@ object TextHash {
       val seen = new java.util.HashSet[Long]()
       var s = 0
       while (s <= n - 3) {
-        if (seen.add(gramHash(s, 3))) g3d += 1
+        if (seen.add(windowHash(toks, s, s + 3))) g3d += 1
         s += 1
       }
       g3n = n - 2
@@ -183,134 +173,98 @@ object TextHash {
   }
 
   /** Hot-path entry referenced from generated code: the fused
-    * tokens→fingerprints form. Window semantics match
-    * `toks.sliding(w)`: no windows on an empty input, one whole-doc window
-    * when 0 < n < w, else n-w+1 windows; the window hash equals the char-FNV
-    * of `window.mkString(" ")` (single 0x20 separators, never materialized). */
+    * tokens→fingerprints form. Window semantics match `toks.sliding(w)`:
+    * no windows on an empty input, else the windows of the shingle hashes
+    * (one whole-doc window when 0 < n < w, else n-w+1 windows). */
   def fingerprintsFromTokens(arr: ArrayData, w: Int, keepMod: Int): ArrayData = {
-    val n = arr.numElements()
-    if (n == 0) return new GenericArrayData(Array.emptyLongArray)
-    val toks = new Array[String](n)
-    var i = 0
-    while (i < n) {
-      toks(i) = if (arr.isNullAt(i)) "" else arr.getUTF8String(i).toString
-      i += 1
-    }
     val mask = (keepMod - 1).toLong
-    val kept = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val nWindows = if (n < w) 1 else n - w + 1
-    var s = 0
-    while (s < nWindows) {
-      val until = math.min(s + w, n)
-      var h = FnvOffset
-      var j = s
-      while (j < until) {
-        if (j > s) { h ^= 0x20L; h *= FnvPrime }
-        val t = toks(j)
-        var k = 0
-        while (k < t.length) { h ^= t.charAt(k).toLong; h *= FnvPrime; k += 1 }
-        j += 1
-      }
-      if ((h & mask) == 0L) kept += h
-      s += 1
-    }
-    new GenericArrayData(kept.toArray.distinct.sorted)
+    val kept =
+      if (arr.numElements() == 0) Array.emptyLongArray
+      else shingleHashesRaw(arr, w).filter(h => (h & mask) == 0L)
+    new GenericArrayData(kept.distinct.sorted)
   }
 }
 
-/** `graft_simhash_tokens(array<string>) -> bigint` — see [[TextHash]]. */
-case class SimHashTokensExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
+/** The one shape of the engine's `array<string>` kernels: the token array
+  * in, one static call per row into `graft.functions.<kernel>` (inside
+  * whole-stage codegen; the same method when interpreted). A kernel
+  * declares only its SQL name (`prettyName`), result type, literal
+  * parameters with their rules, and the method it calls. Kernels are case
+  * classes of their child and literal parameters, so two equal calls are
+  * equal expressions and subexpression elimination evaluates them once. */
+abstract class TokenKernelExpr extends UnaryExpression {
+  /** `Object.method` under `graft.functions`, called as (tokens, params). */
+  protected def kernel: String
+  protected def call(tokens: ArrayData): Any
+  protected def params: Seq[(String, Int)] = Nil
+  /** Each parameter rule with the text its failure prints. */
+  protected def rules: Seq[(Boolean, String)] = Nil
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullIntolerant: Boolean = true
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case ArrayType(StringType, _) if rules.forall(_._1) => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
-      s"simhash_tokens requires array<string>, got $other")
+      ("array<string>" +: rules.map(_._2)).mkString(s"$prettyName requires ", ", ", "; ") +
+        (s"got $other" +: params.map { case (k, v) => s"$k=$v" }).mkString(", "))
   }
-  override protected def nullSafeEval(input: Any): Any =
-    TextHash.simhashArray(input.asInstanceOf[ArrayData])
+  override protected def nullSafeEval(input: Any): Any = call(input.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.simhashArray($c)")
-  override protected def withNewChildInternal(newChild: Expression): SimHashTokensExpr =
-    copy(child = newChild)
+    defineCodeGen(ctx, ev, c =>
+      (c +: params.map(_._2.toString)).mkString(s"graft.functions.$kernel(", ", ", ")"))
+}
+
+/** `graft_simhash_tokens(array<string>) -> bigint` — see [[TextHash]]. */
+case class SimHashTokensExpr(child: Expression) extends TokenKernelExpr {
   override def prettyName: String = "graft_simhash_tokens"
+  override def dataType: DataType = LongType
+  protected def kernel = "TextHash.simhashArray"
+  protected def call(t: ArrayData): Any = TextHash.simhashArray(t)
+  override protected def withNewChildInternal(c: Expression): SimHashTokensExpr = copy(child = c)
 }
 
 /** `graft_shingle_hashes(array<string>) -> array<bigint>` — see
   * [[TextHash.shingleHashesCol]]. */
-case class ShingleHashesExpr(child: Expression, w: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) if w >= 1 => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"shingle_hashes requires array<string> and w >= 1, got $other, w=$w")
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    TextHash.shingleHashesFromTokens(input.asInstanceOf[ArrayData], w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.shingleHashesFromTokens($c, $w)")
-  override protected def withNewChildInternal(newChild: Expression): ShingleHashesExpr =
-    copy(child = newChild)
+case class ShingleHashesExpr(child: Expression, w: Int) extends TokenKernelExpr {
   override def prettyName: String = "graft_shingle_hashes"
+  protected def kernel = "TextHash.shingleHashesFromTokens"
+  protected def call(t: ArrayData): Any = TextHash.shingleHashesFromTokens(t, w)
+  override protected def params = Seq("w" -> w)
+  override protected def rules = Seq((w >= 1) -> "w >= 1")
+  override protected def withNewChildInternal(c: Expression): ShingleHashesExpr = copy(child = c)
 }
 
 /** `graft_positional_shingle_hashes(array<string>) -> array<bigint>` — see
   * [[TextHash.positionalShingleHashesCol]]. */
-case class PositionalShingleHashesExpr(child: Expression, w: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) if w >= 1 => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"positional_shingle_hashes requires array<string> and w >= 1, got $other, w=$w")
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    TextHash.positionalShingleHashesFromTokens(input.asInstanceOf[ArrayData], w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.positionalShingleHashesFromTokens($c, $w)")
-  override protected def withNewChildInternal(newChild: Expression): PositionalShingleHashesExpr =
-    copy(child = newChild)
+case class PositionalShingleHashesExpr(child: Expression, w: Int) extends TokenKernelExpr {
   override def prettyName: String = "graft_positional_shingle_hashes"
+  protected def kernel = "TextHash.positionalShingleHashesFromTokens"
+  protected def call(t: ArrayData): Any = TextHash.positionalShingleHashesFromTokens(t, w)
+  override protected def params = Seq("w" -> w)
+  override protected def rules = Seq((w >= 1) -> "w >= 1")
+  override protected def withNewChildInternal(c: Expression): PositionalShingleHashesExpr =
+    copy(child = c)
 }
 
 /** `graft_gram_stats(array<string>) -> array<bigint>` — see
   * [[TextHash.gramStatsCol]]. */
-case class GramStatsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"gram_stats requires array<string>, got $other")
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    TextHash.gramStatsFromTokens(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.gramStatsFromTokens($c)")
-  override protected def withNewChildInternal(newChild: Expression): GramStatsExpr =
-    copy(child = newChild)
+case class GramStatsExpr(child: Expression) extends TokenKernelExpr {
   override def prettyName: String = "graft_gram_stats"
+  protected def kernel = "TextHash.gramStatsFromTokens"
+  protected def call(t: ArrayData): Any = TextHash.gramStatsFromTokens(t)
+  override protected def withNewChildInternal(c: Expression): GramStatsExpr = copy(child = c)
 }
 
 /** `graft_fingerprint_tokens(array<string>) -> array<bigint>` — see
   * [[TextHash]]. `keepMod` must be a power of two (mask-tested). */
 case class FingerprintTokensExpr(child: Expression, w: Int, keepMod: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) if w >= 1 && keepMod >= 1 && (keepMod & (keepMod - 1)) == 0 =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"fingerprint_tokens requires array<string>, w >= 1, keepMod a power of two; " +
-        s"got $other, w=$w, keepMod=$keepMod")
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    TextHash.fingerprintsFromTokens(input.asInstanceOf[ArrayData], w, keepMod)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.fingerprintsFromTokens($c, $w, $keepMod)")
-  override protected def withNewChildInternal(newChild: Expression): FingerprintTokensExpr =
-    copy(child = newChild)
+    extends TokenKernelExpr {
   override def prettyName: String = "graft_fingerprint_tokens"
+  protected def kernel = "TextHash.fingerprintsFromTokens"
+  protected def call(t: ArrayData): Any = TextHash.fingerprintsFromTokens(t, w, keepMod)
+  override protected def params = Seq("w" -> w, "keepMod" -> keepMod)
+  override protected def rules = Seq((w >= 1) -> "w >= 1",
+    (keepMod >= 1 && (keepMod & (keepMod - 1)) == 0) -> "keepMod a power of two")
+  override protected def withNewChildInternal(c: Expression): FingerprintTokensExpr =
+    copy(child = c)
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
@@ -50,11 +50,6 @@ object VecOps {
   def cosine6Col(a: Column, b: Column): Column =
     ColumnBridge.column(Cosine6Expr(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  /** SQL registration: `graft_cosine6(a, b)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine6", exprs => Cosine6Expr(exprs(0), exprs(1)), "scala_udf")
 
   /** All raw plane projections of an array<double> column in ONE native
     * pass: `planeProjCol(emb, planes)` returns array<double> of

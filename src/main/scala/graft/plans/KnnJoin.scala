@@ -9,9 +9,9 @@ import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Attribut
 import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, HashPartitioning}
-import org.apache.spark.sql.execution.{ExplainUtils, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
-import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
+import org.apache.spark.sql.execution.metric.SQLMetric
 import org.apache.spark.sql.graft.{ColumnBridge, RddBridge}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, LongType}
 
@@ -59,28 +59,17 @@ final case class KnnJoinPlan(child: LogicalPlan, vecId: Attribute, embedding: At
   * each vector. A vector with a null id or embedding emits nothing. */
 final case class KnnChunkExec(vecId: Attribute, embedding: Attribute, chunks: Int,
                               a: Attribute, b: Attribute, c: Attribute, child: SparkPlan)
-    extends UnaryExecNode {
+    extends GraftExec {
   override def output: Seq[Attribute] = Seq(a, b, c, vecId, embedding)
   override def producedAttributes: AttributeSet = AttributeSet(Seq(a, b, c))
-  override lazy val metrics: Map[String, SQLMetric] = Map(
-    "vectors" -> SQLMetrics.createMetric(sparkContext, "vectors"),
-    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "chunk-pair rows"))
-  override def simpleString(maxFields: Int): String = s"KnnChunk chunks=$chunks"
-  override def verboseStringWithOperatorId(): String =
-    s"""
-       |$formattedNodeName
-       |${ExplainUtils.generateFieldString("Input", child.output)}
-       |${ExplainUtils.generateFieldString("Output", output)}
-       |Arguments: chunks=$chunks
-       |""".stripMargin
+  protected def work = Seq("vectors" -> "vectors", "numOutputRows" -> "chunk-pair rows")
+  protected def args = s"chunks=$chunks"
   override protected def withNewChildInternal(newChild: SparkPlan): KnnChunkExec =
     copy(child = newChild)
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val vectors = longMetric("vectors")
-    val rows = longMetric("numOutputRows")
-    def ordinal(x: Attribute) = child.output.indexWhere(_.exprId == x.exprId)
-    val (iId, iEmb) = (ordinal(vecId), ordinal(embedding))
+    val Array(vectors, rows) = workMetrics
+    val (iId, iEmb) = (childOrdinal(vecId), childOrdinal(embedding))
     val nc = chunks
     child.execute().mapPartitions { it =>
       val w = new UnsafeRowWriter(5, 320)
@@ -117,7 +106,7 @@ final case class KnnChunkExec(vecId: Attribute, embedding: Attribute, chunks: In
 /** Kernel: one (a, b) group resident at a time; emits (vec_id,
   * neighbor_id, score) for each member's local top-k within the group. */
 final case class KnnBlockExec(k: Int, output: Seq[Attribute], child: SparkPlan)
-    extends UnaryExecNode {
+    extends GraftExec {
   override def producedAttributes: AttributeSet = AttributeSet(output)
   // the child is a KnnChunkExec (below its exchange), whose output order is
   // fixed: (a, b, c, vec_id, embedding)
@@ -126,36 +115,20 @@ final case class KnnBlockExec(k: Int, output: Seq[Attribute], child: SparkPlan)
   override def requiredChildOrdering: Seq[Seq[SortOrder]] =
     Seq(child.output.take(2).map(SortOrder(_, Ascending)))
 
-  override lazy val metrics: Map[String, SQLMetric] =
-    KnnBlockExec.Work.map { case (key, label) =>
-      key -> SQLMetrics.createMetric(sparkContext, label) }.toMap
-
-  private def work: String = KnnBlockExec.Work
-    .map { case (key, label) => s"$label=${metrics(key).value}" }.mkString(", ")
-  override def simpleString(maxFields: Int): String = s"KnnBlock k=$k [$work]"
-  override def verboseStringWithOperatorId(): String =
-    s"""
-       |$formattedNodeName
-       |${ExplainUtils.generateFieldString("Input", child.output)}
-       |Arguments: k=$k
-       |Metrics: $work
-       |""".stripMargin
+  // indexes used by [[BlockNeighbors]]
+  protected def work = Seq(
+    "groups" -> "groups",
+    "pairsScored" -> "pairs scored",
+    "candidates" -> "candidates emitted")
+  protected def args = s"k=$k"
   override protected def withNewChildInternal(newChild: SparkPlan): KnnBlockExec =
     copy(child = newChild)
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val m = KnnBlockExec.Work.map { case (key, _) => longMetric(key) }.toArray
+    val m = workMetrics
     val kk = k
     child.execute().mapPartitions(it => new BlockNeighbors(it.buffered, kk, m))
   }
-}
-
-object KnnBlockExec {
-  /** Metric keys and labels (indexes used by [[BlockNeighbors]]). */
-  val Work: Seq[(String, String)] = Seq(
-    "groups" -> "groups",
-    "pairsScored" -> "pairs scored",
-    "candidates" -> "candidates emitted")
 }
 
 /** Streams one (a, b)-sorted partition of chunk-pair rows as (vec_id,
@@ -268,34 +241,19 @@ private final class BlockNeighbors(in: BufferedIterator[InternalRow], k: Int,
   * group; output (vec_id, neighbor_id, cosine, rank), rank 1..k under
   * (score desc, id asc), cosine rounded after ranking. */
 final case class KnnMergeExec(k: Int, output: Seq[Attribute], child: SparkPlan)
-    extends UnaryExecNode {
+    extends GraftExec {
   override def producedAttributes: AttributeSet = AttributeSet(output)
   // the child is a KnnBlockExec: (vec_id, neighbor_id, score)
   override def requiredChildDistribution: Seq[Distribution] =
     ClusteredDistribution(child.output.take(1)) :: Nil
 
-  override lazy val metrics: Map[String, SQLMetric] = Map(
-    "vectors" -> SQLMetrics.createMetric(sparkContext, "vectors"),
-    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "edges emitted"))
-
-  private def work: String =
-    Seq("vectors", "numOutputRows").map(key =>
-      s"${metrics(key).name.get}=${metrics(key).value}").mkString(", ")
-  override def simpleString(maxFields: Int): String = s"KnnMerge k=$k [$work]"
-  override def verboseStringWithOperatorId(): String =
-    s"""
-       |$formattedNodeName
-       |${ExplainUtils.generateFieldString("Input", child.output)}
-       |${ExplainUtils.generateFieldString("Output", output)}
-       |Arguments: k=$k
-       |Metrics: $work
-       |""".stripMargin
+  protected def work = Seq("vectors" -> "vectors", "numOutputRows" -> "edges emitted")
+  protected def args = s"k=$k"
   override protected def withNewChildInternal(newChild: SparkPlan): KnnMergeExec =
     copy(child = newChild)
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val vectors = longMetric("vectors")
-    val edges = longMetric("numOutputRows")
+    val Array(vectors, edges) = workMetrics
     val kk = k
     child.execute().mapPartitions { it =>
       val heaps = new java.util.HashMap[java.lang.Long, SimTopK.Heap]
@@ -357,9 +315,7 @@ object KnnJoin {
     require(k > 0, s"k must be positive, got $k")
     require(maxBlock > 0, s"maxBlock must be positive, got $maxBlock")
     val analyzed = vecs.queryExecution.analyzed
-    def resolve(n: String): Attribute = analyzed.output.find(_.name == n).getOrElse(
-      throw new IllegalArgumentException(
-        s"KnnJoin: column $n not among ${analyzed.output.map(_.name).mkString(", ")}"))
+    val resolve = GraftExec.resolve("KnnJoin", analyzed)(_)
     val (id, emb) = (resolve("vec_id"), resolve("embedding"))
     require(id.dataType == LongType, s"KnnJoin: vec_id must be bigint, got ${id.dataType}")
     require(emb.dataType.isInstanceOf[ArrayType] &&

@@ -9,8 +9,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.execution.{ExplainUtils, SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.metric.SQLMetric
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.{ColumnBridge, RddBridge}
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DoubleType, IntegerType, LongType}
@@ -158,29 +158,19 @@ final case class SetSimPrefixExec(docId: Attribute, lang: Attribute, source: Att
                                   threshold: Double, order: Broadcast[TokenOrder],
                                   rank: Attribute, n: Attribute, ranks: Attribute,
                                   side: Attribute, child: SparkPlan)
-    extends UnaryExecNode {
+    extends GraftExec {
   override def output: Seq[Attribute] = Seq(lang, source, rank, docId, n, ranks, side)
   override def producedAttributes: AttributeSet = AttributeSet(Seq(rank, n, ranks, side))
-  override lazy val metrics: Map[String, SQLMetric] = Map(
-    "documents" -> SQLMetrics.createMetric(sparkContext, "documents"),
-    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "prefix rows"))
-  override def simpleString(maxFields: Int): String = s"SetSimPrefix t=$threshold"
-  override def verboseStringWithOperatorId(): String =
-    s"""
-       |$formattedNodeName
-       |${ExplainUtils.generateFieldString("Input", child.output)}
-       |${ExplainUtils.generateFieldString("Output", output)}
-       |Arguments: threshold=$threshold
-       |""".stripMargin
+  protected def work = Seq("documents" -> "documents", "numOutputRows" -> "prefix rows")
+  protected def args = s"t=$threshold"
   override protected def withNewChildInternal(newChild: SparkPlan): SetSimPrefixExec =
     copy(child = newChild)
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val docs = longMetric("documents")
-    val rows = longMetric("numOutputRows")
-    def ordinal(a: Attribute) = child.output.indexWhere(_.exprId == a.exprId)
-    val (iId, iLang, iSource, iToks) = (ordinal(docId), ordinal(lang), ordinal(source), ordinal(toks))
-    val iBase = base.fold(-1)(ordinal)
+    val Array(docs, rows) = workMetrics
+    val (iId, iLang, iSource, iToks) =
+      (childOrdinal(docId), childOrdinal(lang), childOrdinal(source), childOrdinal(toks))
+    val iBase = base.fold(-1)(childOrdinal)
     val t = threshold
     val bc = order
     child.execute().mapPartitions { it =>
@@ -226,7 +216,7 @@ final case class SetSimPrefixExec(docId: Attribute, lang: Attribute, source: Att
   * split join (which pairs base with delta documents only). */
 final case class SetSimJoinExec(threshold: Double, split: Boolean, output: Seq[Attribute],
                                 child: SparkPlan)
-    extends UnaryExecNode {
+    extends GraftExec {
   override def producedAttributes: AttributeSet = AttributeSet(output)
   // the child is a SetSimPrefixExec, whose output order is fixed:
   // (lang, source, rank, doc_id, n, ranks, base)
@@ -235,42 +225,24 @@ final case class SetSimJoinExec(threshold: Double, split: Boolean, output: Seq[A
   override def requiredChildOrdering: Seq[Seq[SortOrder]] =
     Seq(Seq(0, 1, 2, 4, 3).map(i => SortOrder(child.output(i), Ascending)))
 
-  override lazy val metrics: Map[String, SQLMetric] =
-    SetSimJoinExec.Funnel.map { case (k, label) =>
-      k -> SQLMetrics.createMetric(sparkContext, label) }.toMap
-
-  private def funnel: String = SetSimJoinExec.Funnel
-    .map { case (k, label) => s"$label=${metrics(k).value}" }.mkString(", ")
-  private def mode: String = if (split) "split (base, delta)" else "self"
-  override def simpleString(maxFields: Int): String =
-    s"SetSimJoin t=$threshold, $mode [$funnel]"
-  override def verboseStringWithOperatorId(): String =
-    s"""
-       |$formattedNodeName
-       |${ExplainUtils.generateFieldString("Input", child.output)}
-       |Arguments: threshold=$threshold, $mode
-       |Metrics: $funnel
-       |""".stripMargin
-  override protected def withNewChildInternal(newChild: SparkPlan): SetSimJoinExec =
-    copy(child = newChild)
-
-  override protected def doExecute(): RDD[InternalRow] = {
-    val m = SetSimJoinExec.Funnel.map { case (k, _) => longMetric(k) }.toArray
-    val t = threshold
-    val sp = split
-    child.execute().mapPartitions(it => new GroupPairs(it.buffered, t, sp, m))
-  }
-}
-
-object SetSimJoinExec {
-  /** Metric keys and labels, in funnel order (indexes used by [[GroupPairs]]). */
-  val Funnel: Seq[(String, String)] = Seq(
+  // funnel order; indexes used by [[GroupPairs]]
+  protected def work = Seq(
     "groups" -> "groups",
     "candidates" -> "candidate pairs",
     "lengthPruned" -> "length-pruned",
     "emitOnceSkipped" -> "emit-once skipped",
     "verified" -> "verified",
     "emitted" -> "emitted")
+  protected def args = s"t=$threshold, ${if (split) "split (base, delta)" else "self"}"
+  override protected def withNewChildInternal(newChild: SparkPlan): SetSimJoinExec =
+    copy(child = newChild)
+
+  override protected def doExecute(): RDD[InternalRow] = {
+    val m = workMetrics
+    val t = threshold
+    val sp = split
+    child.execute().mapPartitions(it => new GroupPairs(it.buffered, t, sp, m))
+  }
 }
 
 /** Streams one sorted partition of prefix rows as (d1, d2, jaccard) rows.
@@ -442,9 +414,7 @@ object SetSimJoin {
     require(threshold > 0.0 && threshold <= 1.0, s"threshold must be in (0, 1], got $threshold")
     val order = docs.sparkSession.sparkContext.broadcast(TokenOrder.count(docs))
     val analyzed = docs.queryExecution.analyzed
-    def resolve(n: String): Attribute = analyzed.output.find(_.name == n).getOrElse(
-      throw new IllegalArgumentException(
-        s"SetSimJoin: column $n not among ${analyzed.output.map(_.name).mkString(", ")}"))
+    val resolve = GraftExec.resolve("SetSimJoin", analyzed)(_)
     ColumnBridge.ofRows(docs.sparkSession, SetSimJoinPlan(analyzed,
       resolve("doc_id"), resolve("lang"), resolve("source"), resolve("toks"),
       base.map(resolve), threshold, order,

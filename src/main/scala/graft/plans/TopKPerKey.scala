@@ -7,8 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Attribut
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, GenerateOrdering}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
-import org.apache.spark.sql.execution.{CodegenSupport, SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.execution.metric.SQLMetrics
+import org.apache.spark.sql.execution.{CodegenSupport, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.LongType
 
@@ -131,11 +130,11 @@ final case class TopKCollectorFactory(boundKeys: Seq[Expression], boundOrd: Expr
   * ≤ keys×k survivors to the parent. */
 final case class TopKPartialExec(keyExprs: Seq[Expression], orderExpr: Expression,
                                  tieExpr: Expression, k: Int, child: SparkPlan)
-    extends UnaryExecNode
+    extends GraftExec
     with org.apache.spark.sql.execution.BlockingOperatorWithCodegen {
   override def output: Seq[Attribute] = child.output
-  override lazy val metrics = Map(
-    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
+  protected def work = Seq("numOutputRows" -> "number of output rows")
+  protected def args = s"k=$k by ${keyExprs.mkString("[", ", ", "]")}"
   override protected def withNewChildInternal(newChild: SparkPlan): TopKPartialExec =
     copy(child = newChild)
 
@@ -220,12 +219,14 @@ final case class TopKPartialExec(keyExprs: Seq[Expression], orderExpr: Expressio
 final case class TopKFinalExec(keyExprs: Seq[Expression], orderExpr: Expression,
                                tieExpr: Expression, k: Int, rankAttr: Attribute,
                                child: SparkPlan)
-    extends UnaryExecNode {
+    extends GraftExec {
   override def output: Seq[Attribute] = child.output :+ rankAttr
   override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
     org.apache.spark.sql.catalyst.expressions.AttributeSet(rankAttr)
   override def requiredChildDistribution: Seq[Distribution] =
     ClusteredDistribution(keyExprs) :: Nil
+  protected def work = Nil
+  protected def args = s"k=$k by ${keyExprs.mkString("[", ", ", "]")}"
   override protected def withNewChildInternal(newChild: SparkPlan): TopKFinalExec =
     copy(child = newChild)
   override protected def doExecute(): RDD[InternalRow] = {
@@ -268,9 +269,7 @@ object TopK {
   def perKey(df: DataFrame, keys: Seq[String], orderBy: String, tieBy: String,
              k: Int): DataFrame = {
     val analyzed = df.queryExecution.analyzed
-    def resolve(n: String): Attribute = analyzed.output.find(_.name == n).getOrElse(
-      throw new IllegalArgumentException(
-        s"TopKPerKey: column $n not among ${analyzed.output.map(_.name).mkString(", ")}"))
+    val resolve = GraftExec.resolve("TopKPerKey", analyzed)(_)
     ColumnBridge.ofRows(df.sparkSession,
       TopKPerKeyPlan(analyzed, keys.map(resolve), resolve(orderBy), resolve(tieBy), k))
   }

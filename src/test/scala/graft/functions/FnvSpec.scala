@@ -38,12 +38,6 @@ class FnvSpec extends AnyFunSuite {
       (0L until 100L).map(i => Fnv32.hash(i.toString)))
   }
 
-  test("fnv32 is registered and callable from SQL") {
-    Fnv32.register(spark)
-    val h = spark.sql("SELECT graft_fnv32('foobar') AS h").collect()(0).getInt(0)
-    assert(h == Fnv32.hash("foobar"))
-  }
-
   test("mrBucket routes every key into [0, nReduce)") {
     import spark.implicits._
     val df = (1 to 1000).map(i => s"key-$i").toDF("k")

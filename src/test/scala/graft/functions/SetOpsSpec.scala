@@ -104,24 +104,49 @@ class SetOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("shingle_hashes == sorted distinct fnv64 of the string shingles") {
+  /** Edge cases shared by the three window-hash kernels, w = 3. A null
+    * element hashes as the empty token. */
+  private val edgeDocs = Seq(
+    Seq("the", "quick", "brown", "fox", "jumps"),
+    Seq("a", "b"),                       // n < w → one whole-doc window
+    Seq("solo"),                         // single token
+    Seq.empty[String],                   // n = 0
+    Seq("x", "x", "x", "x", "x"),        // duplicate shingles
+    Seq("a", null, "b", "c"),            // null element
+    Seq("käse", "日本語", "😀", "naïve")) // non-ASCII, a surrogate pair included
+
+  private def blank(toks: Seq[String]): Seq[String] = toks.map(s => if (s == null) "" else s)
+
+  /** fnv64 of the string windows of `toks` in position order, formed as
+    * `Dedup.shingles` forms them: n < 3 (n = 0 included) is one window. */
+  private def windows(toks: Seq[String]): Seq[Long] = {
+    val t = blank(toks)
+    (if (t.length < 3) Seq(t) else t.sliding(3).toSeq)
+      .map(x => graft.dedup.Dedup.fnv64(x.mkString(" ")))
+  }
+
+  private def edgeHashes(
+      kernel: org.apache.spark.sql.Column => org.apache.spark.sql.Column): Seq[Seq[Long]] = {
     import spark.implicits._
-    val docs = Seq(
-      Seq("the", "quick", "brown", "fox", "jumps"),
-      Seq("a", "b"),            // n < w → one whole-doc shingle
-      Seq("solo"),              // single token
-      Seq.empty[String],        // n = 0 → one empty shingle (matches shingles())
-      Seq("x", "x", "x", "x")   // duplicate shingles collapse
-    ).toDF("toks")
-    val got = docs.select(TextHash.shingleHashesCol(col("toks")).as("h"))
-      .collect().map(_.getSeq[Long](0))
-    val want = Seq(
-      graft.dedup.Dedup.shingles(Seq("the", "quick", "brown", "fox", "jumps")),
-      graft.dedup.Dedup.shingles(Seq("a", "b")),
-      graft.dedup.Dedup.shingles(Seq("solo")),
-      graft.dedup.Dedup.shingles(Seq.empty),
-      graft.dedup.Dedup.shingles(Seq("x", "x", "x", "x"))
-    ).map(_.map(graft.dedup.Dedup.fnv64).toSeq.sorted)
-    got.zip(want).foreach { case (g, w) => assert(g == w) }
+    edgeDocs.toDF("toks").select(kernel(col("toks"))).collect().map(_.getSeq[Long](0)).toSeq
+  }
+
+  test("shingle_hashes == sorted distinct fnv64 of the string shingles") {
+    assert(edgeHashes(TextHash.shingleHashesCol(_)) == edgeDocs.map { toks =>
+      graft.dedup.Dedup.shingles(blank(toks)).map(graft.dedup.Dedup.fnv64).toSeq.sorted
+    })
+  }
+
+  test("positional_shingle_hashes == fnv64 of each string window in position order") {
+    assert(edgeHashes(TextHash.positionalShingleHashesCol(_, 3)) == edgeDocs.map(windows(_)))
+  }
+
+  test("fingerprint_tokens == the masked, distinct, sorted fnv64 of the string windows") {
+    Seq(1, 2, 4).foreach { keepMod =>
+      assert(edgeHashes(TextHash.fingerprintTokensCol(_, 3, keepMod)) == edgeDocs.map { toks =>
+        if (toks.isEmpty) Seq.empty[Long]
+        else windows(toks).filter(h => (h & (keepMod - 1)) == 0).distinct.sorted
+      }, s"keepMod=$keepMod")
+    }
   }
 }
